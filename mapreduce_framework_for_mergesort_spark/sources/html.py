@@ -32,9 +32,10 @@ Pieces (each independently testable, composed by the Arrow pass):
   pass over ``read_warc`` output classifying every ``response`` record
   ``ok | corrupt | unsupported_encoding | non_200 | non_text`` with its reason,
   status, content-encoding, mime, charset, and (when ok) the extracted
-  text.  br/zstd bodies DECODE as of round 11 (``sources/encodings.py``
-  — house RFC 7932 decoder + Arrow codecs); genuinely unknown
-  content-encodings land in ``unsupported_encoding``
+  text.  br/zstd bodies decode through Arrow's C codecs
+  (``sources/encodings.py``); corrupt and over-cap bodies land in
+  ``corrupt``; genuinely unknown content-encodings land in
+  ``unsupported_encoding``
   with a count a crawl audit can report, instead of raising per-record
   in user code (round-9 verdict item 4).
 * ``warc_responses_to_documents`` — the clean feed:

@@ -45,6 +45,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from .encodings import decode_content_coding, split_gzip_members
+
 _CRLF = b"\r\n"
 
 #: Fixed date for synthesized records — determinism over realism (the
@@ -111,27 +113,6 @@ def synthesize_warc(
     if gzip_members:
         return b"".join(_gzip_member_stored(b) for b in blobs)
     return b"".join(blobs)
-
-
-def _split_gzip_members(payload: bytes) -> list[bytes]:
-    """Decompress a multi-member gzip stream member by member (zlib
-    wbits=31 + unused_data loop).  Truncated or corrupt members raise
-    ValueError with the member index."""
-    out = []
-    rest = payload
-    i = 0
-    while rest:
-        d = zlib.decompressobj(31)
-        try:
-            blob = d.decompress(rest)
-        except zlib.error as ex:
-            raise ValueError(f"corrupt gzip member {i}: {ex}") from None
-        if not d.eof:
-            raise ValueError(f"truncated gzip member {i}")
-        out.append(blob + d.flush())
-        rest = d.unused_data
-        i += 1
-    return out
 
 
 def _parse_plain_records(data: bytes) -> list[dict]:
@@ -224,7 +205,7 @@ def parse_warc(payload: bytes) -> list[dict]:
     walked directly.  Every structural deviation raises ValueError."""
     if payload[:2] == b"\x1f\x8b":
         records = []
-        for mi, member in enumerate(_split_gzip_members(payload)):
+        for mi, member in enumerate(split_gzip_members(payload)):
             recs = _parse_plain_records(member)
             for r in recs:
                 # offsets are member-relative after decompression; keep
@@ -270,35 +251,21 @@ def _http_split(payload: bytes) -> tuple[int, dict, bytes]:
 def _decode_http_body(headers: dict, body: bytes) -> bytes:
     """DECODE half: chunked transfer decoding, then the content-coding
     CHAIN applied right-to-left (RFC 9110 §8.4.1 — codings are listed
-    in application order), per RFC 9112 ordering.  Round 11 closes the
-    ``br``/``zstd`` seam via ``sources/encodings.py`` (house RFC 7932
-    decoder + Arrow codecs); a genuinely unknown coding still raises
-    ``NotImplementedError`` (quarantine class unchanged); corrupt
-    compressed data raises ValueError (structural-damage class)."""
+    in application order), per RFC 9112 ordering.  Every token decodes
+    through ``encodings.decode_content_coding`` under its output cap;
+    an unknown coding raises ``NotImplementedError`` (quarantine class
+    ``unsupported_encoding``); corrupt or over-cap compressed data
+    raises ValueError (structural-damage class)."""
     if "chunked" in headers.get("transfer-encoding", "").lower():
         body = _dechunk(body)
     chain = headers.get("content-encoding", "").lower()
     for coding in [c.strip() for c in chain.split(",") if c.strip()][::-1]:
-        if coding in ("gzip", "x-gzip"):
-            # multi-member streams are legal (servers that flush mid-
-            # response emit one member per flush); a plain
-            # zlib.decompress(body, 31) would silently return only the
-            # FIRST member's text (round-9 review) — keep the member
-            # walk rather than encodings.py's single-member gzip
-            body = b"".join(_split_gzip_members(body))
-        elif coding == "identity":
-            continue
-        else:
-            from . import encodings as _enc
-
-            try:
-                body = _enc.decode_content_coding(coding, body)
-            except NotImplementedError:
-                raise
-            except Exception as ex:
-                raise ValueError(
-                    f"corrupt {coding} body: {ex}"
-                ) from None
+        try:
+            body = decode_content_coding(coding, body)
+        except NotImplementedError:
+            raise
+        except Exception as ex:
+            raise ValueError(f"corrupt {coding} body: {ex}") from None
     return body
 
 
@@ -306,14 +273,14 @@ def http_response_body(payload: bytes) -> tuple[int, dict, bytes]:
     """Split a WARC ``response`` record's ``application/http`` payload
     into ``(status, headers, body)`` — the extraction that turns a raw
     crawl into usable text (what Common Crawl's WET derivative does).
-    Handles the two encodings raw captures actually carry:
-    ``Transfer-Encoding: chunked`` (size-line framing decoded exactly;
-    trailing headers skipped) and ``Content-Encoding: gzip/deflate``
-    (stdlib zlib; applied after de-chunking, per RFC 9112 ordering).
-    Unknown content-encodings raise ``NotImplementedError`` (codec
-    seam); structural damage — no header terminator, bad status line,
-    malformed chunk sizes, truncated chunks — raises ValueError, same
-    loud contract as the record grammar."""
+    Handles ``Transfer-Encoding: chunked`` (size-line framing decoded
+    exactly; trailing headers skipped) and every ``Content-Encoding``
+    ``sources/encodings.py`` decodes (applied after de-chunking, per
+    RFC 9112 ordering).  Unknown content-encodings raise
+    ``NotImplementedError`` (codec seam); structural damage — no
+    header terminator, bad status line, malformed chunk sizes,
+    truncated chunks, corrupt or over-cap compressed bodies — raises
+    ValueError, same loud contract as the record grammar."""
     status, headers, raw = _http_split(payload)
     return status, headers, _decode_http_body(headers, raw)
 

@@ -146,9 +146,15 @@ def _fold_batch(rows: list, pdf: pd.DataFrame, hwm: int) -> int:
     (events at/below the emitted high-water mark) — the vectorized
     spelling of the round-12 per-row loop (round 13: ``astype`` +
     numpy comparison + memoized cents; ~4× less Python per event,
-    value-identical by the _to_cents purity)."""
+    value-identical by the _to_cents purity).  Timestamps must be
+    positive: ``hwm`` 0 stands for "nothing emitted yet"."""
     us = pdf["ts"].astype("int64").to_numpy() // 1000
-    violations = int((us <= hwm).sum()) if hwm else 0
+    if len(us) and us.min() <= 0:
+        raise ValueError(
+            "sessionizer requires positive event timestamps; got "
+            f"{int(us.min())} µs since the epoch"
+        )
+    violations = int((us <= hwm).sum())
     usl = us.tolist()
     from itertools import repeat
 

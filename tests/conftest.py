@@ -8,7 +8,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from mapreduce_framework_for_mergesort_spark.session import get_spark
 
@@ -45,83 +46,93 @@ def sf_oracle() -> str:
 # the all-50-keys vanilla-session smoke, the q_dedup_minhash_pairs
 # oracle-parity + dtype rows that complete the per-key coverage, one
 # fault-tolerance test, one cluster property test, and the
-# exactly-once ingest-retry test).  Keyed on file::test basenames so
-# the set survives rootdir differences; a renamed test silently moves
-# INTO the fast tier (fail-safe: more coverage, never less).
+# exactly-once ingest-retry test).  Keyed on the full node id
+# (``tests/test_x.py::name``, taken relative to the repo root so the set
+# survives rootdir differences); a renamed test silently moves INTO the
+# fast tier (fail-safe: more coverage, never less).  The terminal
+# summary reports how many tests the slow tier skipped, so a default
+# run is never mistaken for a full one.
 SLOW_TESTS = frozenset({
-    "test_bpe.py::test_bpe_shards_tokenizer_true_budgets",
-    "test_bpe.py::test_train_bpe_textbook_merge_sequence",
-    "test_classifier.py::test_curate_documents_with_quality_model",
-    "test_classifier.py::test_quality_filter_generalizes",
-    "test_classifier.py::test_scoring_separates_and_stays_jvm",
-    "test_encodings.py::test_learn_transforms_regenerates_shipped_table",
-    "test_fault_tolerance.py::test_task_retry_recovers_injected_faults",
-    "test_html.py::test_crawl_feed_composes_with_continuous_ingestion",
-    "test_html.py::test_domain_link_graph_and_pagerank",
-    "test_llm_ops.py::test_cluster_pairs_long_chain_converges",
-    "test_llm_ops.py::test_contamination_report_parity_and_consistency",
-    "test_llm_ops.py::test_curation_leakage_safe_split_composed",
-    "test_llm_ops.py::test_curation_pipeline_cluster_cap",
-    "test_llm_ops.py::test_curation_pipeline_decontaminates_before_dedup",
-    "test_llm_ops.py::test_curation_pipeline_end_to_end",
-    "test_llm_ops.py::test_curation_span_frac_filter",
-    "test_llm_ops.py::test_curation_strip_spans_rewrites",
-    "test_llm_ops.py::test_leakage_safe_split_clusters_never_straddle",
-    "test_llm_ops.py::test_lsh_index_bucketed_delete_lifecycle",
-    "test_llm_ops.py::test_lsh_index_delete_lifecycle",
-    "test_llm_ops.py::test_near_dedup_collapse_exact_identical_kept_set",
-    "test_llm_ops.py::test_prepare_training_shards_end_to_end",
-    "test_llm_ops.py::test_prepare_training_shards_leakage_safe",
-    "test_llm_ops.py::test_prepare_training_shards_quarantines_straddlers",
-    "test_llm_ops.py::test_prepare_training_shards_with_mixture",
-    "test_llm_ops.py::test_text_keys_null_bearing_corpus",
-    "test_pq.py::test_ivfadc_append_empty_batch_does_not_poison_the_index",
-    "test_pq.py::test_ivfadc_delete_lifecycle",
-    "test_pq.py::test_ivfadc_incremental_append_lifecycle",
-    "test_pq.py::test_ivfadc_persisted_probe_matches_inline_and_prunes",
-    "test_property_cluster.py::test_cluster_pairs_matches_union_find",
-    "test_property_cluster.py::test_hash_min_raises_loudly_but_auto_falls_back",
-    "test_property_cluster.py::test_star_contraction_matches_union_find",
-    "test_property_pack.py::test_pack_matches_python_cumsum",
-    "test_property_sort.py::test_cdc_upsert_matches_dict_semantics",
-    "test_property_sort.py::test_merge_sorted_runs_matches_sorted",
-    "test_property_sort.py::test_rank_is_dense_and_multiset_preserved",
-    "test_robots.py::test_disallowed_set_feeds_takedown",
-    "test_sketches.py::test_dyadic_cms_parity_rank_bounds_and_merge",
-    "test_sketches.py::test_dyadic_sketch_stream_equals_batch_and_is_idempotent",
-    "test_streaming.py::test_near_dup_pairs_stream_equals_batch",
-    "test_streaming.py::test_near_dup_stream_band_cap_bounds_fanout",
-    "test_streaming.py::test_near_dup_stream_ttl_evicts_and_bounds_state",
-    "test_streaming_ingest.py::test_assign_splits_stable_bridging_near_dup",
-    "test_streaming_ingest.py::test_assign_splits_stable_epoch_replay",
-    "test_streaming_ingest.py::test_assign_splits_stable_null_text_edges",
-    "test_streaming_ingest.py::test_compact_epochs_converges_from_every_crash_point",
-    "test_streaming_ingest.py::test_compact_epochs_converges_from_every_swap_step",
-    "test_streaming_ingest.py::test_compact_epochs_crash_recovery",
-    "test_streaming_ingest.py::test_compact_epochs_preserves_content_and_replay",
-    "test_streaming_ingest.py::test_compact_epochs_recovers_success_but_no_folded_temp",
-    "test_streaming_ingest.py::test_compact_epochs_recovery_is_listing_order_safe",
-    "test_streaming_ingest.py::test_compact_epochs_recovery_restore_crash_and_occupied_target",
-    "test_streaming_ingest.py::test_frequency_sketch_stream_equals_batch_and_is_idempotent",
-    "test_streaming_ingest.py::test_ingest_rejected_doc_cannot_evict_earlier_representative",
-    "test_streaming_ingest.py::test_ingest_rejects_transitive_chain_to_history",
-    "test_streaming_ingest.py::test_ingest_stale_epoch_replay_refused",
-    "test_streaming_ingest.py::test_ingest_stream_equals_batch_backfill",
-    "test_streaming_ingest.py::test_ingest_stream_first_arrival_wins",
-    "test_streaming_ingest.py::test_ingest_stream_is_epoch_keyed",
-    "test_streaming_ingest.py::test_replay_quiesce_mismatch_fails_loudly",
-    "test_streaming_ingest.py::test_retract_documents_lifecycle",
-    "test_streaming_ingest.py::test_retract_fold_fires_with_single_closed_epoch",
-    "test_streaming_ingest.py::test_retracted_doc_id_is_dead_on_reingest",
-    "test_streaming_ingest.py::test_retraction_fold_retires_and_stops_rewriting",
-    "test_streaming_watermark.py::test_interval_join_hot_key_state_is_horizon_bounded",
-    "test_streaming_watermark.py::test_watermarked_drain_equals_batch_algebra_below_watermark",
-    "test_streaming_watermark.py::test_watermarked_sessionize_merges_admissible_late_event",
-    "test_urls.py::test_property_arrow_kernel_matches_codegen",
-    "test_urls.py::test_property_normalize_invariants",
-    "test_urls.py::test_psl_full_list_strategies_match_reference",
-    "test_warc.py::test_republish_after_takedown_excludes_retracted",
+    "tests/test_bpe.py::test_bpe_shards_tokenizer_true_budgets",
+    "tests/test_bpe.py::test_train_bpe_textbook_merge_sequence",
+    "tests/test_classifier.py::test_curate_documents_with_quality_model",
+    "tests/test_classifier.py::test_quality_filter_generalizes",
+    "tests/test_classifier.py::test_scoring_separates_and_stays_jvm",
+    "tests/test_fault_tolerance.py::test_task_retry_recovers_injected_faults",
+    "tests/test_html.py::test_crawl_feed_composes_with_continuous_ingestion",
+    "tests/test_html.py::test_domain_link_graph_and_pagerank",
+    "tests/test_llm_ops.py::test_cluster_pairs_long_chain_converges",
+    "tests/test_llm_ops.py::test_contamination_report_parity_and_consistency",
+    "tests/test_llm_ops.py::test_curation_leakage_safe_split_composed",
+    "tests/test_llm_ops.py::test_curation_pipeline_cluster_cap",
+    "tests/test_llm_ops.py::test_curation_pipeline_decontaminates_before_dedup",
+    "tests/test_llm_ops.py::test_curation_pipeline_end_to_end",
+    "tests/test_llm_ops.py::test_curation_span_frac_filter",
+    "tests/test_llm_ops.py::test_curation_strip_spans_rewrites",
+    "tests/test_llm_ops.py::test_leakage_safe_split_clusters_never_straddle",
+    "tests/test_llm_ops.py::test_lsh_index_bucketed_delete_lifecycle",
+    "tests/test_llm_ops.py::test_lsh_index_delete_lifecycle",
+    "tests/test_llm_ops.py::test_near_dedup_collapse_exact_identical_kept_set",
+    "tests/test_llm_ops.py::test_prepare_training_shards_end_to_end",
+    "tests/test_llm_ops.py::test_prepare_training_shards_leakage_safe",
+    "tests/test_llm_ops.py::test_prepare_training_shards_quarantines_straddlers",
+    "tests/test_llm_ops.py::test_prepare_training_shards_with_mixture",
+    "tests/test_llm_ops.py::test_text_keys_null_bearing_corpus",
+    "tests/test_pq.py::test_ivfadc_append_empty_batch_does_not_poison_the_index",
+    "tests/test_pq.py::test_ivfadc_delete_lifecycle",
+    "tests/test_pq.py::test_ivfadc_incremental_append_lifecycle",
+    "tests/test_pq.py::test_ivfadc_persisted_probe_matches_inline_and_prunes",
+    "tests/test_property_cluster.py::test_cluster_pairs_matches_union_find",
+    "tests/test_property_cluster.py::test_hash_min_raises_loudly_but_auto_falls_back",
+    "tests/test_property_cluster.py::test_star_contraction_matches_union_find",
+    "tests/test_property_pack.py::test_pack_matches_python_cumsum",
+    "tests/test_property_sort.py::test_cdc_upsert_matches_dict_semantics",
+    "tests/test_property_sort.py::test_merge_sorted_runs_matches_sorted",
+    "tests/test_property_sort.py::test_rank_is_dense_and_multiset_preserved",
+    "tests/test_robots.py::test_disallowed_set_feeds_takedown",
+    "tests/test_sketches.py::test_dyadic_cms_parity_rank_bounds_and_merge",
+    "tests/test_sketches.py::test_dyadic_sketch_stream_equals_batch_and_is_idempotent",
+    "tests/test_streaming.py::test_near_dup_pairs_stream_equals_batch",
+    "tests/test_streaming.py::test_near_dup_stream_band_cap_bounds_fanout",
+    "tests/test_streaming.py::test_near_dup_stream_ttl_evicts_and_bounds_state",
+    "tests/test_streaming_ingest.py::test_assign_splits_stable_bridging_near_dup",
+    "tests/test_streaming_ingest.py::test_assign_splits_stable_epoch_replay",
+    "tests/test_streaming_ingest.py::test_assign_splits_stable_null_text_edges",
+    "tests/test_streaming_ingest.py::test_compact_epochs_converges_from_every_crash_point",
+    "tests/test_streaming_ingest.py::test_compact_epochs_converges_from_every_swap_step",
+    "tests/test_streaming_ingest.py::test_compact_epochs_crash_recovery",
+    "tests/test_streaming_ingest.py::test_compact_epochs_preserves_content_and_replay",
+    "tests/test_streaming_ingest.py::test_compact_epochs_recovers_success_but_no_folded_temp",
+    "tests/test_streaming_ingest.py::test_compact_epochs_recovery_is_listing_order_safe",
+    "tests/test_streaming_ingest.py::test_compact_epochs_recovery_restore_crash_and_occupied_target",
+    "tests/test_streaming_ingest.py::test_frequency_sketch_stream_equals_batch_and_is_idempotent",
+    "tests/test_streaming_ingest.py::test_ingest_rejected_doc_cannot_evict_earlier_representative",
+    "tests/test_streaming_ingest.py::test_ingest_rejects_transitive_chain_to_history",
+    "tests/test_streaming_ingest.py::test_ingest_stale_epoch_replay_refused",
+    "tests/test_streaming_ingest.py::test_ingest_stream_equals_batch_backfill",
+    "tests/test_streaming_ingest.py::test_ingest_stream_first_arrival_wins",
+    "tests/test_streaming_ingest.py::test_ingest_stream_is_epoch_keyed",
+    "tests/test_streaming_ingest.py::test_replay_quiesce_mismatch_fails_loudly",
+    "tests/test_streaming_ingest.py::test_retract_documents_lifecycle",
+    "tests/test_streaming_ingest.py::test_retract_fold_fires_with_single_closed_epoch",
+    "tests/test_streaming_ingest.py::test_retracted_doc_id_is_dead_on_reingest",
+    "tests/test_streaming_ingest.py::test_retraction_fold_retires_and_stops_rewriting",
+    "tests/test_streaming_watermark.py::test_interval_join_hot_key_state_is_horizon_bounded",
+    "tests/test_streaming_watermark.py::test_watermarked_drain_equals_batch_algebra_below_watermark",
+    "tests/test_streaming_watermark.py::test_watermarked_sessionize_merges_admissible_late_event",
+    "tests/test_urls.py::test_property_arrow_kernel_matches_codegen",
+    "tests/test_urls.py::test_property_normalize_invariants",
+    "tests/test_urls.py::test_psl_full_list_strategies_match_reference",
+    "tests/test_warc.py::test_republish_after_takedown_excludes_retracted",
 })
+
+
+_SLOW_SKIPPED = pytest.StashKey[int]()
+
+
+def _repo_node_id(item) -> str:
+    path = os.path.relpath(item.path, _REPO).replace(os.sep, "/")
+    return f"{path}::{item.nodeid.split('::', 1)[1]}"
 
 
 def pytest_collection_modifyitems(config, items):
@@ -130,7 +141,16 @@ def pytest_collection_modifyitems(config, items):
     skip = pytest.mark.skip(
         reason="slow tier (>=7s): set MSFS_FULL_TESTS=1 for the full run"
     )
-    for item in items:
-        parts = item.nodeid.rsplit("/", 1)
-        if parts[-1] in SLOW_TESTS:
-            item.add_marker(skip)
+    slow = [item for item in items if _repo_node_id(item) in SLOW_TESTS]
+    for item in slow:
+        item.add_marker(skip)
+    config.stash[_SLOW_SKIPPED] = len(slow)
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    n = config.stash.get(_SLOW_SKIPPED, 0)
+    if n:
+        terminalreporter.write_line(
+            f"slow tier: {n} tests skipped "
+            "(set MSFS_FULL_TESTS=1 for the full run)"
+        )

@@ -1,15 +1,11 @@
-"""Content-encoding codecs (round 11, ``sources/encodings.py``).
-
-The strongest available pin for a from-scratch decoder is a reference
-codec in the same environment: every test that compresses does so with
-Arrow's C brotli/zstd (public, baked into pyarrow) and demands the
-house decoder reproduce the input byte-for-byte.  The documented data
-seams (dictionary transforms; missing tables) must raise
-``BrotliDataGap`` — never produce wrong bytes silently.
-"""
+"""Content-coding decoders (``sources/encodings.py``), through the
+public functions only: every body the Arrow/zlib/LZW encoders produce
+decodes back byte-for-byte; a legal body over the output cap raises
+"exceeds cap"; damaged input raises "corrupt"."""
 
 from __future__ import annotations
 
+import gzip
 import random
 import zlib
 
@@ -20,8 +16,11 @@ from mapreduce_framework_for_mergesort_spark.sources import encodings as E
 
 
 def _compress(data: bytes, level: int = 5, codec: str = "brotli") -> bytes:
-    buf = pa.Codec(codec, compression_level=level).compress(data)
-    return bytes(buf.to_pybytes() if hasattr(buf, "to_pybytes") else buf)
+    if codec == "gzip":
+        return gzip.compress(data, compresslevel=level)
+    return pa.Codec(codec, compression_level=level).compress(
+        data, asbytes=True
+    )
 
 
 _SAMPLES = {
@@ -36,129 +35,106 @@ _SAMPLES = {
     "sawtooth": bytes((i * 7) % 256 for i in range(30000)),
 }
 
+_TOKEN = {"brotli": "br", "zstd": "zstd", "gzip": "gzip"}
+
 
 @pytest.mark.parametrize("name", sorted(_SAMPLES))
-@pytest.mark.parametrize("level", [1, 2, 3, 5, 9, 11])
-def test_house_brotli_roundtrips_or_gaps_loudly(name, level):
-    """House decoder == Arrow encoder input on every (sample, level);
-    streams using dictionary TRANSFORMS are the documented data seam
-    and must raise BrotliDataGap (never wrong bytes)."""
+@pytest.mark.parametrize(
+    "codec,level",
+    [("brotli", 1), ("brotli", 5), ("brotli", 11),
+     ("zstd", 1), ("zstd", 3), ("zstd", 9),
+     ("gzip", 1), ("gzip", 3), ("gzip", 9)],
+)
+def test_round_trip(codec, level, name):
     data = _SAMPLES[name]
-    comp = _compress(data, level)
-    try:
-        assert E.decode_brotli(comp) == data
-    except E.BrotliDataGap as ex:
-        assert "transform" in str(ex) or "unavailable" in str(ex)
+    body = _compress(data, level, codec)
+    assert E.decode_content_coding(_TOKEN[codec], body) == data
 
 
-def test_house_brotli_exercises_dictionary_words():
-    """English text at mid quality uses static-dictionary references;
-    at least one sample/level pair must decode THROUGH the dictionary
-    (identity transform) rather than gap out, proving the extracted
-    dictionary and the address arithmetic."""
-    decoded_with_dict = 0
-    for level in range(1, 12):
-        comp = _compress(_SAMPLES["text"], level)
-        try:
-            out = E.decode_brotli(comp)
-        except E.BrotliDataGap:
-            continue
-        assert out == _SAMPLES["text"]
-        decoded_with_dict += 1
-    assert decoded_with_dict >= 1
-
-
-def test_dictionary_extraction_pinned():
-    d, luts = E._load_brotli_data()
-    assert d is not None, "static dictionary not found in Arrow libs"
-    import hashlib
-
-    assert hashlib.sha256(d).hexdigest() == E._DICT_SHA256
-    assert len(d) == 122784
-    assert d.startswith(b"timedownlifeleftback")
-    assert luts is not None and len(luts) == 1024
-    # Signed half must equal the spec's generable bucketing
-    lut2 = E._signed_lut2()
-    assert bytes(v << 3 for v in lut2) == luts[512:768]
-    assert bytes(lut2) == luts[768:1024]
-
-
-def test_brotli_corrupt_raises_brotlierror():
-    with pytest.raises(E.BrotliError):
-        E.decode_brotli(b"")
-    with pytest.raises(E.BrotliError):
-        E.decode_brotli(b"\xff\xff\xff\xffgarbage bytes here")
-    # truncation of a valid stream is loud
-    comp = _compress(_SAMPLES["runs"], 5)
-    with pytest.raises(E.BrotliError):
-        E.decode_brotli(comp[: len(comp) // 2])
-
-
-def test_brotli_decompress_wrapper_bisects_size():
-    """The production wrapper recovers output size without any hint —
-    including transform-heavy streams the house decoder gaps on."""
-    for name, data in _SAMPLES.items():
-        for level in (1, 5, 11):
-            assert E.brotli_decompress(_compress(data, level)) == data
-
-
-def test_bisect_corrupt_vs_cap_classification():
-    """Round 12 (ADVICE): input that fails at EVERY output size is
-    corrupt DATA, not an over-cap output — the wrapper must say so,
-    and must not walk the allocation ladder to 1 GB first."""
-    garbage = b"\xff\xff\xff\xffdefinitely not brotli" * 3
-    codec = E._arrow_codec("brotli")
-    with pytest.raises(ValueError, match="corrupt"):
-        E._arrow_decompress_bisect(codec, garbage, max_output=1 << 16)
-    # the probe itself: garbage is provably corrupt, a valid stream is
-    # not, and a valid stream that merely exceeds the probe cap stays
-    # benefit-of-the-doubt (BrotliOutputCapExceeded != corruption)
-    assert E._brotli_looks_corrupt(garbage)
-    comp = _compress(_SAMPLES["runs"], 5)
-    assert not E._brotli_looks_corrupt(comp)
-    assert not E._brotli_looks_corrupt(comp, cap=16)
-    with pytest.raises(E.BrotliOutputCapExceeded):
-        E.decode_brotli(comp, max_output=16)
-    # a genuinely over-cap LEGAL stream still reports the cap
-    with pytest.raises(ValueError, match="exceeds cap"):
-        E._arrow_decompress_bisect(
-            codec, comp, max_output=len(_SAMPLES["runs"]) // 4
-        )
-
-
-def test_zstd_undersize_signature_learned_from_live_library():
-    """Round 12 (ADVICE): the bisect's direction test no longer trusts
-    a hardcoded substring — it compares against the message the
-    RUNNING pyarrow emits for an undersized buffer, learned by
-    self-probe, so a rewording re-learns automatically."""
-    sig = E._zstd_undersize_signature()
-    assert sig is not None
-    codec = E._arrow_codec("zstd")
-    # the live library's undersize error for an unrelated payload is
-    # the same string the probe learned
-    comp = _compress(b"some other payload entirely " * 40, 3, "zstd")
-    with pytest.raises(Exception) as ex:
-        codec.decompress(comp, 1)
-    assert str(ex.value) == sig
-    # corrupt zstd exhausts the search loudly instead of looping
-    with pytest.raises(ValueError, match="corrupt"):
-        E._zstd_bisect(codec, b"\x28\xb5\x2f\xfd\x00garbage here")
-
-
-def test_zstd_frame_content_size_and_decode():
-    for name, data in _SAMPLES.items():
-        comp = _compress(data, 3, "zstd")
-        size = E._zstd_frame_content_size(comp)
-        assert size == len(data)  # Arrow's zstd writes the FCS field
-        assert E.zstd_decompress(comp) == data
-    assert E._zstd_frame_content_size(b"not a frame") is None
-    # sizeless-frame fallback: the direction-guided bisection must
-    # find the exact size without the header's help
+def test_over_cap_raises_and_cap_is_inclusive(monkeypatch):
+    """A LEGAL body one byte over ``max_output`` raises; one at it
+    decodes — for every capped coding, through the module cap."""
     data = _SAMPLES["runs"]
-    comp = _compress(data, 3, "zstd")
-    codec = E._arrow_codec("zstd")
-    assert E._zstd_bisect(codec, comp) == data
-    assert E._zstd_bisect(codec, _compress(b"", 3, "zstd")) == b""
+    n = len(data)
+    bodies = {
+        "br": _compress(data),
+        "zstd": _compress(data, 3, "zstd"),
+        "gzip": _compress(data, 6, "gzip"),
+        "deflate": zlib.compress(data),
+        "compress": E.encode_lzw(data),
+    }
+    for token, body in bodies.items():
+        monkeypatch.setattr(E, "MAX_OUTPUT", n)
+        assert E.decode_content_coding(token, body) == data, token
+        monkeypatch.setattr(E, "MAX_OUTPUT", n - 1)
+        with pytest.raises(ValueError, match="exceeds cap"):
+            E.decode_content_coding(token, body)
+    with pytest.raises(ValueError, match="exceeds cap"):
+        E.brotli_decompress(bodies["br"], max_output=16)
+    with pytest.raises(ValueError, match="exceeds cap"):
+        E.zstd_decompress(bodies["zstd"], max_output=16)
+
+
+@pytest.mark.parametrize("codec", ["brotli", "zstd"])
+def test_damaged_input_is_corrupt(codec):
+    decode = E.brotli_decompress if codec == "brotli" else E.zstd_decompress
+    body = _compress(_SAMPLES["text"], 5, codec)
+    for bad in (
+        b"\xff\xff\xff\xffdefinitely not compressed" * 3,  # garbage
+        body[: len(body) // 2],  # truncated
+        body + b"trailing junk",  # trailing junk
+    ):
+        with pytest.raises(ValueError, match=f"corrupt {codec} data"):
+            decode(bad)
+
+
+def test_empty_body_decodes_to_empty():
+    for token in ("br", "zstd", "identity"):
+        assert E.decode_content_coding(token, b"") == b""
+    assert E.brotli_decompress(_compress(b"")) == b""
+    assert E.zstd_decompress(_compress(b"", 3, "zstd")) == b""
+
+
+def test_zstd_multi_frame_concatenation():
+    """A legal multi-frame concatenation decodes whole, and a skippable
+    frame (RFC 8878 §3.1.2) between frames is skipped."""
+    multi = _compress(b"first frame ", 3, "zstd") + _compress(
+        b"second frame", 3, "zstd"
+    )
+    assert E.zstd_decompress(multi) == b"first frame second frame"
+    skip = b"\x50\x2a\x4d\x18" + (5).to_bytes(4, "little") + b"skip!"
+    assert (
+        E.zstd_decompress(
+            _compress(b"a", 3, "zstd") + skip + _compress(b"b", 3, "zstd")
+        )
+        == b"ab"
+    )
+
+
+def test_differential_fuzz_vs_arrow_multi_metablock():
+    """Seeded differential fuzz: bodies long and varied enough to
+    span many brotli meta-blocks and several stream-read refills decode
+    to the input, byte-equal to Arrow's one-shot sized decode."""
+    words = [b"the", b"data", b"pipeline", b"spark", b"row", b" ", b"\n"]
+    for seed in (3, 7, 11, 19, 26):
+        rng = random.Random(seed)
+        parts = []
+        for _ in range(rng.randrange(1, 30)):
+            if rng.random() < 0.5:
+                parts.append(rng.randbytes(rng.randrange(5000)))
+            else:
+                parts.append(rng.choice(words) * rng.randrange(1000))
+        data = b"".join(parts)
+        for codec, lvl in (("brotli", 1), ("brotli", 11), ("zstd", 3)):
+            comp = _compress(data, lvl, codec)
+            one_shot = pa.Codec(codec).decompress(
+                comp, len(data), asbytes=True
+            )
+            decode = (
+                E.brotli_decompress if codec == "brotli"
+                else E.zstd_decompress
+            )
+            assert decode(comp) == one_shot == data, (seed, codec, lvl)
 
 
 # ---------------------------------------------------------------------------
@@ -271,9 +247,8 @@ def test_lzw_empty_and_boundary():
 
 def test_decode_content_coding_tokens():
     body = b"chained body " * 50
-    gz = zlib.compressobj(wbits=zlib.MAX_WBITS | 16)
-    gz_body = gz.compress(body) + gz.flush()
-    assert E.decode_content_coding("gzip", gz_body) == body
+    for token in ("gzip", "x-gzip"):
+        assert E.decode_content_coding(token, gzip.compress(body)) == body
     assert E.decode_content_coding("deflate", zlib.compress(body)) == body
     raw = zlib.compressobj(wbits=-zlib.MAX_WBITS)
     assert (
@@ -283,7 +258,6 @@ def test_decode_content_coding_tokens():
     assert E.decode_content_coding("br", _compress(body)) == body
     assert E.decode_content_coding("zstd", _compress(body, 3, "zstd")) == body
     assert E.decode_content_coding("identity", body) == body
-    # round 12: 'compress' decodes; 'sdch' keeps the loud seam
     assert (
         E.decode_content_coding("compress", E.encode_lzw(body)) == body
     )
@@ -294,119 +268,52 @@ def test_decode_content_coding_tokens():
         E.decode_content_coding("sdch", body)
 
 
+def test_gzip_members_and_bomb(monkeypatch):
+    """gzip decodes EVERY member (servers that flush mid-response emit
+    one member per flush); the cap spans all members, so a small bomb
+    — or members each under the cap but over it together — raises."""
+    a, b = b"first flushed half; ", b"second half of the page"
+    assert E.decode_content_coding(
+        "gzip", gzip.compress(a) + gzip.compress(b)
+    ) == a + b
+    with pytest.raises(ValueError, match="gzip member 2"):
+        E.decode_content_coding(
+            "gzip", gzip.compress(a) + gzip.compress(b) + b"junk"
+        )
+    monkeypatch.setattr(E, "MAX_OUTPUT", 1 << 16)
+    bomb = gzip.compress(bytes(1 << 20), compresslevel=9)
+    assert len(bomb) < 2048
+    with pytest.raises(ValueError, match="exceeds cap"):
+        E.decode_content_coding("gzip", bomb)
+    with pytest.raises(ValueError, match="exceeds cap"):
+        E.decode_content_coding("deflate", zlib.compress(bytes(1 << 20), 9))
+    half = gzip.compress(bytes(40_000))
+    with pytest.raises(ValueError, match="exceeds cap"):
+        E.decode_content_coding("gzip", half + half)
+
+
+def test_warc_container_walk_is_uncapped(monkeypatch):
+    """The HTTP cap bounds one response body, not a whole ``.warc.gz``
+    file, which legitimately inflates past it."""
+    from mapreduce_framework_for_mergesort_spark.sources import warc as W
+
+    blob = W.synthesize_warc(
+        [("resource", f"http://t/{i}", b"x" * 500) for i in range(8)]
+    )
+    monkeypatch.setattr(E, "MAX_OUTPUT", 1000)
+    assert len(W.parse_warc(blob)) == 8
+
+
 def test_http_chain_and_warc_integration():
-    """The WARC decode half walks a multi-coding chain right-to-left
-    and now serves br/zstd (the round-10 'biggest real-data gap')."""
+    """The WARC decode half walks a multi-coding chain right-to-left."""
     from mapreduce_framework_for_mergesort_spark.sources import warc as W
 
     body = b"<html><body><p>page</p></body></html>"
-    br_body = _compress(body)
     # gzip applied AFTER br: header lists 'br, gzip' in application
     # order; decode must invert right-to-left
-    gz = zlib.compressobj(wbits=zlib.MAX_WBITS | 16)
-    double = gz.compress(br_body) + gz.flush()
+    double = _compress(_compress(body), 6, "gzip")
     headers = {"content-encoding": "br, gzip"}
     assert W._decode_http_body(headers, double) == body
     # corrupt br classifies as ValueError (structural damage)
-    with pytest.raises(ValueError):
+    with pytest.raises(ValueError, match="corrupt br body"):
         W._decode_http_body({"content-encoding": "br"}, b"\xff\xffjunk")
-
-
-def test_differential_fuzz_vs_arrow_multi_metablock():
-    """Seeded differential fuzz vs the Arrow codec over content shapes
-    that produce MULTI-meta-block streams — this exact test caught the
-    round-11 bug where the distance ring buffer was reset per
-    meta-block instead of persisting as stream state (a level-2 stream
-    reused a prior meta-block's distance through a short code)."""
-    words = [b"the", b"data", b"pipeline", b"spark", b"row", b" ", b"\n"]
-    for seed in (3, 7, 11, 19, 26):
-        rng = random.Random(seed)
-        parts = []
-        for _ in range(rng.randrange(1, 30)):
-            if rng.random() < 0.5:
-                parts.append(
-                    bytes(rng.randrange(256)
-                          for _ in range(rng.randrange(5000)))
-                )
-            else:
-                parts.append(rng.choice(words) * rng.randrange(1000))
-        data = b"".join(parts)
-        for lvl in (1, 2, 6, 11):
-            comp = _compress(data, lvl)
-            try:
-                out = E.decode_brotli(comp, max_output=1 << 28)
-            except E.BrotliDataGap:
-                continue
-            assert out == data, (seed, lvl, len(data))
-
-
-def test_zstd_multi_frame_concatenation():
-    """A legal multi-frame concatenation: the first frame's header
-    size under-counts, so the decoder must fall back to the exact-size
-    search instead of failing (round-11 review)."""
-    multi = _compress(b"first frame ", 3, "zstd") + _compress(
-        b"second frame", 3, "zstd"
-    )
-    assert E.zstd_decompress(multi) == b"first frame second frame"
-
-
-def test_learned_transform_table_closes_the_seam():
-    """With the shipped learned-transform table, the house decoder
-    round-trips transform-heavy real text at EVERY level — the
-    round-10 'dictionary transforms' seam, closed empirically."""
-    table = E._learned_transforms()
-    assert len(table) >= 50  # 58 learned + identity at this snapshot
-    assert table[0] == (b"", "identity", b"")
-    eng = b"The committee of the whole published a detailed report. " * 60
-    html = (
-        b"<html><body>"
-        + b"<p>Information about the development of the technology.</p>"
-        * 40
-        + b"</body></html>"
-    )
-    for data in (eng, html):
-        for lvl in range(1, 12):
-            assert E.decode_brotli(_compress(data, lvl)) == data
-
-
-def test_transform_ops_match_spec_arithmetic():
-    # ferment: ASCII a-z flips bit 5; 2-byte UTF-8 flips bit 5 of the
-    # continuation; 3-byte XORs byte 3 with 5 (RFC 7932 §8.2)
-    assert E.TRANSFORM_OPS["ferment_first"](b"hello") == b"Hello"
-    assert E.TRANSFORM_OPS["ferment_all"](b"hello") == b"HELLO"
-    # NOT an involution: only a-z ferments (uppercase stays put)
-    assert E.TRANSFORM_OPS["ferment_first"](b"Hello") == b"Hello"
-    e_acute = "é".encode()
-    assert E.TRANSFORM_OPS["ferment_first"](e_acute) == bytes(
-        [e_acute[0], e_acute[1] ^ 32]
-    )
-    assert E.TRANSFORM_OPS["omit_first_2"](b"abcdef") == b"cdef"
-    assert E.TRANSFORM_OPS["omit_last_2"](b"abcdef") == b"abcd"
-    assert E.TRANSFORM_OPS["omit_last_9"](b"abc") == b""
-    assert E.apply_transform(b"word", b" ", "ferment_first", b'="') == (
-        b' Word="'
-    )
-
-
-def test_learn_transforms_regenerates_shipped_table():
-    """The committed resource is exactly what the deterministic
-    learning run produces in THIS environment — regeneration is the
-    review gate against a stale or hand-edited table."""
-    import json
-    import os
-
-    learned, unresolved = E.learn_transforms()
-    assert unresolved == {}
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(E.__file__))),
-        "sources", "..", "data", "brotli_transforms_learned.json",
-    )
-    with open(os.path.normpath(path)) as f:
-        doc = json.load(f)
-    shipped = {
-        int(k): (bytes.fromhex(v["prefix"]), v["op"],
-                 bytes.fromhex(v["suffix"]))
-        for k, v in doc["transforms"].items()
-    }
-    shipped[0] = (b"", "identity", b"")
-    assert shipped == learned

@@ -155,7 +155,7 @@ def test_classify_unsupported_encoding_is_counted_not_raised():
     assert row["http_status"] == 200
 
 
-def test_classify_corrupt_br_is_corrupt_not_unsupported():
+def test_classify_corrupt_br_is_corrupt_not_unsupported(monkeypatch):
     # a br header over garbage bytes is DATA damage, not a codec seam
     # (round-10 verdict: quarantine reasons unchanged for genuinely
     # corrupt rows)
@@ -168,6 +168,19 @@ def test_classify_corrupt_br_is_corrupt_not_unsupported():
     assert row["extract_class"] == "corrupt"
     assert not row["extract_ok"]
     assert row["content_encoding"] == "br"
+    assert "corrupt brotli data" in row["extract_err"]
+    # a LEGAL br body over the output cap is quarantined too, but its
+    # reason says so instead of calling the bytes garbage
+    from mapreduce_framework_for_mergesort_spark.sources import encodings as E
+
+    big = H.synthesize_http_response(b"<p>page</p>" * 1000,
+                                     content_encoding="br")
+    assert H._classify_and_extract(big)["extract_ok"]
+    monkeypatch.setattr(E, "MAX_OUTPUT", 1000)
+    row = H._classify_and_extract(big)
+    assert row["extract_class"] == "corrupt" and not row["extract_ok"]
+    assert "exceeds cap" in row["extract_err"]
+    assert "corrupt brotli data" not in row["extract_err"]
 
 
 def test_classify_corrupt_and_non200():

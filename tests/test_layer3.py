@@ -1,7 +1,6 @@
 """MPEG-1 Layer III spectral decode (round 11, ``sources/layer3.py``).
 
-No reference mp3 decoder exists in this environment (unlike brotli,
-where Arrow's codec cross-pins the house decoder), so the pins here
+No reference mp3 decoder exists in this environment, so the pins here
 are: exact encode/decode inversion over randomized tone placements
 (hypothesis), side-info field-level round-trips, the IMDCT/alias chain
 against an independent numpy replica of the same closed-form math, the

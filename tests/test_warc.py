@@ -47,7 +47,7 @@ def test_gzip_members_are_individually_framed():
     member independently decompressible (what makes records seekable
     by byte offset at crawl scale)."""
     blob = W.synthesize_warc(RECS, gzip_members=True)
-    members = W._split_gzip_members(blob)
+    members = W.split_gzip_members(blob)
     assert len(members) == len(RECS)
     for m in members:
         assert len(W._parse_plain_records(m)) == 1
