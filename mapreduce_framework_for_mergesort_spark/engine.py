@@ -5,7 +5,10 @@ The reference client submits one blocking job:
 (``Client.java:20-39``, ``Server.thrift:4``).  The facade keeps that
 surface (so a user of the reference can switch 1:1) while the body is the
 idiomatic Spark pipeline: read text → parse ints → global sort → write
-text.  ``chunk_size`` maps to the FileScan split size and ``merge_jobs``
+text.  ``chunk_size`` is the FileScan split size: the text source's
+records are space-delimited, so it splits the reference's one-line file
+into ``chunk_size`` byte ranges cut at spaces, as the reference's chunk
+planning does (SURVEY.md O1/O2).  ``merge_jobs``
 is accepted-and-ignored: Spark's shuffle merges sorted spills in a single
 pass, subsuming the reference's multi-round merge tree
 (``Server.java:290-405``; SURVEY.md O8).

@@ -3,14 +3,17 @@
 The reference's entire data model is one ASCII file of space-separated
 ints (``NodeHandler.java:66-70`` parse, ``NodeHandler.java:88-104`` sink;
 delimiter documented at ``README.md:76``).  Here that format is a thin
-source/sink around the DataFrame world:
+source/sink around the DataFrame world, with the space as the record
+delimiter on both sides:
 
 * scan/split planning (reference O1/O2, ``ServerHandler.java:44-52``,
-  ``NodeHandler.java:119-200``) is Spark's FileScan: split size is
-  ``spark.sql.files.maxPartitionBytes``, record-boundary ownership is the
-  text line reader's — nothing to build;
-* tokenize/parse (O3) is ``split`` + ``explode`` + ``try_cast`` — all
-  JVM-side, whole-stage-codegen'd, no Python in the loop;
+  ``NodeHandler.java:119-200``) is Spark's FileScan over the text source
+  with ``lineSep=" "``: split size is ``spark.sql.files.maxPartitionBytes``
+  and each split owns the space-delimited records that start in it, so
+  the reference's one-line file is chunked at spaces — nothing to build;
+* tokenize/parse (O3) is a ``try_cast`` per record, falling back to
+  ``split`` + ``explode`` only for a record holding other whitespace —
+  all JVM-side, whole-stage-codegen'd, no Python in the loop;
 * malformed tokens become NULLs via ``try_cast`` and are dropped
   *explicitly* (reference O4's "dummy" filtering,
   ``NodeHandler.java:113-116``) — unlike the reference, which swallows
@@ -35,10 +38,22 @@ def read_ints_text(
 
     Keeps NULLs for unparseable tokens; callers choose the corrupt-record
     policy (``drop_invalid`` mirrors reference O4).
+
+    Records are delimited by the space, the reference's only separator
+    (``README.md:76``, ``NodeHandler.java:66``) and the one every
+    in-repo producer writes (``write_ints_text``, ``perfbench/gen.py``),
+    so a one-line file splits into ``maxPartitionBytes`` scan tasks.
+    Any other whitespace (``\\t``, ``\\n``, ``\\r``, ``\\v``, ``\\f``, runs)
+    still separates tokens, but only inside a record: a file whose only
+    separator is ``\\n`` parses correctly, but as one record per file.
     """
-    lines = spark.read.text(path)
-    tokens = lines.select(
-        F.explode(F.split(F.col("value"), r"\s+")).alias("token")
+    value = F.col("value")
+    tokens = spark.read.option("lineSep", " ").text(path).select(
+        F.explode(
+            F.when(value.try_cast("int").isNotNull(), F.array(value)).otherwise(
+                F.split(value, r"\s+")
+            )
+        ).alias("token")
     )
     return tokens.where(F.col("token") != "").select(
         F.col("token").try_cast("int").alias(value_col)
@@ -55,18 +70,17 @@ def write_ints_text(
     df: DataFrame,
     path: str,
     value_col: str = "value",
-    values_per_line: int = 1000,
     num_files: int | None = None,
 ) -> None:
     """DataFrame → space-delimited text (reference O9 sink,
     ``NodeHandler.java:88-104``).
 
-    Order-preserving and shuffle-free: values are packed
-    ``values_per_line`` per line *within each partition* via
-    ``mapInPandas`` (Arrow batches arrive in partition order), so writing
-    a globally-sorted DataFrame yields part files that are sorted within
-    and across files (part file numbering follows range-partition order)
-    — the reference's sorted final file, in its idiomatic N-ordered-files
+    Order-preserving and shuffle-free: each partition is written as one
+    part file of space-terminated values, in partition order, by the
+    text source with ``lineSep=" "`` — so writing a globally-sorted
+    DataFrame yields part files that are sorted within and across files
+    (part file numbering follows range-partition order) — the
+    reference's sorted final file, in its idiomatic N-ordered-files
     form.
 
     ``num_files`` is for tiny demo outputs ONLY, and be clear about what
@@ -80,26 +94,11 @@ def write_ints_text(
 
     NULL values are dropped (the reference's sink never sees them
     either — its parser discards invalid records upstream,
-    ``NodeHandler.java:113-116``); without the filter a single NULL
-    reaching the packer would kill the job with an executor-side
-    TypeError from ``str.join``.
+    ``NodeHandler.java:113-116``).
     """
-    packed = df.where(F.col(value_col).isNotNull()).select(
-        F.col(value_col).cast("string").alias("v")
+    out = df.where(F.col(value_col).isNotNull()).select(
+        F.col(value_col).cast("string").alias("value")
     )
     if num_files:
-        packed = packed.coalesce(num_files)
-
-    def pack(batches):
-        import pandas as pd
-
-        buf: list[str] = []
-        for pdf in batches:
-            buf.extend(pdf["v"].tolist())
-            while len(buf) >= values_per_line:
-                yield pd.DataFrame({"line": [" ".join(buf[:values_per_line])]})
-                del buf[:values_per_line]
-        if buf:
-            yield pd.DataFrame({"line": [" ".join(buf)]})
-
-    packed.mapInPandas(pack, "line string").write.mode("overwrite").text(path)
+        out = out.coalesce(num_files)
+    out.write.mode("overwrite").option("lineSep", " ").text(path)

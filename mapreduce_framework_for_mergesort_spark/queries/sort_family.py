@@ -122,13 +122,13 @@ def _ingest_workdir(sf_dir: str, tag: str) -> str:
 )
 def q_ingest_text_ints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Serialize ``part.p_size`` to the reference's space-delimited text
-    format, re-ingest (split/explode/cast), and globally sort — the full
-    reference job on its native I/O format."""
+    format, re-ingest (space-delimited records, ``try_cast``), and
+    globally sort — the full reference job on its native I/O format."""
     path = _ingest_workdir(sf_dir, "ints")
     vals = load_table(spark, sf_dir, "part").select(
         F.col("p_size").cast("int").alias("value")
     )
-    ingest.write_ints_text(vals, path, values_per_line=64)
+    ingest.write_ints_text(vals, path)
     parsed = ingest.drop_invalid(ingest.read_ints_text(spark, path))
     return sort.with_global_rank(parsed, ["value"]).select("rank", "value")
 
@@ -155,7 +155,7 @@ def q_filter_nonnull(spark: SparkSession, sf_dir: str) -> DataFrame:
     vals = load_table(spark, sf_dir, "part").select(
         F.col("p_size").cast("int").alias("value")
     )
-    ingest.write_ints_text(vals, path, values_per_line=64)
+    ingest.write_ints_text(vals, path)
     corrupt = spark.createDataFrame(
         [("xx 12a --",), ("NaNish  9999999999999999999999",)], ["value"]
     )

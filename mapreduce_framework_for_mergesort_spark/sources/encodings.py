@@ -28,6 +28,9 @@ MAX_OUTPUT = 1 << 30
 
 _CAP_MSG = "decompressed output exceeds cap"
 
+#: Read size of one Arrow stream read (br / zstd).
+_READ_PIECE = 1 << 20
+
 
 # ---------------------------------------------------------------------------
 # br / zstd — Arrow codecs
@@ -37,19 +40,25 @@ _CAP_MSG = "decompressed output exceeds cap"
 def _arrow_stream_decompress(
     data: bytes, codec: str, max_output: int
 ) -> bytes:
-    """Decode a sizeless ``codec`` stream with one read of at most
-    ``max_output + 1`` bytes, so an over-cap body stops one byte past
-    the cap.  pyarrow reserves the read's size up front but touches
-    only the pages it fills."""
+    """Decode a sizeless ``codec`` stream in reads of at most
+    ``_READ_PIECE`` bytes until EOF or one byte past ``max_output``, so
+    an over-cap body stops one byte past the cap and no read reserves
+    the cap's size up front."""
+    pieces: list[bytes] = []
+    total = 0
     try:
-        out = pa.CompressedInputStream(pa.BufferReader(data), codec).read(
-            max_output + 1
-        )
+        stream = pa.CompressedInputStream(pa.BufferReader(data), codec)
+        while total <= max_output:
+            piece = stream.read(min(_READ_PIECE, max_output + 1 - total))
+            if not piece:
+                break
+            pieces.append(piece)
+            total += len(piece)
     except OSError as ex:
         raise ValueError(f"corrupt {codec} data: {ex}") from None
-    if len(out) > max_output:
+    if total > max_output:
         raise ValueError(_CAP_MSG)
-    return out
+    return b"".join(pieces)
 
 
 def brotli_decompress(data: bytes, max_output: int = MAX_OUTPUT) -> bytes:

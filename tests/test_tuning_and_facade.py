@@ -4,11 +4,19 @@ streaming checkpoint (exactly-once restart) semantics."""
 from __future__ import annotations
 
 import glob
+import random
 import shutil
 
-from mapreduce_framework_for_mergesort_spark import tuning
+from pyspark.sql import functions as F
+
+from mapreduce_framework_for_mergesort_spark import plans, tuning
 from mapreduce_framework_for_mergesort_spark.engine import MergeSortEngine
-from mapreduce_framework_for_mergesort_spark.io import register_views, table_path
+from mapreduce_framework_for_mergesort_spark.io import (
+    register_views,
+    scoped_session_confs,
+    table_path,
+)
+from mapreduce_framework_for_mergesort_spark.operators import ingest
 
 
 def test_scan_split_sizing_scales():
@@ -115,3 +123,29 @@ def test_sort_file_chunk_size_conf_is_scoped(spark, tmp_path):
         for t in open(p).read().split()
     ]
     assert toks == ["1", "3", "4", "5", "999999"]
+
+
+def test_sort_file_chunks_one_line_file(spark, tmp_path):
+    """The reference's O1/O2 chunking: a one-line file splits into
+    ``chunk_size`` scan tasks at spaces, parsed with no Python."""
+    rng = random.Random(7)
+    vals = [rng.randint(-(2**31), 2**31 - 1) for _ in range(8000)]
+    vals += [999999, 1000000, 999999]
+    path = tmp_path / "ints.txt"
+    path.write_text(" ".join(map(str, vals)))
+    assert path.stat().st_size >= 64 * 1024
+    with scoped_session_confs(
+        spark, (("spark.sql.files.maxPartitionBytes", "4096"),)
+    ):
+        df = ingest.read_ints_text(spark, str(path))
+        counts = df.groupBy(F.spark_partition_id()).count().collect()
+    assert len([r for r in counts if r["count"] > 0]) >= 2
+    assert plans.audit(df).python_evals == 0
+
+    out = MergeSortEngine(spark).sort_file(str(path), chunk_size=4096)
+    toks = [
+        int(t)
+        for p in sorted(glob.glob(f"{out}/part-*"))
+        for t in open(p).read().split()
+    ]
+    assert toks == sorted(vals)
