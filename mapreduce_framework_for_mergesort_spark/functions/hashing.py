@@ -261,14 +261,6 @@ def duckdb_gram_hash(s: str) -> str:
     )
 
 
-def py_gram_hash(s: str) -> int:
-    """Kernel spelling of the same 48-bit gram hash (hex-identical md5
-    across hashlib/JVM/DuckDB, same first-12-digit prefix)."""
-    import hashlib
-
-    return int(hashlib.md5(s.encode()).hexdigest()[:GRAM_HEX_DIGITS], 16)
-
-
 def gram_rows_udf(k: int):
     """Arrow-batched positional k-gram pass: per document, the array of
     ``(pos, g)`` window rows (1-based token position, 48-bit gram hash)
@@ -328,22 +320,6 @@ def gram_rows_udf(k: int):
         return pd.Series(out)
 
     return grams
-
-
-def spark_minhash(shingles: str, k: int) -> str:
-    a, b = MINHASH_AB[k]
-    return (
-        f"array_min(transform({shingles}, s -> "
-        f"pmod({a} * {spark_base_hash('s')} + {b}, {MINHASH_P})))"
-    )
-
-
-def duckdb_minhash(shingles: str, k: int) -> str:
-    a, b = MINHASH_AB[k]
-    return (
-        f"list_min(list_transform({shingles}, s -> "
-        f"({a} * {duckdb_base_hash('s')} + {b}) % {MINHASH_P}))"
-    )
 
 
 def spark_band_structs(shingles: str) -> str:
@@ -441,10 +417,6 @@ def band_slices() -> list[tuple[int, list[int]]]:
         (b, list(range(b * BAND_ROWS, (b + 1) * BAND_ROWS)))
         for b in range(NUM_BANDS)
     ]
-
-
-def spark_band(sig_cols: list[str]) -> str:
-    return f"md5(concat_ws('|', {', '.join(sig_cols)}))"
 
 
 def duckdb_band(sig_cols: list[str]) -> str:

@@ -276,10 +276,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view so ``spark.sql`` works
     against the same names the DuckDB oracle uses — the engine's ad-hoc

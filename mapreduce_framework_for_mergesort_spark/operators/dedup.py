@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
 from mapreduce_framework_for_mergesort_spark.functions import vector as V
 from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+    input_bytes as _input_bytes,
     materialize as _materialize,
 )
 
@@ -1724,16 +1725,30 @@ def duckdb_dup_spans_cte(
     """
 
 
+#: Input-bytes cutoff for the strip rebuild (round 13): at or above it
+#: ``strip_dup_spans`` rebuilds through the Arrow kernel
+#: (``_strip_rebuild_arrow``), below it through the interpreted HOF
+#: slice battery.  Measured on the full q_dedup_ngram_jaccard key: ×1
+#: (0.6 MB docs) codegen 4.06 s vs arrow 4.55 s (the kernel contends
+#: for Python workers inside the two-chain overlap), ×10 (5.8 MB)
+#: codegen 7.79 s vs arrow 7.38 s (isolated strip pass 1.78 → 1.24 s:
+#: one Python crossing replaces three HOF expressions, and the
+#: tokenize memo skips replicas that share an Arrow batch).  4 MB sits
+#: between the measured loss and the measured win; at corpus scale the
+#: gate always takes the kernel.
+STRIP_ARROW_THRESHOLD_BYTES = 4 << 20
+
+
 def _strip_rebuild_arrow(k: int):
-    """Round-13 A/B variant: the strip rebuild (tokenize → slice out
-    protecting intervals → rejoin) as ONE Arrow kernel over
-    (text, __iv) returning struct(stripped_text, n_tokens,
-    n_kept_tokens) — replaces three interpreted HOF expressions (HOFs
-    never enter codegen and re-evaluate shared subtrees).  Exact
-    replica: same pinned tokenizer (``hashing.tokenize``), same
-    1-based inclusive slices, same <k short-doc passthrough, same NULL
-    propagation.  Pinned equal to the SQL spelling in
-    tests/test_llm_ops.py."""
+    """The strip rebuild (tokenize → slice out protecting intervals →
+    rejoin) as ONE Arrow kernel over (text, __iv) returning
+    struct(stripped_text, n_tokens, n_kept_tokens) — replaces three
+    interpreted HOF expressions (HOFs never enter codegen and
+    re-evaluate shared subtrees).  Exact replica: same pinned
+    tokenizer (``hashing.tokenize``), same 1-based inclusive slices,
+    same <k short-doc passthrough, same NULL propagation.  The tokenize
+    memo lives for ONE Arrow batch (it is built inside ``rebuild``),
+    so it pays only for replicas that land in the same batch."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1790,7 +1805,6 @@ def strip_dup_spans(
     min_count: int = 2,
     grams: DataFrame | None = None,
     flags: DataFrame | None = None,
-    strategy: str = "codegen",
 ) -> DataFrame:
     """Span REMOVAL, first-occurrence-wins (the Lee et al. '21 step
     after detection): rewrite each document keeping only tokens covered
@@ -1809,14 +1823,20 @@ def strip_dup_spans(
 
     Scale shape: one exchange on the int64 gram key
     (``positional_gram_flags``, shared with ``dup_spans`` when both
-    run), then a per-doc window and a pure-codegen interval rebuild:
-    the protecting intervals are sorted and SLICED out of the token
-    array (O(intervals + kept tokens) per doc — round 6; the previous
+    run), then a per-doc window and an interval rebuild: the protecting
+    intervals are sorted and SLICED out of the token array
+    (O(intervals + kept tokens) per doc — round 6; the previous
     per-token ``exists`` scan was O(tokens × intervals)), and the kept
     count is the interval-length sum, not a re-tokenization of the
     rebuilt text (tokens contain no whitespace, so the two are
     identical by construction).  ``flags`` / ``grams`` as in
     ``dup_spans``.
+
+    Scale gate: when ``materialize.input_bytes(documents)`` (the plan's
+    scan-file bytes; an in-memory frame counts as 0) reaches
+    ``STRIP_ARROW_THRESHOLD_BYTES``, the rebuild runs as the Arrow
+    kernel ``_strip_rebuild_arrow``; below it, as codegen HOF slices.
+    Both give identical rows; there is no override.
     """
     if flags is None:
         flags = positional_gram_flags(documents, k, grams=grams)
@@ -1842,7 +1862,7 @@ def strip_dup_spans(
     joined = documents.join(iv, "doc_id", "left").withColumn(
         "__iv", F.coalesce(F.col("__iv"), empty_iv)
     )
-    if strategy == "arrow":
+    if (_input_bytes(documents) or 0) >= STRIP_ARROW_THRESHOLD_BYTES:
         out = joined.withColumn(
             "__sr", _strip_rebuild_arrow(k)(F.col("text"), F.col("__iv"))
         )
@@ -1852,8 +1872,6 @@ def strip_dup_spans(
             .withColumn("n_kept_tokens", F.col("__sr.n_kept_tokens"))
             .drop("__iv", "__sr")
         )
-    if strategy != "codegen":
-        raise ValueError(f"unknown strip strategy {strategy!r}")
     # __iv intervals are disjoint and sorted by start (islands output +
     # array_sort), so the kept text is the in-order concatenation of
     # token-array slices and the kept count is the length sum

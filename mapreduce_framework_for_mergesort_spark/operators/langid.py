@@ -330,7 +330,7 @@ def duckdb_pred_query(
 
 
 # ---------------------------------------------------------------------------
-# the Arrow strategy (round 12 A/B winner) + the Python replica
+# the Arrow kernel lang_id runs (round 12 A/B winner) + the Python replica
 # ---------------------------------------------------------------------------
 
 
@@ -349,9 +349,10 @@ def python_pred(text: str | None,
     script order, zero-evidence guard, and CASE-order argmax tiebreak
     as ``decision_case_sql``.  Double duty: the independent pin for
     the SQL expression in tests, AND the kernel body of
-    ``lang_pred_arrow`` (the two roles keep each other honest —
-    strategy equality is pinned on the real corpus and a CJK battery,
-    so a divergence in either copy of the decision fails loudly)."""
+    ``lang_pred_arrow`` (the two roles keep each other honest — the
+    replica is pinned to the SQL decision on a battery covering every
+    branch, and q_lang_id's oracle checks the kernel on the real
+    corpus, so a divergence in either copy fails loudly)."""
     if text is None:
         return "und"
     profiles = profiles or load_lang_profiles()
@@ -376,11 +377,10 @@ def lang_pred_arrow(text_col):
     """The classifier as one memoized Arrow kernel — the round-12 A/B
     winner over the codegen ``let`` expression (0.82 → 0.48 s min on
     the sf0.1 documents fixture, 1.7×; same CodegenFallback reasoning
-    as the URL pct/dot kernel, numbers in SCALE_NOTES).  The codegen
+    as the URL pct/dot fold A/B, numbers in SCALE_NOTES).  The codegen
     expression stays as ``spark_pred_expr`` — it is what the DuckDB
-    oracle replicates, and ``lang_id(strategy="codegen")`` keeps the
-    zero-Python form for deployments that want it; both strategies
-    are pinned equal.
+    oracle replicates, and ``pipelines.with_curation_features`` runs
+    it (see the caveat below).
 
     CAVEAT (measured round 12): feed this a PLAIN COLUMN.  A pandas
     UDF whose argument is a HOF-derived expression (e.g. the

@@ -105,25 +105,6 @@ def hourly_event_agg(events: DataFrame) -> DataFrame:
     )
 
 
-def running_total_per_customer(orders: DataFrame) -> DataFrame:
-    """Cumulative revenue per customer — window partitioned by customer
-    (scales with #customers; no global ordering anywhere)."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.sum(F.col("o_totalprice").cast(MONEY))
-        .over(w)
-        .cast("double")
-        .alias("running_total"),
-    )
-
-
 def top_n_per_group(
     df: DataFrame, part_cols: list[str], order_cols, n: int, rank_alias: str = "rn"
 ) -> DataFrame:

@@ -1,8 +1,9 @@
 """Text analysis operators (north-star extension; reference has none).
 
-Everything is per-row JVM expression work (regex, higher-order array
-functions) — zero Python in the hot path, embarrassingly parallel, no
-shuffle except the explicit per-lang aggregation.  Ratios and scores are
+Mostly per-row JVM expression work (regex, higher-order array
+functions), embarrassingly parallel, no shuffle except the explicit
+aggregations; ``doc_profile`` and ``lang_id`` run one Arrow kernel per
+distinct content instead (``per_content``).  Ratios and scores are
 single-expression double math, which is IEEE-deterministic cross-engine
 (only *aggregated* double sums are order-dependent — those go through
 DECIMAL or integers).
@@ -35,10 +36,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 PUNCT_CLASS = r"[.,!?;:]"
 
 
-def _tokens() -> Column:
-    return F.expr(H.spark_tokens("text"))
-
-
 def _hits(toks: str, words: tuple[str, ...]) -> str:
     in_list = ", ".join(f"'{w}'" for w in words)
     return f"size(filter({toks}, t -> t IN ({in_list})))"
@@ -47,7 +44,7 @@ def _hits(toks: str, words: tuple[str, ...]) -> str:
 def text_feature_exprs(text_col: str = "text") -> dict[str, str]:
     """SINGLE source of the per-doc text-feature SQL sub-expressions
     (``toks``/``n_tokens``/``punct``/``stop_hits``/``quality``) shared
-    by ``quality_scores``, ``doc_profile``, and
+    by ``quality_scores``, ``repetition_profile``, and
     ``pipelines.with_curation_features`` — the round-1 punctuation
     inversion survived precisely because this formula was hand-copied
     at every site and had to be found everywhere at once."""
@@ -144,18 +141,21 @@ def quality_scores(documents: DataFrame) -> DataFrame:
 def lang_id(
     documents: DataFrame,
     with_fingerprint: bool = False,
-    strategy: str = "arrow",
 ) -> DataFrame:
     """Two-stage language ID (round 12, ``operators/langid.py``):
     script detection for the script-determined languages (kana → ja,
     hangul → ko, Thai → th, Han → zh — in that order, since Japanese
     text contains Han) and LEARNED char-trigram profiles
     (Cavnar–Trenkle over the packaged seed corpus) for the Latin- and
-    Cyrillic-script languages; zero evidence → 'und'.  One codegen
-    expression per row — the nested lets bind lower(text) and the
-    score array exactly once (HOF eval has no CSE).  Replaces the
+    Cyrillic-script languages; zero evidence → 'und'.  Replaces the
     round-1 stopword-hit argmax the round-11 verdict ranked as the
     biggest honest gap (every CJK page classified 'und').
+
+    The classifier runs as the memoized Arrow kernel
+    ``langid.lang_pred_arrow`` (1.7× over the codegen expression on
+    the real fixture, round 12).  The codegen expression
+    ``langid.spark_pred_expr`` is the same decision; the DuckDB oracle
+    replicates it and ``pipelines.with_curation_features`` runs it.
 
     ``with_fingerprint=True`` appends the winnowing-style content
     fingerprint (min rolling hash over char 8-grams, Arrow kernel) in
@@ -163,24 +163,11 @@ def lang_id(
 
     Classification and fingerprint are pure functions of the text, so
     both run once per distinct content (``per_content``); the labeled
-    ``lang`` column rides the document side of the join.
-
-    ``strategy``: ``"arrow"`` (default — the round-12 A/B winner,
-    1.7× over the codegen ``let`` on the real fixture; the memoized
-    kernel ``langid.lang_pred_arrow``) or ``"codegen"`` (the
-    zero-Python expression the DuckDB oracle replicates).  Pinned
-    equal in tests/test_langid.py."""
+    ``lang`` column rides the document side of the join."""
     from mapreduce_framework_for_mergesort_spark.operators import langid as L
 
-    if strategy == "arrow":
-        pred_col = L.lang_pred_arrow("text")
-    elif strategy == "codegen":
-        pred_col = F.expr(L.spark_pred_expr("text"))
-    else:
-        raise ValueError(f"unknown lang_id strategy {strategy!r}")
-
     def compute(reps: DataFrame) -> DataFrame:
-        cols = ["__th", pred_col.alias("pred_lang")]
+        cols = ["__th", L.lang_pred_arrow("text").alias("pred_lang")]
         if with_fingerprint:
             cols.append(
                 H.fingerprint_udf()(F.col("text")).alias("fingerprint")
@@ -231,14 +218,14 @@ def per_content(documents: DataFrame, compute) -> DataFrame:
     ).drop("__th", "__th_r")
 
 
-# --- round-13 optimization: per-content Arrow kernels -----------------------
-# Pure-Python replicas of the doc_profile / tfidf per-content expression
-# batteries, applied as ONE pandas_udf behind the per_content collapse —
-# the exact shape that won for lang-id's classifier and the URL family
-# (one boundary crossing amortized over the whole column family beats
-# the interpreted/codegen regex battery).  Every replica is pinned
-# equal to the SQL form in tests/test_llm_ops.py; the DuckDB oracles
-# are untouched, so the driver's value-level hash check is the gate.
+# --- round-13 optimization: the doc_profile Arrow kernel --------------------
+# A pure-Python replica of the doc_profile SQL battery, applied as ONE
+# pandas_udf behind the per_content collapse — the exact shape that won
+# for lang-id's classifier and the URL family (one boundary crossing
+# amortized over the whole column family beats the interpreted/codegen
+# regex battery).  The DuckDB oracle keeps the SQL form, so the
+# value-level oracle check (tests/test_llm_ops.py runs it on an edge
+# and replica corpus too) is the gate.
 
 import re as _re2
 
@@ -299,8 +286,7 @@ _DOC_PROFILE_FIELDS = [f.split()[0] for f in _DOC_PROFILE_SCHEMA.split(", ")]
 
 def doc_profile_arrow(text) -> Column:
     """The whole doc_profile column family as ONE Arrow struct kernel
-    (round 13; the url_family_arrow shape).  Pinned equal to the
-    codegen battery in tests/test_llm_ops.py."""
+    (round 13; the url_family_arrow shape)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -312,107 +298,28 @@ def doc_profile_arrow(text) -> Column:
     return pandas_udf(kernel, _DOC_PROFILE_SCHEMA)(text)
 
 
-def term_counts_arrow(text) -> Column:
-    """Per-document (term, tf) multiset as ONE Arrow kernel returning
-    ``array<struct<term,tf>>`` (round 13) — replaces tfidf's
-    explode-tokens → groupBy(content, term) count, which paid a corpus-
-    token-volume exchange; the Counter runs inside the row, so the only
-    remaining shuffles in tf-idf are the per_content distinct and the
-    df aggregation the algorithm fundamentally needs.  Exact: Counter
-    over the pinned ``hashing.tokenize`` == the SQL count-by-group."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from collections import Counter
-
-    def kernel(s):
-        out = []
-        for v in s:
-            if v is None:
-                out.append([])
-            else:
-                out.append(
-                    [
-                        {"term": t, "tf": c}
-                        for t, c in Counter(H.tokenize(v)).items()
-                    ]
-                )
-        return pd.Series(out)
-
-    kernel.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "array<struct<term string, tf long>>")(text)
-
-
-def doc_profile(documents: DataFrame, strategy: str = "arrow") -> DataFrame:
+def doc_profile(documents: DataFrame) -> DataFrame:
     """Per-document profile: token/subword/char counts, punctuation and
     stopword ratios, the heuristic quality score, and the regex scalar
     bundle (extract / replace-all / extract-all count / match test) —
-    ONE whole-stage-codegen projection over one scan; at 100 TB this is
-    the single-pass per-doc featurizer a filter pipeline wants, not five
-    passes.  Patterns stay in the POSIX-compatible subset where Java
-    regex and DuckDB's RE2 agree; both return '' for a no-match
-    extract.
+    the single-pass per-doc featurizer a filter pipeline wants, not
+    five passes.
 
-    ``strategy``: ``"arrow"`` (default — round-13 A/B winner: the
-    whole ten-column family as ONE struct kernel behind the
-    per-content collapse, one Python crossing per distinct content;
-    numbers in OPTIMIZATION_r13.md) or ``"codegen"`` (the zero-Python
-    battery the DuckDB oracle replicates).  Pinned equal in
-    tests/test_llm_ops.py."""
-    e = text_feature_exprs()
-    n_tokens = e["n_tokens"]
-    bpe = r"regexp_extract_all(text, '([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \\t\\n\\f\\r])', 1)"
-    if strategy == "arrow":
+    The whole ten-column family runs as ONE struct kernel
+    (``doc_profile_arrow``, round 13; numbers in OPTIMIZATION_r13.md)
+    behind the per-content collapse: one Python crossing per distinct
+    content.  The DuckDB oracle spells the same columns as SQL
+    expressions in the POSIX-compatible regex subset, where Java regex,
+    RE2 and Python's ``re`` agree; all return '' for a no-match
+    extract."""
 
-        def compute_arrow(reps: DataFrame) -> DataFrame:
-            return reps.select(
-                "__th", doc_profile_arrow(F.col("text")).alias("__p")
-            ).select("__th", "__p.*")
-
-        return per_content(documents, compute_arrow).select(
-            "doc_id", *_DOC_PROFILE_FIELDS
-        )
-    if strategy != "codegen":
-        raise ValueError(f"unknown doc_profile strategy {strategy!r}")
-
-    # every output column is a pure function of the text, so the whole
-    # projection runs once per distinct content (per_content)
     def compute(reps: DataFrame) -> DataFrame:
         return reps.select(
-            "__th",
-            F.expr(n_tokens).cast("long").alias("n_tokens"),
-            F.expr(f"size({bpe})").cast("long").alias("n_subwords"),
-            F.length("text").cast("long").alias("n_chars_actual"),
-            # try_divide: empty/zero-token text → NULL ratios, exactly
-            # DuckDB's x/0 (ANSI '/' would error the scan — round 6
-            # NULL-bearing-corpus audit)
-            F.expr(
-                f"try_divide(CAST({e['punct']} AS DOUBLE), char_length(text))"
-            ).alias("punct_ratio"),
-            F.expr(
-                f"try_divide(CAST({e['stop_hits']} AS DOUBLE), {n_tokens})"
-            ).alias("stopword_ratio"),
-            F.expr(e["quality"]).alias("quality"),
-            F.regexp_extract("text", "([0-9]+)", 1).alias("first_num"),
-            F.regexp_replace("text", "[0-9]+", "#").alias("no_digits"),
-            F.expr(r"size(regexp_extract_all(text, '([A-Z][a-z]+)', 1))")
-            .cast("long")
-            .alias("n_capitalized"),
-            F.col("text").rlike("https?://").alias("has_url"),
-        )
+            "__th", doc_profile_arrow(F.col("text")).alias("__p")
+        ).select("__th", "__p.*")
 
     return per_content(documents, compute).select(
-        "doc_id",
-        "n_tokens",
-        "n_subwords",
-        "n_chars_actual",
-        "punct_ratio",
-        "stopword_ratio",
-        "quality",
-        "first_num",
-        "no_digits",
-        "n_capitalized",
-        "has_url",
+        "doc_id", *_DOC_PROFILE_FIELDS
     )
 
 
@@ -615,139 +522,79 @@ def duckdb_chunk_sql(
     """
 
 
-def tfidf_top_terms(
-    documents: DataFrame, top_n: int = 3, strategy: str = "collapsed"
-) -> DataFrame:
+def tfidf_top_terms(documents: DataFrame, top_n: int = 3) -> DataFrame:
     """Per-document top-n terms by tf-idf (linear-idf variant:
     ``tf · N / df`` — no logarithm, so the score is exact integer
     arithmetic surfaced as one deterministic double division; ``log``
     is libm territory where engines can differ in the last ulp).
 
-    Pipeline: explode tokens → (doc, term) counts (one shuffle, map-side
-    combined) → document frequency per term (second small shuffle) →
-    join + per-doc top-n window.  The tf↔df join is deliberately NOT
-    force-broadcast: the df table's cardinality is the corpus VOCABULARY
-    (Heaps-law unbounded — IDs/typos/URLs), and ``F.broadcast`` would
-    bypass the size threshold and collect it to the driver at 100 TB.
-    Left to Spark, small vocabularies auto-broadcast under
+    Pipeline: explode tokens → (content, term) counts (one shuffle,
+    map-side combined) → document frequency per term (second small
+    shuffle) → join + per-content top-n window → fan out to doc_ids.
+    The tf↔df join is deliberately NOT force-broadcast: the df table's
+    cardinality is the corpus VOCABULARY (Heaps-law unbounded —
+    IDs/typos/URLs), and ``F.broadcast`` would bypass the size
+    threshold and collect it to the driver at 100 TB.  Left to Spark,
+    small vocabularies auto-broadcast under
     ``autoBroadcastJoinThreshold``/AQE and large ones degrade safely to
     a shuffle join on ``term`` (both sides already partitioned by term
-    from their aggregations).  The window partitions by doc_id — never
-    global.
+    from their aggregations).  The window partitions by content —
+    never global.
     """
+    from pyspark.sql import Window
+
     toks = H.spark_tokens("text")
-
-    # the (term, tf) multiset is a pure function of the text, so the
-    # explode + count shuffle runs over DISTINCT contents
-    # (per_content's compute may return several rows per content — the
-    # join back to doc ids fans them out); document frequency and the
-    # per-doc window below are computed AFTER the join-back, so df
-    # still counts DOCUMENTS, replicas included
-    #
-    # strategy="codegen" (default — round-13 A/B LOSER was arrow:
-    # the per-content Counter kernel emits array<struct<term,tf>> in
-    # one crossing, removing the groupBy(content, term) exchange, but
-    # measured 1.27 vs 1.28 s at x1 and 1.82 vs 2.23 s at x10 — the
-    # Python-built struct arrays cost more to serialize than the
-    # map-side-combined count shuffle they replace.  "arrow" stays as
-    # the documented losing variant, pinned equal in
-    # tests/test_llm_ops.py.
-    if strategy == "arrow":
-
-        def compute(reps: DataFrame) -> DataFrame:
-            return reps.select(
-                "__th", F.explode(term_counts_arrow(F.col("text"))).alias("kv")
-            ).select("__th", "kv.term", "kv.tf")
-
-    elif strategy == "codegen":
-
-        def compute(reps: DataFrame) -> DataFrame:
-            return (
-                reps.select("__th", F.explode(F.expr(toks)).alias("term"))
-                .groupBy("__th", "term")
-                .agg(F.count(F.lit(1)).alias("tf"))
-            )
-
-    elif strategy == "collapsed":
-        # Round 13: run the ENTIRE tfidf pipeline at distinct-content
-        # grain and fan out to doc_ids once, at the end.  Every
-        # downstream quantity is content-determined: tf per (content,
-        # term) by definition; df = Σ over contents containing the
-        # term of that content's replica count (exactly "number of
-        # documents containing the term", replicas included); tfidf is
-        # arithmetic on those; and the per-doc top-n window's order
-        # (tfidf DESC, term) is a deterministic total order WITHIN a
-        # content (terms are unique per content), so every replica of
-        # a content gets the identical rn sequence — the window can
-        # rank once per content and the fan-out copies the rows.  On a
-        # replica-heavy corpus this removes the document-grain sort
-        # (the plan's largest shuffle+sort) and shrinks the df/join
-        # stages by the duplication factor; on an all-distinct corpus
-        # it degenerates to the same volumes plus one hash join.
-        # PRECONDITION (same key contract pack_documents documents):
-        # doc_id is unique — two different texts sharing a doc_id
-        # would pool into one per-document window in the old spelling
-        # but rank separately here; no table in the schema can
-        # produce that.  Pinned row-identical to the per-document
-        # spelling in tests/test_llm_ops.py (replica-bearing corpus);
-        # the DuckDB oracle is unchanged.
-        from pyspark.sql import Window
-
-        hashed = documents.withColumn(
-            "__th", F.md5(F.col("text").cast("binary"))
-        )
-        reps = documents.select(
-            F.md5(F.col("text").cast("binary")).alias("__th"), "text"
-        ).dropDuplicates(["__th"])
-        repl = hashed.groupBy("__th").agg(F.count(F.lit(1)).alias("__n"))
-        tf_d = (
-            reps.select("__th", F.explode(F.expr(toks)).alias("term"))
-            .groupBy("__th", "term")
-            .agg(F.count(F.lit(1)).alias("tf"))
-        )
-        df_ = (
-            tf_d.join(repl, "__th")
-            .groupBy("term")
-            .agg(F.sum("__n").alias("df"))
-        )
-        n_docs = documents.agg(F.count(F.lit(1)).alias("n_docs"))
-        scored_d = (
-            tf_d.join(df_, "term")
-            .crossJoin(F.broadcast(n_docs))
-            .withColumn(
-                "tfidf",
-                (F.col("tf") * F.col("n_docs")).cast("double")
-                / F.col("df"),
-            )
-        )
-        w = Window.partitionBy("__th").orderBy(F.col("tfidf").desc(), "term")
-        top_d = scored_d.withColumn(
-            "rn", F.row_number().over(w).cast("long")
-        ).where(F.col("rn") <= top_n)
-        return hashed.join(top_d, "__th").select(
-            "doc_id", "term", "tf", "df", "tfidf", "rn"
-        )
-    else:
-        raise ValueError(f"unknown tfidf strategy {strategy!r}")
-
-    tf = per_content(documents, compute).select("doc_id", "term", "tf")
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    # Round 13: run the ENTIRE tfidf pipeline at distinct-content
+    # grain and fan out to doc_ids once, at the end.  Every
+    # downstream quantity is content-determined: tf per (content,
+    # term) by definition; df = Σ over contents containing the
+    # term of that content's replica count (exactly "number of
+    # documents containing the term", replicas included); tfidf is
+    # arithmetic on those; and the per-doc top-n window's order
+    # (tfidf DESC, term) is a deterministic total order WITHIN a
+    # content (terms are unique per content), so every replica of
+    # a content gets the identical rn sequence — the window can
+    # rank once per content and the fan-out copies the rows.  On a
+    # replica-heavy corpus this removes the document-grain sort
+    # (the plan's largest shuffle+sort) and shrinks the df/join
+    # stages by the duplication factor; on an all-distinct corpus
+    # it degenerates to the same volumes plus one hash join.
+    # PRECONDITION (same key contract pack_documents documents):
+    # doc_id is unique — two different texts sharing a doc_id
+    # would have to pool into one per-document window, but rank
+    # separately here; no table in the schema can produce that.
+    hashed = documents.withColumn(
+        "__th", F.md5(F.col("text").cast("binary"))
+    )
+    reps = documents.select(
+        F.md5(F.col("text").cast("binary")).alias("__th"), "text"
+    ).dropDuplicates(["__th"])
+    repl = hashed.groupBy("__th").agg(F.count(F.lit(1)).alias("__n"))
+    tf_d = (
+        reps.select("__th", F.explode(F.expr(toks)).alias("term"))
+        .groupBy("__th", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_ = (
+        tf_d.join(repl, "__th")
+        .groupBy("term")
+        .agg(F.sum("__n").alias("df"))
+    )
     n_docs = documents.agg(F.count(F.lit(1)).alias("n_docs"))
-    scored = (
-        tf.join(df_, "term")
+    scored_d = (
+        tf_d.join(df_, "term")
         .crossJoin(F.broadcast(n_docs))
         .withColumn(
             "tfidf",
             (F.col("tf") * F.col("n_docs")).cast("double") / F.col("df"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "term")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .where(F.col("rn") <= top_n)
-        .select("doc_id", "term", "tf", "df", "tfidf", "rn")
+    w = Window.partitionBy("__th").orderBy(F.col("tfidf").desc(), "term")
+    top_d = scored_d.withColumn(
+        "rn", F.row_number().over(w).cast("long")
+    ).where(F.col("rn") <= top_n)
+    return hashed.join(top_d, "__th").select(
+        "doc_id", "term", "tf", "df", "tfidf", "rn"
     )
 
 
@@ -820,7 +667,6 @@ def bm25_topk(
     documents: DataFrame,
     query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
     top_k: int = BM25_TOP_K,
-    strategy: str = "auto",
 ) -> DataFrame:
     """Top-k documents for a fixed term query by BM25 (Robertson &
     Walker '94 term saturation + length normalization; linear idf per
@@ -841,24 +687,25 @@ def bm25_topk(
     Output: (doc_id, dl, hits, bm25, rank) — rank 1..top_k by
     (bm25 DESC, doc_id), decided by a window over the ≤ top_k
     already-limited rows (bounded, never corpus-wide).
+
+    Scale gate: at ``BM25_COLLAPSE_THRESHOLD_BYTES`` or more the
+    per-doc battery runs once per distinct content instead (identical
+    rows).  The gate measures ``materialize.input_bytes(documents)``:
+    the byte size of the plan's scan FILES, not the volume left after
+    any filter above the scan; an in-memory frame (no file scan) counts
+    as 0.  There is no override.
     """
     from pyspark.sql import Window
 
     from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+        input_bytes,
         materialize,
     )
 
     _check_bm25_terms(query_terms)
-    if strategy == "auto":
-        from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-            input_bytes,
-        )
-
-        strategy = (
-            "collapsed"
-            if (input_bytes(documents) or 0) >= BM25_COLLAPSE_THRESHOLD_BYTES
-            else "per_doc"
-        )
+    collapsed = (
+        input_bytes(documents) or 0
+    ) >= BM25_COLLAPSE_THRESHOLD_BYTES
     # coalesce NULL text to '': Spark's legacy sizeOfNull makes
     # size(NULL) = -1, which would corrupt dl (and sum_dl/avgdl) while
     # DuckDB's len(NULL) is NULL — coalescing on BOTH engines keeps a
@@ -877,7 +724,7 @@ def bm25_topk(
         for i in idx
     )
     hits = " + ".join(f"tf_{i}" for i in idx)
-    if strategy == "collapsed":
+    if collapsed:
         # Round 13: dl and every tf_i are pure functions of the text,
         # so the tokenize+filter battery runs once per DISTINCT
         # (NULL-coalesced) content; the corpus stats are replica-count-
@@ -889,8 +736,8 @@ def bm25_topk(
         # (doc_id) rows for the same TakeOrderedAndProject.  NULL and
         # '' text share a group deliberately: both produce the
         # identical all-zero row.  Measured 0.94 → ~0.9 s at ×1 and
-        # 4.37 → ~1 s at ×10; pinned row-identical to the per-document
-        # spelling in tests/test_llm_ops.py.
+        # 4.37 → ~1 s at ×10; both sides are oracle-checked in
+        # tests/test_llm_ops.py.
         keyed = documents.select(
             "doc_id",
             F.md5(F.coalesce(F.col("text"), F.lit("")).cast("binary")).alias(
@@ -941,8 +788,6 @@ def bm25_topk(
         )
         w = Window.orderBy(F.desc("bm25"), "doc_id")
         return top.withColumn("rank", F.row_number().over(w).cast("long"))
-    if strategy != "per_doc":
-        raise ValueError(f"unknown bm25 strategy {strategy!r}")
     per = materialize(
         documents.select(
             "doc_id",

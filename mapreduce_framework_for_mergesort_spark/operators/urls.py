@@ -206,8 +206,8 @@ _UNRESERVED = set(
 
 def pct_normalize_py(s: str) -> str:
     """Pure-Python replica of :func:`pct_normalize` — the independent
-    pin for the codegen fold AND the kernel body of the Arrow variant
-    in the round-12 A/B (SCALE_NOTES)."""
+    pin for the codegen fold AND part of the ``url_family_arrow``
+    kernel body (via ``normalize_url_py``)."""
     if "%" not in s:
         return s
     pieces = s.split("%")
@@ -278,7 +278,7 @@ def url_host_py(url: str) -> str:
 
 
 def normalize_url_py(url: str) -> str:
-    """Pure-Python replica of :func:`normalize_url` (codegen strategy):
+    """Pure-Python replica of :func:`normalize_url`:
     same component regexes, same rules — lowercase scheme/host, drop
     userinfo, strip default ports, '' path → '/', §6.2.2 pct + dot
     folds, tracking strip + byte-lexicographic param sort, drop
@@ -372,43 +372,6 @@ def url_family_arrow(url: Column, rfc_url: Column) -> Column:
     return pandas_udf(kernel, schema)(url, rfc_url)
 
 
-def pct_dot_normalize_arrow(path: Column) -> Column:
-    """The round-12 A/B CONTENDER: the §6.2.2 pct + dot-segment folds
-    as one memoized Arrow kernel (per-content dict memo in the task's
-    unpickled closure — persists across that task's Arrow batches; the
-    ``functions/hashing.py`` kernel family shape)
-    instead of the codegen HOF fold.  Measured at ×1 and ×10 against
-    the codegen path in ``scripts/ab_hof_vs_arrow.py``; the DECISION
-    and both numbers live in SCALE_NOTES round 12 — this symbol stays
-    as the documented losing/winning variant either way, pinned equal
-    to the codegen fold in tests/test_urls.py."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    # memo OUTSIDE kernel(): the closure is unpickled once per task,
-    # so the cache persists across that task's Arrow batches (review
-    # pass 2 — defined inside, it reset per batch and the documented
-    # per-content collapse never happened)
-    memo: dict[str, str] = {}
-
-    def one(v: str) -> str:
-        hit = memo.get(v)
-        if hit is None:
-            hit = remove_dot_segments_py(pct_normalize_py(v))
-            if len(memo) < 1 << 20:
-                memo[v] = hit
-        return hit
-
-    def kernel(s):
-        return s.map(one, na_action="ignore")
-
-    # concrete annotation objects: the module's future-annotations mode
-    # stringifies inline hints, and pyspark resolves them against
-    # module globals where pandas is (deliberately) not imported
-    kernel.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "string")(path)
-
-
 def normalized_query(url: Column) -> Column:
     """Sorted, tracking-stripped query ('' when nothing survives)."""
     params = F.array_sort(
@@ -424,19 +387,14 @@ def normalized_query(url: Column) -> Column:
     ).otherwise(F.lit(""))
 
 
-def normalize_url(url: Column, pct_dot_strategy: str = "codegen") -> Column:
-    """Canonical form per the module-docstring rules.
-
-    ``pct_dot_strategy`` picks how the path's §6.2.2 pct/dot folds run
-    (round-12 A/B, ``scripts/ab_hof_vs_arrow.py``, numbers in
-    SCALE_NOTES): ``"codegen"`` (default) keeps the whole expression
-    zero-Python — right for URL sets whose paths rarely carry escapes
-    or dot segments, where the ``contains``/regex short-circuit makes
-    the HOFs nearly free; ``"arrow"`` routes the two folds through the
-    memoized Arrow kernel — HOFs run as CodegenFallback WITHOUT
-    common-subexpression elimination, so on escape-bearing paths the
-    kernel measured 7×/11.6× faster at ×1/×10 despite the Arrow round
-    trip.  Both strategies are pinned equal in tests/test_urls.py."""
+def normalize_url(url: Column) -> Column:
+    """Canonical form per the module-docstring rules, as one
+    zero-Python expression: the path's §6.2.2 pct/dot folds are
+    HOFs whose ``contains``/regex short-circuit makes them nearly free
+    on paths without escapes or dot segments.  A query that needs the
+    whole URL family at once runs ``url_family_arrow`` instead (its
+    pure-Python replica is pinned equal to this expression in
+    tests/test_urls.py)."""
     scheme = url_scheme(url)
     host = url_host(url)
     port = url_port(url)
@@ -449,12 +407,7 @@ def normalize_url(url: Column, pct_dot_strategy: str = "codegen") -> Column:
     path = url_path(url)
     # pct first (so an escaped dot segment — %2E is unreserved —
     # participates in dot removal, the RFC §6.2.2 order), then dots
-    if pct_dot_strategy == "arrow":
-        folded = pct_dot_normalize_arrow(path)
-    elif pct_dot_strategy == "codegen":
-        folded = remove_dot_segments(pct_normalize(path))
-    else:
-        raise ValueError(f"unknown pct_dot_strategy {pct_dot_strategy!r}")
+    folded = remove_dot_segments(pct_normalize(path))
     path_norm = F.when(path == "", F.lit("/")).otherwise(folded)
     return F.concat(
         scheme, F.lit("://"), host, port_norm, path_norm,

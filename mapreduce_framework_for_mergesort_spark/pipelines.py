@@ -52,16 +52,17 @@ def with_curation_features(
     from mapreduce_framework_for_mergesort_spark.operators import langid
 
     e = text_feature_exprs()
-    # SAME classifier expression as operators/text.lang_id (round 12:
-    # the two-stage script + learned-trigram model; strategies pinned
-    # equal in tests) — the pipeline must not fork the language
-    # definition.  Deliberately the CODEGEN strategy here: the
-    # pipeline computes features over text that may itself be an
-    # expression (strip_spans rewrites it with a HOF transform), and a
-    # pandas UDF fed an expression-proxy argument dies with
-    # SparkException INTERNAL_ERROR "Cannot evaluate expression:
+    # SAME classifier decision as operators/text.lang_id (round 12:
+    # the two-stage script + learned-trigram model; langid.python_pred
+    # pins the kernel body to this expression in tests) — the pipeline
+    # must not fork the language definition.  Deliberately the CODEGEN
+    # expression here, not lang_id's Arrow kernel: the pipeline
+    # computes features over text that may itself be an expression
+    # (strip_spans rewrites it with a HOF transform, or an Arrow kernel
+    # at scale), and a pandas UDF fed an expression-proxy argument dies
+    # with SparkException INTERNAL_ERROR "Cannot evaluate expression:
     # kernel(expressionproxy(...))" under subexpression elimination
-    # (measured round 12) — the Arrow strategy is safe only on plain
+    # (measured round 12) — the Arrow kernel is safe only on plain
     # column inputs, which is what lang_id's per_content reps provide.
     pred = langid.spark_pred_expr("text")
     cols = {"quality": F.expr(e["quality"]), "pred_lang": F.expr(pred)}

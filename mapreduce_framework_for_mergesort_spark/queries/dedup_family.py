@@ -35,18 +35,6 @@ from mapreduce_framework_for_mergesort_spark.operators.materialize import (
 # the posture a corpus-sized input wants.
 HASH_MAT_THRESHOLD_BYTES = 16 << 20
 
-# Scale-adaptive cutoff for the strip tier's rebuild strategy
-# (round 13): the Arrow kernel (memoized tokenize + Python slice
-# rebuild) beats the interpreted HOF slice battery once the corpus
-# carries enough volume/replication to amortize the Python crossing —
-# measured on the full key: ×1 (0.6 MB docs) codegen 4.06 s vs arrow
-# 4.55 s (the kernel contends for Python workers inside the two-chain
-# overlap), ×10 (5.8 MB) codegen 7.79 s vs arrow 7.38 s (isolated
-# strip pass 1.78 → 1.24 s — the text memo pays on replicas, which is
-# what a 100 TB crawl corpus looks like).  4 MB sits between the
-# measured loss and the measured win; at corpus scale the branch
-# always takes the kernel.
-STRIP_ARROW_THRESHOLD_BYTES = 4 << 20
 from mapreduce_framework_for_mergesort_spark.operators import similarity as S
 from mapreduce_framework_for_mergesort_spark.queries import query
 
@@ -114,15 +102,6 @@ def _duckdb_bands_cte(recursive: bool = False, from_reps: bool = False) -> str:
     bands AS (
       {band_selects})
     """
-
-
-def minhash_bands_unregistered(spark, sf_dir):
-    """The LSH index (doc → band rows).  Was its own driver key
-    (``q_dedup_minhash_bands``) in round 1; consolidated out for the
-    driver's 50-key budget — ``q_dedup_minhash_pairs``'s oracle
-    re-derives the full band pipeline in SQL, so the index math is still
-    exactly verified, and tests/test_llm_ops.py pins it directly."""
-    return D.minhash_bands(load_table(spark, sf_dir, "documents"))
 
 
 @query(
@@ -468,17 +447,8 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("span_end").cast("double").alias("val"),
         F.col("n_dup_pos").cast("double").alias("val2"),
     )
-    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        input_bytes,
-    )
-
-    strip_strategy = (
-        "arrow"
-        if (input_bytes(docs) or 0) >= STRIP_ARROW_THRESHOLD_BYTES
-        else "codegen"
-    )
     strips = (
-        D.strip_dup_spans(docs, flags=flags, strategy=strip_strategy)
+        D.strip_dup_spans(docs, flags=flags)
         .where(F.col("n_kept_tokens") < F.col("n_tokens"))
         .select(
             lit("strip").alias("part"),

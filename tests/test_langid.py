@@ -242,6 +242,27 @@ def test_classifier_spark_duckdb_parity(spark):
     assert got_spark[len(texts) - 1] == "und"  # NULL text
 
 
+def test_lang_id_strategies_equal_on_fixture(spark, sf_oracle):
+    """lang_id's Arrow kernel == the codegen expression
+    ``spark_pred_expr`` that pipelines.with_curation_features runs,
+    document for document, on the fixture."""
+    from mapreduce_framework_for_mergesort_spark.io import load_table
+
+    # key filter, not limit(): an unordered limit may pick different
+    # rows on each side's independent evaluation
+    docs = load_table(spark, sf_oracle, "documents").where(
+        F.col("doc_id") % 2 == 0
+    )
+    a = {r["doc_id"]: r["pred_lang"] for r in T.lang_id(docs).collect()}
+    b = {
+        r["doc_id"]: r["p"]
+        for r in docs.select(
+            "doc_id", F.expr(L.spark_pred_expr("text")).alias("p")
+        ).collect()
+    }
+    assert a == b and len(a) == docs.count()
+
+
 def test_lang_id_operator_and_ml_accuracy(spark, sf_oracle):
     """The done-criterion: through the REAL registry query, the
     synthesized multilingual column classifies correctly on every row
@@ -279,7 +300,7 @@ def test_lang_id_handles_null_text(spark):
 
 
 # ---------------------------------------------------------------------------
-# round-12 strategy A/B: Arrow kernel vs the codegen let (pinned equal)
+# round 12: the Arrow kernel's body vs the codegen let (pinned equal)
 # ---------------------------------------------------------------------------
 
 
@@ -309,23 +330,3 @@ def test_python_pred_replica_matches_sql_decision(spark):
     for r in rows:
         assert r["cg"] == r["ar"], r["text"]
         assert r["ar"] == L.python_pred(r["text"]), r["text"]
-
-
-def test_lang_id_strategies_equal_on_fixture(spark, sf_oracle):
-    from mapreduce_framework_for_mergesort_spark.io import load_table
-    from mapreduce_framework_for_mergesort_spark.operators import text as T
-
-    docs = load_table(spark, sf_oracle, "documents").limit(400)
-    a = {
-        r["doc_id"]: r["pred_lang"]
-        for r in T.lang_id(docs, strategy="arrow").collect()
-    }
-    b = {
-        r["doc_id"]: r["pred_lang"]
-        for r in T.lang_id(docs, strategy="codegen").collect()
-    }
-    assert a == b and len(a) == 400
-    import pytest
-
-    with pytest.raises(ValueError, match="strategy"):
-        T.lang_id(docs, strategy="nope")

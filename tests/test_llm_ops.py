@@ -2860,12 +2860,18 @@ def test_prepare_training_shards_with_mixture(spark, sf_oracle, tmp_path):
     assert 1 in total_epochs
 
 
-def test_curation_strip_spans_rewrites(spark):
+@pytest.mark.parametrize(
+    "strip_threshold", [0, 1 << 62], ids=["kernel", "codegen"]
+)
+def test_curation_strip_spans_rewrites(spark, monkeypatch, strip_threshold):
     """strip_spans=True de-boilerplates survivors instead of dropping
     them: the repeated block's interior is gone from later copies, an
     all-boilerplate doc strips to empty and vanishes, and the
-    first-occurrence doc ships intact."""
+    first-occurrence doc ships intact — on both sides of the strip
+    rebuild's input-bytes gate."""
     from mapreduce_framework_for_mergesort_spark import pipelines
+
+    monkeypatch.setattr(D, "STRIP_ARROW_THRESHOLD_BYTES", strip_threshold)
 
     block = " ".join(f"x{i}" for i in range(20))
     rows = [
@@ -4127,14 +4133,13 @@ def test_jpeg_decoder_progressive_color_420_with_restarts():
 
 
 # ---------------------------------------------------------------------------
-# round-13 strategy A/B: doc_profile / tfidf Arrow kernels vs codegen
-# (pinned equal — the hard gate behind the q_text_doc_profile /
-# q_tfidf_top_terms strategy switches)
+# round-13 per-content kernels and scale gates, checked against the
+# DuckDB oracles on a corpus with replicas and edge texts
 # ---------------------------------------------------------------------------
 
 _TEXT_EDGE_BATTERY = [
     "plain english text with the and of to stopwords. Plus Caps!",
-    "",  # empty → NULL ratios/quality on both strategies
+    "",  # empty → NULL ratios/quality
     "   \t\n  ",  # whitespace-only → quality 0.6
     "汉字测试页面内容 no spaces needed",  # unsegmented script
     "これは日本語のテキスト",
@@ -4152,97 +4157,148 @@ def _edge_df(spark):
     )
 
 
-def test_doc_profile_strategies_equal(spark, sf_oracle):
+def test_text_keys_oracle_on_replica_and_edge_corpus(
+    spark, sf_oracle, tmp_path, monkeypatch
+):
+    """q_text_doc_profile, q_lang_id and q_tfidf_top_terms == their
+    DuckDB oracles on a corpus WITH replicas (so per-content collapses,
+    df's replica-count sum and the fanned-out window ranks bind), the
+    text edge battery (empty, whitespace-only, CJK, NULL) and bm25 rows
+    with NULL/'' text and a score tie.  q_tfidf_top_terms runs twice:
+    once on the per-document bm25 (this corpus is below the gate) and
+    once with the gate at 0, so the collapsed bm25 is checked too.
+    doc_id stays UNIQUE across the corpus (collapsed tf-idf's key
+    contract)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
     from mapreduce_framework_for_mergesort_spark.operators import text as T
 
+    src = pq.read_table(f"{sf_oracle}/documents.parquet")
+    base = src.filter(pa.array(src["doc_id"].to_numpy() % 3 == 0))
+    dups = base.set_column(
+        base.schema.get_field_index("doc_id"),
+        "doc_id",
+        pc.add(base["doc_id"], 100000),
+    )
+    extra = [(900000 + i, t) for i, t in enumerate(_TEXT_EDGE_BATTERY)] + [
+        (910001, "merge sort spark merge"),
+        (910002, ""),
+        (910003, None),
+        (910004, "merge sort spark merge"),
+    ]
+    extra_cols = {
+        f.name: pa.nulls(len(extra), f.type) for f in src.schema
+    }
+    extra_cols["doc_id"] = pa.array([i for i, _ in extra], pa.int64())
+    extra_cols["text"] = pa.array([t for _, t in extra], pa.string())
+    out = str(tmp_path / "sfedge")
+    os.makedirs(out)
+    pq.write_table(
+        pa.concat_tables(
+            [base, dups, pa.table(extra_cols, schema=src.schema)]
+        ),
+        f"{out}/documents.parquet",
+    )
+    for t in ["region", "nation", "customer", "supplier", "part",
+              "orders", "lineitem", "events", "embeddings"]:
+        os.symlink(f"{sf_oracle}/{t}.parquet", f"{out}/{t}.parquet")
+    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+        input_bytes,
+    )
+
+    # the first pass must take the per-document bm25 side
+    assert (
+        input_bytes(load_table(spark, out, "documents"))
+        < T.BM25_COLLAPSE_THRESHOLD_BYTES
+    )
+    for key in ["q_text_doc_profile", "q_lang_id", "q_tfidf_top_terms"]:
+        compare_query(spark, key, out, QUERIES, ORACLE)
+    monkeypatch.setattr(T, "BM25_COLLAPSE_THRESHOLD_BYTES", 0)
+    compare_query(spark, "q_tfidf_top_terms", out, QUERIES, ORACLE)
+
+
+def test_doc_profile_strategies_equal(spark, sf_oracle):
+    """doc_profile's per-content collapse is invisible: the operator ==
+    its struct kernel projected once per document row, with no
+    collapse, on the edge battery (NULL text keeps its own row) and the
+    fixture.  Values are pinned against the DuckDB oracle by
+    test_text_keys_oracle_on_replica_and_edge_corpus."""
+    from mapreduce_framework_for_mergesort_spark.operators import text as T
+
+    key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
     for df in (
         _edge_df(spark),
         load_table(spark, sf_oracle, "documents"),
     ):
-        a = sorted(
-            tuple(r)
-            for r in T.doc_profile(df, strategy="arrow").collect()
-        )
-        c = sorted(
-            tuple(r)
-            for r in T.doc_profile(df, strategy="codegen").collect()
-        )
+        a = sorted((tuple(r) for r in T.doc_profile(df).collect()), key=key)
+        per_row = df.select(
+            "doc_id", T.doc_profile_arrow(F.col("text")).alias("__p")
+        ).select("doc_id", "__p.*")
+        c = sorted((tuple(r) for r in per_row.collect()), key=key)
         assert a == c and len(a) == df.count()
-    with pytest.raises(ValueError, match="strategy"):
-        T.doc_profile(_edge_df(spark), strategy="nope")
+
+
+def _tfidf_per_document(documents, top_n: int = 3):
+    """tf-idf at document grain — the spelling the DuckDB oracle uses:
+    tf per (doc_id, term), df = documents containing the term, one
+    top-n window per doc_id.  The reference the operator's
+    content-grain pipeline must reproduce row for row."""
+    from pyspark.sql import Window
+
+    from mapreduce_framework_for_mergesort_spark.functions import hashing as H
+
+    tf = (
+        documents.select(
+            "doc_id", F.explode(F.expr(H.spark_tokens("text"))).alias("term")
+        )
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    n_docs = documents.agg(F.count(F.lit(1)).alias("n_docs"))
+    scored = (
+        tf.join(df_, "term")
+        .crossJoin(n_docs)
+        .withColumn(
+            "tfidf",
+            (F.col("tf") * F.col("n_docs")).cast("double") / F.col("df"),
+        )
+    )
+    w = Window.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), "term")
+    return (
+        scored.withColumn("rn", F.row_number().over(w).cast("long"))
+        .where(F.col("rn") <= top_n)
+        .select("doc_id", "term", "tf", "df", "tfidf", "rn")
+    )
 
 
 def test_tfidf_strategies_equal(spark, sf_oracle):
+    """tfidf_top_terms == the document-grain reference on the edge
+    battery and the fixture."""
     from mapreduce_framework_for_mergesort_spark.operators import text as T
 
     for df in (
         _edge_df(spark),
         load_table(spark, sf_oracle, "documents"),
     ):
-        a = sorted(
-            tuple(r)
-            for r in T.tfidf_top_terms(df, strategy="arrow").collect()
-        )
-        c = sorted(
-            tuple(r)
-            for r in T.tfidf_top_terms(df, strategy="codegen").collect()
-        )
+        a = sorted(tuple(r) for r in T.tfidf_top_terms(df).collect())
+        c = sorted(tuple(r) for r in _tfidf_per_document(df).collect())
         assert a == c
-    with pytest.raises(ValueError, match="strategy"):
-        T.tfidf_top_terms(_edge_df(spark), strategy="nope")
-
-
-def test_strip_rebuild_strategies_equal(spark, sf_oracle):
-    """Round-13 A/B pin: the Arrow strip-rebuild kernel == the codegen
-    HOF slice rebuild, row for row, on the fixture plus synthetic
-    duplicates (so protecting intervals actually bind) and edge texts."""
-    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        materialize,
-    )
-
-    base = load_table(spark, sf_oracle, "documents").limit(150)
-    dups = base.withColumn("doc_id", F.col("doc_id") + 100000)
-    edge = _edge_df(spark)
-    for c, dt in base.dtypes:
-        if c not in edge.columns:
-            edge = edge.withColumn(c, F.lit(None).cast(dt))
-    docs = base.unionByName(dups).unionByName(edge.select(base.columns))
-    flags = materialize(D.positional_gram_flags(docs))
-    cols = ["doc_id", "stripped_text", "n_tokens", "n_kept_tokens"]
-    key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
-    a = sorted(
-        (
-            tuple(r)
-            for r in D.strip_dup_spans(docs, flags=flags, strategy="arrow")
-            .select(cols)
-            .collect()
-        ),
-        key=key,
-    )
-    c = sorted(
-        (
-            tuple(r)
-            for r in D.strip_dup_spans(docs, flags=flags, strategy="codegen")
-            .select(cols)
-            .collect()
-        ),
-        key=key,
-    )
-    assert a == c and len(a) == docs.count()
-    with pytest.raises(ValueError, match="strategy"):
-        D.strip_dup_spans(docs, flags=flags, strategy="nope")
 
 
 def test_tfidf_collapsed_strategy_equals_per_document(spark, sf_oracle):
-    """Round-13 restructure pin: the distinct-content-grain tfidf
-    (strategy='collapsed', the default) == the per-document spelling,
-    row for row, on a corpus WITH replicas (so df's replica-count sum
-    and the fanned-out window ranks actually bind) plus edge texts."""
+    """The distinct-content-grain tfidf == the document-grain
+    reference, row for row, on a corpus WITH replicas (so df's
+    replica-count sum and the fanned-out window ranks actually bind)
+    plus edge texts."""
     from mapreduce_framework_for_mergesort_spark.operators import text as T
 
     # key filter, not limit(): an unordered limit may pick different
-    # rows on each strategy's independent evaluation (the test_warc
-    # advisory flake class)
+    # rows on each side's independent evaluation
     base = load_table(spark, sf_oracle, "documents").where(
         F.col("doc_id") % 3 == 0
     )
@@ -4259,21 +4315,16 @@ def test_tfidf_collapsed_strategy_equals_per_document(spark, sf_oracle):
         .withColumn("n_chars", F.lit(None).cast("bigint"))
         .select(base.columns)
     )
-    a = sorted(
-        tuple(r)
-        for r in T.tfidf_top_terms(docs, strategy="collapsed").collect()
-    )
-    c = sorted(
-        tuple(r)
-        for r in T.tfidf_top_terms(docs, strategy="codegen").collect()
-    )
+    a = sorted(tuple(r) for r in T.tfidf_top_terms(docs).collect())
+    c = sorted(tuple(r) for r in _tfidf_per_document(docs).collect())
     assert a == c and len(a) > 0
 
 
-def test_bm25_strategies_equal(spark, sf_oracle):
-    """Round-13 pin: the per-content-collapsed bm25 == the per-document
-    spelling on a replica-bearing corpus with NULL/empty text and score
-    ties, and the auto gate routes by input size."""
+def test_bm25_strategies_equal(spark, sf_oracle, monkeypatch):
+    """The per-content-collapsed bm25 == the per-document side, row for
+    row, on a replica-bearing corpus with NULL/empty text and score
+    ties.  Each side is selected through bm25_topk's own input-bytes
+    gate."""
     from mapreduce_framework_for_mergesort_spark.operators import text as T
 
     base = load_table(spark, sf_oracle, "documents").where(
@@ -4292,12 +4343,46 @@ def test_bm25_strategies_equal(spark, sf_oracle):
         .withColumn("n_chars", F.lit(None).cast("bigint"))
         .select(base.columns)
     )
-    a = sorted(
-        tuple(r) for r in T.bm25_topk(docs, strategy="collapsed").collect()
-    )
-    c = sorted(
-        tuple(r) for r in T.bm25_topk(docs, strategy="per_doc").collect()
-    )
+
+    def topk(threshold: int):
+        monkeypatch.setattr(T, "BM25_COLLAPSE_THRESHOLD_BYTES", threshold)
+        return sorted(tuple(r) for r in T.bm25_topk(docs).collect())
+
+    a = topk(0)
+    c = topk(1 << 62)
     assert a == c and len(a) == T.BM25_TOP_K
-    with pytest.raises(ValueError, match="strategy"):
-        T.bm25_topk(docs, strategy="nope")
+
+
+def _strip_kernel_in_plan(df) -> bool:
+    return "rebuild(" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_strip_rebuild_strategies_equal(spark, sf_oracle, monkeypatch):
+    """Round-13 pin: the Arrow strip-rebuild kernel == the codegen
+    HOF slice rebuild, row for row, on the fixture plus synthetic
+    duplicates (so protecting intervals actually bind) and edge texts.
+    Each side is selected through the operator's own input-bytes gate."""
+    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
+        materialize,
+    )
+
+    base = load_table(spark, sf_oracle, "documents").limit(150)
+    dups = base.withColumn("doc_id", F.col("doc_id") + 100000)
+    edge = _edge_df(spark)
+    for c, dt in base.dtypes:
+        if c not in edge.columns:
+            edge = edge.withColumn(c, F.lit(None).cast(dt))
+    docs = base.unionByName(dups).unionByName(edge.select(base.columns))
+    flags = materialize(D.positional_gram_flags(docs))
+    cols = ["doc_id", "stripped_text", "n_tokens", "n_kept_tokens"]
+    key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
+
+    def strip(threshold: int, kernel: bool):
+        monkeypatch.setattr(D, "STRIP_ARROW_THRESHOLD_BYTES", threshold)
+        out = D.strip_dup_spans(docs, flags=flags).select(cols)
+        assert _strip_kernel_in_plan(out) is kernel
+        return sorted((tuple(r) for r in out.collect()), key=key)
+
+    a = strip(0, kernel=True)
+    c = strip(1 << 62, kernel=False)
+    assert a == c and len(a) == docs.count()

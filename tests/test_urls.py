@@ -672,40 +672,6 @@ def test_pct_dot_python_replicas_match_codegen(spark):
         ), r["p"]
 
 
-def test_normalize_url_strategies_equal(spark):
-    """normalize_url(arrow) == normalize_url(codegen) on the messy
-    battery — the hard gate behind the q_scalar_funcs strategy switch
-    (scripts/ab_hof_vs_arrow.py also checks 0 mismatches at sf0.1)."""
-    urls = [
-        "http://RFC.Ex.ORG/u3/%7ea/docs/./v2/../latest%2fx?x=%7e&b=%2F",
-        "HTTPS://Host.COM:443/a/%2e%2e/c%4d?b=2&a=1",
-        "http://h/p%2f/100%25/.",
-        "http://h.example/plain/55",
-        "http://User:Pw@WWW.X.COM:8080/Item/7#frag",
-    ]
-    df = spark.createDataFrame([(u,) for u in urls], "url string")
-    got = df.select(
-        U.normalize_url(F.col("url")).alias("cg"),
-        U.normalize_url(F.col("url"), pct_dot_strategy="arrow").alias("ar"),
-    ).collect()
-    for r in got:
-        assert r["cg"] == r["ar"], r
-    with pytest.raises(ValueError, match="pct_dot_strategy"):
-        U.normalize_url(F.col("url"), pct_dot_strategy="nope")
-
-
-@settings(max_examples=30, deadline=None)
-@given(st.lists(st.sampled_from(_RFC_PATHS), min_size=1, max_size=8))
-def test_property_arrow_kernel_matches_codegen(spark, paths):
-    df = spark.createDataFrame([(p,) for p in paths], "p string")
-    rows = df.select(
-        U.remove_dot_segments(U.pct_normalize(F.col("p"))).alias("cg"),
-        U.pct_dot_normalize_arrow(F.col("p")).alias("ar"),
-    ).collect()
-    for r in rows:
-        assert r["cg"] == r["ar"]
-
-
 # round 12 (optimization): the whole-URL-family Arrow kernel that
 # q_scalar_funcs now runs — pure-Python replicas of normalize_url,
 # url_host, and the PSL algorithm, pinned against the codegen
