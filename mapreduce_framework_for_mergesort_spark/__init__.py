@@ -13,6 +13,7 @@ fault tolerance that the reference hand-rolls.
 Layout:
     session    — tuned SparkSession factory (AQE, Arrow, UTC, shuffle sizing)
     io         — loaders for the driver-generated parquet test tables
+    sizing     — the input byte measurement and every input-size cutoff
     engine     — ``MergeSortEngine`` facade mirroring the reference's job API
     operators/ — sort, ingest, relational, dedup, similarity, text, multimodal
     functions/ — reusable column expression builders (vector math, hashing)

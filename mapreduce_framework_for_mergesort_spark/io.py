@@ -15,6 +15,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_framework_for_mergesort_spark import sizing
+
 TABLES = (
     "region",
     "nation",
@@ -97,40 +99,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_events_ts(df)
 
 
-def local_input_bytes(path: str) -> int | None:
-    """Total bytes of a driver-local input path — a single file's size,
-    or the recursive sum over a directory-layout table (a bare
-    ``getsize`` on a directory reports the ~4 KB dirent, which at
-    production scale would misclassify every multi-file table as
-    starved and insert a full-table round-robin shuffle).  ``None``
-    when the path is not measurable from the driver (object-store URI,
-    missing file): callers must treat unmeasurable as NOT starved so
-    the adaptive repartitions never fire on inputs they cannot see."""
-    try:
-        if os.path.isdir(path):
-            return sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(path)
-                for f in files
-                if not f.startswith((".", "_"))
-            )
-        return os.path.getsize(path)
-    except OSError:
-        return None
-
-
-def scan_parallelism(sf_dir: str, name: str, spark: SparkSession) -> int:
-    """Estimated task count of a ``load_table`` scan: Spark splits a
+def scan_parallelism(df: DataFrame) -> int:
+    """Estimated task count of ``df``'s file scan: Spark splits a
     parquet read at `spark.sql.files.maxPartitionBytes` granularity
     (bounded below by row-group layout, which this estimate cannot
     see — fine: production files are written multi-row-group, and the
     estimate is only used to detect *starvation*, not to size work).
-    Directory-layout tables are summed recursively; an unmeasurable
-    path (object store, missing) reports a huge count = never starved,
-    so the fan-out is a guaranteed no-op there."""
-    size = local_input_bytes(table_path(sf_dir, name))
+    The bytes are ``sizing.input_bytes(df)``; an unmeasurable input
+    (no file scan, listing error) reports a huge count = never
+    starved, so the fan-out is a guaranteed no-op there."""
+    size = sizing.input_bytes(df)
     if size is None:
         return 1 << 30  # unmeasurable → assume wide, never fan out
+    spark = df.sparkSession
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
     max_split = int(
         spark._jvm.org.apache.spark.network.util.JavaUtils
@@ -139,9 +120,7 @@ def scan_parallelism(sf_dir: str, name: str, spark: SparkSession) -> int:
     return max(1, -(-size // max_split))
 
 
-def fan_out_starved_scan(
-    df: DataFrame, sf_dir: str, name: str, factor: int = 1
-) -> DataFrame:
+def fan_out_starved_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a parallelism-starved scan (guide
     §2.5 'input skew': one huge unsplittable file → repartition right
     after the read).  The driver test fixtures are single-row-group
@@ -159,9 +138,8 @@ def fan_out_starved_scan(
     this inserts moves the scan's (column-pruned) output once; it is
     only applied at call sites whose per-row compute dwarfs a row's
     shuffle bytes (measured per key in OPTIMIZATION_r12.md)."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism * factor
-    if scan_parallelism(sf_dir, name, spark) >= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if scan_parallelism(df) >= target:
         return df
     return df.repartition(target)
 
@@ -274,14 +252,6 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     elif dt == "timestamp_ntz":
         df = df.withColumn("ts", F.timestamp_micros(ntz_epoch_micros("ts")))
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every test table as a temp view so ``spark.sql`` works
-    against the same names the DuckDB oracle uses — the engine's ad-hoc
-    SQL entry point."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def publish_rename(fs, jvm, tmp: str, final: str) -> bool:

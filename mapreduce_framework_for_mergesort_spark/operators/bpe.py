@@ -155,33 +155,6 @@ def segment_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return list(sym)
 
 
-def bpe_segment_udf(merges: Merges):
-    """Arrow-batched text → subword-token array.  The merge ranks ride
-    the closure; a per-batch word memo collapses repeated word types
-    (Zipf: most of a batch is the same few thousand words)."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {p: i for i, p in enumerate(merges)}
-    token_re = H.tokenize  # script-aware shared tokenizer (round 12)
-
-    @pandas_udf("array<string>")
-    def seg(texts: pd.Series) -> pd.Series:
-        memo: dict[str, list[str]] = {}
-
-        def one(text: str) -> list[str]:
-            out: list[str] = []
-            for w in token_re(text or ""):
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = segment_word(w, ranks)
-                out.extend(got)
-            return out
-
-        return texts.map(one)
-
-    return seg
-
-
 def bpe_count_udf(merges: Merges):
     """Arrow-batched text → BPE token COUNT.  A dedicated count kernel:
     shipping the full subword array through Arrow just to ``size()``
@@ -208,18 +181,6 @@ def bpe_count_udf(merges: Merges):
         return texts.map(one)
 
     return count
-
-
-def bpe_token_counts(
-    documents: DataFrame, merges: Merges, text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, n_bpe_tokens) under the trained vocabulary — the count
-    ``sampling.pack_documents(count_col=...)`` wants for
-    tokenizer-true packing."""
-    return documents.select(
-        "doc_id",
-        bpe_count_udf(merges)(F.col(text_col)).alias("n_bpe_tokens"),
-    )
 
 
 def chunk_words_by_budget(
@@ -329,7 +290,9 @@ def chunk_documents_bpe(
                 for w in words:
                     c = memo.get(w)
                     if c is None:
-                        c = memo[w] = len(segment_word(w, ranks))
+                        c = len(segment_word(w, ranks))
+                        if len(memo) < 1 << 20:
+                            memo[w] = c
                     counts.append(c)
                 # prefix sums: span token totals in O(1) each
                 pre = [0]
@@ -354,18 +317,3 @@ def chunk_documents_bpe(
             )
 
     return documents.select("doc_id", text_col).mapInPandas(gen, schema)
-
-
-def save_merges(spark, merges: Merges, path: str) -> None:
-    """Persist the tokenizer model as (rank, a, b) parquet — the same
-    write-once index-metadata discipline as the IVF/PQ codebooks."""
-    spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)],
-        "rank: int, a: string, b: string",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def load_merges(spark, path: str) -> Merges:
-    """Load a persisted model back into rank order."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
-    return [(r["a"], r["b"]) for r in rows]

@@ -27,10 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
 from mapreduce_framework_for_mergesort_spark.functions import vector as V
 from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-    input_bytes as _input_bytes,
     materialize as _materialize,
 )
 
@@ -210,13 +210,22 @@ def lsh_candidate_pairs(
     )
 
 
+#: Hash-min budget before ``cluster_pairs`` falls back to star
+#: contraction: clique-ish dedup graphs settle in <= ~4 rounds, and a
+#: graph still moving after 8 has a long diameter, exactly star's
+#: territory.
+HASH_MIN_ROUNDS = 8
+
+#: Star-contraction budget: O(log² n) rounds converge far past any
+#: candidate graph this engine builds (a diameter-400 path takes <= 10).
+STAR_ROUNDS = 40
+
+
 def cluster_pairs(
     pairs: DataFrame,
     nodes: DataFrame | None = None,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iters: int = 25,
-    algorithm: str = "auto",
     stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over an undirected pair list → one row per
@@ -227,36 +236,38 @@ def cluster_pairs(
     survives (A~B and B~C must collapse to one survivor even when A~C
     was never emitted as a pair).
 
-    Two algorithms, both returning the identical fixpoint (pinned
-    against each other and a union-find reference in property tests):
+    Three algorithms, tried in order, all returning the identical
+    fixpoint (pinned against each other and a union-find reference in
+    property tests):
 
-    * ``hash_min`` — label propagation: labels start as each node's own
-      id; each round every node takes the min of its label and its
-      neighbors' labels.  Rounds needed = min-label propagation
-      diameter — ideal for dedup graphs, which are dense clique-ish
-      clusters with tiny diameters; one equi-join + one map-side-partial
-      min aggregation per round.  Raises after ``max_iters`` when chosen
-      explicitly (returning a non-fixpoint would silently under-dedup).
-    * ``star`` — alternating large-star/small-star contraction
-      (Kiveris et al. '14): each round rewires every node's strictly
+    * driver union-find — when the candidate graph has at most
+      ``sizing.DRIVER_UF_MAX_EDGES`` symmetric edges, one collect and
+      one union-find pass (round 13: every distributed round costs a
+      checkpoint job + a convergence-probe job, ~1.4 s of pure
+      scheduling for a 251-edge fixture graph).  The routing probe is
+      a bounded ``limit(cap + 1).count()`` over the already
+      checkpointed edge blocks, so a big graph never pays a full count.
+    * ``hash_min`` — label propagation for ``HASH_MIN_ROUNDS`` rounds:
+      labels start as each node's own id; each round every node takes
+      the min of its label and its neighbors' labels.  Rounds needed =
+      min-label propagation diameter — ideal for dedup graphs, which
+      are dense clique-ish clusters with tiny diameters; one equi-join
+      + one map-side-partial min aggregation per round.
+    * ``star`` — when hash-min exhausts its budget: alternating
+      large-star/small-star contraction (Kiveris et al. '14) for up to
+      ``STAR_ROUNDS`` rounds: each round rewires every node's strictly
       larger neighbors to its neighborhood min (large-star), then its
       smaller neighbors and itself (small-star).  Converges in
       O(log² n) rounds — ~7 for a diameter-100 path where hash-min
       needs ~100 — at the price of two join+agg+distinct passes per
-      round.  The round-4 answer to the round-3 failure mode where a
-      chain-shaped candidate graph exhausted hash-min's budget.
-    * ``auto`` (default) — hash-min first with a capped budget
-      (min(max_iters, 8) rounds: clique-ish dedup graphs settle in
-      ≤ ~4; a graph still moving after 8 has a long diameter, exactly
-      star's territory); on exhaustion, fall back to star contraction
-      on the same edges instead of raising.  Long-diameter graphs get a
-      guaranteed answer; typical dedup graphs never pay star's extra
-      per-round cost.
+      round.  Long-diameter graphs get a guaranteed answer; typical
+      dedup graphs never pay star's extra per-round cost.
 
-    Per round both algorithms materialize their state (lineage cut —
-    iterative plans otherwise re-execute the whole prefix each round)
-    and state is sized by the CANDIDATE GRAPH, never the corpus.  The
-    convergence probes are ``limit(1)`` runs, not full counts.
+    Per round both distributed algorithms materialize their state
+    (lineage cut — iterative plans otherwise re-execute the whole
+    prefix each round) and state is sized by the CANDIDATE GRAPH, never
+    the corpus.  The convergence probes are ``limit(1)`` runs, not full
+    counts.
 
     ``nodes`` (optional, one id column): the full vertex set — nodes
     with no pairs become singleton clusters of themselves, which is what
@@ -272,8 +283,6 @@ def cluster_pairs(
     ``stats`` (optional dict): observability — gets ``algorithm`` (the
     one that produced the answer) and ``rounds`` written into it.
     """
-    if algorithm not in ("auto", "hash_min", "star"):
-        raise ValueError(f"unknown algorithm {algorithm!r}")
     e = pairs.select(
         F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
     )
@@ -294,44 +303,14 @@ def cluster_pairs(
     )
     if stats is None:
         stats = {}
-    if algorithm == "star":
-        labels = _star_labels(edges, max_iters, stats)
+    cap = sizing.DRIVER_UF_MAX_EDGES
+    if edges.limit(cap + 1).count() <= cap:
+        labels = _driver_uf_labels(edges, stats)
     else:
-        labels = None
-        if algorithm == "auto":
-            # Round-13 small-graph fast path: every distributed round
-            # costs a checkpoint job + a convergence-probe job, which
-            # at fixture scale is ~1.4 s of pure scheduling for a
-            # 251-edge graph.  When the CANDIDATE graph (never the
-            # corpus — ``nodes`` singletons stay distributed) fits a
-            # bounded driver collect, one union-find pass returns the
-            # identical min-label fixpoint (pinned against hash-min /
-            # star / the reference union-find in property tests).  The
-            # count probe runs over the already-checkpointed edge
-            # blocks, so the big-graph regime pays one cheap job to
-            # route past this.
-            n_edges = edges.count()
-            if n_edges <= DRIVER_UF_MAX_EDGES:
-                labels = _driver_uf_labels(edges, stats)
+        labels = _hashmin_labels(edges, HASH_MIN_ROUNDS, stats)
         if labels is None:
-            budget = min(max_iters, 8) if algorithm == "auto" else max_iters
-            labels = _hashmin_labels(edges, budget, stats)
-        if labels is None:
-            if algorithm == "hash_min":
-                raise RuntimeError(
-                    f"cluster_pairs did not converge within max_iters="
-                    f"{max_iters} rounds (graph min-label diameter exceeds"
-                    " the budget); raise max_iters or use algorithm='star'"
-                )
-            labels = _star_labels(edges, max(max_iters, 40), stats)
+            labels = _star_labels(edges, STAR_ROUNDS, stats)
     return labels.unionByName(singletons)
-
-
-#: Edge-count ceiling for the driver union-find fast path: 200 K
-#: symmetric edges collect to a few MB and label ≤ 400 K nodes — the
-#: same order as a broadcast side, far under driver limits.  A corpus
-#: whose candidate graph exceeds this takes the distributed rounds.
-DRIVER_UF_MAX_EDGES = 200_000
 
 
 def _driver_uf_labels(edges: DataFrame, stats: dict) -> DataFrame:
@@ -372,7 +351,7 @@ def _hashmin_labels(
 ) -> DataFrame | None:
     """Hash-min propagation over a symmetric edge list → (node, cluster)
     at the fixpoint, or ``None`` when ``max_iters`` rounds weren't
-    enough (caller decides: raise, or fall back to star contraction)."""
+    enough (the caller falls back to star contraction)."""
     stats["algorithm"] = "hash_min"
     # Fused round 0: starting from identity labels, the first
     # propagation yields exactly min(node, min(neighbors)) — computable
@@ -499,9 +478,8 @@ def _star_labels(edges: DataFrame, max_iters: int, stats: dict) -> DataFrame:
                 F.least(F.col("u"), F.col("mv")).alias("cluster"),
             )
     raise RuntimeError(
-        f"star contraction did not converge within max_iters={max_iters}"
-        " rounds — not expected below 2^(sqrt(max_iters)) nodes; raise"
-        " max_iters"
+        f"star contraction did not converge within {max_iters} rounds"
+        f" — not expected below 2^(sqrt({max_iters})) nodes"
     )
 
 
@@ -1725,20 +1703,6 @@ def duckdb_dup_spans_cte(
     """
 
 
-#: Input-bytes cutoff for the strip rebuild (round 13): at or above it
-#: ``strip_dup_spans`` rebuilds through the Arrow kernel
-#: (``_strip_rebuild_arrow``), below it through the interpreted HOF
-#: slice battery.  Measured on the full q_dedup_ngram_jaccard key: ×1
-#: (0.6 MB docs) codegen 4.06 s vs arrow 4.55 s (the kernel contends
-#: for Python workers inside the two-chain overlap), ×10 (5.8 MB)
-#: codegen 7.79 s vs arrow 7.38 s (isolated strip pass 1.78 → 1.24 s:
-#: one Python crossing replaces three HOF expressions, and the
-#: tokenize memo skips replicas that share an Arrow batch).  4 MB sits
-#: between the measured loss and the measured win; at corpus scale the
-#: gate always takes the kernel.
-STRIP_ARROW_THRESHOLD_BYTES = 4 << 20
-
-
 def _strip_rebuild_arrow(k: int):
     """The strip rebuild (tokenize → slice out protecting intervals →
     rejoin) as ONE Arrow kernel over (text, __iv) returning
@@ -1832,9 +1796,9 @@ def strip_dup_spans(
     identical by construction).  ``flags`` / ``grams`` as in
     ``dup_spans``.
 
-    Scale gate: when ``materialize.input_bytes(documents)`` (the plan's
-    scan-file bytes; an in-memory frame counts as 0) reaches
-    ``STRIP_ARROW_THRESHOLD_BYTES``, the rebuild runs as the Arrow
+    Scale gate: when ``sizing.reaches(documents,
+    sizing.STRIP_ARROW_THRESHOLD_BYTES)`` (the plan's scan-file bytes;
+    an in-memory frame counts as below), the rebuild runs as the Arrow
     kernel ``_strip_rebuild_arrow``; below it, as codegen HOF slices.
     Both give identical rows; there is no override.
     """
@@ -1862,7 +1826,7 @@ def strip_dup_spans(
     joined = documents.join(iv, "doc_id", "left").withColumn(
         "__iv", F.coalesce(F.col("__iv"), empty_iv)
     )
-    if (_input_bytes(documents) or 0) >= STRIP_ARROW_THRESHOLD_BYTES:
+    if sizing.reaches(documents, sizing.STRIP_ARROW_THRESHOLD_BYTES):
         out = joined.withColumn(
             "__sr", _strip_rebuild_arrow(k)(F.col("text"), F.col("__iv"))
         )

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from mapreduce_framework_for_mergesort_spark import sizing
+
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Cut lineage and cache ``df``'s result for multi-consumer reuse.
@@ -47,46 +49,18 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-def input_bytes(df: DataFrame) -> int | None:
-    """Total bytes of ``df``'s scan input files — the cheap observable
-    scale-adaptive materialization branches on (round 7).  Driver-side
-    METADATA only: ``inputFiles()`` lists the leaf scan's files and the
-    Hadoop FS status supplies each length; no data is read and nothing
-    executes.  Returns None when the plan has no file scan (in-memory
-    test DataFrames) or listing fails — callers must treat None as
-    "unknown", not zero."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    spark = df.sparkSession
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    total = 0
-    try:
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            fs = p.getFileSystem(conf)
-            total += fs.getFileStatus(p).getLen()
-    except Exception:
-        return None
-    return total
-
-
 def materialize_if_large(
     df: DataFrame, source: DataFrame, threshold_bytes: int
 ) -> DataFrame:
-    """Materialize ``df`` only when ``source``'s scan input exceeds
-    ``threshold_bytes`` (unknown sizes stay unmaterialized — the cheap
-    default).  The scale-adaptive spelling of a measured trade that
-    flips with volume: re-running a cheap codegen projection per
+    """Materialize ``df`` only when ``source``'s scan input reaches
+    ``threshold_bytes`` (``sizing.reaches``: unknown sizes stay
+    unmaterialized — the cheap default).  The scale-adaptive spelling
+    of a measured trade that flips with volume: re-running a cheap
+    codegen projection per
     consumer beats a checkpoint write+read while the corpus is small,
     and loses once the re-scans dominate (the round-6 minhash key paid
     +2 s at x100 for a fixed unmaterialized choice that bought 0.5 s
     at x1)."""
-    b = input_bytes(source)
-    if b is not None and b > threshold_bytes:
+    if sizing.reaches(source, threshold_bytes):
         return materialize(df)
     return df

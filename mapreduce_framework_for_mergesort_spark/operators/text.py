@@ -655,14 +655,6 @@ def _check_bm25_terms(query_terms: tuple[str, ...]) -> None:
             )
 
 
-#: Input-bytes cutoff for bm25's per-content collapse (round 13, the
-#: STRIP_ARROW_THRESHOLD_BYTES shape): below it the md5 + distinct +
-#: fan-out overhead beats the saving (measured 0.70 → 1.02 s at ×1,
-#: 0.6 MB docs); above it the per-doc tokenize battery dominates
-#: (4.05 → 1.23 s at ×10, 5.8 MB).  At corpus scale always collapsed.
-BM25_COLLAPSE_THRESHOLD_BYTES = 4 << 20
-
-
 def bm25_topk(
     documents: DataFrame,
     query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
@@ -688,24 +680,24 @@ def bm25_topk(
     (bm25 DESC, doc_id), decided by a window over the ≤ top_k
     already-limited rows (bounded, never corpus-wide).
 
-    Scale gate: at ``BM25_COLLAPSE_THRESHOLD_BYTES`` or more the
-    per-doc battery runs once per distinct content instead (identical
-    rows).  The gate measures ``materialize.input_bytes(documents)``:
-    the byte size of the plan's scan FILES, not the volume left after
-    any filter above the scan; an in-memory frame (no file scan) counts
-    as 0.  There is no override.
+    Scale gate: when ``sizing.reaches(documents,
+    sizing.BM25_COLLAPSE_THRESHOLD_BYTES)`` the per-doc battery runs
+    once per distinct content instead (identical rows).  The gate
+    measures the byte size of the plan's scan FILES, not the volume
+    left after any filter above the scan; an in-memory frame (no file
+    scan) counts as below.  There is no override.
     """
     from pyspark.sql import Window
 
+    from mapreduce_framework_for_mergesort_spark import sizing
     from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        input_bytes,
         materialize,
     )
 
     _check_bm25_terms(query_terms)
-    collapsed = (
-        input_bytes(documents) or 0
-    ) >= BM25_COLLAPSE_THRESHOLD_BYTES
+    collapsed = sizing.reaches(
+        documents, sizing.BM25_COLLAPSE_THRESHOLD_BYTES
+    )
     # coalesce NULL text to '': Spark's legacy sizeOfNull makes
     # size(NULL) = -1, which would corrupt dl (and sum_dl/avgdl) while
     # DuckDB's len(NULL) is NULL — coalescing on BOTH engines keeps a
@@ -986,14 +978,3 @@ def duckdb_redact_sql(col: str = "text", aggressive: bool = False) -> str:
         for _ in range(passes):
             out = f"regexp_replace({out}, '{gpat}', '{grepl}', 'g')"
     return out
-
-
-def fingerprints(documents: DataFrame) -> DataFrame:
-    """Winnowing-style content fingerprint: min Karp-Rabin rolling hash
-    over char 8-grams (robust to global reordering), via the exact-int64
-    Arrow kernel (``functions/hashing.py`` — the SQL expression form is
-    the canonical definition it is pinned to)."""
-    return documents.select(
-        "doc_id",
-        H.fingerprint_udf()(F.col("text")).alias("fingerprint"),
-    )

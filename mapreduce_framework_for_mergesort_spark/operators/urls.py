@@ -491,28 +491,6 @@ def per_domain_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def domain_link_graph(
-    links: DataFrame, src_col: str = "url", dst_col: str = "link",
-    keep_self: bool = False,
-) -> DataFrame:
-    """(page url, out-link url) edge list → weighted SITE-grain graph
-    ``(src_domain, dst_domain, weight)``.  Domain grain is what makes
-    the graph tractable at 100 TB: pages are ~corpus-sized, domains
-    are ~millions — the aggregated graph fits comfortably in one
-    executor's memory and every downstream iteration runs on it, not
-    on the crawl.  Intra-site navigation (self-edges) is dropped by
-    default — it dominates raw link counts and carries no authority
-    signal."""
-    src = registrable_domain(url_host(F.col(src_col)))
-    dst = registrable_domain(url_host(F.col(dst_col)))
-    g = links.select(src.alias("src_domain"), dst.alias("dst_domain"))
-    if not keep_self:
-        g = g.where(F.col("src_domain") != F.col("dst_domain"))
-    return g.groupBy("src_domain", "dst_domain").agg(
-        F.count(F.lit(1)).alias("weight")
-    )
-
-
 def pagerank_domains(
     edges: DataFrame, n_iters: int = 10, damping: float = 0.85,
 ) -> DataFrame:

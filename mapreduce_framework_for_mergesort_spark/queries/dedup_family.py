@@ -15,27 +15,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
 from mapreduce_framework_for_mergesort_spark.functions import vector as V
 from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
+from mapreduce_framework_for_mergesort_spark.operators import similarity as S
 from mapreduce_framework_for_mergesort_spark.operators.materialize import (
     materialize,
     materialize_if_large,
 )
-
-# Scale-adaptive cutoff for materializing the shared content-hash
-# projection (round 7, round-6 verdict item 3).  The fixed
-# unmaterialized choice was a measured trade that flips with volume:
-# ~4 cheap codegen re-scans beat a checkpoint write+read at sf0.1
-# (2.56 -> 2.10 s warm) and x10 (flat), but pay ~2 s of md5 re-scans at
-# x100 (7.1 -> 9.1 s), where the corpus parquet is ~56 MB.  16 MB sits
-# between the measured win (<= 5.6 MB at x10) and the measured loss
-# (56 MB at x100); at 100 TB the branch always materializes, which is
-# the posture a corpus-sized input wants.
-HASH_MAT_THRESHOLD_BYTES = 16 << 20
-
-from mapreduce_framework_for_mergesort_spark.operators import similarity as S
 from mapreduce_framework_for_mergesort_spark.queries import query
 
 JACCARD_TAU = 0.8
@@ -175,7 +164,7 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The hash projection feeds the representative semi-join and the
     # replica edge build; whether to MATERIALIZE it is scale-adaptive
     # (round 7 — the round-6 fixed unmaterialized choice was right at
-    # x1/x10 and wrong at x100, see HASH_MAT_THRESHOLD_BYTES): below
+    # x1/x10 and wrong at x100, see sizing.HASH_MAT_THRESHOLD_BYTES): below
     # the cutoff its consumers re-scan parquet and re-run the JVM md5
     # (~4 cheap codegen passes, 2.6→2.4 s warm at sf0.1) instead of
     # paying a checkpoint write+read on the critical path before
@@ -187,7 +176,7 @@ def q_dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # replica's band array, exactly the volume the collapse exists to
     # avoid.
     hashed = materialize_if_large(
-        D.content_hashes(docs), docs, HASH_MAT_THRESHOLD_BYTES
+        D.content_hashes(docs), docs, sizing.HASH_MAT_THRESHOLD_BYTES
     )
     rep_docs = docs.join(
         D.exact_rep_ids(docs, hashed=hashed), "doc_id", "semi"
@@ -406,7 +395,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         # minhash key: cheap codegen re-scans beat a corpus checkpoint
         # while the corpus is small, and lose at x100
         hashed = materialize_if_large(
-            D.content_hashes(docs), docs, HASH_MAT_THRESHOLD_BYTES
+            D.content_hashes(docs), docs, sizing.HASH_MAT_THRESHOLD_BYTES
         )
         rep_docs = docs.join(
             D.exact_rep_ids(docs, hashed=hashed), "doc_id", "semi"

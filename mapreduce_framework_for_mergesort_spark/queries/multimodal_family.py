@@ -29,7 +29,7 @@ from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
 
 
 def _spread_reps(
-    reps: DataFrame, sf_dir: str, n_chains: int
+    reps: DataFrame, docs: DataFrame, n_chains: int
 ) -> DataFrame:
     """Round 12 (optimization): the representative set feeds
     ``n_chains`` synth→decode mapInPandas chains evaluated together in
@@ -41,13 +41,12 @@ def _spread_reps(
     pool with per-task overhead (measured at sf0.1, warm interleaved:
     none 3.8 s, n=4 2.3 s, n=8 2.7 s, n=32 5.7 s — more tasks than
     cores across 10 chains is a regression, not a win).  Fires only
-    when the documents SCAN is itself parallelism-starved (single-file
+    when the ``docs`` SCAN is itself parallelism-starved (single-file
     fixtures); at corpus scale the join output is already wide and the
     shape is untouched."""
-    spark = reps.sparkSession
-    cores = spark.sparkContext.defaultParallelism
+    cores = reps.sparkSession.sparkContext.defaultParallelism
     n = -(-cores // n_chains)
-    if n <= 1 or scan_parallelism(sf_dir, "documents", spark) >= cores:
+    if n <= 1 or scan_parallelism(docs) >= cores:
         return reps
     return reps.repartition(n)
 
@@ -437,7 +436,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs over exact-dup representatives and the per-doc rows come
     # back through one md5(text) join.
     reps = _spread_reps(
-        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"), sf_dir, 10
+        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"), docs, 10
     )
     b = (
         M.binarize_documents(reps)
@@ -615,7 +614,7 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # function of the text, so it runs over representatives and the
     # aggregate rows join back to every doc id
     reps = _spread_reps(
-        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"), sf_dir, 9
+        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"), docs, 9
     )
     b = (
         M.binarize_documents(reps)

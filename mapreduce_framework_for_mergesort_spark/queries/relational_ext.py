@@ -485,9 +485,7 @@ def q_scalar_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical form from the same base columns, so every normalization
     rule is pinned independently (including what must NOT change:
     path case, non-default ports)."""
-    o = fan_out_starved_scan(
-        load_table(spark, sf_dir, "orders"), sf_dir, "orders"
-    )
+    o = fan_out_starved_scan(load_table(spark, sf_dir, "orders"))
     # Two-step select: the URL-family struct kernel (url_norm/host/
     # domain + url_rfc_norm in ONE Arrow round trip — round-12
     # optimization, A/B numbers in OPTIMIZATION_r12.md) is computed in

@@ -38,9 +38,7 @@ def udf_digit_sum_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.29 s vs unmodified 1.57 s (lineitem's grouped-agg branch
     # measured WORSE fanned: its heavy work happens after the groupBy
     # exchange on 3 groups, the profile_stats lesson)
-    o = fan_out_starved_scan(
-        load_table(spark, sf_dir, "orders"), sf_dir, "orders"
-    )
+    o = fan_out_starved_scan(load_table(spark, sf_dir, "orders"))
     return (
         o.select(digit_sum("o_orderkey").alias("ds"))
         .groupBy("ds")
@@ -75,7 +73,7 @@ def udtf_split_words(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan-out: the UDTF's eval is called per ROW in Python — the most
     # per-row-expensive seam in the suite — and ran on one task
     fan_out_starved_scan(
-        load_table(spark, sf_dir, "documents"), sf_dir, "documents"
+        load_table(spark, sf_dir, "documents")
     ).createOrReplaceTempView("documents_udtf")
     return spark.sql(
         """

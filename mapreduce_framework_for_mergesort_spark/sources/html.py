@@ -206,8 +206,7 @@ class _TextExtractor(HTMLParser):
 
 class _LinkExtractor(HTMLParser):
     """Collects ``<a href>`` targets (and ``<link rel=canonical>``)
-    outside skipped subtrees — the out-link half of a crawl page, the
-    input to the domain link graph (``operators/urls.py``)."""
+    outside skipped subtrees — the out-link half of a crawl page."""
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)
@@ -279,92 +278,6 @@ def extract_canonical(markup: str, base_url: str | None = None) -> str | None:
         if url.startswith(("http://", "https://")):
             return url
     return None
-
-
-PAGE_CANONICAL_SCHEMA = "url string, canonical_url string"
-
-
-def page_canonicals(records: DataFrame) -> DataFrame:
-    """Distributed canonical extraction over ``read_warc`` output:
-    ``(url, canonical_url)`` with ``canonical_url = url`` for pages
-    declaring none — the join-ready shape for collapsing a crawl to
-    canonical grain (``urls.dedup_by_url(..., url_col=
-    'canonical_url')``).  Same decode chain as the link extractor;
-    quarantined records contribute zero rows."""
-    resp = records.where(F.col("warc_type") == "response")
-
-    def ex(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            canon: list[str] = []
-            for uri, payload in zip(pdf["target_uri"], pdf["payload"]):
-                markup = _classify_and_extract_html(bytes(payload))
-                if markup is None:
-                    continue
-                try:
-                    # tag-soup wild pages must quarantine, not kill
-                    # the Arrow task (module contract)
-                    c = extract_canonical(markup, uri)
-                except Exception:
-                    continue
-                urls.append(uri)
-                canon.append(c or uri)
-            yield pd.DataFrame({"url": urls, "canonical_url": canon})
-
-    return resp.mapInPandas(ex, PAGE_CANONICAL_SCHEMA)
-
-
-PAGE_LINK_SCHEMA = "url string, link string"
-
-
-def extract_page_links(records: DataFrame) -> DataFrame:
-    """Distributed out-link extraction over ``read_warc`` output: the
-    same classify-and-decode chain as ``audit_http_extractions``, but
-    fanned out one row per (page, resolved link) — the edge list a
-    link graph / domain-authority pass consumes.  Map-only Arrow pass
-    (``mapInPandas`` because the fan-out is one-to-many); quarantined
-    records contribute zero edges, they never kill the pass."""
-    resp = records.where(F.col("warc_type") == "response")
-
-    def ex(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            links: list[str] = []
-            for uri, payload in zip(pdf["target_uri"], pdf["payload"]):
-                row = _classify_and_extract_html(bytes(payload))
-                if row is None:
-                    continue
-                try:
-                    page_links = extract_links(row, base_url=uri)
-                except Exception:
-                    continue  # quarantine, never kill the pass
-                for link in page_links:
-                    urls.append(uri)
-                    links.append(link)
-            yield pd.DataFrame({"url": urls, "link": links})
-
-    return resp.mapInPandas(ex, PAGE_LINK_SCHEMA)
-
-
-def _classify_and_extract_html(payload: bytes) -> str | None:
-    """Markup (pre-tag-strip str) of an ok HTML 200, else None — the
-    decode front end of link extraction.  Links live in the tags
-    ``_classify_and_extract`` strips, so this stops one step earlier
-    in the same chain; quarantine classes all map to None (counted by
-    the audit operator, not here)."""
-    try:
-        status, headers, raw = W._http_split(payload)
-        body = W._decode_http_body(headers, raw)
-    except (ValueError, NotImplementedError):
-        return None
-    if status != 200:
-        return None
-    ctype = headers.get("content-type", "")
-    mime = ctype.split(";", 1)[0].strip().lower() or None
-    if mime is not None and "html" not in mime:
-        return None
-    markup, _charset = decode_html_bytes(ctype, body)
-    return markup
 
 
 def html_to_text(markup: str) -> str:

@@ -411,7 +411,8 @@ def audit_robots_compliance(
                 m = memo.get(host)
                 if m is None:
                     m = RobotsMatcher(parse_robots(str(txt)), agent)
-                    memo[host] = m
+                    if len(memo) < 1 << 20:
+                        memo[host] = m
                 ok, pat = m.decide(path or "/")
                 allowed.append(ok)
                 rule.append(pat)

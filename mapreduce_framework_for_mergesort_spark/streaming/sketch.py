@@ -111,60 +111,3 @@ def frequency_sketch_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def update_dyadic_sketch(
-    batch: DataFrame,
-    epoch: int,
-    sketch_path: str,
-    key: str,
-    levels: int | None = None,
-) -> None:
-    """Quantile twin of ``update_frequency_sketch``: sketch the batch's
-    dyadic cells and overwrite THIS epoch's partition — idempotent
-    under retries, exactly-once by construction."""
-    from mapreduce_framework_for_mergesort_spark.operators.sketches import (
-        DYADIC_LEVELS,
-        dyadic_cms_sketch,
-    )
-
-    lv = DYADIC_LEVELS if levels is None else levels
-    dyadic_cms_sketch(batch, key, levels=lv).write.mode(
-        "overwrite"
-    ).parquet(f"{sketch_path}/epoch={epoch}")
-
-
-def read_dyadic_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """Merged dyadic sketch across all stored epochs (elementwise
-    addition on (lvl, i, bucket) — each epoch ≤ (levels+1)·d·w rows).
-    Equal, cell-for-cell, to ``dyadic_cms_sketch`` over the
-    concatenated batches; feed its ``collect()`` to
-    ``sketches.dyadic_quantiles`` for streaming quantile answers."""
-    return (
-        spark.read.parquet(sketch_path)
-        .groupBy("lvl", "i", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
-
-
-def dyadic_sketch_stream(
-    stream: DataFrame,
-    sketch_path: str,
-    checkpoint_dir: str,
-    key: str,
-    levels: int | None = None,
-):
-    """Wire a streaming DataFrame into the incremental dyadic quantile
-    sketch — running corpus quantiles (token lengths, latencies,
-    prices) over an unbounded stream with bounded state and no sort
-    anywhere.  Same harness contract as ``frequency_sketch_stream``."""
-
-    def step(batch: DataFrame, epoch: int) -> None:
-        update_dyadic_sketch(batch, epoch, sketch_path, key, levels)
-
-    return (
-        stream.writeStream.foreachBatch(step)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

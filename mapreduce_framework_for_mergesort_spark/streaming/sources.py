@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.io import (
     normalize_events_ts,
     set_events_read_confs,
@@ -28,34 +29,28 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     rows — so a fixed ``spark.sql.shuffle.partitions`` wildly
     overpartitions small inputs: the interval join over the 2 MB
     fixture measured 8.3 s at 32 partitions vs 2.5 s at 4, identical
-    results and state totals.  Rule: one partition per ~2 MiB of
-    compressed input, clamped to [min(cores, 4), 2×cores].  The 2 MiB
-    divisor is calibrated from measured state expansion (round 13): a
-    stateful drain holds ~15–20× the parquet bytes as in-memory state
-    rows (11.7 MB input → ~200 MB state at ×10), so ~2 MiB of input
-    per partition ≈ ~32 MiB of state per store — the size where a
-    store does real work instead of paying fixed load/commit cost on
-    near-empty maps.  Measured across all 5 streaming keys: at ×10
-    (11.7 MB → 6 partitions) min-of-2 totals 15.4 s @4 vs 13.7 s @6
-    with 6 ≥ on every key; at ×1 (1.2 MB → still the 4-partition
-    clamp) 4 beats 6/8 (10.9 vs 15.0/19.3 s); past the need the cost
-    explodes (interval join @×10: 17.7 s @32, 38.9 s @64 — 433 s of
-    summed state-commit time on near-empty stores).  A 64 GB/day topic
-    still sizes to the 2×cores cap (parallelism-bound, the batch
-    advisor's regime, see ``tuning.shuffle_partitions``), where ≥2 MiB
-    input/partition means stores are no longer fixed-cost bound.
-    Parameterised, not local-tuned: follows data and cores, never a
-    constant.
-    Directory-layout tables sum recursively; an unmeasurable path
-    (object store) falls back to 2×cores — at that scale the input is
-    never state-store-fixed-cost bound (``io.local_input_bytes``)."""
-    from mapreduce_framework_for_mergesort_spark.io import local_input_bytes
-
+    results and state totals.  Rule: one partition per
+    ``sizing.STREAM_STATE_BYTES_PER_PARTITION`` (2 MiB, calibrated
+    there from measured state expansion) of compressed input, clamped
+    to [min(cores, 4), 2×cores].  Measured across all 5 streaming
+    keys: at ×10 (11.7 MB → 6 partitions) min-of-2 totals 15.4 s @4 vs
+    13.7 s @6 with 6 ≥ on every key; at ×1 (1.2 MB → still the
+    4-partition clamp) 4 beats 6/8 (10.9 vs 15.0/19.3 s); past the
+    need the cost explodes (interval join @×10: 17.7 s @32, 38.9 s
+    @64 — 433 s of summed state-commit time on near-empty stores).  A
+    64 GB/day topic still sizes to the 2×cores cap (parallelism-bound),
+    where ≥2 MiB input/partition means stores are no longer fixed-cost
+    bound.  Parameterised, not local-tuned: follows data and cores,
+    never a constant.
+    The bytes are ``sizing.input_bytes`` of the events path; an
+    unmeasurable path (missing, or an object store with no filesystem
+    configured) falls back to 2×cores — at that scale the input is
+    never state-store-fixed-cost bound."""
     cores = spark.sparkContext.defaultParallelism
-    size = local_input_bytes(table_path(sf_dir, "events"))
+    size = sizing.input_bytes(table_path(sf_dir, "events"), spark)
     if size is None:
         return 2 * cores
-    by_bytes = -(-size // (2 << 20))
+    by_bytes = -(-size // sizing.STREAM_STATE_BYTES_PER_PARTITION)
     return max(min(cores, 4), min(by_bytes, 2 * cores))
 
 

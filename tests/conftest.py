@@ -60,7 +60,7 @@ SLOW_TESTS = frozenset({
     "tests/test_classifier.py::test_scoring_separates_and_stays_jvm",
     "tests/test_fault_tolerance.py::test_task_retry_recovers_injected_faults",
     "tests/test_html.py::test_crawl_feed_composes_with_continuous_ingestion",
-    "tests/test_html.py::test_domain_link_graph_and_pagerank",
+    "tests/test_html.py::test_pagerank_matches_power_iteration",
     "tests/test_llm_ops.py::test_cluster_pairs_long_chain_converges",
     "tests/test_llm_ops.py::test_contamination_report_parity_and_consistency",
     "tests/test_llm_ops.py::test_curation_leakage_safe_split_composed",
@@ -84,7 +84,7 @@ SLOW_TESTS = frozenset({
     "tests/test_pq.py::test_ivfadc_incremental_append_lifecycle",
     "tests/test_pq.py::test_ivfadc_persisted_probe_matches_inline_and_prunes",
     "tests/test_property_cluster.py::test_cluster_pairs_matches_union_find",
-    "tests/test_property_cluster.py::test_hash_min_raises_loudly_but_auto_falls_back",
+    "tests/test_property_cluster.py::test_long_path_falls_back_from_hash_min_to_star",
     "tests/test_property_cluster.py::test_star_contraction_matches_union_find",
     "tests/test_property_pack.py::test_pack_matches_python_cumsum",
     "tests/test_property_sort.py::test_cdc_upsert_matches_dict_semantics",
@@ -92,7 +92,6 @@ SLOW_TESTS = frozenset({
     "tests/test_property_sort.py::test_rank_is_dense_and_multiset_preserved",
     "tests/test_robots.py::test_disallowed_set_feeds_takedown",
     "tests/test_sketches.py::test_dyadic_cms_parity_rank_bounds_and_merge",
-    "tests/test_sketches.py::test_dyadic_sketch_stream_equals_batch_and_is_idempotent",
     "tests/test_streaming.py::test_near_dup_pairs_stream_equals_batch",
     "tests/test_streaming.py::test_near_dup_stream_band_cap_bounds_fanout",
     "tests/test_streaming.py::test_near_dup_stream_ttl_evicts_and_bounds_state",

@@ -1,5 +1,5 @@
 """BPE tokenizer: the textbook merge sequence, greedy application,
-determinism, and the distributed apply plumbing."""
+determinism, and the distributed count plumbing."""
 
 from __future__ import annotations
 
@@ -41,30 +41,25 @@ def test_segment_word_greedy_by_rank(spark):
 
 
 def test_bpe_distributed_apply_matches_reference(spark):
-    """The Arrow kernel over a multi-word corpus must equal the pure
-    segment_word reference applied word-by-word (plumbing: tokenizer
-    split, memoization, empty docs)."""
+    """The Arrow count kernel over a multi-word corpus must equal the
+    pure segment_word reference applied word-by-word (plumbing:
+    tokenizer split, memoization, empty docs)."""
     merges = B.train_bpe(_toy_corpus(spark), num_merges=4)
     ranks = {p: i for i, p in enumerate(merges)}
-    docs = spark.createDataFrame(
-        [(1, "lowest newest"), (2, "low low widest"), (3, "")],
-        ["doc_id", "text"],
-    )
+    texts = [(1, "lowest newest"), (2, "low low widest"), (3, "")]
+    docs = spark.createDataFrame(texts, ["doc_id", "text"])
     got = {
-        r["doc_id"]: r["toks"]
+        r["doc_id"]: r["n"]
         for r in docs.select(
-            "doc_id", B.bpe_segment_udf(merges)(F.col("text")).alias("toks")
+            "doc_id", B.bpe_count_udf(merges)(F.col("text")).alias("n")
         ).collect()
     }
     from mapreduce_framework_for_mergesort_spark.functions.hashing import (
         tokenize,
     )
 
-    for doc_id, text in [(1, "lowest newest"), (2, "low low widest"), (3, "")]:
-        want = [
-            s for w in tokenize(text)
-            for s in B.segment_word(w, ranks)
-        ]
+    for doc_id, text in texts:
+        want = sum(len(B.segment_word(w, ranks)) for w in tokenize(text))
         assert got[doc_id] == want, doc_id
 
 
@@ -80,7 +75,10 @@ def test_bpe_train_deterministic_and_counts_compress(spark, sf_oracle):
     m2 = B.train_bpe(docs, num_merges=30, top_words=2000)
     assert m1 == m2 and len(m1) == 30
     joined = (
-        B.bpe_token_counts(docs, m1)
+        docs.select(
+            "doc_id",
+            B.bpe_count_udf(m1)(F.col("text")).alias("n_bpe_tokens"),
+        )
         .join(
             docs.select(
                 "doc_id",
@@ -131,12 +129,6 @@ def test_incremental_trainer_equals_naive_recompute(spark, sf_oracle):
     assert got == want
 
 
-def test_save_load_merges_roundtrip(spark, tmp_path):
-    merges = B.train_bpe(_toy_corpus(spark), num_merges=5)
-    B.save_merges(spark, merges, str(tmp_path / "model"))
-    assert B.load_merges(spark, str(tmp_path / "model")) == merges
-
-
 def test_bpe_shards_tokenizer_true_budgets(spark, sf_oracle, tmp_path):
     """prepare_training_shards(bpe_merges=...) packs and accounts in
     trained-subword tokens: the manifest token totals equal the BPE
@@ -158,13 +150,15 @@ def test_bpe_shards_tokenizer_true_budgets(spark, sf_oracle, tmp_path):
 
 
 def test_bpe_counts_feed_sequence_packing(spark):
-    """bpe_token_counts composes with pack_documents(count_col=...) —
+    """BPE counts compose with pack_documents(count_col=...) —
     tokenizer-true packing, token-conserving."""
     from mapreduce_framework_for_mergesort_spark.operators import sampling
 
     docs = _toy_corpus(spark)
     merges = B.train_bpe(docs, num_merges=4)
-    counted = docs.join(B.bpe_token_counts(docs, merges), "doc_id")
+    counted = docs.withColumn(
+        "n_bpe_tokens", B.bpe_count_udf(merges)(F.col("text"))
+    )
     packed = sampling.pack_documents(
         counted, budget=4, count_col="n_bpe_tokens"
     )

@@ -381,74 +381,11 @@ def test_extract_links_rules():
     ]
 
 
-def _link_records(spark):
-    import pandas as pd  # noqa: F401
-    from mapreduce_framework_for_mergesort_spark.sources import warc as W
-
-    def rec(idx, uri, payload):
-        return ("f.warc.gz", idx, idx, "response", f"<urn:{idx}>", uri,
-                W.WARC_FIXED_DATE, "application/http", len(payload),
-                payload)
-
-    page_a = (
-        b"<html><body>"
-        b'<a href="http://b.ex.com/1">x</a>'
-        b'<a href="https://c.org/2">y</a>'
-        b'<a href="/self">self</a></body></html>'
-    )
-    page_b = b'<html><body><a href="http://c.org/3">z</a></body></html>'
-    rows = [
-        rec(0, "http://a.ex.com/p0",
-            H.synthesize_http_response(page_a)),
-        rec(1, "http://b.ex.com/p1",
-            H.synthesize_http_response(page_b, chunked=True)),
-        rec(2, "http://dead.net/р404",
-            H.synthesize_http_response(b"<a href='http://x.com'>", status=404)),
-        rec(3, "http://img.net/i",
-            H.synthesize_http_response(b"\xff\xd8", content_type="image/jpeg")),
-        rec(4, "http://br.net/b",
-            H.synthesize_http_response(b"zz", content_encoding="br")),
-    ]
-    return spark.createDataFrame(rows, W.WARC_RECORD_SCHEMA)
-
-
-def test_extract_page_links_distributed(spark):
-    got = sorted(
-        (r["url"], r["link"])
-        for r in H.extract_page_links(_link_records(spark)).collect()
-    )
-    # non-200 / binary mime / unsupported encoding contribute ZERO
-    # edges and do not kill the pass; relative /self resolves
-    assert got == [
-        ("http://a.ex.com/p0", "http://a.ex.com/self"),
-        ("http://a.ex.com/p0", "http://b.ex.com/1"),
-        ("http://a.ex.com/p0", "https://c.org/2"),
-        ("http://b.ex.com/p1", "http://c.org/3"),
-    ]
-
-
-def test_domain_link_graph_and_pagerank(spark):
+def test_pagerank_matches_power_iteration(spark):
+    """Weighted PageRank over a site-grain edge table equals an
+    independent pure-Python power iteration."""
     from mapreduce_framework_for_mergesort_spark.operators import urls as U
 
-    g = U.domain_link_graph(H.extract_page_links(_link_records(spark)))
-    edges = {
-        (r["src_domain"], r["dst_domain"]): r["weight"]
-        for r in g.collect()
-    }
-    # a.ex.com -> b.ex.com and -> c.org; b -> c; the a->a self edge
-    # (page /self) dropped; domain grain folds hosts to ex.com
-    assert edges == {("ex.com", "c.org"): 2}
-    # keep_self retains the intra-site edges
-    g2 = U.domain_link_graph(
-        H.extract_page_links(_link_records(spark)), keep_self=True
-    )
-    edges2 = {
-        (r["src_domain"], r["dst_domain"]): r["weight"]
-        for r in g2.collect()
-    }
-    assert edges2 == {("ex.com", "c.org"): 2, ("ex.com", "ex.com"): 2}
-
-    # pagerank vs an independent pure-Python power iteration
     raw = [("a", "b", 2), ("a", "c", 1), ("b", "c", 1), ("c", "a", 1)]
     df = spark.createDataFrame(
         raw, "src_domain string, dst_domain string, weight long"
@@ -548,23 +485,27 @@ def test_extract_canonical_and_collapse(spark, tmp_path):
         '<script>var x = \'<link rel="canonical" href="/t">\';</script>'
     ) is None
 
-    def page(body: bytes) -> bytes:
-        return H.synthesize_http_response(body)
-
+    pages = [
+        ("<a>", "http://ex.com/print/1",
+         '<link rel="canonical" href="http://ex.com/article/1">'
+         "<p>print view</p>"),
+        ("<b>", "http://ex.com/article/1", "<p>the article itself</p>"),
+        ("<c>", "http://ex.com/other", "<p>unrelated</p>"),
+    ]
     rows = [
-        ("f", 0, 0, "response", "<a>", "http://ex.com/print/1",
-         W.WARC_FIXED_DATE, "application/http", 0,
-         page(b'<link rel="canonical" href="http://ex.com/article/1">'
-              b"<p>print view</p>")),
-        ("f", 1, 1, "response", "<b>", "http://ex.com/article/1",
-         W.WARC_FIXED_DATE, "application/http", 0,
-         page(b"<p>the article itself</p>")),
-        ("f", 2, 2, "response", "<c>", "http://ex.com/other",
-         W.WARC_FIXED_DATE, "application/http", 0,
-         page(b"<p>unrelated</p>")),
+        ("f", i, i, "response", rid, url, W.WARC_FIXED_DATE,
+         "application/http", 0,
+         H.synthesize_http_response(markup.encode()))
+        for i, (rid, url, markup) in enumerate(pages)
     ]
     records = spark.createDataFrame(rows, W.WARC_RECORD_SCHEMA)
-    canon = H.page_canonicals(records)
+    canon = spark.createDataFrame(
+        [
+            (url, H.extract_canonical(markup, url) or url)
+            for _rid, url, markup in pages
+        ],
+        "url string, canonical_url string",
+    )
     got = {r["url"]: r["canonical_url"] for r in canon.collect()}
     assert got == {
         "http://ex.com/print/1": "http://ex.com/article/1",

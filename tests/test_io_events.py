@@ -199,17 +199,17 @@ def test_load_table_events_concurrent_loads_restore_conf(spark, sf_smoke):
             spark.conf.set(NANOS_KEY, prev)
 
 
-def test_local_input_bytes_directory_and_unmeasurable(tmp_path):
-    """Round-13 advisory fix: the adaptive sizing helpers must see a
+def test_input_bytes_directory_and_unmeasurable(spark, tmp_path):
+    """Round-13 advisory fix: the adaptive sizing gates must see a
     directory-layout table's REAL bytes (a bare getsize reports the
     ~4 KB dirent, which would misclassify every production multi-file
     table as starved), and an unmeasurable path must read as None so
-    the fan-out never fires on inputs the driver cannot measure."""
-    from mapreduce_framework_for_mergesort_spark.io import local_input_bytes
+    no gate fires on inputs the driver cannot measure."""
+    from mapreduce_framework_for_mergesort_spark import sizing
 
     f = tmp_path / "one.parquet"
     f.write_bytes(b"x" * 1000)
-    assert local_input_bytes(str(f)) == 1000
+    assert sizing.input_bytes(str(f), spark) == 1000
 
     d = tmp_path / "table.parquet"
     d.mkdir()
@@ -217,27 +217,26 @@ def test_local_input_bytes_directory_and_unmeasurable(tmp_path):
     (d / "part-1.parquet").write_bytes(b"b" * 400)
     (d / "_SUCCESS").write_bytes(b"")  # marker files excluded
     (d / ".hidden").write_bytes(b"c" * 999)
-    assert local_input_bytes(str(d)) == 1000
+    assert sizing.input_bytes(str(d), spark) == 1000
 
-    assert local_input_bytes(str(tmp_path / "missing.parquet")) is None
-    assert local_input_bytes("s3://bucket/table") is None
+    missing = str(tmp_path / "missing.parquet")
+    assert sizing.input_bytes(missing, spark) is None
+    # no s3 filesystem configured: a listing error, not a crash
+    assert sizing.input_bytes("s3://bucket/table", spark) is None
 
 
-def test_scan_parallelism_unmeasurable_is_never_starved(spark, tmp_path):
-    """A path the driver can't size must report a huge split count so
-    fan_out_starved_scan passes the scan through untouched."""
+def test_scan_parallelism_unmeasurable_is_never_starved(spark):
+    """A frame the driver can't size (no file scan) must report a huge
+    split count so fan_out_starved_scan passes it through untouched."""
     from mapreduce_framework_for_mergesort_spark.io import (
         fan_out_starved_scan,
-        load_table,
         scan_parallelism,
     )
 
-    assert scan_parallelism(str(tmp_path), "orders", spark) >= 1 << 20
-
-    # fan_out over an unmeasurable dir is the identity on the plan
-    df = load_table(spark, "/root/testdata/sf0.001", "orders")
-    out = fan_out_starved_scan(df, str(tmp_path), "orders")
-    assert out is df
+    df = spark.createDataFrame([(1,), (2,)], "o_orderkey: bigint")
+    assert scan_parallelism(df) >= 1 << 20
+    # fan_out over an unmeasurable frame is the identity on the plan
+    assert fan_out_starved_scan(df) is df
 
 
 def test_stream_state_partitions_unmeasurable_falls_back(spark, tmp_path):

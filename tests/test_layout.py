@@ -159,31 +159,35 @@ def test_compact_parquet(spark, sf_oracle, tmp_path):
 
 
 def test_input_bytes_and_adaptive_materialization(spark, sf_oracle):
-    """``input_bytes`` reads the scan's file sizes from driver-side
-    metadata (exactly the on-disk sum); ``materialize_if_large``
-    branches on it — under the threshold the plan is returned as-is
-    (same logical plan object semantics: still a projection over the
-    scan), over it the result is a materialized (lineage-cut) frame.
-    In-memory frames have no scan and must stay unmaterialized
-    (None-means-unknown contract)."""
+    """``sizing.input_bytes`` reads the scan's file sizes from
+    driver-side metadata (exactly the on-disk sum);
+    ``materialize_if_large`` branches on ``sizing.reaches`` — under
+    the threshold the plan is returned as-is (same logical plan object
+    semantics: still a projection over the scan), at or over it the
+    result is a materialized (lineage-cut) frame.  In-memory frames
+    have no scan and must stay unmaterialized (None-means-unknown
+    contract)."""
+    from mapreduce_framework_for_mergesort_spark import sizing
     from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        input_bytes,
         materialize_if_large,
     )
 
     docs = load_table(spark, sf_oracle, "documents")
     want = os.path.getsize(os.path.join(sf_oracle, "documents.parquet"))
-    assert input_bytes(docs) == want
+    assert sizing.input_bytes(docs) == want
+    assert sizing.reaches(docs, want) and not sizing.reaches(docs, want + 1)
 
     proj = docs.select("doc_id")
     small = materialize_if_large(proj, docs, threshold_bytes=want + 1)
     assert small is proj  # under threshold: untouched
-    big = materialize_if_large(proj, docs, threshold_bytes=want - 1)
-    assert big is not proj
-    assert big.count() == docs.count()
-    # lineage cut: the materialized plan no longer scans the parquet
-    assert big.inputFiles() == []
+    for threshold in (want, want - 1):  # exactly at, and over
+        big = materialize_if_large(proj, docs, threshold_bytes=threshold)
+        assert big is not proj
+        assert big.count() == docs.count()
+        # lineage cut: the materialized plan no longer scans the parquet
+        assert big.inputFiles() == []
 
     mem = spark.createDataFrame([(1,)], "doc_id: bigint")
-    assert input_bytes(mem) is None
+    assert sizing.input_bytes(mem) is None
+    assert not sizing.reaches(mem, 0)
     assert materialize_if_large(mem, mem, threshold_bytes=0) is mem

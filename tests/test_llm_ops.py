@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 from mapreduce_framework_for_mergesort_spark.operators import similarity as S
@@ -2863,7 +2864,9 @@ def test_prepare_training_shards_with_mixture(spark, sf_oracle, tmp_path):
 @pytest.mark.parametrize(
     "strip_threshold", [0, 1 << 62], ids=["kernel", "codegen"]
 )
-def test_curation_strip_spans_rewrites(spark, monkeypatch, strip_threshold):
+def test_curation_strip_spans_rewrites(
+    spark, monkeypatch, tmp_path, strip_threshold
+):
     """strip_spans=True de-boilerplates survivors instead of dropping
     them: the repeated block's interior is gone from later copies, an
     all-boilerplate doc strips to empty and vanishes, and the
@@ -2871,7 +2874,9 @@ def test_curation_strip_spans_rewrites(spark, monkeypatch, strip_threshold):
     rebuild's input-bytes gate."""
     from mapreduce_framework_for_mergesort_spark import pipelines
 
-    monkeypatch.setattr(D, "STRIP_ARROW_THRESHOLD_BYTES", strip_threshold)
+    monkeypatch.setattr(
+        sizing, "STRIP_ARROW_THRESHOLD_BYTES", strip_threshold
+    )
 
     block = " ".join(f"x{i}" for i in range(20))
     rows = [
@@ -2883,7 +2888,11 @@ def test_curation_strip_spans_rewrites(spark, monkeypatch, strip_threshold):
         (4, "this is a fully original document and the words that it "
             "carries pass the filter easily"),
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    # a file scan, so the gate has bytes to measure (an in-memory frame
+    # is unmeasurable and always counts as below the threshold)
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(rows, ["doc_id", "text"]).write.parquet(path)
+    docs = spark.read.parquet(path)
     out = {
         r["doc_id"]: r["text"]
         for r in pipelines.curate_documents(
@@ -4206,18 +4215,14 @@ def test_text_keys_oracle_on_replica_and_edge_corpus(
     for t in ["region", "nation", "customer", "supplier", "part",
               "orders", "lineitem", "events", "embeddings"]:
         os.symlink(f"{sf_oracle}/{t}.parquet", f"{out}/{t}.parquet")
-    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        input_bytes,
-    )
-
     # the first pass must take the per-document bm25 side
-    assert (
-        input_bytes(load_table(spark, out, "documents"))
-        < T.BM25_COLLAPSE_THRESHOLD_BYTES
+    assert not sizing.reaches(
+        load_table(spark, out, "documents"),
+        sizing.BM25_COLLAPSE_THRESHOLD_BYTES,
     )
     for key in ["q_text_doc_profile", "q_lang_id", "q_tfidf_top_terms"]:
         compare_query(spark, key, out, QUERIES, ORACLE)
-    monkeypatch.setattr(T, "BM25_COLLAPSE_THRESHOLD_BYTES", 0)
+    monkeypatch.setattr(sizing, "BM25_COLLAPSE_THRESHOLD_BYTES", 0)
     compare_query(spark, "q_tfidf_top_terms", out, QUERIES, ORACLE)
 
 
@@ -4345,7 +4350,7 @@ def test_bm25_strategies_equal(spark, sf_oracle, monkeypatch):
     )
 
     def topk(threshold: int):
-        monkeypatch.setattr(T, "BM25_COLLAPSE_THRESHOLD_BYTES", threshold)
+        monkeypatch.setattr(sizing, "BM25_COLLAPSE_THRESHOLD_BYTES", threshold)
         return sorted(tuple(r) for r in T.bm25_topk(docs).collect())
 
     a = topk(0)
@@ -4378,7 +4383,7 @@ def test_strip_rebuild_strategies_equal(spark, sf_oracle, monkeypatch):
     key = lambda r: tuple((x is None, x) for x in r)  # noqa: E731
 
     def strip(threshold: int, kernel: bool):
-        monkeypatch.setattr(D, "STRIP_ARROW_THRESHOLD_BYTES", threshold)
+        monkeypatch.setattr(sizing, "STRIP_ARROW_THRESHOLD_BYTES", threshold)
         out = D.strip_dup_spans(docs, flags=flags).select(cols)
         assert _strip_kernel_in_plan(out) is kernel
         return sorted((tuple(r) for r in out.collect()), key=key)

@@ -1,18 +1,32 @@
 """Property test: ``dedup.cluster_pairs`` equals union-find on random
 graphs.
 
-The Spark implementation is iterative hash-min label propagation; the
-reference is a 20-line driver-side disjoint-set union.  Any divergence
-(missed transitive closure, premature convergence, singleton handling)
-shows up as a label mismatch on some random graph.
+The operator routes small candidate graphs to a driver union-find and
+larger ones to hash-min label propagation, falling back to star
+contraction; the reference is a 20-line driver-side disjoint-set
+union.  Tests force the distributed routes by lowering
+``sizing.DRIVER_UF_MAX_EDGES`` (and, for star, ``dedup.HASH_MIN_ROUNDS``)
+to 0.  Any divergence (missed transitive closure, premature
+convergence, singleton handling) shows up as a label mismatch on some
+random graph.
 """
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
+
+
+def _force_distributed(mp, star: bool = False) -> None:
+    """Route ``cluster_pairs`` past the driver union-find, and past
+    hash-min too when ``star``."""
+    mp.setattr(sizing, "DRIVER_UF_MAX_EDGES", 0)
+    if star:
+        mp.setattr(D, "HASH_MIN_ROUNDS", 0)
 
 
 def _union_find(n_nodes: int, edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -90,13 +104,19 @@ def test_star_contraction_matches_union_find(spark, n_nodes, edges):
         pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     else:
         pairs = spark.createDataFrame([], "doc_a: long, doc_b: long")
-    got = {
-        r["node"]: r["cluster"]
-        for r in D.cluster_pairs(
-            pairs, nodes=nodes, algorithm="star"
-        ).collect()
-    }
+    stats: dict = {}
+    with pytest.MonkeyPatch.context() as mp:
+        _force_distributed(mp, star=True)
+        got = {
+            r["node"]: r["cluster"]
+            for r in D.cluster_pairs(
+                pairs, nodes=nodes, stats=stats
+            ).collect()
+        }
     assert got == _union_find(n_nodes, edges)
+    # a graph of self-loops alone has no edges, which fit any ceiling
+    has_edges = any(u != v for u, v in edges)
+    assert stats["algorithm"] == ("star" if has_edges else "driver_uf")
 
 
 def _path_pairs(spark, n: int, shuffled_ids: list[int]):
@@ -105,7 +125,7 @@ def _path_pairs(spark, n: int, shuffled_ids: list[int]):
     return spark.createDataFrame(rows, ["doc_a", "doc_b"])
 
 
-def test_star_contraction_logarithmic_on_long_path(spark):
+def test_star_contraction_logarithmic_on_long_path(spark, monkeypatch):
     """The round-3 failure mode: a diameter-400 path exhausts hash-min's
     budget (it needs ~400 rounds) but star contraction must converge in
     O(log d) — the VERDICT acceptance bound is ≤ ~7 rounds for
@@ -114,50 +134,39 @@ def test_star_contraction_logarithmic_on_long_path(spark):
     n = 401
     ids = list(range(n))[::-1]  # node 0 at the END of the path
     pairs = _path_pairs(spark, n, ids)
+    _force_distributed(monkeypatch, star=True)
     stats: dict = {}
     labels = {
         r["node"]: r["cluster"]
-        for r in D.cluster_pairs(
-            pairs, algorithm="star", stats=stats
-        ).collect()
+        for r in D.cluster_pairs(pairs, stats=stats).collect()
     }
     assert labels == {i: 0 for i in range(n)}
     assert stats["algorithm"] == "star"
     assert stats["rounds"] <= 10, stats
 
 
-def test_hash_min_raises_loudly_but_auto_falls_back(spark):
-    """Explicit hash_min on a long path must still fail LOUDLY (a
-    non-fixpoint result would silently under-dedup); the default auto
-    policy must instead fall back to star and return the exact answer."""
-    import pytest
-
+def test_long_path_falls_back_from_hash_min_to_star(spark, monkeypatch):
+    """A long path exhausts hash-min's ``HASH_MIN_ROUNDS`` budget; the
+    route must then fall back to star and return the exact answer,
+    never a non-fixpoint (which would silently under-dedup)."""
     n = 101
     pairs = _path_pairs(spark, n, list(range(n))[::-1])
-    with pytest.raises(RuntimeError, match="did not converge"):
-        D.cluster_pairs(pairs, algorithm="hash_min", max_iters=10).collect()
     stats: dict = {}
     labels = {
         r["node"]: r["cluster"]
-        for r in D.cluster_pairs(pairs, max_iters=10, stats=stats).collect()
+        for r in D.cluster_pairs(pairs, stats=stats).collect()
     }
     assert labels == {i: 0 for i in range(n)}
     # round 13: a graph this small takes the driver union-find fast path
     assert stats["algorithm"] == "driver_uf"
     # the distributed star fallback must still engage when the graph
     # exceeds the driver ceiling — force the routing past the fast path
-    prev = D.DRIVER_UF_MAX_EDGES
-    D.DRIVER_UF_MAX_EDGES = 0
-    try:
-        stats2: dict = {}
-        labels2 = {
-            r["node"]: r["cluster"]
-            for r in D.cluster_pairs(
-                pairs, max_iters=10, stats=stats2
-            ).collect()
-        }
-    finally:
-        D.DRIVER_UF_MAX_EDGES = prev
+    _force_distributed(monkeypatch)
+    stats2: dict = {}
+    labels2 = {
+        r["node"]: r["cluster"]
+        for r in D.cluster_pairs(pairs, stats=stats2).collect()
+    }
     assert labels2 == labels
     assert stats2["algorithm"] == "star"  # the fallback produced the answer
 
@@ -174,19 +183,13 @@ def test_driver_uf_matches_distributed_on_mixed_graph(spark):
     pairs = spark.createDataFrame(edges, "doc_a bigint, doc_b bigint")
     nodes = spark.range(0, 60).withColumnRenamed("id", "doc_id")
     outs = {}
-    for alg in ("auto", "hash_min", "star"):
+    for route in ("driver_uf", "hash_min", "star"):
         st: dict = {}
-        outs[alg] = (
-            sorted(
-                map(
-                    tuple,
-                    D.cluster_pairs(
-                        pairs, nodes=nodes, algorithm=alg, stats=st
-                    ).collect(),
-                )
-            ),
-            st["algorithm"],
-        )
-    assert outs["auto"][1] == "driver_uf"
-    assert outs["auto"][0] == outs["hash_min"][0] == outs["star"][0]
-    assert len(outs["auto"][0]) == 60  # every node labeled, singletons too
+        with pytest.MonkeyPatch.context() as mp:
+            if route != "driver_uf":
+                _force_distributed(mp, star=route == "star")
+            rows = D.cluster_pairs(pairs, nodes=nodes, stats=st).collect()
+        assert st["algorithm"] == route
+        outs[route] = sorted(map(tuple, rows))
+    assert outs["driver_uf"] == outs["hash_min"] == outs["star"]
+    assert len(outs["driver_uf"]) == 60  # every node labeled, singletons too

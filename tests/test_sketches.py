@@ -344,66 +344,3 @@ def test_dyadic_cms_parity_rank_bounds_and_merge(spark, sf_oracle):
     ):
         with pytest.raises(ValueError, match=r"\[1, 31\]"):
             fn()
-
-
-def test_dyadic_sketch_stream_equals_batch_and_is_idempotent(
-    spark, sf_oracle, tmp_path
-):
-    """The streaming dyadic sketch drains to exactly the batch sketch
-    of the concatenated stream; a replayed epoch changes nothing; the
-    driver-side quantile answers agree with the batch path."""
-    from pyspark.sql import functions as F
-
-    from mapreduce_framework_for_mergesort_spark.io import load_table
-    from mapreduce_framework_for_mergesort_spark.operators import (
-        sketches as SK,
-    )
-    from mapreduce_framework_for_mergesort_spark.streaming import (
-        sketch as STK,
-    )
-
-    LV = 6
-    li = load_table(spark, sf_oracle, "lineitem")
-    vals = li.select(
-        F.col("l_quantity").cast("long").alias("v"), "l_orderkey"
-    )
-    d = str(tmp_path / "dy_in")
-    a = vals.where("l_orderkey % 2 = 0").select("v")
-    b = vals.where("l_orderkey % 2 = 1").select("v")
-    a.coalesce(1).write.mode("overwrite").parquet(d)
-    b.coalesce(1).write.mode("append").parquet(d)
-    stream = (
-        spark.readStream.schema(spark.read.parquet(d).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    skp = str(tmp_path / "dy_sk")
-    q = STK.dyadic_sketch_stream(
-        stream, skp, str(tmp_path / "dy_ck"), key="v", levels=LV
-    )
-    q.awaitTermination()
-
-    def cells(df):
-        return {
-            (r["lvl"], r["i"], r["bucket"]): r["cnt"] for r in df.collect()
-        }
-
-    whole = cells(SK.dyadic_cms_sketch(vals.select("v"), "v", levels=LV))
-    merged = STK.read_dyadic_sketch(spark, skp)
-    assert cells(merged) == whole and len(whole) > 0
-
-    # replay epoch 0 with whichever half it actually processed
-    e0 = cells(spark.read.parquet(skp).where("epoch = 0").drop("epoch"))
-    replay = (
-        a if e0 == cells(SK.dyadic_cms_sketch(a, "v", levels=LV)) else b
-    )
-    STK.update_dyadic_sketch(replay, 0, skp, key="v", levels=LV)
-    assert cells(STK.read_dyadic_sketch(spark, skp)) == whole
-
-    got = SK.dyadic_quantiles(merged.collect(), [0.5], levels=LV)
-    want = SK.dyadic_quantiles(
-        SK.dyadic_cms_sketch(vals.select("v"), "v", levels=LV).collect(),
-        [0.5],
-        levels=LV,
-    )
-    assert got == want

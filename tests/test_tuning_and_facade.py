@@ -1,5 +1,5 @@
-"""Sizing advisor, engine facade stats, SQL view registration, and
-streaming checkpoint (exactly-once restart) semantics."""
+"""Engine facade stats and chunking, and streaming checkpoint
+(exactly-once restart) semantics."""
 
 from __future__ import annotations
 
@@ -9,43 +9,13 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from mapreduce_framework_for_mergesort_spark import plans, tuning
+from mapreduce_framework_for_mergesort_spark import plans
 from mapreduce_framework_for_mergesort_spark.engine import MergeSortEngine
 from mapreduce_framework_for_mergesort_spark.io import (
-    register_views,
     scoped_session_confs,
     table_path,
 )
 from mapreduce_framework_for_mergesort_spark.operators import ingest
-
-
-def test_scan_split_sizing_scales():
-    # tiny input on the local profile: shrink splits to keep cores busy
-    small = tuning.scan_split_bytes(64 * tuning.MiB, tuning.LOCAL32)
-    assert 4 * tuning.MiB <= small < 128 * tuning.MiB
-    # 100 TB on a 1000x4 cluster: default 128 MiB splits are fine
-    big = tuning.scan_split_bytes(100 * 1024 * tuning.GiB, tuning.CLUSTER_1000X4)
-    assert big == 128 * tuning.MiB
-
-
-def test_shuffle_partition_sizing_scales():
-    p = tuning.CLUSTER_1000X4
-    n_small = tuning.shuffle_partitions(10 * tuning.GiB, p)
-    assert n_small == 8000  # 2x cores floor, rounded
-    # 100 TB shuffle: memory budget dominates, each partition must fit
-    n_big = tuning.shuffle_partitions(100 * 1024 * tuning.GiB, p)
-    budget = int(p.executor_mem_per_core * p.shuffle_mem_fraction)
-    assert n_big * budget >= 100 * 1024 * tuning.GiB
-    assert n_big >= n_small
-
-
-def test_advise_returns_conf_dict():
-    conf = tuning.advise(1 * tuning.GiB, tuning.LOCAL32)
-    assert set(conf) == {
-        "spark.sql.files.maxPartitionBytes",
-        "spark.sql.shuffle.partitions",
-    }
-    assert all(v.isdigit() for v in conf.values())
 
 
 def test_sort_file_with_stats(spark, tmp_path):
@@ -59,14 +29,6 @@ def test_sort_file_with_stats(spark, tmp_path):
     assert toks == sorted(vals)
     assert stats.num_jobs >= 1 and stats.num_tasks >= 1
     assert stats.num_failed_tasks == 0
-
-
-def test_register_views_enables_adhoc_sql(spark, sf_smoke):
-    register_views(spark, sf_smoke)
-    got = spark.sql(
-        "SELECT COUNT(*) AS n FROM orders JOIN customer ON o_custkey = c_custkey"
-    ).collect()[0]["n"]
-    assert got > 0
 
 
 def test_stream_checkpoint_exactly_once_across_restart(spark, sf_smoke, tmp_path):

@@ -502,15 +502,6 @@ def test_psl_grain_feeds_domain_policy(spark):
         .collect()
     )
     assert kept == [1, 3, 4, 5]  # one per SITE, not one for all of github.io
-    # the domain link graph separates the sites too
-    links = spark.createDataFrame(
-        [("https://alice.github.io/a", "https://bob.github.io/")],
-        "url string, link string",
-    )
-    edges = U.domain_link_graph(links).collect()
-    assert [(e["src_domain"], e["dst_domain"]) for e in edges] == [
-        ("alice.github.io", "bob.github.io")
-    ]
 
 
 # ---------------------------------------------------------------------------
