@@ -3,7 +3,7 @@
 callables remain for tests.
 
 Each query serializes a driver table into the target format under a
-deterministic /tmp workdir, reads it back through ``sources/formats.py``
+deterministic temp workdir, reads it back through ``sources/formats.py``
 (explicit schema, PERMISSIVE corrupt policy), and reduces to an aggregate
 the DuckDB oracle computes from the *original* parquet — so the check
 proves lossless round-tripping, not just that a read succeeded.
@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,8 +34,12 @@ from mapreduce_framework_for_mergesort_spark.sources import formats
 
 
 def _workdir(sf_dir: str, tag: str) -> str:
+    """Per-input, per-branch scratch directory under the process temp
+    dir (``tempfile.gettempdir()``, so ``TMPDIR`` is honoured)."""
     digest = hashlib.sha1(sf_dir.encode()).hexdigest()[:10]
-    return os.path.join("/tmp", "msfs_sources", f"{tag}_{digest}")
+    return os.path.join(
+        tempfile.gettempdir(), "msfs_sources", f"{tag}_{digest}"
+    )
 
 
 CUSTOMER_SCHEMA = StructType(
@@ -388,7 +393,7 @@ def q_source_roundtrips(spark: SparkSession, sf_dir: str) -> DataFrame:
     varying transfer/content encodings, extracted back to visible text
     (sources/html.py) — exact per document via md5-of-extracted-text
     group keys."""
-    # The seven branches are INDEPENDENT jobs (distinct /tmp workdirs,
+    # The seven branches are INDEPENDENT jobs (distinct temp workdirs,
     # distinct source tables), and each branch's sink write runs
     # eagerly at construction time — sequentially they cost the SUM of
     # seven write jobs while most cores idle through every job's tail.

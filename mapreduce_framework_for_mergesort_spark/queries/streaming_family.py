@@ -221,11 +221,9 @@ def q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     state bounded by watermark + interval.  Drained with availableNow,
     the result equals the batch self-join the oracle runs."""
     with _sized_state(spark, sf_dir):
-        probes = stream_events(spark, sf_dir).where(
-            F.col("event_id") % 50 == 0
-        )
-        others = stream_events(spark, sf_dir)
-        joined = interval_join_events(probes, others, "6 hours", "1 day")
+        events = stream_events(spark, sf_dir)
+        probes = events.where(F.col("event_id") % 50 == 0)
+        joined = interval_join_events(probes, events, "6 hours", "1 day")
         return run_to_memory(
             joined,
             f"q_stream_interval_join_{next(_seq)}",

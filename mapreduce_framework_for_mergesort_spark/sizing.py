@@ -49,7 +49,11 @@ BM25_COLLAPSE_THRESHOLD_BYTES = 4 << 20
 #: holds ~15-20x the parquet bytes as in-memory state rows (11.7 MB
 #: input -> ~200 MB state at x10), so ~2 MiB of input per partition is
 #: ~32 MiB of state per store: the size where a store does real work
-#: instead of paying fixed load/commit cost on near-empty maps.
+#: instead of paying fixed load/commit cost on near-empty maps.  That
+#: fixed cost was measured when local checkpoints forked a ``readlink``
+#: per file (Spark's FileContext manager); drains now use the
+#: FileSystem manager, where 4 partitions still beat 1 and 2 on the
+#: benchmark's stream input.
 STREAM_STATE_BYTES_PER_PARTITION = 2 << 20
 
 #: Edge-count ceiling for ``dedup.cluster_pairs``' driver union-find:

@@ -9,11 +9,15 @@ because it sees the same (ts, user_id, event_type, value, props) schema.
 
 from __future__ import annotations
 
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.io import (
     normalize_events_ts,
+    scoped_session_confs,
     set_events_read_confs,
     table_path,
 )
@@ -42,6 +46,12 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     where ≥2 MiB input/partition means stores are no longer fixed-cost
     bound.  Parameterised, not local-tuned: follows data and cores,
     never a constant.
+    The figures above were measured while local checkpoints went
+    through Spark's FileContext manager, whose forked ``readlink`` per
+    file lookup inflated each store's fixed cost (see ``_drain``).
+    Re-measured on the FileSystem manager over 0.67 MB of events (the
+    benchmark's 50,000-event input; 5-key total, min of 2 passes):
+    11.5 s at 1 partition, 6.2 s at 2, 5.8 s at 4 — the clamp stands.
     The bytes are ``sizing.input_bytes`` of the events path; an
     unmeasurable path (missing, or an object store with no filesystem
     configured) falls back to 2×cores — at that scale the input is
@@ -88,6 +98,59 @@ def stream_events(
     return normalize_events_ts(df)
 
 
+_CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def _checkpoint_is_local(spark: SparkSession, checkpoint: str | None) -> bool:
+    """Whether a drain's checkpoint lands on the ``file:`` filesystem.
+
+    ``checkpoint`` is the drain's location; None means the root in
+    ``spark.sql.streaming.checkpointLocation`` or, when that is unset,
+    Spark's local temp dir.  Spark qualifies a path without a scheme
+    against ``fs.defaultFS``, and so does this check."""
+    root = checkpoint or spark.conf.get(
+        "spark.sql.streaming.checkpointLocation", None
+    )
+    scheme = urlparse(root or "").scheme
+    if not scheme:
+        default_fs = spark.sparkContext._jsc.hadoopConfiguration().get(
+            "fs.defaultFS", "file:///"
+        )
+        scheme = urlparse(default_fs).scheme
+    return scheme == "file"
+
+
+def _drain(
+    writer: DataStreamWriter, spark: SparkSession, checkpoint: str | None
+) -> StreamingQuery:
+    """Start ``writer`` with ``availableNow`` and wait for it to finish.
+
+    A local checkpoint is written through Spark's FileSystem-based
+    checkpoint manager for the drain.  Spark's default for ``file:`` is
+    the FileContext manager; without the native Hadoop library, Hadoop's
+    local FileContext forks a ``readlink`` process for every link-status
+    lookup, and state-store commits and delta-file creates wait on them.
+    One pass of the 5 ``q_stream_*`` keys over 50,000 events forked
+    1,405 processes before and forks 349 now (the ``chmod`` per created
+    file remains).  A local rename is atomic, so the temp-file-then-
+    rename commit keeps its guarantee, and Spark's checksum manager
+    still wraps the base manager.  Other schemes keep the default
+    manager.  The setting is scoped: the query ends inside the block."""
+    confs = (
+        ((_CHECKPOINT_MANAGER_KEY, _FS_CHECKPOINT_MANAGER),)
+        if _checkpoint_is_local(spark, checkpoint)
+        else ()
+    )
+    with scoped_session_confs(spark, confs):
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    return q
+
+
 def run_to_parquet(
     stream_df: DataFrame,
     path: str,
@@ -103,15 +166,14 @@ def run_to_parquet(
     pipeline uses for stream → table materialization; readers see only
     manifest-committed files, so a mid-write crash is invisible.
     """
-    q = (
+    _drain(
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        stream_df.sparkSession,
+        checkpoint,
     )
-    q.awaitTermination()
 
 
 def run_to_memory(
@@ -136,14 +198,13 @@ def run_to_memory_with_progress(
     (``stateOperators[].numRowsTotal`` is how a test proves an
     eviction policy actually bounds state).  ``run_to_memory`` delegates
     here so the drain mechanics exist exactly once."""
-    q = (
+    q = _drain(
         stream_df.writeStream.format("memory")
         .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        stream_df.sparkSession,
+        None,
     )
-    q.awaitTermination()
     prog = list(q.recentProgress)
     # Expose the LAST microbatch's executed physical plan for the
     # PLANS.md audit (bench.py --plans): a drained streaming query's

@@ -140,15 +140,23 @@ def _to_cents_memo(v: float) -> int:
     return c
 
 
+def _fold_columns() -> list:
+    """The only columns the stateful kernels read: the key, the event
+    time as epoch microseconds and the value.  Every other event column
+    would be converted Arrow → pandas per key and then ignored."""
+    return ["user_id", F.unix_micros("ts").alias("ts_us"), "value"]
+
+
 def _fold_batch(rows: list, pdf: pd.DataFrame, hwm: int) -> int:
     """Append one micro-batch's (t, t, 1, cents) point sessions to
     ``rows`` and return the count of ordering-contract violations
     (events at/below the emitted high-water mark) — the vectorized
     spelling of the round-12 per-row loop (round 13: ``astype`` +
     numpy comparison + memoized cents; ~4× less Python per event,
-    value-identical by the _to_cents purity).  Timestamps must be
-    positive: ``hwm`` 0 stands for "nothing emitted yet"."""
-    us = pdf["ts"].astype("int64").to_numpy() // 1000
+    value-identical by the _to_cents purity).  Event times arrive as
+    ``ts_us`` epoch microseconds and must be positive: ``hwm`` 0 stands
+    for "nothing emitted yet"."""
+    us = pdf["ts_us"].to_numpy()
     if len(us) and us.min() <= 0:
         raise ValueError(
             "sessionizer requires positive event timestamps; got "
@@ -237,6 +245,7 @@ def sessionize_stream(
 
     return (
         events.withWatermark("ts", watermark)
+        .select(*_fold_columns())
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
@@ -253,17 +262,18 @@ def _emit(user_id: int, closed: list[tuple[int, int, int, int]]):
         import numpy as np
 
         n = len(closed)
-        # columnar construction (round 13): int64 ns viewed as
-        # datetime64[ns] == pd.to_datetime over the same ints, and the
-        # /100.0 division is the identical IEEE op per element — only
-        # the construction cost changes, never a value.
-        starts = np.fromiter((s[0] for s in closed), "int64", n) * 1000
-        ends = np.fromiter((s[1] for s in closed), "int64", n) * 1000
+        # columnar construction (round 13): the /100.0 division is the
+        # identical IEEE op per element — only the construction cost
+        # changes, never a value.  Session bounds are epoch micros
+        # (``ts_us``), so they leave as UTC instants, which Spark reads
+        # the same under any session timezone.
+        starts = np.fromiter((s[0] for s in closed), "int64", n)
+        ends = np.fromiter((s[1] for s in closed), "int64", n)
         yield pd.DataFrame(
             {
                 "user_id": np.full(n, user_id, "int64"),
-                "session_start": starts.view("datetime64[ns]"),
-                "session_end": ends.view("datetime64[ns]"),
+                "session_start": pd.to_datetime(starts, unit="us", utc=True),
+                "session_end": pd.to_datetime(ends, unit="us", utc=True),
                 "n_events": np.fromiter((s[2] for s in closed), "int64", n),
                 # cents → double is the same decimal(18,2)→double cast the
                 # batch operator performs; exact at 2 decimals.
@@ -338,6 +348,8 @@ def sessionize_stream_watermarked(
 
     return (
         events.withWatermark("ts", watermark)
+        # EventTimeTimeout needs the watermarked column itself.
+        .select(*_fold_columns(), "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,

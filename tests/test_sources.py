@@ -68,3 +68,19 @@ def test_jsonl_corrupt_records_dropped_explicitly(spark, tmp_path):
         (1, "alpha"),
         (3, "gamma"),
     ]
+
+
+def test_source_roundtrips_write_under_temp_dir(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """Every branch's sink lands under ``tempfile.gettempdir()``, so
+    ``TMPDIR`` moves the key's scratch files."""
+    import hashlib
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert QUERIES["q_source_roundtrips"](spark, sf_smoke).count() > 0
+    digest = hashlib.sha1(sf_smoke.encode()).hexdigest()[:10]
+    written = sorted(p.name for p in (tmp_path / "msfs_sources").iterdir())
+    assert len(written) == 7
+    assert all(name.endswith(f"_{digest}") for name in written)

@@ -325,3 +325,86 @@ def test_near_dup_stream_band_cap_bounds_fanout(spark, tmp_path):
         near_dup_pairs_stream(mk()), "t_uncap_pairs"
     ).dropDuplicates()
     assert len(full.collect()) == 10  # C(5,2): the uncapped product
+
+
+_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def _tiny_stream(spark, tmp_path):
+    import pandas as pd
+
+    src = tmp_path / "src"
+    src.mkdir(parents=True)
+    pd.DataFrame({"x": [1, 2, 3]}).to_parquet(src / "part.parquet")
+    return spark.readStream.schema("x bigint").parquet(str(src))
+
+
+def test_drains_restore_checkpoint_manager_conf(spark, tmp_path):
+    """Local drains switch the checkpoint manager for the drain only:
+    afterwards the conf is as it was, whether unset or preset."""
+    from mapreduce_framework_for_mergesort_spark.streaming import run_to_parquet
+
+    preset = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    for before in (None, preset):
+        if before is None:
+            spark.conf.unset(_MANAGER_KEY)
+        else:
+            spark.conf.set(_MANAGER_KEY, before)
+        try:
+            tag = "unset" if before is None else "preset"
+            got = run_to_memory(
+                _tiny_stream(spark, tmp_path / f"m_{tag}"),
+                f"t_ckpt_manager_{tag}",
+                output_mode="append",
+            )
+            assert sorted(r.x for r in got.collect()) == [1, 2, 3]
+            assert spark.conf.get(_MANAGER_KEY, None) == before
+            out = str(tmp_path / f"out_{tag}")
+            run_to_parquet(
+                _tiny_stream(spark, tmp_path / f"p_{tag}"),
+                out,
+                str(tmp_path / f"ckpt_{tag}"),
+            )
+            assert sorted(r.x for r in spark.read.parquet(out).collect()) == [
+                1, 2, 3,
+            ]
+            assert spark.conf.get(_MANAGER_KEY, None) == before
+        finally:
+            spark.conf.unset(_MANAGER_KEY)
+
+
+def test_checkpoint_scheme_picks_manager(spark):
+    """Only ``file:`` checkpoints take the FileSystem manager; the
+    scheme of a bare path, or of no path, comes from the session."""
+    from mapreduce_framework_for_mergesort_spark.streaming.sources import (
+        _checkpoint_is_local,
+    )
+
+    assert _checkpoint_is_local(spark, "/tmp/ck")
+    assert _checkpoint_is_local(spark, "file:/tmp/ck")
+    assert _checkpoint_is_local(spark, "file:///tmp/ck")
+    assert not _checkpoint_is_local(spark, "hdfs://nn/ck")
+    assert not _checkpoint_is_local(spark, "s3a://b/ck")
+
+    root_key = "spark.sql.streaming.checkpointLocation"
+    assert spark.conf.get(root_key, None) is None
+    assert _checkpoint_is_local(spark, None)
+    spark.conf.set(root_key, "hdfs://nn/ckroot")
+    try:
+        assert not _checkpoint_is_local(spark, None)
+        assert _checkpoint_is_local(spark, "/tmp/ck")
+    finally:
+        spark.conf.unset(root_key)
+
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    default_fs = hconf.get("fs.defaultFS")
+    hconf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        assert not _checkpoint_is_local(spark, "/tmp/ck")
+        assert not _checkpoint_is_local(spark, None)
+        assert _checkpoint_is_local(spark, "file:/tmp/ck")
+    finally:
+        hconf.set("fs.defaultFS", default_fs)

@@ -281,3 +281,41 @@ def test_interval_join_hot_key_state_is_horizon_bounded(spark, tmp_path):
     bound = int(horizon_days * per_day * (1 + 0.25))  # b side + a side
     assert totals[-1] <= bound, (totals, bound)
     assert totals[-1] < (n_days * per_day) + a_rows, "state ~ stream length"
+
+
+def test_sessionize_output_independent_of_session_timezone(spark, tmp_path):
+    """The kernels fold epoch microseconds and emit UTC instants, so the
+    emitted sessions are the same instants under any session timezone."""
+    from mapreduce_framework_for_mergesort_spark.io import scoped_session_confs
+
+    times = ["2024-01-01 00:00", "2024-01-01 00:10", "2024-01-01 02:00",
+             "2024-01-01 05:00"]
+    pd.DataFrame(
+        {
+            "user_id": [1, 1, 1, 1],
+            "ts": pd.to_datetime(times).tz_localize("UTC").astype(
+                "datetime64[us, UTC]"
+            ),
+            "value": [1.0, 2.0, 3.0, 4.0],
+        }
+    ).to_parquet(tmp_path / "events.parquet")
+    seen = {}
+    for tz in ("UTC", "America/New_York"):
+        with scoped_session_confs(spark, (("spark.sql.session.timeZone", tz),)):
+            got = run_to_memory(
+                sessionize_stream(
+                    _read_stream(spark, str(tmp_path)), gap="30 minutes"
+                ),
+                f"t_sess_tz_{tz.replace('/', '_')}",
+            )
+            seen[tz] = sorted(
+                (r["user_id"], r["session_start"].timestamp(),
+                 r["session_end"].timestamp(), r["n_events"])
+                for r in got.collect()
+            )
+    utc = pd.Timestamp("2024-01-01 00:00", tz="UTC").timestamp()
+    assert seen["UTC"] == [
+        (1, utc, utc + 600, 2),
+        (1, utc + 7200, utc + 7200, 1),
+    ]
+    assert seen["America/New_York"] == seen["UTC"]
