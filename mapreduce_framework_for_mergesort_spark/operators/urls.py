@@ -491,83 +491,6 @@ def per_domain_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def pagerank_domains(
-    edges: DataFrame, n_iters: int = 10, damping: float = 0.85,
-) -> DataFrame:
-    """Weighted PageRank over the domain graph → ``(domain, rank)`` —
-    the standard crawl-quality prior (a page on a well-linked site is
-    worth more crawl/training budget than one on a link farm).  Fixed
-    ``n_iters`` power iterations; deterministic up to float-summation
-    order (ranking-grade, not hash-grade — unlike the oracled keys,
-    which is why this is a library surface, pinned in tests against an
-    independent replica with a tolerance): rank mass moves
-    along out-edges proportionally to weight; dangling domains (no
-    out-edges) leak their mass to the uniform term, the classic
-    simplification (documented — at site grain dangling mass is small
-    and the RANKING it perturbs is what matters, not the exact
-    eigenvector).
-
-    Scale shape: every iteration is one join + one aggregation on the
-    domain-grain graph.  The edge list with per-edge ``__share`` is
-    cached once; the rank vector (one row per domain) is the only
-    thing that changes per iteration.  No driver-side collect."""
-    nodes = (
-        edges.select(F.col("src_domain").alias("domain"))
-        .unionByName(edges.select(F.col("dst_domain").alias("domain")))
-        .distinct()
-    )
-    out_w = edges.groupBy("src_domain").agg(
-        F.sum("weight").alias("__out_w")
-    )
-    shares = (
-        edges.join(out_w, "src_domain")
-        .select(
-            "src_domain",
-            "dst_domain",
-            (F.col("weight") / F.col("__out_w")).alias("__share"),
-        )
-    )
-    shares.cache()
-    nodes.cache()
-    n = nodes.count()  # bounded: domain cardinality
-    if n == 0:
-        shares.unpersist()
-        nodes.unpersist()
-        return nodes.select(
-            "domain", F.lit(0.0).alias("rank")
-        )  # empty graph -> empty ranks, not a ZeroDivision
-    ranks = nodes.select("domain", F.lit(1.0 / n).alias("rank"))
-    for _ in range(n_iters):
-        contrib = (
-            shares.join(
-                ranks, shares["src_domain"] == ranks["domain"]
-            )
-            .select(
-                F.col("dst_domain").alias("domain"),
-                (F.col("rank") * F.col("__share")).alias("c"),
-            )
-            .groupBy("domain")
-            .agg(F.sum("c").alias("c"))
-        )
-        ranks = (
-            nodes.join(contrib, "domain", "left")
-            .select(
-                "domain",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("rank"),
-            )
-        )
-        # keep the lineage bounded: each iteration's plan would nest
-        # the previous one's join tree ten deep otherwise
-        ranks = ranks.localCheckpoint(eager=True)
-    # the final ranks are checkpointed — the cached inputs can go
-    shares.unpersist()
-    nodes.unpersist()
-    return ranks
-
-
 def cap_per_domain(
     df: DataFrame, k: int, url_col: str = "url",
     order_col: str | None = None,

@@ -35,6 +35,14 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # --- shuffle sizing (local; at cluster scale: ~2-3x total cores) ------
     "spark.sql.shuffle.partitions": "32",
+    # --- codegen ----------------------------------------------------------
+    # Spark caches 100 generated classes by default.  One pass of the 5
+    # q_stream_* keys generates ~97, so each warm pass recompiled 28-47
+    # of them (LRU thrash); at 2048 a warm pass compiles 1.  Over all 50
+    # keys at sf0.001 a first round compiles ~990 classes, and a second
+    # round recompiles 1,169 at 100 against 41 at 2048.  A static conf:
+    # it takes effect only when the first session of the JVM starts.
+    "spark.sql.codegen.cache.maxEntries": "2048",
     # --- python <-> jvm ---------------------------------------------------
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # --- determinism / oracle parity --------------------------------------

@@ -204,82 +204,6 @@ class _TextExtractor(HTMLParser):
         return "\n".join(self._lines)
 
 
-class _LinkExtractor(HTMLParser):
-    """Collects ``<a href>`` targets (and ``<link rel=canonical>``)
-    outside skipped subtrees — the out-link half of a crawl page."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self._skip = 0
-        self.hrefs: list[str] = []
-        self.canonicals: list[str] = []
-
-    def handle_starttag(self, tag, attrs):
-        if tag in _SKIP_TAGS:
-            self._skip += 1
-            return
-        if self._skip:
-            return
-        if tag == "a":
-            for k, v in attrs:
-                if k == "href" and v:
-                    self.hrefs.append(v)
-        elif tag == "link":
-            d = dict(attrs)
-            # valueless attrs (``<link rel href=...>``) reach here as
-            # None from HTMLParser — coalesce before .lower()
-            if (d.get("rel") or "").lower() == "canonical" and d.get("href"):
-                self.hrefs.append(d["href"])
-                self.canonicals.append(d["href"])
-
-    def handle_endtag(self, tag):
-        if tag in _SKIP_TAGS:
-            self._skip = max(0, self._skip - 1)
-
-
-def extract_links(markup: str, base_url: str | None = None) -> list[str]:
-    """``<a href>`` / canonical targets of a page, in document order,
-    resolved against ``base_url`` when given (stdlib ``urljoin`` —
-    relative hrefs are the common case in real pages), filtered to
-    http(s) (mailto:/javascript:/fragment-only links are page chrome,
-    not graph edges).  Duplicates preserved — edge WEIGHT is signal;
-    the graph builder aggregates."""
-    from urllib.parse import urljoin
-
-    p = _LinkExtractor()
-    p.feed(markup)
-    p.close()
-    out = []
-    for href in p.hrefs:
-        if href.startswith("#"):
-            # fragment-only href: urljoin would resolve it to the page
-            # itself — an in-page anchor, not a graph edge
-            continue
-        url = urljoin(base_url, href) if base_url else href
-        if url.startswith(("http://", "https://")):
-            out.append(url)
-    return out
-
-
-def extract_canonical(markup: str, base_url: str | None = None) -> str | None:
-    """The page's declared canonical URL (first ``<link
-    rel=canonical>``, resolved against ``base_url``), or None.  The
-    standard crawl-dedup signal: a page that POINTS at a canonical is
-    a declared duplicate of it — ``urls.dedup_by_url`` over
-    ``coalesce(canonical, url)`` collapses the family even when the
-    variant URLs don't normalize to each other."""
-    from urllib.parse import urljoin
-
-    p = _LinkExtractor()
-    p.feed(markup)
-    p.close()
-    for href in p.canonicals:
-        url = urljoin(base_url, href) if base_url else href
-        if url.startswith(("http://", "https://")):
-            return url
-    return None
-
-
 def html_to_text(markup: str) -> str:
     """HTML → visible text: script/style/template/noscript dropped,
     entities decoded, block boundaries → ``\\n``, whitespace runs

@@ -41,6 +41,11 @@ sessions (almost always 1); the shuffle is the groupBy(user_id) hash
 partition that any sessionizer needs.  Arrow moves batches in columns.
 Session values accumulate as integer cents (exact, order-independent)
 — the Python mirror of the DataFrame layer's DECIMAL-sum discipline.
+The cents come from Spark's own ``CAST(value AS DECIMAL(18,2))``, the
+batch operator's cast, before the rows reach Python.  The kernels
+return plain ``bigint`` columns (session bounds as epoch micros, totals
+as cents), and a projection after the operator turns them into
+``OUTPUT_SCHEMA``'s timestamps and doubles.
 """
 
 from __future__ import annotations
@@ -58,6 +63,10 @@ OUTPUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, "
     "n_events int, total_value double"
 )
+# What the kernels return per closed session; ``_to_output`` maps it to
+# OUTPUT_SCHEMA.
+_KERNEL_COLUMNS = ["user_id", "start_us", "end_us", "n_events", "cents"]
+_KERNEL_SCHEMA = ", ".join(f"{c} bigint" for c in _KERNEL_COLUMNS)
 STATE_SCHEMA = (
     "starts array<bigint>, ends array<bigint>, "
     "counts array<int>, totals array<bigint>, "  # totals = integer cents
@@ -110,65 +119,43 @@ def sessionize_batch(events: DataFrame, gap: str = DEFAULT_GAP) -> DataFrame:
     )
 
 
-def _to_cents(v: float) -> int:
-    """Quantize a double to integer cents exactly the way Spark's
-    ``CAST(double AS DECIMAL(18,2))`` does: shortest decimal repr
-    (Double.toString == Python repr), then HALF_UP at 2 places.  Integer
-    cents make the session total an exact, order-independent sum."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(
-        Decimal(repr(float(v))).quantize(Decimal("0.01"), ROUND_HALF_UP)
-        * 100
-    )
-
-
-# Round 13: the Decimal round trip is ~2 µs/row and ran per EVENT in the
-# stateful kernels (100 K rows per drain at sf0.1) — memoize per distinct
-# double (a pure function; the langid-kernel memo shape).  Bounded, and
-# worker-local: lives in the executor's Python worker, never keyed on any
-# input path, rebuilt on worker restart.
-_CENTS_MEMO: dict[float, int] = {}
-
-
-def _to_cents_memo(v: float) -> int:
-    c = _CENTS_MEMO.get(v)
-    if c is None:
-        c = _to_cents(v)
-        if len(_CENTS_MEMO) < (1 << 20):
-            _CENTS_MEMO[v] = c
-    return c
-
-
 def _fold_columns() -> list:
     """The only columns the stateful kernels read: the key, the event
-    time as epoch microseconds and the value.  Every other event column
+    time as epoch microseconds and the value as integer cents.  The
+    cents are the batch operator's ``CAST(value AS DECIMAL(18,2))``
+    (HALF_UP at 2 places), scaled by 100, so the streaming and batch
+    totals quantize each value the same way.  Every other event column
     would be converted Arrow → pandas per key and then ignored."""
-    return ["user_id", F.unix_micros("ts").alias("ts_us"), "value"]
+    return [
+        "user_id",
+        F.unix_micros("ts").alias("ts_us"),
+        F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").alias(
+            "cents"
+        ),
+    ]
 
 
 def _fold_batch(rows: list, pdf: pd.DataFrame, hwm: int) -> int:
     """Append one micro-batch's (t, t, 1, cents) point sessions to
     ``rows`` and return the count of ordering-contract violations
-    (events at/below the emitted high-water mark) — the vectorized
-    spelling of the round-12 per-row loop (round 13: ``astype`` +
-    numpy comparison + memoized cents; ~4× less Python per event,
-    value-identical by the _to_cents purity).  Event times arrive as
-    ``ts_us`` epoch microseconds and must be positive: ``hwm`` 0 stands
-    for "nothing emitted yet"."""
+    (events at/below the emitted high-water mark).  Event times arrive
+    as ``ts_us`` epoch microseconds and must be positive: ``hwm`` 0
+    stands for "nothing emitted yet".  ``cents`` must not be NULL: a
+    session total has no NULL state, and a NaN would poison it."""
     us = pdf["ts_us"].to_numpy()
     if len(us) and us.min() <= 0:
         raise ValueError(
             "sessionizer requires positive event timestamps; got "
             f"{int(us.min())} µs since the epoch"
         )
+    cents = pdf["cents"]
+    if cents.isna().any():
+        raise ValueError("sessionizer requires a non-NULL event value")
     violations = int((us <= hwm).sum())
     usl = us.tolist()
     from itertools import repeat
 
-    rows.extend(
-        zip(usl, usl, repeat(1), map(_to_cents_memo, pdf["value"].tolist()))
-    )
+    rows.extend(zip(usl, usl, repeat(1), cents.astype("int64").tolist()))
     return violations
 
 
@@ -243,13 +230,13 @@ def sessionize_stream(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return (
+    return _to_output(
         events.withWatermark("ts", watermark)
         .select(*_fold_columns())
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
-            outputStructType=OUTPUT_SCHEMA,
+            outputStructType=_KERNEL_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
@@ -258,31 +245,30 @@ def sessionize_stream(
 
 
 def _emit(user_id: int, closed: list[tuple[int, int, int, int]]):
+    """One key's closed sessions as ``_KERNEL_COLUMNS``, built from one
+    2-D int64 array."""
     if closed:
         import numpy as np
 
-        n = len(closed)
-        # columnar construction (round 13): the /100.0 division is the
-        # identical IEEE op per element — only the construction cost
-        # changes, never a value.  Session bounds are epoch micros
-        # (``ts_us``), so they leave as UTC instants, which Spark reads
-        # the same under any session timezone.
-        starts = np.fromiter((s[0] for s in closed), "int64", n)
-        ends = np.fromiter((s[1] for s in closed), "int64", n)
         yield pd.DataFrame(
-            {
-                "user_id": np.full(n, user_id, "int64"),
-                "session_start": pd.to_datetime(starts, unit="us", utc=True),
-                "session_end": pd.to_datetime(ends, unit="us", utc=True),
-                "n_events": np.fromiter((s[2] for s in closed), "int64", n),
-                # cents → double is the same decimal(18,2)→double cast the
-                # batch operator performs; exact at 2 decimals.
-                "total_value": np.fromiter(
-                    (s[3] for s in closed), "int64", n
-                )
-                / 100.0,
-            }
+            np.array([(user_id, *s) for s in closed], dtype="int64"),
+            columns=_KERNEL_COLUMNS,
         )
+
+
+def _to_output(sessions: DataFrame) -> DataFrame:
+    """Kernel rows → ``OUTPUT_SCHEMA``.  Session bounds are epoch
+    micros, which ``timestamp_micros`` turns into instants without
+    consulting the session timezone.  cents / 100.0 is correctly
+    rounded, so it equals the batch operator's decimal(18,2) → double
+    cast of the same total."""
+    return sessions.select(
+        "user_id",
+        F.timestamp_micros("start_us").alias("session_start"),
+        F.timestamp_micros("end_us").alias("session_end"),
+        F.col("n_events").cast("int").alias("n_events"),
+        (F.col("cents") / 100.0).alias("total_value"),
+    )
 
 
 def sessionize_stream_watermarked(
@@ -346,14 +332,14 @@ def sessionize_stream_watermarked(
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return (
+    return _to_output(
         events.withWatermark("ts", watermark)
         # EventTimeTimeout needs the watermarked column itself.
         .select(*_fold_columns(), "ts")
         .groupBy("user_id")
         .applyInPandasWithState(
             fn,
-            outputStructType=OUTPUT_SCHEMA,
+            outputStructType=_KERNEL_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,

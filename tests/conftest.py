@@ -60,7 +60,6 @@ SLOW_TESTS = frozenset({
     "tests/test_classifier.py::test_scoring_separates_and_stays_jvm",
     "tests/test_fault_tolerance.py::test_task_retry_recovers_injected_faults",
     "tests/test_html.py::test_crawl_feed_composes_with_continuous_ingestion",
-    "tests/test_html.py::test_pagerank_matches_power_iteration",
     "tests/test_llm_ops.py::test_cluster_pairs_long_chain_converges",
     "tests/test_llm_ops.py::test_contamination_report_parity_and_consistency",
     "tests/test_llm_ops.py::test_curation_leakage_safe_split_composed",

@@ -346,73 +346,6 @@ def test_read_warc_member_idx_is_the_seek_contract(spark, tmp_path):
     assert all(r["member_idx"] is None for r in rows) and len(rows) == 5
 
 
-# ---------------------------------------------------------------------------
-# Link extraction + domain graph (round 10)
-# ---------------------------------------------------------------------------
-
-
-def test_extract_links_rules():
-    page = (
-        '<html><head><link rel="canonical" href="https://ex.com/canon">'
-        '<script>var a = \'<a href="http://trap.com/x">\';</script>'
-        "</head><body>"
-        '<a href="/rel/path">rel</a>'
-        '<a href="other.html">sibling</a>'
-        '<a href="http://abs.org/p">abs</a>'
-        '<a href="mailto:x@y.z">mail</a>'
-        '<a href="javascript:void(0)">js</a>'
-        '<a href="#frag">frag</a>'
-        '<a href="http://abs.org/p">dup kept</a>'
-        "</body></html>"
-    )
-    got = H.extract_links(page, base_url="http://ex.com/dir/page.html")
-    assert got == [
-        "https://ex.com/canon",
-        "http://ex.com/rel/path",
-        "http://ex.com/dir/other.html",
-        "http://abs.org/p",
-        "http://abs.org/p",  # duplicates preserved: edge weight
-    ]
-    # script-embedded markup never contributes links
-    assert not any("trap.com" in u for u in got)
-    # without a base, relative links cannot resolve and are dropped
-    assert H.extract_links(page) == [
-        "https://ex.com/canon", "http://abs.org/p", "http://abs.org/p"
-    ]
-
-
-def test_pagerank_matches_power_iteration(spark):
-    """Weighted PageRank over a site-grain edge table equals an
-    independent pure-Python power iteration."""
-    from mapreduce_framework_for_mergesort_spark.operators import urls as U
-
-    raw = [("a", "b", 2), ("a", "c", 1), ("b", "c", 1), ("c", "a", 1)]
-    df = spark.createDataFrame(
-        raw, "src_domain string, dst_domain string, weight long"
-    )
-    got = {
-        r["domain"]: r["rank"]
-        for r in U.pagerank_domains(df, n_iters=12).collect()
-    }
-
-    nodes = sorted({s for s, _d, _w in raw} | {d for _s, d, _w in raw})
-    out_w = {}
-    for s, _d, w in raw:
-        out_w[s] = out_w.get(s, 0) + w
-    rank = {v: 1.0 / len(nodes) for v in nodes}
-    for _ in range(12):
-        contrib = {v: 0.0 for v in nodes}
-        for s, d, w in raw:
-            contrib[d] += rank[s] * (w / out_w[s])
-        rank = {
-            v: 0.15 / len(nodes) + 0.85 * contrib[v] for v in nodes
-        }
-    for v in nodes:
-        assert got[v] == pytest.approx(rank[v], rel=1e-9), v
-    # the authority ordering the operator exists for
-    assert got["c"] > got["a"] > got["b"] or got["c"] > got["b"]
-
-
 def test_crawl_feed_composes_with_continuous_ingestion(spark, tmp_path):
     """The glue contract: a crawl read through the round-10 WET chain
     feeds streaming/ingest.accept_batch, and a RECRAWL (same pages,
@@ -467,51 +400,32 @@ def test_crawl_feed_composes_with_continuous_ingestion(spark, tmp_path):
     )
 
 
-def test_extract_canonical_and_collapse(spark, tmp_path):
+def test_dedup_by_url_collapses_canonical_family(spark):
     """rel=canonical is the declared-duplicate signal: pages pointing
-    at one canonical collapse with it through dedup_by_url over
-    coalesce(canonical, url) — even when the variant URLs do not
-    normalize to each other."""
-    import os
-
+    at one canonical collapse with it through dedup_by_url over the
+    canonical column — even when the variant URLs do not normalize to
+    each other."""
     from mapreduce_framework_for_mergesort_spark.operators import urls as U
 
-    assert H.extract_canonical(
-        '<link rel="canonical" href="/the-one">x', "http://ex.com/v2"
-    ) == "http://ex.com/the-one"
-    assert H.extract_canonical("<p>none</p>") is None
-    # canonical inside a skipped subtree does not count
-    assert H.extract_canonical(
-        '<script>var x = \'<link rel="canonical" href="/t">\';</script>'
-    ) is None
-
     pages = [
-        ("<a>", "http://ex.com/print/1",
-         '<link rel="canonical" href="http://ex.com/article/1">'
+        ("<a>", "http://ex.com/print/1", "http://ex.com/article/1",
          "<p>print view</p>"),
-        ("<b>", "http://ex.com/article/1", "<p>the article itself</p>"),
-        ("<c>", "http://ex.com/other", "<p>unrelated</p>"),
+        ("<b>", "http://ex.com/article/1", "http://ex.com/article/1",
+         "<p>the article itself</p>"),
+        ("<c>", "http://ex.com/other", "http://ex.com/other",
+         "<p>unrelated</p>"),
     ]
     rows = [
         ("f", i, i, "response", rid, url, W.WARC_FIXED_DATE,
          "application/http", 0,
          H.synthesize_http_response(markup.encode()))
-        for i, (rid, url, markup) in enumerate(pages)
+        for i, (rid, url, _canon, markup) in enumerate(pages)
     ]
     records = spark.createDataFrame(rows, W.WARC_RECORD_SCHEMA)
     canon = spark.createDataFrame(
-        [
-            (url, H.extract_canonical(markup, url) or url)
-            for _rid, url, markup in pages
-        ],
+        [(url, canonical) for _rid, url, canonical, _m in pages],
         "url string, canonical_url string",
     )
-    got = {r["url"]: r["canonical_url"] for r in canon.collect()}
-    assert got == {
-        "http://ex.com/print/1": "http://ex.com/article/1",
-        "http://ex.com/article/1": "http://ex.com/article/1",
-        "http://ex.com/other": "http://ex.com/other",
-    }
     # the collapse: dedup over the canonical key keeps one row per
     # canonical family (record_idx order -> the print view, fetched
     # first, survives; a production pipeline orders by preference)
@@ -523,17 +437,3 @@ def test_extract_canonical_and_collapse(spark, tmp_path):
         ).collect()
     )
     assert survivors == ["http://ex.com/other", "http://ex.com/print/1"]
-
-
-def test_valueless_rel_attr_does_not_crash():
-    # HTMLParser yields None for bare attrs: '<link rel href=...>' must
-    # parse (no canonical claimed), not AttributeError the Arrow task
-    # (ADVICE round 11)
-    page = '<html><head><link rel href="/x"></head><body>' \
-           '<a href="http://ok.org/p">a</a></body></html>'
-    assert H.extract_links(page) == ["http://ok.org/p"]
-    assert H.extract_canonical(page) is None
-    # bare rel on <a> and a genuinely wild soup page survive too
-    wild = '<a href disabled>x</a><link rel><link href="/y" rel>'
-    assert H.extract_links(wild) == []
-    assert H.extract_canonical(wild) is None

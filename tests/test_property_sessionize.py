@@ -69,14 +69,14 @@ def test_fold_batch_rejects_non_positive_timestamps():
     """0 doubles as the "nothing emitted yet" high-water mark, so a
     timestamp at or before the epoch is refused loudly rather than
     slipping past the ordering-violation count."""
-    ok = pd.DataFrame({"ts_us": [2_000_000, 5_000_000], "value": [1.0, 2.5]})
+    ok = pd.DataFrame({"ts_us": [2_000_000, 5_000_000], "cents": [100, 250]})
     rows: list = []
     assert _fold_batch(rows, ok, 0) == 0
     assert _fold_batch(rows, ok, 3_000_000) == 1  # the 2 s event
     assert rows[0] == (2_000_000, 2_000_000, 1, 100)
     for bad_s in (0, -7):
         bad = pd.DataFrame(
-            {"ts_us": [4_000_000, bad_s * 1_000_000], "value": [1.0, 1.0]}
+            {"ts_us": [4_000_000, bad_s * 1_000_000], "cents": [100, 100]}
         )
         with pytest.raises(ValueError, match="positive event timestamps"):
             _fold_batch([], bad, 0)

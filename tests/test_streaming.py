@@ -408,3 +408,88 @@ def test_checkpoint_scheme_picks_manager(spark):
         assert _checkpoint_is_local(spark, "file:/tmp/ck")
     finally:
         hconf.set("fs.defaultFS", default_fs)
+
+
+def test_footer_schema_matches_batch_inference(spark, sf_smoke, tmp_path):
+    """The driver-side footer read gives the schema Spark's inference
+    job gives: on every fixture table under the events read confs (the
+    fixture's events table is TIMESTAMP(NANOS)), on a micros-encoded
+    events file, and on a multi-file directory Spark wrote."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_framework_for_mergesort_spark.io import (
+        set_events_read_confs,
+    )
+    from mapreduce_framework_for_mergesort_spark.streaming.sources import (
+        parquet_footer_schema,
+    )
+
+    set_events_read_confs(spark)
+    paths = [
+        os.path.join(sf_smoke, f) for f in sorted(os.listdir(sf_smoke))
+    ]
+    assert len(paths) == 10
+    micros = tmp_path / "micros"
+    micros.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([0, 1], pa.int64()),
+                "ts": pa.array(
+                    np.array([1704067798778549, 1704068166738090],
+                             dtype="datetime64[us]")
+                ),
+                "user_id": pa.array([13, 12], pa.int64()),
+                "value": pa.array([185.22, 106.03]),
+            }
+        ),
+        str(micros / "events.parquet"),
+    )
+    multi = str(tmp_path / "multi")
+    spark.range(30).selectExpr(
+        "id", "cast(id AS decimal(10,2)) AS v", "cast(id AS string) AS s"
+    ).repartition(3).write.parquet(multi)
+    assert len([f for f in os.listdir(multi) if f.startswith("part-")]) == 3
+    paths += [str(micros / "events.parquet"), multi]
+    for p in paths:
+        assert parquet_footer_schema(spark, p) == spark.read.parquet(p).schema, p
+    # the micros file streams as a timestamp column, like the fixture
+    assert dict(stream_events(spark, str(micros)).dtypes)["ts"] == "timestamp"
+
+
+def test_stream_events_starts_no_job(spark, sf_smoke):
+    """``stream_events`` reads its schema without a Spark job; the
+    batch inference it replaced shows up in the same probe."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def new_jobs(call) -> set:
+        before = set(tracker.getJobIdsForGroup(None))
+        call()
+        return set(tracker.getJobIdsForGroup(None)) - before
+
+    assert new_jobs(lambda: stream_events(spark, sf_smoke)) == set()
+    path = f"{sf_smoke}/events.parquet"
+    assert new_jobs(lambda: spark.read.parquet(path).schema)
+
+
+def test_warm_stream_keys_hit_the_codegen_cache(spark, sf_smoke):
+    """The session's codegen cache holds the streaming keys' working
+    set: a second round of the 5 ``q_stream_*`` keys recompiles almost
+    nothing (Spark's default of 100 entries recompiled ~45 classes per
+    round)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    keys = sorted(k for k in QUERIES if k.startswith("q_stream_"))
+    assert len(keys) == 5
+
+    def compiles_in_one_round() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for k in keys:
+            QUERIES[k](spark, sf_smoke).collect()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiles_in_one_round()
+    assert compiles_in_one_round() <= 2

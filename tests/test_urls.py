@@ -212,13 +212,6 @@ def test_url_family_is_pure_codegen(spark):
     assert "pythonUDF" not in plan
 
 
-def test_pagerank_empty_graph(spark):
-    df = spark.createDataFrame(
-        [], "src_domain string, dst_domain string, weight long"
-    )
-    assert U.pagerank_domains(df, n_iters=3).collect() == []
-
-
 from hypothesis import given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
