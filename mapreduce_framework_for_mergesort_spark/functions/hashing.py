@@ -264,8 +264,9 @@ def duckdb_gram_hash(s: str) -> str:
 def gram_rows_udf(k: int):
     """Arrow-batched positional k-gram pass: per document, the array of
     ``(pos, g)`` window rows (1-based token position, 48-bit gram hash)
-    — the IDENTICAL definition as ``dedup.positional_ngrams_sql``, which
-    it is pinned to row-for-row in tests.  The SQL form pays one
+    — the IDENTICAL definition as
+    ``tests/references.positional_ngrams_sql``, which it is pinned to
+    row-for-row in tests.  The SQL form pays one
     interpreted concat+md5 per window inside a HOF lambda (HOFs never
     enter codegen); the kernel makes one Arrow pass with two memos:
 
@@ -322,50 +323,13 @@ def gram_rows_udf(k: int):
     return grams
 
 
-def spark_band_structs(shingles: str) -> str:
-    """Full MinHash-LSH index expression: shingles → array of
-    ``NUM_BANDS`` ``struct<band_id:int, band_val:string>`` in ONE pass.
-
-    Canonical Spark SQL definition (the hot path is the Arrow kernel
-    ``band_structs_udf``, pinned to this expression in tests).  The
-    shingle list AND the per-shingle base hashes are let-bound, so the
-    tokenize/shingle/md5 pipeline runs exactly once per document — each
-    of the NUM_MINHASHES signature mins is then pure integer math over
-    the bound hash list.  Docs with no shingles yield an empty array
-    (nothing to collide on)."""
-
-    def sig(k: int) -> str:
-        a, b = MINHASH_AB[k]
-        return (
-            f"CAST(array_min(transform(hs, h -> "
-            f"pmod({a} * h + {b}, {MINHASH_P}))) AS STRING)"
-        )
-
-    structs = ", ".join(
-        "named_struct('band_id', CAST({} AS INT), 'band_val', "
-        "md5(concat_ws('|', {})))".format(
-            b_id, ", ".join(sig(k) for k in idxs)
-        )
-        for b_id, idxs in band_slices()
-    )
-    body = (
-        f"CASE WHEN size(sh) > 0 THEN array({structs}) "
-        f"ELSE CAST(array() AS ARRAY<STRUCT<band_id: INT, band_val: STRING>>) END"
-    )
-    return let(
-        shingles,
-        "sh",
-        let(f"transform(sh, s -> {spark_base_hash('s')})", "hs", body),
-    )
-
-
 def band_structs_udf(n: int = SHINGLE_N):
     """Arrow-batched LSH index build: per document, ONE md5 per shingle
     (Python hashlib — hex-identical to JVM/DuckDB md5), then all
     ``NUM_MINHASHES`` affine signatures in a single NumPy
     broadcast-multiply + min.  Replaces the interpreted Catalyst
     expression (~ms/doc) at ~µs-scale/doc; pinned to
-    ``spark_band_structs`` row-for-row in tests."""
+    ``tests/references.spark_band_structs`` row-for-row in tests."""
     import hashlib
     import re
 
@@ -448,23 +412,6 @@ def _simhash_bits_sql(hi_of_bit, n_expr: str) -> list[str]:
     return bits
 
 
-def spark_simhash(toks: str) -> str:
-    # The per-token md5 list is referenced in every bit term — let-bound
-    # so tokens are hashed exactly once per document.
-    def hi(d: int, mask: int) -> str:
-        return (
-            f"size(filter(hs, h -> "
-            f"((instr({_HEXPOS}, substring(h, {d}, 1)) - 1) & {mask}) > 0))"
-        )
-
-    bits = _simhash_bits_sql(hi, "size(hs)")
-    return let(
-        f"transform({toks}, t -> md5(t))",
-        "hs",
-        f"CAST({' + '.join(bits)} AS BIGINT)",
-    )
-
-
 def duckdb_simhash(toks: str) -> str:
     hashes = f"list_transform({toks}, t -> md5(t))"
 
@@ -480,8 +427,9 @@ def duckdb_simhash(toks: str) -> str:
 
 def simhash_udf():
     """Arrow-batched simhash with the IDENTICAL definition as
-    ``spark_simhash`` (one md5 per token TYPE; majority vote over each
-    of the 48 bits of the first 12 hex digits, ties vote 0).  The SQL
+    ``tests/references.spark_simhash`` (one md5 per token TYPE;
+    majority vote over each of the 48 bits of the first 12 hex digits,
+    ties vote 0).  The SQL
     expression makes SIMHASH_BITS interpreted passes over the per-token
     hash list; the kernel makes one and is pinned to the expression in
     tests.
@@ -558,30 +506,6 @@ FP_BASE = 131
 
 def _fp_weight(j: int) -> int:
     return FP_BASE**j
-
-
-def spark_fingerprint(text_col: str = "text", k: int = FINGERPRINT_K) -> str:
-    """Canonical Spark SQL definition (the hot path is the Arrow kernel
-    ``fingerprint_udf``, pinned to this expression row-for-row in
-    tests)."""
-    terms = " + ".join(
-        f"pmod(ascii(substring({text_col}, i + {j}, 1)), 256)"
-        f" * CAST({_fp_weight(j)} AS BIGINT)"
-        for j in range(k)
-    )
-    short = " + ".join(
-        f"(CASE WHEN {j} < char_length({text_col}) THEN "
-        f"pmod(ascii(substring({text_col}, {j + 1}, 1)), 256)"
-        f" * CAST({_fp_weight(j)} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
-        for j in range(k)
-    )
-    return (
-        f"CASE WHEN char_length({text_col}) >= {k} THEN "
-        f"array_min(transform(sequence(1, char_length({text_col}) - {k - 1}), "
-        f"i -> {terms})) "
-        f"WHEN char_length({text_col}) = 0 THEN CAST(0 AS BIGINT) "
-        f"ELSE {short} END"
-    )
 
 
 def duckdb_fingerprint(text_col: str = "text", k: int = FINGERPRINT_K) -> str:

@@ -15,7 +15,7 @@ and beats the fold ~2.7×, but a three-dot unrolled cosine is 3× SLOWER
 (192 terms defeat the JIT), and inside a ``transform`` lambda — where
 the k-means argmin actually lives — the unrolled form is interpreted
 anyway and its expression size adds ~1 s of analysis/codegen per job
-(measured; see ``similarity._assign``).  So the engine keeps the fold
+(measured; see ``similarity._argmin_cell_udf``).  So the engine keeps the fold
 everywhere.  For genuinely hot all-pairs loops a Pandas-UDF matrix
 kernel beats both by orders of magnitude (see ``operators/dedup.py``'s
 two-tier pattern), at the price of BLAS summation order — hence kernel

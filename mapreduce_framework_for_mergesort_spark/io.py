@@ -30,13 +30,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at every realistic scale
-# factor (region=5 rows, nation=25 rows — fixed-size in TPC-H-like schemas
-# regardless of SF).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
 # Serializes EVERY writer of the session-global events-read confs —
 # load_table's scoped nanos window, set_events_read_confs, and the
 # whole scoped_session_confs block (round-7 review: locking only

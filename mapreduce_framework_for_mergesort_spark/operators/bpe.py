@@ -1,12 +1,11 @@
 """Byte-pair-encoding tokenizer: corpus-trained merges, distributed apply.
 
-The engine's other token counters (``text.token_counts``) are
-whitespace and regex proxies; real LM pipelines budget in TOKENIZER
-tokens — so packing (``sampling.pack_documents``), corpus token
-accounting, and mixture math all want an actual trained subword
-vocabulary.  This is the classic BPE of Sennrich et al. '16
-("Neural Machine Translation of Rare Words with Subword Units"),
-split along the engine's standard scale seam:
+The engine's other token counters are whitespace and regex proxies; real
+LM pipelines budget in TOKENIZER tokens — so packing
+(``sampling.pack_documents``), corpus token accounting, and mixture math
+all want an actual trained subword vocabulary.  This is the classic BPE
+of Sennrich et al. '16 ("Neural Machine Translation of Rare Words with
+Subword Units"), split along the engine's standard scale seam:
 
 * **Training** is driver-side over bounded metadata: ONE distributed
   word-count aggregation (the only corpus-sized step — a groupBy with

@@ -35,27 +35,6 @@ from mapreduce_framework_for_mergesort_spark.operators.materialize import (
 )
 
 
-def dedup_exact(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Exact dedup: one row per distinct key, with a *deterministic*
-    survivor — the row whose non-key columns are lexicographically
-    smallest (struct-min) — unlike ``dropDuplicates``, whose survivor is
-    whichever row the hash aggregate sees first.  Physical plan is the
-    same single hash aggregate with map-side partials (min composes);
-    when every column is part of the key the struct-min degenerates to
-    plain ``dropDuplicates``.
-    """
-    rest = [c for c in df.columns if c not in cols]
-    if not rest:
-        return df.dropDuplicates(cols)
-    picked = df.groupBy(*cols).agg(F.min(F.struct(*rest)).alias("__surv"))
-    return picked.select(
-        *[
-            F.col(f"__surv.{c}").alias(c) if c in rest else F.col(c)
-            for c in df.columns
-        ]
-    )
-
-
 def exact_dup_groups(documents: DataFrame, key: str = "text") -> DataFrame:
     """Distinct-content summary: ONE row per distinct ``key`` —
     including contents that appear once — with the deterministic
@@ -150,8 +129,8 @@ def minhash_bands(
     (< n tokens) produce no rows: they have no content to collide on.
 
     The whole tokenize→shingle→hash→band pipeline runs in one Arrow
-    kernel (``band_structs_udf``, pinned to the canonical
-    ``spark_band_structs`` SQL expression in tests).  Per-row,
+    kernel (``band_structs_udf``, pinned to the canonical SQL
+    expression ``tests/references.spark_band_structs``).  Per-row,
     shuffle-free; the only shuffle in the dedup pipeline is the
     downstream band-value join.
 
@@ -647,14 +626,14 @@ def simhash_signatures(
     spot-check's simhash floor was exactly this kernel).
 
     NULL contract (round 7, advisory): a NULL-text document keeps its
-    row with signature 0 — exactly what the canonical ``spark_simhash``
-    expression (and the DuckDB oracle CTE) yields on NULL text, since
-    every bit term's CASE falls through to 0 on a NULL count.  Round
-    6's plain inner join silently dropped those rows (``md5(NULL)`` is
-    NULL, and inner equi-joins null-filter), disagreeing with
-    ``text.per_content``'s eqNullSafe contract for the same collapse —
-    the join below is eqNullSafe like ``per_content``, and the kernel
-    itself guards None."""
+    row with signature 0 — exactly what the canonical
+    ``tests/references.spark_simhash`` expression (and the DuckDB oracle
+    CTE) yields on NULL text, since every bit term's CASE falls through
+    to 0 on a NULL count.  Round 6's plain inner join silently dropped
+    those rows (``md5(NULL)`` is NULL, and inner equi-joins
+    null-filter), disagreeing with ``text.per_content``'s eqNullSafe
+    contract for the same collapse — the join below is eqNullSafe like
+    ``per_content``, and the kernel itself guards None."""
     hashed = documents.select(
         "doc_id", F.md5(F.col("text").cast("binary")).alias("__h")
     )
@@ -1041,8 +1020,8 @@ def embedding_near_dup_pairs(
     # pairs scoring ≥ τ−ε.  All-pairs scoring through Catalyst
     # expressions is ~µs/pair (HOF folds never enter codegen, and
     # unrolled per-component sums trade that for seconds of per-job
-    # analysis overhead — see similarity._assign); the matmul does the
-    # same work in milliseconds either way.
+    # analysis overhead — see similarity._argmin_cell_udf); the matmul
+    # does the same work in milliseconds either way.
     # Tier 2 — exactness: survivors are re-scored with the engine's
     # canonical fold expression and filtered at τ, so the FINAL result
     # is bit-identical to the oracle regardless of BLAS summation order
@@ -1078,261 +1057,6 @@ def embedding_near_dup_pairs(
     )
 
 
-# --- incremental dedup against a persisted LSH index ----------------------
-
-def write_lsh_index(
-    documents: DataFrame, path: str, mode: str = "overwrite"
-) -> None:
-    """Persist the MinHash band index (doc_id, band_id, band_val) —
-    the write-once half of INCREMENTAL dedup: at 100 TB you band the
-    corpus exactly once, then every ingest batch joins its (tiny) band
-    set against the stored index instead of re-banding petabytes
-    (the same amortization ``similarity.write_ivf_index`` provides for
-    ANN).  Partitioned by ``band_id`` so an incremental probe scans
-    band-aligned files; at real scale use the bucketed variant
-    (``write_lsh_index_bucketed`` — zero index-side exchange at probe
-    time, plan-pinned).  ``mode='append'`` adds an ingest batch's
-    bands to the index after its pairs have been emitted.
-
-    ``mode='overwrite'`` is the REBUILD: it deletes the index root
-    explicitly before writing, so the fold-away of ``_tombstones`` and
-    of band partitions absent from the new corpus cannot depend on the
-    session's ``partitionOverwriteMode`` — under ``dynamic`` a
-    partitioned overwrite replaces only the partitions present in the
-    write and would leave stale tombstones masking re-included docs
-    forever (round-8 review).  The delete→rewrite is NOT atomic:
-    quiesce concurrent incremental probes around a rebuild (they would
-    see a missing or partial index in the window), or write the
-    rebuild to a fresh path and swap a pointer — the same rebuild
-    contract as ``pq.write_ivfadc_index``."""
-    if mode == "overwrite":
-        spark = documents.sparkSession
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
-    minhash_bands(documents).write.mode(mode).partitionBy(
-        "band_id"
-    ).parquet(path)
-
-
-def incremental_candidate_pairs(
-    new_docs: DataFrame, index_bands: DataFrame
-) -> DataFrame:
-    """Candidate near-dup pairs introduced by an ingest batch: new×new
-    pairs PLUS new×indexed pairs, as canonical (doc_a < doc_b) rows —
-    exactly the NEW pairs a full re-run over corpus ∪ batch would add
-    (old×old pairs are already known; the equality is pinned in tests).
-
-    Scale shape: the batch's band set is tiny (built once,
-    materialized); the stored index is scanned once for the equi-join
-    on (band_id, band_val) — no re-banding of the corpus, no all-pairs
-    anywhere.  Feed the result into ``cluster_pairs`` with the prior
-    survivor set to decide which new docs to keep, then
-    ``write_lsh_index(new_docs, path, mode='append')`` to absorb the
-    batch into the index."""
-    nb = _materialize(minhash_bands(new_docs))
-    new_new = lsh_candidate_pairs(nb, materialize=False)
-    n, o = nb.alias("n"), index_bands.alias("o")
-    cross = (
-        n.join(
-            o,
-            (F.col("n.band_id") == F.col("o.band_id"))
-            & (F.col("n.band_val") == F.col("o.band_val"))
-            & (F.col("n.doc_id") != F.col("o.doc_id")),
-        )
-        .select(
-            F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_b"),
-        )
-    )
-    return new_new.unionByName(cross).distinct()
-
-
-def write_lsh_index_bucketed(
-    documents: DataFrame, table: str, num_buckets: int = 64
-) -> None:
-    """The band index as a BUCKETED catalog table on
-    ``(band_id, band_val)`` — the real-scale layout
-    ``write_lsh_index``'s docstring prescribes, now a function instead
-    of advice (round 8).  The corpus pays its band shuffle ONCE at
-    write time; every later probe's equi-join reads bucket-aligned
-    files with ZERO exchange on the index side — only the (tiny)
-    ingest batch hash-partitions to the bucket layout.  Pinned in
-    tests: the probe plan shows one Exchange total (the batch side)
-    and ``Bucketed: true`` on the index scan, pairs identical to the
-    parquet-path index.  Probe with
-    ``incremental_candidate_pairs(new, read_lsh_index_bucketed(...))``.
-
-    Takedowns compose (round 9 — previously the real-scale layout
-    punted deletion to the parquet-path layout, so the layout
-    recommended at 100 TB couldn't take a retraction without a full
-    rebuild): ``delete_from_lsh_index_bucketed`` publishes tombstone
-    batches under the table location's ``_tombstones/`` dir and
-    ``read_lsh_index_bucketed`` anti-joins them (bounded broadcast —
-    the index-side scan stays exchange-free, plan-pinned).  A rebuild
-    through this function replaces the whole table location, folding
-    band rows and tombstones away together (``bucketing.write_bucketed``
-    clears the location explicitly)."""
-    from mapreduce_framework_for_mergesort_spark.operators import (
-        bucketing,
-    )
-
-    bucketing.write_bucketed(
-        minhash_bands(documents),
-        table,
-        ["band_id", "band_val"],
-        num_buckets,
-    )
-
-
-#: (applicationId, table) -> location.  A managed table's location is
-#: stable across rebuilds (write_bucketed drops and recreates under the
-#: same warehouse path), so caching keeps the high-frequency probe read
-#: from paying a catalog query per call (round-9 review).  A table
-#: moved to a DIFFERENT location mid-session (external drop/recreate —
-#: outside this module's lifecycle) would need a process restart.
-_TABLE_LOC_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _bucketed_table_location(spark, table: str) -> str:
-    """Storage location of a catalog table (the root the bucketed band
-    index's tombstones live under), cached per (session, table)."""
-    key = (spark.sparkContext.applicationId, table.lower())
-    loc = _TABLE_LOC_CACHE.get(key)
-    if loc is not None:
-        return loc
-    rows = (
-        spark.sql(f"DESCRIBE FORMATTED {table}")
-        .where("col_name = 'Location'")
-        .collect()
-    )
-    if not rows:
-        raise ValueError(f"table {table!r} has no Location (not found?)")
-    loc = rows[0]["data_type"]
-    _TABLE_LOC_CACHE[key] = loc
-    return loc
-
-
-def read_lsh_index_bucketed(spark, table: str) -> DataFrame:
-    """The bucketed band index MINUS published tombstones, MERGE-hinted
-    so the probe join keeps sort-merge shape (a broadcast of the batch
-    side would ALSO skip the index shuffle, but the hint makes the
-    bucketing guarantee — not AQE's size estimate — carry the plan).
-    Tombstones are a bounded broadcast anti-join, so the index-side
-    scan still reaches the probe with ZERO shuffle exchanges (the
-    anti-join preserves the scan's bucketed distribution); the hint is
-    applied ABOVE the anti-join so it binds to the probe join, not to
-    the tombstone join."""
-    from mapreduce_framework_for_mergesort_spark.io import (
-        read_tombstone_batches,
-    )
-
-    bands = spark.table(table)
-    tombs = read_tombstone_batches(
-        spark,
-        f"{_bucketed_table_location(spark, table)}/_tombstones",
-        LSH_TOMBSTONE_SCHEMA,
-    )
-    if tombs is not None:
-        bands = bands.join(F.broadcast(tombs), "doc_id", "left_anti")
-    return bands.hint("MERGE")
-
-
-def delete_from_lsh_index_bucketed(
-    spark, doc_ids, table: str, batch_id: str
-) -> bool:
-    """Takedown from the BUCKETED band index (round 9 — closes the gap
-    where the layout recommended at real scale was the only persisted
-    surface without a delete path).  Publishes ``doc_ids`` as a
-    tombstone batch under ``<table location>/_tombstones/<batch_id>``
-    (underscore dir: invisible to the table scan);
-    ``read_lsh_index_bucketed`` masks the rows from then on.  Same
-    policy, durability, and dead-doc_id semantics as
-    ``delete_from_lsh_index`` (parquet-path layout) — see there; a
-    full ``write_lsh_index_bucketed`` rebuild folds rows and
-    tombstones away together."""
-    from mapreduce_framework_for_mergesort_spark.io import (
-        publish_tombstone_batch,
-    )
-
-    return publish_tombstone_batch(
-        spark,
-        f"{_bucketed_table_location(spark, table)}/_tombstones",
-        LSH_TOMBSTONE_SCHEMA,
-        doc_ids,
-        batch_id,
-    )
-
-
-#: LSH-index tombstone schema, explicit so an EMPTY takedown batch
-#: (only a _SUCCESS marker) reads as zero rows, never an
-#: UNABLE_TO_INFER_SCHEMA that poisons every later probe — the same
-#: contract as the IVFADC index's tombstones.
-LSH_TOMBSTONE_SCHEMA = "doc_id bigint"
-
-
-def delete_from_lsh_index(spark, doc_ids, path: str, batch_id: str) -> bool:
-    """Deletion half of the incremental-dedup index lifecycle (round 8
-    — the symmetric gap to ``pq.delete_from_ivfadc_index``): takedowns
-    and retractions must not require re-banding the corpus.  Publishes
-    ``doc_ids`` as a tombstone batch under ``<path>/_tombstones/<id>``
-    (underscore-prefixed: invisible to the plain parquet read of the
-    band partitions); ``lsh_index_bands`` anti-joins the union of
-    published tombstones so a retracted document's bands stop
-    generating candidate pairs.  The stored band rows are untouched —
-    deletion is metadata — and a full ``write_lsh_index(retained,
-    mode='overwrite')`` rebuild replaces the whole directory, folding
-    band rows and tombstones away together.
-
-    Note the POLICY this encodes: after deletion, a future copy of the
-    removed content no longer pairs against it (right for
-    quality-driven removals — a fresh copy deserves fresh judgment).
-    Legal-takedown pipelines that must keep CATCHING re-uploads of
-    removed content want ``decontaminate``/``contaminated_doc_ids``
-    against a retained blocklist instead — don't repurpose tombstones
-    for that.
-
-    Same durability discipline as the IVFADC side: two-phase write +
-    single-rename publish (``io.publish_rename``), idempotent retry of
-    a published ``batch_id`` returns False, a crash before the rename
-    leaves only an invisible temp the retry overwrites.  ``doc_ids``
-    is a list of ints or a single-column DataFrame of ``doc_id``.
-
-    A tombstoned doc_id is DEAD until a full overwrite rebuild: a
-    later ``write_lsh_index(mode='append')`` carrying the same id
-    stores band rows the read surface keeps masking — re-admission of
-    retracted content must use a NEW doc_id (round-8 review)."""
-    from mapreduce_framework_for_mergesort_spark.io import (
-        publish_tombstone_batch,
-    )
-
-    return publish_tombstone_batch(
-        spark, f"{path}/_tombstones", LSH_TOMBSTONE_SCHEMA, doc_ids,
-        batch_id,
-    )
-
-
-def lsh_index_bands(spark, path: str) -> DataFrame:
-    """The stored band index MINUS published tombstones — the read
-    surface incremental probes should use (plain
-    ``spark.read.parquet(path)`` still works when no takedown has ever
-    run; this wrapper costs nothing in that case).  Tombstones are a
-    bounded broadcast anti-join, exactly like the IVFADC probe's."""
-    from mapreduce_framework_for_mergesort_spark.io import (
-        read_tombstone_batches,
-    )
-
-    bands = spark.read.parquet(path)
-    tombs = read_tombstone_batches(
-        spark, f"{path}/_tombstones", LSH_TOMBSTONE_SCHEMA
-    )
-    if tombs is None:
-        return bands
-    return bands.join(F.broadcast(tombs), "doc_id", "left_anti")
-
-
 # --- duplicate-substring spans (tier 6: position-level dedup) --------------
 # Document-level tiers (2-5) decide KEEP/DROP per doc; training corpora
 # also need the finer grain of Lee et al. '21 ("Deduplicating Training
@@ -1359,9 +1083,10 @@ def positional_ngrams(documents: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
 
     Hot path is the memoized Arrow kernel (``hashing.gram_rows_udf``),
     pinned row-for-row to the canonical SQL spelling
-    ``positional_ngrams_sql`` in tests — the same kernel-vs-expression
-    contract as the minhash band and simhash passes.  The kernel runs
-    over DISTINCT texts only (round 6): identical documents produce
+    ``tests/references.positional_ngrams_sql`` — the same
+    kernel-vs-expression contract as the minhash band and simhash
+    passes.  The kernel runs over DISTINCT texts only (round 6):
+    identical documents produce
     identical (pos, g) arrays by definition, so the tokenize→window→
     hash work — measured 40.7 s of the key's 73 s at the 100×
     replica spot-check, where replicas never share an Arrow batch and
@@ -1417,28 +1142,6 @@ def _distinct_text_gram_arrays(documents: DataFrame, k: int) -> DataFrame:
         .dropDuplicates(["__th"])
         .select("__th", H.gram_rows_udf(k)(F.col("text")).alias("__ws"))
     )
-
-
-def positional_ngrams_sql(
-    documents: DataFrame, k: int = DUP_SPAN_K
-) -> DataFrame:
-    """Canonical Spark SQL spelling of ``positional_ngrams`` (the
-    kernel is pinned to this in tests; the HOF lambda makes it the
-    slow path — one interpreted concat+md5 per window)."""
-    toks = H.spark_tokens("text")
-    parts = ", ".join(f"element_at(ts, i + {j})" for j in range(k))
-    window = f"concat_ws(' ', {parts})"
-    grams = H.let(
-        toks,
-        "ts",
-        f"CASE WHEN size(ts) >= {k} THEN "
-        f"transform(sequence(1, size(ts) - {k - 1}), "
-        f"i -> {H.spark_gram_hash(window)}) "
-        f"ELSE CAST(array() AS ARRAY<BIGINT>) END",
-    )
-    return documents.select(
-        "doc_id", F.posexplode(F.expr(grams)).alias("pos0", "g")
-    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "g")
 
 
 def positional_gram_flags(
@@ -1613,7 +1316,7 @@ def dup_span_profile(
     (doc_id, n_tokens, dup_span_count, dup_token_cover,
     dup_token_frac).  ``dup_token_frac`` is the curation signal —
     filter docs whose boilerplate fraction exceeds a threshold, the
-    position-level analogue of ``quality_scores``.  ``grams`` as in
+    position-level analogue of the per-doc ``quality`` score.  ``grams`` as in
     ``dup_spans``: inject a shared positional-n-gram pass when another
     consumer runs over the same corpus."""
     toks = H.spark_tokens("text")

@@ -34,7 +34,6 @@ counting which files a range predicate can actually skip.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,17 +103,6 @@ def _check(cols: list[str], bits: int) -> None:
         )
 
 
-def python_zorder_key(vals: list[int], bits: int = ZORDER_BITS) -> int:
-    """Reference implementation for tests (same clamp + interleave)."""
-    mask = (1 << bits) - 1
-    out = 0
-    for j, v in enumerate(vals):
-        v = min(max(v, 0), mask)
-        for b in range(bits):
-            out |= ((v >> b) & 1) << (b * len(vals) + j)
-    return out
-
-
 def write_zordered(
     df: DataFrame,
     path: str,
@@ -143,83 +131,9 @@ def write_zordered(
     ).parquet(path)
 
 
-def parquet_file_ranges(path: str, column: str) -> list[tuple[str, object, object]]:
-    """Per-file (file, min, max) of ``column`` from parquet footer
-    statistics — the exact metadata a reader's file-level skipping
-    consults.  Used by tests to PROVE a layout prunes instead of
-    asserting it does.  Raises when any row group lacks min/max stats
-    (nothing can be proven then, and silently returning "everything
-    prunes" would invert the conservative direction)."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.read_metadata(os.path.join(path, name))
-        idx = md.schema.to_arrow_schema().get_field_index(column)
-        lo, hi = None, None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                # loud, not an empty list: [] would read as "0 files
-                # match" — missing statistics masquerading as PERFECT
-                # pruning, the inverted-conservative direction
-                # (round-4+ review)
-                raise ValueError(
-                    f"{name} row group {rg} has no min/max statistics"
-                    f" for {column!r}; file-level pruning cannot be"
-                    " proven"
-                )
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        out.append((name, lo, hi))
-    return out
-
-
-def files_matching(path: str, column: str, lo, hi) -> int:
-    """How many files a ``column BETWEEN lo AND hi`` scan must read
-    under file-level min/max skipping (fewer = better layout)."""
-    ranges = parquet_file_ranges(path, column)
-    return sum(1 for _, mn, mx in ranges if not (mx < lo or mn > hi))
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dest: str,
-    target_file_bytes: int = 128 << 20,
-) -> dict:
-    """Rewrite the parquet directory ``src`` into ``dest`` at
-    ~``target_file_bytes`` per file.  File count is sized from the
-    SOURCE's physical bytes (the only size signal that exists before
-    reading); ``coalesce`` (narrow, no shuffle — compaction's cost
-    should be one read + one write, not a redistribution of 100 TB)
-    merges whole input files per task.  Returns
-    ``{files_before, files_after, bytes}``.  ``dest`` must differ from
-    ``src``: overwriting a directory while reading it is undefined —
-    swap directories (or table-format pointers) after the write.
-    Partitioned tables: compact per partition directory, preserving
-    the layout."""
-    if os.path.abspath(src) == os.path.abspath(dest):
-        raise ValueError("compact_parquet: dest must differ from src")
-    files = [
-        os.path.join(src, f)
-        for f in os.listdir(src)
-        if f.endswith(".parquet")
-    ]
-    total = sum(os.path.getsize(f) for f in files)
-    n = max(1, math.ceil(total / target_file_bytes))
-    spark.read.parquet(src).coalesce(n).write.mode("overwrite").parquet(dest)
-    after = sum(
-        1 for f in os.listdir(dest) if f.endswith(".parquet")
-    )
-    return {"files_before": len(files), "files_after": after, "bytes": total}
-
-
 # --- epoch-partition compaction (round 6) -----------------------------------
-# The exactly-once streams (streaming/ingest.py, streaming/sketch.py)
-# write one `epoch=N` partition per microbatch forever — correct, but a
+# The exactly-once ingest stream (streaming/ingest.py) writes one
+# `epoch=N` partition per microbatch forever — correct, but a
 # long-running stream inherits the classic small-file explosion: O(one
 # directory + several files) per microbatch, and at a 30 s trigger
 # that's ~2,900 directories a day per surface.  Compaction folds all

@@ -285,39 +285,6 @@ def ivfadc_topk(
     return scored.orderBy(F.col("score").desc(), F.col("vec_id")).limit(k)
 
 
-def write_pq_index(
-    embeddings: DataFrame,
-    path: str,
-    dim: int,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-) -> Codebooks:
-    """Encode the corpus ONCE and persist the compressed index —
-    ``<path>/codes`` holds (vec_id, code) rows (M small ints per
-    vector: ~2% of the raw embedding bytes), ``<path>/books`` the
-    codebooks (M·K·subdim ints of metadata).  Returns the codebooks.
-
-    The 100 TB serving amortization, same pattern as
-    ``similarity.write_ivf_index``: the corpus pays one
-    quantize+encode+write; every later ``probe_pq_index`` call scans
-    only the compressed codes (no raw vectors until the rerank, which
-    reads ``r_cand`` rows by key)."""
-    books = train_codebooks(embeddings, dim, m, k_codes, iters)
-    pq_encode(embeddings, books).select("vec_id", "code").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
-    rows = [
-        (j, int(cid), [int(v) for v in cq])
-        for j, book in enumerate(books)
-        for cid, cq in book
-    ]
-    embeddings.sparkSession.createDataFrame(
-        rows, "m: int, cid: bigint, cq: array<bigint>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
-    return books
-
-
 def write_ivfadc_index(
     embeddings: DataFrame,
     path: str,
@@ -330,10 +297,10 @@ def write_ivfadc_index(
     """Persist the composed IVFADC index: ``<path>/codes`` holds
     (vec_id, code) PARTITIONED BY the IVF ``cell`` — so a probe prunes
     to nprobe cell directories AND reads only compressed codes inside
-    them (~2% of the bytes of ~nprobe/C of the corpus; the two
-    amortizations of ``write_ivf_index`` and ``write_pq_index``
-    multiplied).  ``<path>/books`` and ``<path>/cents`` carry the two
-    trained metadata sets.  Returns (centroids, codebooks).
+    them (~2% of the bytes of ~nprobe/C of the corpus: cell pruning
+    and code compression multiplied).  ``<path>/books`` and
+    ``<path>/cents`` carry the two trained metadata sets.  Returns
+    (centroids, codebooks).
 
     Rebuilding over an EXISTING index path is the lifecycle's fold
     step: the new codes carry exactly the corpus passed in (appends
@@ -527,8 +494,8 @@ def probe_ivfadc_index(
     (``PartitionFilters`` — the scan never opens other directories),
     ADC-score only those cells' codes, deterministic ``r_cand`` cut,
     exact-cosine rerank against the raw ``embeddings`` by key.  The
-    query round-trips through the corpus ``array<float>`` schema (same
-    rule as ``probe_ivf_index``/``probe_pq_index``).  Reads the base
+    query round-trips through the corpus ``array<float>`` schema, so it
+    is narrowed exactly as a stored vector was.  Reads the base
     codes dir PLUS every published ``append_ivfadc_index`` batch —
     each dir shares the cell partitioning, so the nprobe pruning
     applies per directory and the probe still opens only nprobe cell
@@ -590,45 +557,6 @@ def read_codebooks(spark, path: str) -> Codebooks:
     for r in rows:
         books[r["m"]].append((int(r["cid"]), [int(v) for v in r["cq"]]))
     return [sorted(b) for b in books]
-
-
-def probe_pq_index(
-    spark,
-    path: str,
-    embeddings: DataFrame,
-    query_embedding: list[float],
-    k: int,
-    dim: int,
-    r_cand: int | None = None,
-) -> DataFrame:
-    """Top-k probe of a persisted PQ index for an ARBITRARY query
-    vector: ADC over the compressed codes (literal distance tables —
-    the scan reads only (vec_id, code)), deterministic candidate cut,
-    then exact-cosine rerank by joining the ``r_cand`` candidate ids
-    back to the raw ``embeddings`` table (AQE broadcasts the tiny
-    candidate side).  The query goes through a one-row DataFrame with
-    the corpus's ``array<float>`` schema so it is narrowed exactly as
-    a stored vector would be (same float32 round-trip rule as
-    ``similarity.probe_ivf_index``)."""
-    r_cand = r_cand if r_cand is not None else 4 * k
-    books = read_codebooks(spark, path)
-    qdf = spark.createDataFrame(
-        [(0, query_embedding)], "vec_id: bigint, embedding: array<float>"
-    )
-    qe = qdf.collect()[0]["embedding"]
-    tables = _adc_tables(qe, books, dim)
-    cand = (
-        spark.read.parquet(f"{path}/codes")
-        .select("vec_id", F.expr(_adc_expr(tables)).alias("adc"))
-        .orderBy(F.col("adc").asc(), F.col("vec_id"))
-        .limit(r_cand)
-        .select("vec_id")
-    )
-    scored = embeddings.join(cand, "vec_id").select(
-        "vec_id",
-        F.expr(V.spark_cosine("embedding", S._qe_lit(qe))).alias("score"),
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("vec_id")).limit(k)
 
 
 def duckdb_pq_cte(

@@ -161,51 +161,6 @@ def salted_agg(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    salt_col: str,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Skew-safe shuffle equi-join — the explicit form of what AQE's
-    skew-join split does at runtime, for plans where AQE can't help
-    (disabled engines, skew AQE's size stats miss, or a key so hot one
-    split still straggles).
-
-    A plain shuffle join on a hot key lands every row of that key in
-    ONE reducer.  Here the BIG side is salted by a per-row column
-    (same deterministic hash rule — and the same salt_col REQUIREMENT
-    — as ``salted_agg``: per-row-unique within hot keys, never a key
-    column), and the SMALL side is replicated once per salt via an
-    inline explode, so the join shuffles on ``on + [_salt]`` and the
-    hot key spreads over ``n_salts`` reducers.  Cost: the small side
-    shuffles ``n_salts`` × — only pay it when the small side is too
-    big to broadcast outright but tiny next to the skewed fact table
-    (the classic mid-size-dimension regime).
-
-    The result equals the plain ``big.join(small, on)`` row-for-row
-    (pinned in tests): each big row carries exactly one salt and meets
-    exactly the one replica of its key carrying that salt.
-    """
-    if not on:
-        raise ValueError("salted_join needs at least one join key")
-    if salt_col in on:
-        raise ValueError(
-            f"salt_col {salt_col!r} is a join key: every row of a key "
-            "would get the same salt and the skew split would do "
-            "nothing — salt by a per-row-unique column instead"
-        )
-    b = big.withColumn(
-        "_salt", F.pmod(F.xxhash64(salt_col), F.lit(n_salts))
-    )
-    s = small.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)).cast("array<long>")),
-    )
-    return b.join(s, [*on, "_salt"]).drop("_salt")
-
-
 def band_join(
     df: DataFrame, bands: DataFrame, value_col: str
 ) -> DataFrame:

@@ -156,8 +156,8 @@ def assign_splits_stable(
       deterministic and content-addressed even when a bridge has
       merged clusters whose prior members straddle splits (that
       straddle is pre-existing, structural leakage this function can
-      no longer fix — surface it with ``split_leakage_report`` and
-      quarantine, rather than silently re-routing shipped docs);
+      no longer fix — surface it and quarantine, rather than silently
+      re-routing shipped docs);
     * a new document in an all-new cluster routes exactly like
       ``leakage_safe_split`` (cluster min-md5 through
       ``split_column``).
@@ -241,41 +241,6 @@ def assign_splits_stable(
         )
     return assigned.drop("__h", "__prior", "__inherit", "__ck",
                          "node", "cluster")
-
-
-def split_leakage_report(
-    assigned: DataFrame,
-    key: str = "doc_id",
-    clusters: DataFrame | None = None,
-) -> DataFrame:
-    """Near-dup clusters whose STABLE assignments straddle more than
-    one split — the structural leakage ``assign_splits_stable`` can
-    detect but must not silently fix (re-routing shipped documents is
-    the worse bug).  Input is the output of ``assign_splits_stable``
-    (documents + ``split``); returns one row per straddling cluster:
-    (cluster, n_docs, n_splits, splits — sorted distinct names).  The
-    pipeline owner's move is to quarantine these clusters from eval
-    sets, and the report is tiny (bounded by straddling clusters, not
-    corpus size)."""
-    from mapreduce_framework_for_mergesort_spark.operators import dedup as D
-
-    if clusters is None:
-        reps = D.exact_rep_ids(assigned, key)
-        pool = assigned.join(reps, key, "semi")
-        pairs = D.lsh_candidate_pairs(D.minhash_bands(pool)).unionByName(
-            D.exact_dup_edges(assigned, key)
-        )
-        clusters = D.cluster_pairs(pairs, nodes=assigned.select(key))
-    return (
-        assigned.join(clusters, F.col(key) == F.col("node"))
-        .groupBy("cluster")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("split").alias("n_splits"),
-            F.sort_array(F.collect_set("split")).alias("splits"),
-        )
-        .where(F.col("n_splits") > 1)
-    )
 
 
 def duckdb_split_case(key_sql: str, splits: Weights = DEFAULT_SPLITS) -> str:
@@ -412,8 +377,8 @@ SAMPLE_HEX = 8  # 16^8 ≈ 4.3e9 buckets — rate resolution ~2.3e-10
 
 # Sampling hashes a SALTED key (key || SAMPLE_SALT): hash_split keys on
 # the leading bits of the same md5(key), so an unsalted sample would be
-# maximally CORRELATED with split assignment — hash_sample(rate ≤ 0.8)
-# on a corpus split with DEFAULT_SPLITS would return only train rows
+# maximally CORRELATED with split assignment — a sample at rate ≤ 0.8
+# of a corpus split with DEFAULT_SPLITS would return only train rows
 # (review finding, round 4).  The salt makes the two decisions
 # independent functions of the key.
 SAMPLE_SALT = "#sample"
@@ -438,40 +403,17 @@ def sample_threshold(rate: float) -> str:
     return format(n, f"0{SAMPLE_HEX}x")
 
 
-def hash_sample(df: DataFrame, rate: float, key: str = "doc_id") -> DataFrame:
-    """Deterministic Bernoulli sample: keep a row iff the first 8 hex
-    chars of ``md5(key)`` fall below the rate threshold.
-
-    The same contract as ``hash_split``, for the same reason
-    ``df.sample`` is wrong at scale: ``sample``'s membership depends on
-    partitioning and seed plumbing, so a rerun after a repartition
-    selects DIFFERENT rows — poison for reproducible corpus curation.
-    Here membership is a pure function of the key: any engine, any
-    layout, any rerun agrees row for row, equal keys travel together,
-    and the filter is map-only codegen (no shuffle, no RNG state).
-
-    The predicate (exactly, for third-engine mirrors): keep iff
-    ``substring(md5(CAST(key AS VARCHAR) || '#sample'), 1, 8) <
-    threshold`` — note the SALT; an unsalted md5(key) would share its
-    leading bits with ``hash_split``'s decision (see ``SAMPLE_SALT``).
-    NULL keys are never sampled (md5(NULL) is NULL → predicate NULL →
-    row dropped), mirrored exactly by the DuckDB predicate.
-    """
-    return df.where(sample_predicate(key, rate))
-
-
 def sample_predicate(key: str, rate: float) -> Column:
     """The boolean sample-membership column for ``key`` at ``rate`` —
-    the ONE definition ``hash_sample``, ``stratified_hash_sample``'s
-    default, and the profiling audit all share (and
+    the ONE definition the profiling audit uses (and
     ``duckdb_sample_predicate`` mirrors)."""
     return _sample_hash(key) < sample_threshold(rate)
 
 
 def _sample_hash(key: str, salt: str = SAMPLE_SALT) -> Column:
     """The ONE Spark spelling of the salted membership hash — shared by
-    hash_sample/stratified_hash_sample (SAMPLE_SALT) and mix_sources
-    (MIX_SALT); ``_duckdb_hash_int`` is its oracle mirror."""
+    sample_predicate (SAMPLE_SALT) and mix_sources (MIX_SALT);
+    ``_duckdb_hash_int`` is its oracle mirror."""
     return F.substring(
         F.md5(
             F.concat(F.col(key).cast("string"), F.lit(salt)).cast(
@@ -492,37 +434,9 @@ def _duckdb_hash_int(key_sql: str, salt: str) -> str:
     )
 
 
-def stratified_hash_sample(
-    df: DataFrame,
-    rates: dict[str, float],
-    stratum_col: str,
-    key: str = "doc_id",
-    default_rate: float = 0.0,
-) -> DataFrame:
-    """Per-stratum deterministic sampling — the corpus-mixing primitive
-    (e.g. keep 100% of high-quality strata, 10% of a boilerplate-heavy
-    domain): each row's keep-threshold comes from its ``stratum_col``
-    value via ``rates``; strata not listed get ``default_rate``.
-
-    One map-only codegen filter: the per-stratum thresholds compile to
-    a CASE over literal hex cuts against the same md5(key) prefix as
-    ``hash_sample`` — membership stays a pure function of (key,
-    stratum), so re-mixing with different rates REUSES prior decisions
-    (a row kept at 10% is a subset of the rows kept at 20%; raising a
-    stratum's rate only ADDS rows — nested samples by construction).
-    """
-    h = _sample_hash(key)
-    cut = F.lit(sample_threshold(default_rate))
-    for value, rate in sorted(rates.items()):
-        cut = F.when(
-            F.col(stratum_col) == value, F.lit(sample_threshold(rate))
-        ).otherwise(cut)
-    return df.where(h < cut)
-
-
 def duckdb_sample_predicate(rate: float, key_sql: str) -> str:
-    """Oracle-side WHERE predicate replicating ``hash_sample`` (same
-    salt, same threshold arithmetic)."""
+    """Oracle-side WHERE predicate replicating ``sample_predicate``
+    (same salt, same threshold arithmetic)."""
     return (
         f"substring(md5(CAST({key_sql} AS VARCHAR) || '{SAMPLE_SALT}'),"
         f" 1, {SAMPLE_HEX}) < '{sample_threshold(rate)}'"
@@ -658,7 +572,7 @@ def duckdb_balanced_cte(
 # no cross-engine float rounding anywhere.
 
 MIX_SALT = "#mix"  # decorrelates the fractional-epoch sample from
-#                    hash_sample ('#sample') and hash_split decisions
+#                    sample ('#sample') and hash_split decisions
 _MIX_ONE = 16**SAMPLE_HEX  # rate denominator: 1.0 epoch == 2^32
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
@@ -220,42 +220,12 @@ def brute_force_topk(
     return scored.orderBy(F.col("score").desc(), F.col("vec_id")).limit(k)
 
 
-def _xq_transform() -> str:
-    """Quantize a (near-)unit embedding to int64: ``round(v / nrm · 2^20)``
-    per component, ``nrm`` pre-bound as a real column so the exact fold
-    runs once per row, not once per component."""
-    return (
-        "transform(embedding, v -> CAST(round(CAST(v AS DOUBLE) / __nrm"
-        f" * CAST({QUANT} AS DOUBLE)) AS BIGINT))"
-    )
-
-
-def quantize_normalized(embeddings: DataFrame) -> DataFrame:
-    """Add ``xq: array<bigint>`` — the L2-normalized embedding quantized
-    at 2^20 per component.  All k-means arithmetic downstream is exact
-    int64 (order-independent), which is what lets a trained index carry
-    a value-exact DuckDB oracle; the norm itself is the engine's
-    canonical sequential fold (bitwise equal to DuckDB's ``list_sum``
-    formulation, see ``functions/vector.py``)."""
-    nrm = f"sqrt({V.spark_dot('embedding', 'embedding')})"
-    return (
-        embeddings.withColumn(
-            "__nrm",
-            F.expr(
-                f"CASE WHEN {nrm} = CAST(0 AS DOUBLE)"
-                f" THEN CAST(1 AS DOUBLE) ELSE {nrm} END"
-            ),
-        )
-        .withColumn("xq", F.expr(_xq_transform()))
-        .drop("__nrm")
-    )
-
-
 Cents = list[tuple[int, list[int]]]  # [(cid, [cq_0..cq_dim-1]), ...]
 
 
 def _quantize_np(X):
-    """NumPy replica of ``quantize_normalized``'s SQL arithmetic,
+    """NumPy replica of the SQL quantization expression
+    (``tests/references.quantize_normalized``),
     bit-for-bit: the squared norm is accumulated with ``np.cumsum``
     (a strictly sequential left-to-right C loop — the same operation
     order as the Catalyst/DuckDB fold; ``np.sum`` would use pairwise
@@ -324,21 +294,10 @@ def _argmin_cell_udf(cents: Cents, from_embedding: bool = False):
     return cell
 
 
-def _assign(
-    xqv: DataFrame, cents: Cents, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """(vec_id, xq, …) → (vec_id, …, cell): exact int64 squared-L2
-    argmin over the (driver-side) centroid list, ties to the lowest
-    cid.  Map-only — no join, no shuffle; ``carry`` payload columns
-    ride the row untouched."""
-    udf = _argmin_cell_udf(cents)
-    return xqv.select("vec_id", *carry, udf(F.col("xq")).alias("cell"))
-
-
 def _kmeans_train_np(ids, Xq, num_centroids: int, iters: int) -> Cents:
     """Driver-side exact integer Lloyd's k-means over the quantized
-    sample — the same arithmetic as ``_kmeans_train`` (the distributed
-    formulation, kept for samples too big to collect) step for step:
+    sample — the same arithmetic, step for step, as the distributed
+    formulation tests pin it to (``tests/references._kmeans_train``):
 
     * init = the first ``num_centroids`` vectors by vec_id;
     * assignment = exact int64 squared-L2 argmin, ties to lowest cid
@@ -378,71 +337,11 @@ def _kmeans_train_np(ids, Xq, num_centroids: int, iters: int) -> Cents:
     return cents
 
 
-def _kmeans_train(xqv: DataFrame, num_centroids: int, iters: int) -> Cents:
-    """Distributed integer Lloyd's k-means over (vec_id, xq) rows →
-    driver-side centroid list.
-
-    Same algorithm as ``_kmeans_train_np`` (pinned equal in tests); use
-    this formulation when the training sample is itself too large to
-    collect — per-iteration cluster work is one scan of ``xqv`` + one
-    partial aggregation (component sums compose map-side).
-
-    Centroid state lives ON THE DRIVER between iterations — the classic
-    Spark-MLlib KMeans shape.  The collect here is O(C·dim) index
-    metadata (~512 ints at the defaults), never data; keeping the state
-    as a DataFrame instead (round-3 first cut) made every iteration
-    either a nested-plan re-analysis (~2.5 s/iter of pure driver-side
-    planning) or an extra checkpoint job per iteration.  Cells that lose
-    all members drop out (deterministically, on both engines).
-    """
-    init = (
-        xqv.orderBy("vec_id")
-        .limit(num_centroids)  # first C sample vectors by id (TakeOrdered
-        .select(F.col("vec_id").alias("cid"), F.col("xq").alias("cq"))
-        .collect()  # — xqv is already the bounded training sample)
-    )
-    cents: Cents = sorted((r["cid"], list(r["cq"])) for r in init)
-    for _ in range(iters):
-        upd = (
-            _assign(xqv, cents, carry=("xq",))
-            .select("cell", F.posexplode("xq").alias("i", "v"))
-            .groupBy("cell", "i")
-            .agg(F.sum("v").alias("s"), F.count(F.lit(1)).alias("n"))
-            .withColumn(
-                "cq_i",
-                F.expr(
-                    "CAST(round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE))"
-                    " AS BIGINT)"
-                ),
-            )
-            .collect()  # C·dim rows — index metadata, not data
-        )
-        by_cell: dict[int, dict[int, int]] = {}
-        for r in upd:
-            by_cell.setdefault(r["cell"], {})[r["i"]] = r["cq_i"]
-        cents = sorted(
-            (cell, [comp[i] for i in sorted(comp)])
-            for cell, comp in by_cell.items()
-        )
-    return cents
-
-
-def kmeans_centroids(
-    xqv: DataFrame, num_centroids: int, iters: int = KM_ITERS
-) -> DataFrame:
-    """DataFrame facade over ``_kmeans_train`` → (cid, cq: array<bigint>)
-    as a local relation (the trained index is C·dim metadata)."""
-    cents = _kmeans_train(xqv, num_centroids, iters)
-    return xqv.sparkSession.createDataFrame(
-        cents, "cid: bigint, cq: array<bigint>"
-    )
-
-
 def ivf_cells(
     embeddings: DataFrame, num_centroids: int, iters: int = KM_ITERS
 ) -> DataFrame:
     """IVF index build: train integer k-means centroids
-    (``kmeans_centroids``; ``iters=0`` degenerates to the round-2
+    (``_trained_cents``; ``iters=0`` degenerates to the round-2
     first-C-vectors stand-in) on the deterministic prefix sample
     ``vec_id < num_centroids * KM_SAMPLE_FACTOR``, then assign every
     vector to its nearest centroid → (vec_id, embedding, cell).
@@ -475,8 +374,7 @@ def _trained_cents(
     ``_quantize_np``, pinned row-for-row to the canonical SQL expression.
     The round-3 first cut instead materialized the sample as a DataFrame
     and aggregated each Lloyd iteration as a cluster job — 4+ jobs of
-    pure fixed overhead for a 512-row sample (the distributed trainer
-    ``_kmeans_train`` remains available for oversized samples)."""
+    pure fixed overhead for a 512-row sample."""
     sample = num_centroids * KM_SAMPLE_FACTOR
     rows = (
         embeddings.where(F.col("vec_id") < sample)
@@ -543,10 +441,9 @@ def ivf_topk(
 
     ``cents``/``cells`` let a caller running SEVERAL probes over one
     corpus snapshot amortize: train once, assign once (optionally
-    materialized), probe many — the in-session analog of the
-    persisted ``write_ivf_index``/``probe_ivf_index`` pair (the
-    round-4+ review measured the registered query paying the full
-    train+assign cost once per nprobe branch).
+    materialized), probe many (the round-4+ review measured the
+    registered query paying the full train+assign cost once per nprobe
+    branch).
     """
     if cents is None:
         cents = _trained_cents(embeddings, num_centroids)
@@ -572,8 +469,8 @@ def ivf_topk(
 def assign_cells(embeddings: DataFrame, cents: Cents) -> DataFrame:
     """(vec_id, embedding) → (vec_id, embedding, cell): the ONE
     corpus-side cell-assignment projection, shared by ``ivf_cells``,
-    ``ivf_topk``, and ``write_ivf_index`` — previously hand-copied at
-    all three sites, the exact drift mode ``text_feature_exprs``'s
+    ``ivf_topk``, and the IVFADC index build — previously hand-copied at
+    every site, the exact drift mode ``text_feature_exprs``'s
     history documents (round-4+ review)."""
     udf = _argmin_cell_udf(cents, from_embedding=True)
     return embeddings.select(
@@ -588,63 +485,6 @@ def _qe_lit(qe) -> str:
     return "array({})".format(
         ", ".join(f"CAST('{v!r}' AS DOUBLE)" for v in qe)
     )
-
-
-def write_ivf_index(
-    embeddings: DataFrame,
-    path: str,
-    num_centroids: int = 8,
-    iters: int = KM_ITERS,
-) -> Cents:
-    """Build the IVF index ONCE and persist it partitioned by ``cell``;
-    returns the trained centroids (the index metadata a caller keeps to
-    assign future queries).
-
-    This is the 100 TB amortization the per-query operators only
-    describe: the corpus pays one quantize+assign+write, and every
-    later ``probe_ivf_index`` call reads ~1/C of storage via partition
-    pruning (pinned in ``tests/test_llm_ops.py``) — the probe never
-    touches the corpus table at all."""
-    cents = _trained_cents(embeddings, num_centroids, iters)
-    cells = assign_cells(embeddings, cents)
-    cells.write.mode("overwrite").partitionBy("cell").parquet(path)
-    return cents
-
-
-def probe_ivf_index(
-    spark: SparkSession,
-    path: str,
-    cents: Cents,
-    query_embedding: list[float],
-    k: int,
-    nprobe: int = 1,
-) -> DataFrame:
-    """Top-k probe of a persisted IVF index for an ARBITRARY query
-    vector (need not exist in the corpus).
-
-    The query is quantized and assigned with the SAME integer arithmetic
-    the index build used (``nearest_cells`` — pinned equal to the build
-    kernel), so the cell decision is bit-identical to the build.  The
-    scan then prunes to the query's ``nprobe`` nearest cell directories
-    (``PartitionFilters`` in the plan — an IN-filter on the partition
-    column prunes exactly like equality) and reranks by exact cosine
-    against the round-tripped literal query vector.
-
-    The float32→float64 round-trip matters: the query must go through a
-    one-row DataFrame with the index's ``array<float>`` schema so it is
-    narrowed exactly as a stored vector would be — quantizing the raw
-    float64 list could land a boundary component one quantum off the
-    build's assignment."""
-    qdf = spark.createDataFrame(
-        [(0, query_embedding)], "vec_id: bigint, embedding: array<float>"
-    )
-    qe = qdf.collect()[0]["embedding"]
-    probe = nearest_cells(qe, cents, nprobe)
-    idx = spark.read.parquet(path).where(F.col("cell").isin(probe))
-    scored = idx.select(
-        "vec_id", F.expr(V.spark_cosine("embedding", _qe_lit(qe))).alias("score")
-    )
-    return scored.orderBy(F.col("score").desc(), F.col("vec_id")).limit(k)
 
 
 def lsh_bucketed_topk(
@@ -692,7 +532,7 @@ def feature_hash_embed(
     no external model: the embedding is a pure deterministic function
     of the text, so it is rerun-, partitioning-, and engine-exact
     (integer counts, surfaced as exactly-representable floats and
-    replicated verbatim by ``duckdb_feature_hash_sql``).
+    replicated verbatim by the DuckDB oracle in the tests).
 
     Not a learned embedding — inner products approximate token-multiset
     overlap (the hashing-trick guarantee), which is exactly the
@@ -721,20 +561,3 @@ def feature_hash_embed(
         f"transform({acc}, v -> CAST(v AS FLOAT))",
     )
     return df.withColumn(out_col, F.expr(expr))
-
-
-def duckdb_feature_hash_sql(text_sql: str = "text", dim: int = 64) -> str:
-    """Oracle mirror of ``feature_hash_embed``'s vector expression —
-    same salted hash, same bucket/sign bit split, integer sums
-    surfaced as FLOAT."""
-    if dim < 2:
-        raise ValueError(f"dim must be >= 2, got {dim}")
-    h = H.duckdb_base_hash(f"t || '{FH_SALT}'")
-    hvs = f"list_transform({H.duckdb_tokens(text_sql)}, t -> {h})"
-    return (
-        f"list_transform(range(0, {dim}), i -> CAST(COALESCE("
-        f"list_sum(list_transform({hvs}, hv -> "
-        f"CASE WHEN hv % {dim} = i THEN "
-        f"(CASE WHEN (hv // {dim}) % 2 = 0 THEN 1 ELSE -1 END) "
-        f"ELSE 0 END)), 0) AS FLOAT))"
-    )

@@ -80,8 +80,8 @@ def kmv_min_hashes(df: DataFrame, key: str, k: int = KMV_K) -> DataFrame:
     """The sketch itself: the ``k`` smallest distinct hash values of
     ``df[key]`` as one ``h`` column (NULL keys contribute nothing —
     md5(NULL) is NULL and is filtered, mirroring COUNT DISTINCT).
-    This is plain data — persist it, merge it (``kmv_merge``), or
-    estimate from it (``kmv_estimate``)."""
+    This is plain data: persist it, merge it, or estimate from it
+    (``duckdb_kmv_cte`` spells the estimator)."""
     h = F.expr(_spark_kmv_hash(key))
     return (
         df.select(h.alias("h"))
@@ -89,38 +89,6 @@ def kmv_min_hashes(df: DataFrame, key: str, k: int = KMV_K) -> DataFrame:
         .distinct()
         .orderBy("h")
         .limit(k)
-    )
-
-
-def kmv_merge(sketches: list[DataFrame], k: int = KMV_K) -> DataFrame:
-    """Merge per-source sketches into the sketch of the union: union,
-    distinct, keep the k smallest — the identity that lets 1000
-    executors (or 1000 daily increments) each sketch locally and
-    combine without touching raw data again."""
-    if not sketches:
-        raise ValueError("kmv_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.distinct().orderBy("h").limit(k)
-
-
-def kmv_estimate(df: DataFrame, key: str, k: int = KMV_K) -> DataFrame:
-    """One row ``(kk, est_distinct)``: ``kk`` = hashes actually held
-    (< k means the sketch saw every distinct key and ``est`` is exact
-    by construction), ``est_distinct`` = the KMV estimator in pure
-    int64 arithmetic.  ``(k-1) * KMV_SPACE`` ≤ 255·2^32 < 2^63 — no
-    overflow, no floating point until the caller casts."""
-    agg = kmv_min_hashes(df, key, k).agg(
-        F.count(F.lit(1)).alias("kk"), F.max("h").alias("hk")
-    )
-    return agg.select(
-        "kk",
-        F.when(F.col("kk") < k, F.col("kk"))
-        .otherwise(
-            F.expr(f"(kk - 1) * CAST({KMV_SPACE} AS BIGINT) div hk")
-        )
-        .alias("est_distinct"),
     )
 
 
@@ -198,9 +166,9 @@ def cms_sketch(
     Like KMV next to approx_count_distinct, this is the cross-engine-
     verifiable stand-in for frequency estimation at 100 TB: every
     intermediate is integer data both engines can recompute
-    bit-for-bit, and sketches MERGE by elementwise addition
-    (``cms_merge``) so shards/increments sketch locally and combine
-    without touching raw data again.
+    bit-for-bit, and sketches MERGE by elementwise addition so
+    shards/increments sketch locally and combine without touching raw
+    data again.
 
     (d, w) is the sketch GEOMETRY: pass the same pair to every
     ``cms_point_estimates`` over this sketch — the stored rows don't
@@ -230,19 +198,6 @@ def cms_sketch(
     )
 
 
-def cms_merge(sketches: list[DataFrame]) -> DataFrame:
-    """Merge sketches built with the same (d, w, salt): elementwise
-    counter addition — sketch(A ⊎ B) = sketch(A) + sketch(B) exactly
-    (pinned in tests), the property that makes the sketch
-    distributable and incremental."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("i", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_point_estimates(
     sketch: DataFrame,
     keys: DataFrame,
@@ -263,9 +218,9 @@ def cms_point_estimates(
     Scale shape: the sketch is ≤ d·w rows BY CONSTRUCTION, so it is
     force-broadcast — the estimate pass is map-side over the keys'
     explode, one small aggregation per key, no shuffle of the sketch
-    ever.  ``carry`` payload columns ride through (the ``_assign``
-    pattern) so a caller comparing est to a per-key truth doesn't have
-    to re-join — and thus re-scan — the keys table."""
+    ever.  ``carry`` payload columns ride through so a caller comparing
+    est to a per-key truth doesn't have to re-join — and thus re-scan —
+    the keys table."""
     ex = (
         keys.select(
             F.col(key).alias("k"),
@@ -328,9 +283,10 @@ def duckdb_cms_cte(
 
 
 def duckdb_kmv_cte(key_sql: str, table: str, k: int = KMV_K) -> str:
-    """Oracle CTE body replicating ``kmv_estimate`` (select from it as
-    ``(kk, est_distinct)``) — same hash, same min-k, same integer
-    estimator, so the driver hash-checks the sketch value-for-value."""
+    """Oracle CTE body of the KMV estimate over ``kmv_min_hashes``
+    (select from it as ``(kk, est_distinct)``) — same hash, same min-k,
+    same integer estimator, so the driver hash-checks the sketch
+    value-for-value."""
     return f"""
       SELECT kk,
              CASE WHEN kk < {k} THEN kk
@@ -416,14 +372,14 @@ def dyadic_cms_sketch(
     out-of-range rows are DROPPED (loudly documented, mirrored by the
     oracle) — callers scale/offset real columns into the domain
     (prices in cents, quantities as-is).  Merge = elementwise addition
-    on (lvl, i, bucket), exactly like ``cms_merge``."""
+    on (lvl, i, bucket), exactly like the Count-Min sketch."""
     if not 1 <= d <= len(_DY_ABC):
         raise ValueError(f"d must be in [1, {len(_DY_ABC)}], got {d}")
     # levels capped at 31: the affine bucket is a·prefix + c·lvl + b
     # with a, b, c < 2^31 and prefix < 2^levels, so the product stays
     # under 2^62 only for levels ≤ 31.  Beyond that Spark (non-ANSI)
     # silently wraps int64 while the driver-side Python in
-    # dyadic_quantiles/dyadic_rank_estimates computes with unbounded
+    # dyadic_quantiles computes with unbounded
     # ints — the sketch and the estimator would silently diverge.
     _check_levels(levels)
     cells = F.array(
@@ -473,66 +429,6 @@ def dyadic_decompose(x: int, levels: int = DYADIC_LEVELS) -> list[tuple[int, int
             out.append((j, cur >> j))
             cur += 1 << j
     return out
-
-
-def dyadic_rank_estimates(
-    sketch: DataFrame,
-    probes: list[int],
-    levels: int = DYADIC_LEVELS,
-    d: int = CMS_D,
-) -> DataFrame:
-    """(probe, est_rank) for each probe x: est_rank = Σ over the
-    decomposition of [0, x) of the range's Count-Min estimate (min
-    over d counters, absent cell → 0).  est_rank ≥ true rank always.
-    The decomposition rows are driver-built pure-int metadata
-    (≤ (levels+1) cells per probe) and the sketch side broadcasts —
-    no corpus access at all."""
-    _check_levels(levels)
-    spark = sketch.sparkSession
-    all_probes = spark.createDataFrame(
-        [(int(x),) for x in sorted(set(probes))], "probe: bigint"
-    )
-    rows = [
-        (int(x), lvl, i, pre)
-        for x in probes
-        for (lvl, pre) in dyadic_decompose(int(x), levels)
-        for i in range(d)
-    ]
-    if not rows:
-        # every probe decomposes to nothing (x = 0): rank 0 across
-        return all_probes.select(
-            "probe", F.lit(0).cast("long").alias("est_rank")
-        )
-    cells = spark.createDataFrame(
-        rows, "probe: bigint, lvl: int, i: int, pre: bigint"
-    ).withColumn(
-        "bucket",
-        F.expr(
-            "CASE "
-            + " ".join(
-                f"WHEN i = {i} THEN ({a} * pre"
-                f" + {c} * CAST(lvl AS BIGINT) + {b})"
-                f" % {H.MINHASH_P} % {CMS_W}"
-                for i, (a, b, c) in enumerate(_DY_ABC)
-            )
-            + " END"
-        ).cast("int"),
-    )
-    est = (
-        cells.join(F.broadcast(sketch), ["lvl", "i", "bucket"], "left")
-        .groupBy("probe", "lvl", "pre")
-        .agg(F.min(F.coalesce(F.col("cnt"), F.lit(0))).alias("__rng"))
-        .groupBy("probe")
-        .agg(F.sum("__rng").cast("long").alias("est_rank"))
-    )
-    # probe 0 decomposes to nothing — restore it (rank 0) so every
-    # requested probe gets a row (mirrored in the oracle CTE)
-    return all_probes.join(est, "probe", "left").select(
-        "probe",
-        F.coalesce(F.col("est_rank"), F.lit(0)).cast("long").alias(
-            "est_rank"
-        ),
-    )
 
 
 def dyadic_quantiles(
@@ -597,68 +493,3 @@ def dyadic_quantiles(
                 lo = mid + 1
         out[q] = lo
     return out
-
-
-def duckdb_dyadic_cte(
-    key_sql: str,
-    table: str,
-    probes: list[int],
-    levels: int = DYADIC_LEVELS,
-    d: int = CMS_D,
-    w: int = CMS_W,
-) -> str:
-    """Oracle replica: exposes ``dsk(lvl, i, bucket, cnt)`` (the
-    sketch, cell-for-cell) and ``drank(probe, est_rank)`` for the
-    given probes — same affine buckets (``dyadic_bucket_expr``
-    verbatim), same decomposition (``dyadic_decompose`` emitted as
-    literal rows), same left-join-coalesce min-then-sum."""
-    _check_levels(levels)
-    cell_branches = "\n      UNION ALL ".join(
-        f"SELECT {lvl} AS lvl, {i} AS i,"
-        f" CAST({dyadic_bucket_expr(i, lvl, f'(v >> {lvl})', w)} AS INT)"
-        " AS bucket FROM dvals"
-        for lvl in range(levels + 1)
-        for i in range(d)
-    )
-    probe_rows = [
-        f"({int(x)}, {lvl}, {i}, {pre})"
-        for x in probes
-        for (lvl, pre) in dyadic_decompose(int(x), levels)
-        for i in range(d)
-    ]
-    probe_values = ", ".join(probe_rows) if probe_rows else "(-1, 0, 0, 0)"
-    all_probe_values = ", ".join(
-        f"({int(x)})" for x in sorted(set(probes))
-    ) or "(-1)"
-    bucket_case = " ".join(
-        f"WHEN i = {i} THEN ({a} * CAST(pre AS BIGINT)"
-        f" + {c} * CAST(lvl AS BIGINT) + {b})"
-        f" % {H.MINHASH_P} % {w}"
-        for i, (a, b, c) in enumerate(_DY_ABC[:d])
-    )
-    return f"""
-    dvals AS (
-      SELECT CAST({key_sql} AS BIGINT) AS v FROM {table}
-      WHERE {key_sql} IS NOT NULL
-        AND CAST({key_sql} AS BIGINT) >= 0
-        AND CAST({key_sql} AS BIGINT) < {1 << levels}),
-    dsk AS (
-      SELECT lvl, i, bucket, COUNT(*) AS cnt
-      FROM ({cell_branches})
-      GROUP BY 1, 2, 3),
-    dprobe AS (
-      SELECT probe, lvl, i, pre,
-             CAST(CASE {bucket_case} END AS INT) AS bucket
-      FROM (VALUES {probe_values}) t(probe, lvl, i, pre)),
-    dall AS (
-      SELECT * FROM (VALUES {all_probe_values}) t(probe)),
-    drank AS (
-      SELECT a.probe, CAST(COALESCE(SUM(rng), 0) AS BIGINT) AS est_rank
-      FROM dall a LEFT JOIN (
-        SELECT probe, lvl, pre,
-               MIN(COALESCE(s.cnt, 0)) AS rng
-        FROM dprobe p
-        LEFT JOIN dsk s USING (lvl, i, bucket)
-        GROUP BY 1, 2, 3) g ON g.probe = a.probe
-      GROUP BY a.probe)
-    """

@@ -43,9 +43,9 @@ def _hits(toks: str, words: tuple[str, ...]) -> str:
 
 def text_feature_exprs(text_col: str = "text") -> dict[str, str]:
     """SINGLE source of the per-doc text-feature SQL sub-expressions
-    (``toks``/``n_tokens``/``punct``/``stop_hits``/``quality``) shared
-    by ``quality_scores``, ``repetition_profile``, and
-    ``pipelines.with_curation_features`` — the round-1 punctuation
+    (``toks``/``n_tokens``/``punct``/``stop_hits``/``quality``/
+    ``dup_token_frac``) that ``pipelines.with_curation_features``
+    projects — the round-1 punctuation
     inversion survived precisely because this formula was hand-copied
     at every site and had to be found everywhere at once."""
     toks = H.spark_tokens(text_col)
@@ -84,19 +84,6 @@ def text_feature_exprs(text_col: str = "text") -> dict[str, str]:
     }
 
 
-def token_counts(documents: DataFrame) -> DataFrame:
-    """Per-doc token stats: whitespace tokens + a BPE-ish subword proxy
-    (alnum runs + punctuation singletons)."""
-    toks = H.spark_tokens("text")
-    bpe = r"regexp_extract_all(text, '([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9 \\t\\n\\f\\r])', 1)"
-    return documents.select(
-        "doc_id",
-        F.expr(f"size({toks})").cast("long").alias("n_tokens"),
-        F.expr(f"size({bpe})").cast("long").alias("n_subwords"),
-        F.length("text").cast("long").alias("n_chars_actual"),
-    )
-
-
 def text_stats_by_lang(documents: DataFrame) -> DataFrame:
     """Corpus stats per language label: doc/char/token totals (all
     integer-exact — no float aggregation)."""
@@ -115,26 +102,6 @@ def text_stats_by_lang(documents: DataFrame) -> DataFrame:
             F.sum("__nt").cast("long").alias("sum_tokens"),
             F.sum("__tc").cast("long").alias("sum_token_chars"),
         )
-    )
-
-
-def quality_scores(documents: DataFrame) -> DataFrame:
-    """Heuristic quality score in [0,1]: length saturation, low
-    punctuation density, stopword presence (fluency proxy).  Fixed
-    expression tree of per-row double ops — deterministic cross-engine."""
-    e = text_feature_exprs()
-    return documents.select(
-        "doc_id",
-        F.expr(e["n_tokens"]).cast("long").alias("n_tokens"),
-        # try_divide: NULL on empty/zero-token text, matching DuckDB's
-        # x/0 (ANSI '/' errors — round-6 NULL-bearing-corpus audit)
-        F.expr(
-            f"try_divide(CAST({e['punct']} AS DOUBLE), char_length(text))"
-        ).alias("punct_ratio"),
-        F.expr(
-            f"try_divide(CAST({e['stop_hits']} AS DOUBLE), {e['n_tokens']})"
-        ).alias("stopword_ratio"),
-        F.expr(e["quality"]).alias("quality"),
     )
 
 
@@ -323,106 +290,6 @@ def doc_profile(documents: DataFrame) -> DataFrame:
     )
 
 
-def repetition_profile(documents: DataFrame) -> DataFrame:
-    """Per-document repetition metrics in the style of the Gopher/
-    MassiveText quality rules (Rae et al. 2021, table A1): heavily
-    repetitive documents (boilerplate, keyword stuffing, generation
-    loops) are low-value training data even when their token counts and
-    punctuation look fine, so repetition is its own filter axis.
-
-    * ``n_tokens``          — total tokens;
-    * ``dup_token_frac``    — 1 − distinct/total tokens (the fraction
-                              of the doc that is repeats of earlier
-                              words); 0.0 for empty docs;
-    * ``top_bigram``        — the most frequent token bigram
-                              (lexicographically smallest on count
-                              ties; NULL when < 2 tokens);
-    * ``top_bigram_frac``   — that bigram's share of all bigrams (the
-                              'most common 2-gram mass' rule).
-
-    Shapes: token/distinct counts are one codegen projection; the
-    bigram mode needs a per-(doc, bigram) count — explode + two
-    aggregations, both map-side-combinable, partitioned by doc_id
-    (never global).  All counts are exact integers; the one division
-    per metric is a deterministic double op, so the operator carries a
-    DuckDB-parity test."""
-    from mapreduce_framework_for_mergesort_spark.operators.materialize import (
-        materialize,
-    )
-
-    e = text_feature_exprs()
-    toks = e["toks"]
-    base = documents.select(
-        "doc_id",
-        F.expr(f"size({toks})").alias("n_tokens"),
-        # bigram count derived arithmetically so the final projection
-        # never touches the array — carrying __bigrams through the join
-        # below would shuffle a corpus-sized payload just for size()
-        F.expr(f"greatest(size({toks}) - 1, 0)").alias("n_bigrams"),
-        F.expr(e["dup_token_frac"]).alias("dup_token_frac"),
-        # let-bound: the tokenizer runs ONCE per doc — referenced bare
-        # inside the transform lambda it would re-run per bigram,
-        # turning the projection O(n_tokens²) in regex evals (the trap
-        # functions/hashing.let documents)
-        F.expr(
-            H.let(
-                toks,
-                "ts",
-                "CASE WHEN size(ts) >= 2 THEN "
-                "transform(sequence(1, size(ts) - 1), "
-                "i -> concat_ws(' ', element_at(ts, i), "
-                "element_at(ts, i + 1))) "
-                "ELSE CAST(array() AS ARRAY<STRING>) END",
-            )
-        ).alias("__bigrams"),
-    )
-    # base feeds BOTH the bigram-counts branch and the final join —
-    # un-materialized, the tokenize+bigram projection (the operator's
-    # dominant per-row cost) would re-execute over the whole corpus
-    # for each branch (round-4+ review; same pattern as
-    # lsh_candidate_pairs' band-index materialization).  The stored
-    # blocks do carry the __bigrams arrays (~2 strings per token) —
-    # a deliberate storage-for-compute trade; they are still never
-    # SHUFFLED (the join below reads the dropped-column projection)
-    base = materialize(base)
-    counts = (
-        base.select(
-            "doc_id", F.explode("__bigrams").alias("bigram")
-        )
-        .groupBy("doc_id", "bigram")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("cnt").desc(), F.col("bigram")
-    )
-    top = (
-        counts.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .select(
-            "doc_id",
-            F.col("bigram").alias("top_bigram"),
-            F.col("cnt").alias("__top_cnt"),
-        )
-    )
-    return (
-        base.drop("__bigrams")
-        .join(top, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_tokens",
-            "dup_token_frac",
-            "top_bigram",
-            F.expr(
-                "CASE WHEN n_bigrams > 0 THEN "
-                "CAST(__top_cnt AS DOUBLE) / n_bigrams "
-                "ELSE CAST(0 AS DOUBLE) END"
-            ).alias("top_bigram_frac"),
-        )
-    )
-
-
 CHUNK_TOKENS = 128
 CHUNK_OVERLAP = 32
 
@@ -450,7 +317,8 @@ def chunk_documents(
     (``ceil`` spelled as ``(x + stride − 1) div stride`` on values
     clamped ≥ 0, because Spark's ``div`` truncates while DuckDB's
     ``//`` floors — they only agree without negatives), so
-    ``duckdb_chunk_sql`` replicates it exactly.
+    the DuckDB oracle (``tests/references.duckdb_chunk_sql``)
+    replicates it exactly.
     """
     if overlap_tokens < 0 or chunk_tokens <= overlap_tokens:
         raise ValueError(
@@ -490,36 +358,6 @@ def chunk_documents(
         F.col("__c.chunk_text").alias("chunk_text"),
         F.col("__c.n_chunk_tokens").cast("long").alias("n_chunk_tokens"),
     )
-
-
-def duckdb_chunk_sql(
-    table: str = "documents",
-    chunk_tokens: int = CHUNK_TOKENS,
-    overlap_tokens: int = CHUNK_OVERLAP,
-) -> str:
-    """Oracle replica of ``chunk_documents`` (same clamped integer
-    ceil, same 1-based slices — DuckDB ``list_slice`` takes an
-    inclusive END where Spark ``slice`` takes a LENGTH)."""
-    if overlap_tokens < 0 or chunk_tokens <= overlap_tokens:
-        raise ValueError("need 0 <= overlap < chunk")
-    stride = chunk_tokens - overlap_tokens
-    return f"""
-    SELECT doc_id,
-           CAST(i - 1 AS BIGINT) AS chunk_idx,
-           array_to_string(
-             list_slice(ts, (i - 1) * {stride} + 1,
-                        (i - 1) * {stride} + {chunk_tokens}), ' ')
-             AS chunk_text,
-           CAST(least({chunk_tokens}, len(ts) - (i - 1) * {stride})
-                AS BIGINT) AS n_chunk_tokens
-    FROM (
-      SELECT doc_id, ts,
-             unnest(range(1, 1 + CASE WHEN len(ts) = 0 THEN 0
-                          ELSE 1 + (greatest(len(ts) - {chunk_tokens}, 0)
-                                    + {stride - 1}) // {stride} END)) AS i
-      FROM (SELECT doc_id, {H.duckdb_tokens('text')} AS ts FROM {table})
-    )
-    """
 
 
 def tfidf_top_terms(documents: DataFrame, top_n: int = 3) -> DataFrame:
@@ -959,22 +797,3 @@ def redact_pii(
         for _ in range(passes):
             out = F.regexp_replace(out, gpat, grepl)
     return documents.withColumn(col, out)
-
-
-def duckdb_redact_sql(col: str = "text", aggressive: bool = False) -> str:
-    """The oracle half of ``redact_pii``: the identical chain of
-    replaces as a DuckDB expression (RE2 runs the same guarded
-    patterns; only the replacement backref syntax differs, ``$n`` →
-    ``\\n``).  Pinned equal to the Spark operator row-for-row in
-    tests, which is what makes the 'exactly oracle-able' claim real."""
-    out = col
-    pats = PII_PATTERNS + (
-        PII_AGGRESSIVE_PATTERNS if aggressive else ()
-    )
-    for pat, repl in pats:
-        gpat, grepl = _guarded(pat, repl)
-        passes = 1 if (gpat, grepl) == (pat, repl) else 2
-        grepl = grepl.replace("$1", r"\1").replace("$3", r"\3")
-        for _ in range(passes):
-            out = f"regexp_replace({out}, '{gpat}', '{grepl}', 'g')"
-    return out

@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-OPS = ("I", "U", "D")
-
 
 def apply_cdc(
     base: DataFrame,

@@ -40,8 +40,8 @@ RFC 3986 §6 plus the crawl-standard tracking-param strip):
 a pinned snapshot of the Mozilla Public Suffix List shipped as package
 data (round 11 — the round-10 two/three-label heuristic applied site
 policy at the wrong grain for ``github.io``-class suffixes; see
-``operators/psl.py`` for the algorithm, the snapshot's abridgement
-note, and the broadcast-join strategy for full-list deployments).  The
+``operators/psl.py`` for the algorithm and the snapshot's abridgement
+note).  The
 rule table rides inside the plan as literal membership strings, so the
 URL family keeps its zero-Python / zero-shuffle codegen property.
 
@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 #: Query params that identify the *referral*, not the page.  The
 #: crawl-standard strip set; extend per deployment.
 TRACKING_PARAMS_RE = r"^(utm_[^=]*|fbclid|gclid|ref)(=|$)"
-
 
 
 def url_scheme(url: Column) -> Column:
@@ -327,7 +326,7 @@ def url_family_arrow(url: Column, rfc_url: Column) -> Column:
     columns (and removing the per-row regexp battery + PSL map lookups)
     measured 1.91 → 0.94 s over 150 K rows at sf0.1, equality
     hard-gated at 0 mismatching rows.  The codegen operators
-    (``normalize_url``, ``with_url_columns``, ``dedup_by_url``) are
+    (``normalize_url``, ``registrable_domain``, ``dedup_by_url``) are
     untouched — their zero-Python plan pins stand."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -417,11 +416,11 @@ def normalize_url(url: Column) -> Column:
 
 def registrable_domain(host: Column, rules=None) -> Column:
     """Site-grain key: public suffix + one label under the packaged
-    PSL snapshot (or any ``psl.PslRules`` passed in — production loads
-    the full list with ``psl.load_psl_rules(path)``).  Hosts that ARE
-    a public suffix, single labels (``localhost``), and IP literals
-    pass through unchanged.  Pure codegen; see ``operators/psl.py``
-    for the algorithm and the full-list broadcast-join variant."""
+    PSL snapshot (or any ``psl.PslRules`` passed in, e.g. the full list
+    parsed by ``psl.load_psl_rules(path)``).  Hosts that ARE a public
+    suffix, single labels (``localhost``), and IP literals pass through
+    unchanged.  Pure codegen; see ``operators/psl.py`` for the
+    algorithm."""
     from .psl import registrable_domain_expr
 
     return registrable_domain_expr(host, rules)
@@ -432,22 +431,6 @@ def registrable_domain(host: Column, rules=None) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def with_url_columns(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Append ``url_norm``, ``url_host``, ``url_domain``, ``url_path``
-    to a crawl-record or document DataFrame — one projection, pushed
-    into the same codegen stage as the scan."""
-    u = F.col(url_col)
-    host = url_host(u)
-    return df.withColumns(
-        {
-            "url_norm": normalize_url(u),
-            "url_host": host,
-            "url_domain": registrable_domain(host),
-            "url_path": url_path(u),
-        }
-    )
-
-
 def dedup_by_url(
     df: DataFrame, url_col: str = "url", order_col: str | None = None
 ) -> DataFrame:
@@ -455,9 +438,8 @@ def dedup_by_url(
     that runs before content-level near-dedup — recrawls and tracking
     variants collapse here for the cost of one hash aggregation).
     Survivor is deterministic: the row whose ``order_col`` (or the raw
-    url string when None) is minimal.  Exactly the
-    ``dedup.dedup_exact`` shape, keyed on ``normalize_url`` instead of
-    content hash — one shuffle on the canonical url."""
+    url string when None) is minimal; one shuffle on the canonical
+    url."""
     key = normalize_url(F.col(url_col)).alias("__uk")
     order = F.col(order_col) if order_col else F.col(url_col)
     w = Window.partitionBy("__uk").orderBy(order, F.col(url_col))

@@ -31,8 +31,6 @@ from pyspark.sql import functions as F
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 from mapreduce_framework_for_mergesort_spark.operators import sampling
 from mapreduce_framework_for_mergesort_spark.operators.text import (
-    LANG_STOPWORDS,
-    _hits,
     text_feature_exprs,
 )
 
@@ -94,8 +92,6 @@ def curate_documents(
     split_epoch: int | None = None,
     url_col: str | None = None,
     max_pages_per_domain: int | None = None,
-    quality_model: dict | None = None,
-    model_threshold: float = 0.5,
 ) -> DataFrame:
     """The full curation pipeline → surviving documents with a ``split``
     column (original columns preserved; features dropped after the
@@ -189,15 +185,6 @@ def curate_documents(
     page budget at registrable-domain grain, before content-level
     near-dedup ever sees the farm's pages.
 
-    ``quality_model`` (optional, round 10) adds the TRAINED filter
-    next to the heuristic one: a ``classifier.train_logreg`` model
-    scores every redacted document (map-only hashing-trick projection,
-    ``classifier.quality_filter_by_model``) and rows under
-    ``model_threshold`` drop alongside the heuristic quality/language
-    filter.  It runs after redaction AND after ``strip_spans`` (score
-    the text that actually ships — the strip rewrites it) and before
-    dedup (same reasoning as ``benchmark``).
-
     Redaction runs FIRST among the content stages (before features and
     dedup) so documents that differ only in embedded PII become exact
     duplicates and collapse, and no PII influences quality/language
@@ -244,16 +231,6 @@ def curate_documents(
             .withColumnRenamed("stripped_text", "text")
             .where(F.col("text") != "")
         )
-    if quality_model is not None:
-        # after strip_spans, deliberately: the model must score the
-        # text that actually ships, and the rewrite changes it
-        from mapreduce_framework_for_mergesort_spark.operators import (
-            classifier as _clf,
-        )
-
-        documents = _clf.quality_filter_by_model(
-            documents, quality_model, threshold=model_threshold
-        )
     want_rep = max_dup_token_frac is not None
     keep = (F.col("quality") >= min_quality) & F.col("pred_lang").isin(
         *langs
@@ -261,8 +238,8 @@ def curate_documents(
     if want_rep:
         # Gopher-style repetition ceiling: heavily repetitive docs
         # (boilerplate, generation loops) are filtered in the SAME
-        # one-scan projection — dup_token_frac shares its definition
-        # with operators/text.repetition_profile (text_feature_exprs)
+        # one-scan projection (dup_token_frac is defined once, in
+        # operators/text.text_feature_exprs)
         keep = keep & (F.col("dup_token_frac") <= max_dup_token_frac)
     feat = with_curation_features(documents, with_repetition=want_rep)
     kept = feat.where(keep).drop(

@@ -469,7 +469,7 @@ NUM_CELLS = 8
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-cell-blocked embedding near-dup pairs: same-cell exact cosine
     ≥ τ.  The cells are TRAINED (integer k-means, round 3 — see
-    ``operators/similarity.kmeans_centroids``) yet the whole pipeline
+    ``operators/similarity._trained_cents``) yet the whole pipeline
     stays value-exact: training, assignment, and scoring are all
     replicated in the oracle's CTE chain."""
     return D.embedding_near_dup_pairs(

@@ -48,24 +48,6 @@ BAL_CAP = 500  # per-stratum cap in the balanced-sample audit: binds at
 _view_seq = itertools.count()
 
 
-def _long(df: DataFrame, grp_col, pairs) -> DataFrame:
-    """Project an aggregate into (metric, grp, value) rows via ONE
-    explode — not a union of per-metric selects, which would re-evaluate
-    the source aggregate (and re-scan its input) once per metric."""
-    kvs = F.array(
-        *[
-            F.struct(
-                F.lit(metric).alias("metric"),
-                col.cast("double").alias("value"),
-            )
-            for metric, col in pairs
-        ]
-    )
-    return df.select(
-        grp_col.cast("string").alias("grp"), F.explode(kvs).alias("kv")
-    ).select(F.col("kv.metric").alias("metric"), "grp", F.col("kv.value").alias("value"))
-
-
 @query(
     "q_profile_stats",
     oracle="""
@@ -401,8 +383,8 @@ _CORR = (
 # py4j round trip instead of ~4k: the DataFrame construction itself
 # was ~2 s of driver-side API chatter at bench time, pure overhead at
 # any scale.  Each multi-metric branch keeps the explode-over-struct-
-# array shape (_long's rationale: a UNION of per-metric selects would
-# re-evaluate the source aggregate per metric); the sketch CTEs
+# array shape (a UNION of per-metric selects would re-evaluate the
+# source aggregate per metric); the sketch CTEs
 # (truth/kmv/cms) read the MATERIALIZED grouping-sets view, so their
 # repeated references recompute only grain-sized checkpointed data,
 # never an orders scan.

@@ -154,10 +154,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact streaming dedup (``dropDuplicates`` state: one row per
     distinct key).  Keyed on the bounded (user, type) space so the result
     — the distinct pairs — is processing-order-independent and exactly
-    matches the batch DISTINCT oracle.  The watermark-bounded variant for
-    unbounded key spaces is ``dedup_stream_within_watermark`` (tested
-    rows-only in tests/test_streaming.py — its keep-first semantics are
-    inherently arrival-order-dependent)."""
+    matches the batch DISTINCT oracle."""
     with _sized_state(spark, sf_dir):
         stream = dedup_stream(
             stream_events(spark, sf_dir), ["user_id", "event_type"]

@@ -65,7 +65,11 @@ _BASE_CONF: dict[str, str] = {
     # (Server.java:194-224) minus the 3x duplicate work: clones launch only
     # for stragglers past the quantile, first finisher wins.
     "spark.speculation": "false",  # enabled in dedicated FT tests
-    "spark.task.maxFailures": "4",  # reactive retry (Server.java:183-188)
+    # Reactive retry (Server.java:183-188) under a cluster master or the
+    # ``local[N, F]`` form only: the default ``local[N]`` master fixes
+    # task failures at 1 whatever this says, so a failed task there
+    # aborts its job (tests/test_fault_tolerance.py boots local[N, F]).
+    "spark.task.maxFailures": "4",
 }
 
 

@@ -29,8 +29,8 @@ So this module implements the container layer for real:
   (``twos`` big-endian / ``sowt`` little-endian PCM16), producing the
   same 8-feature contract as ``multimodal.decode_wav``; compressed
   codecs raise ``NotImplementedError`` naming the fourcc.
-* ``mp4_chunk_spans`` / frame extraction — temporal units resolved
-  from the sample table, each re-encodable as a standalone mp4.
+* frame extraction — temporal units resolved from the sample table,
+  each re-encodable as a standalone mp4.
 * ``parse_mp3`` — MPEG audio frame-sync walk with the spec bitrate /
   samplerate tables (MPEG-1 layers I-III), padding arithmetic, ID3v2
   header skip (synchsafe sizes) and ID3v1 trailer detection.  Frame
@@ -53,7 +53,7 @@ adds on top (multimodal columns: decode / feature-extract /
 frame-sample with real Spark plumbing).
 
 Scale notes: parsers run per-payload inside Arrow batches
-(``mapInPandas`` in ``describe_containers``), never on the driver; the
+(``mapInPandas``), never on the driver; the
 metadata they emit is fixed-width, so the payload column can be
 projected away immediately after the parse — the same
 "never shuffle decoded output together with raw bytes" rule as the
@@ -117,8 +117,8 @@ def synthesize_mp4(data: bytes) -> bytes:
     ``mdat`` precedes ``moov`` so chunk offsets are independent of the
     moov size (the closed-form the SQL oracle needs).
 
-    Byte size is exactly ``mp4_n_bytes(len(data))`` (pinned in
-    tests)."""
+    Byte size is a closed form of ``len(data)``
+    (``tests/references.mp4_n_bytes``, pinned in tests)."""
     return _encode_mp4_pcm(
         [(b - 128) * 256 for b in data], MP4_TIMESCALE
     )
@@ -230,19 +230,6 @@ def _audio_moov(rate: int, duration: int, stbl: bytes,
     return _box(b"moov", mvhd + trak + mvex)
 
 
-def mp4_n_bytes(n: int) -> int:
-    """Closed-form byte size of ``synthesize_mp4`` for ``n`` source
-    bytes — the formula the SQL oracle mirrors (every term is one
-    sample-table entry): 2 bytes of PCM per sample, 4 per chunk offset,
-    one 8-byte stts run and 12-byte stsc runs when non-empty, plus the
-    fixed box skeleton ``MP4_EMPTY``."""
-    if n == 0:
-        return MP4_EMPTY
-    n_chunks = -(-n // MP4_SAMPLES_PER_CHUNK)
-    stsc_runs = 2 if n_chunks > 1 and n % MP4_SAMPLES_PER_CHUNK else 1
-    return MP4_EMPTY + 2 * n + 8 + 12 * stsc_runs + 4 * n_chunks
-
-
 #: Constant per-fragment overhead of ``synthesize_fmp4``:
 #: moof(8) + mfhd(16) + traf(8) + tfhd(16) + tfdt(20) + trun(20)
 #: + the mdat header(8).  Pinned against real lengths in tests.
@@ -263,7 +250,8 @@ def synthesize_fmp4(data: bytes) -> bytes:
     PCM to the WAV/mp4 fixtures — which is what lets the SQL oracle
     share the audio branch's feature closed form.
 
-    Byte size is exactly ``fmp4_n_bytes(len(data))``."""
+    Byte size is a closed form of ``len(data)``
+    (``tests/references.fmp4_n_bytes``)."""
     rate = MP4_TIMESCALE
     n = len(data)
     pcm = [(bb - 128) * 256 for bb in data]
@@ -303,17 +291,6 @@ def synthesize_fmp4(data: bytes) -> bytes:
         parts += [moof, mdat]
         t0 += len(chunk)
     return b"".join(parts)
-
-
-def fmp4_n_bytes(n: int) -> int:
-    """Closed-form byte size of ``synthesize_fmp4`` for ``n`` source
-    bytes — the formula the SQL oracle mirrors: the fixed
-    ftyp+moov(+mvex) skeleton, then per fragment a constant 96-byte
-    moof+mdat-header overhead plus 2 bytes of PCM per sample."""
-    if n == 0:
-        return FMP4_EMPTY
-    n_frags = -(-n // MP4_SAMPLES_PER_CHUNK)
-    return FMP4_EMPTY + FMP4_FRAGMENT_OVERHEAD * n_frags + 2 * n
 
 
 class Mp4Track:
@@ -856,14 +833,14 @@ def _pcm16_track_samples(payload: bytes) -> tuple[Mp4Track, tuple[int, ...]]:
     and resample each carried a copy; a validation fixed in one would
     silently miss the other).  Compressed codecs raise
     NotImplementedError naming the fourcc — the honest codec-library
-    seam; the CONTAINER parse stays real for them
-    (``parse_mp4``/``describe_containers`` work on any codec)."""
+    seam; the CONTAINER parse stays real for them (``parse_mp4``
+    works on any codec)."""
     t = _first_audio_track(parse_mp4(payload))
     if t.codec not in _PCM16_FOURCC:
         raise NotImplementedError(
             f"mp4 codec {t.codec!r} requires codec libraries not present "
             "in this environment (container metadata and frame spans are "
-            "still available via parse_mp4/describe_containers)"
+            "still available via parse_mp4)"
         )
     if t.sample_bits != 16 or t.channels != 1:
         raise ValueError(
@@ -910,14 +887,6 @@ def decode_mp4(payload: bytes) -> list[float]:
     ]
 
 
-def mp4_chunk_spans(payload: bytes) -> list[tuple[int, int]]:
-    """Temporal units of the first audio track: one ``(offset,
-    n_bytes)`` per CHUNK, resolved from the stsc/stco structure (not
-    byte adjacency — see ``_resolve_spans``) — the real "extract frame
-    N" operation.  Works for ANY codec (spans are container-level)."""
-    return _first_audio_track(parse_mp4(payload)).chunks
-
-
 def mp4_frames(payload: bytes) -> list[bytes]:
     """Chunk-level frame extraction, each unit RE-ENCODED as a
     standalone decodable mp4 at the SOURCE track's rate, PCM-exact
@@ -926,13 +895,13 @@ def mp4_frames(payload: bytes) -> list[bytes]:
     round-9 review — re-encoding through ``_encode_mp4_pcm`` rather
     than the byte domain keeps samples that are not multiples of 256
     bit-exact).  Only meaningful for the PCM codecs the re-encoder
-    speaks; compressed codecs raise NotImplementedError (use
-    ``mp4_chunk_spans`` for raw span access)."""
+    speaks; compressed codecs raise NotImplementedError (``parse_mp4``
+    still yields the raw sample spans)."""
     t = _first_audio_track(parse_mp4(payload))
     if t.codec not in _PCM16_FOURCC:
         raise NotImplementedError(
             f"standalone re-encode of mp4 codec {t.codec!r} requires "
-            "codec libraries; mp4_chunk_spans still yields raw spans"
+            "codec libraries; parse_mp4 still yields raw spans"
         )
     fmt = _PCM16_FOURCC[t.codec]
     out = []
@@ -944,35 +913,6 @@ def mp4_frames(payload: bytes) -> list[bytes]:
         vals = struct.unpack(f"{fmt}{sz // 2}h", payload[off : off + sz])
         out.append(_encode_mp4_pcm(list(vals), t.timescale or MP4_TIMESCALE))
     return out
-
-
-def _pick_nearest(pcm: list[int], in_rate: int, out_rate: int) -> list[int]:
-    """Nearest-sample rational resample: output j takes input
-    ``(j·in_rate) // out_rate`` — the audio analog of the image verbs'
-    nearest-neighbor resize, all-integer so SQL oracles and tests can
-    recompute every output sample exactly (a windowed-sinc resampler
-    would be the codec-library seam's job).  ``n_out =
-    (n·out_rate) // in_rate`` keeps duration within one sample."""
-    if in_rate <= 0 or out_rate <= 0:
-        raise ValueError(f"invalid rates {in_rate} -> {out_rate}")
-    n_out = (len(pcm) * out_rate) // in_rate
-    return [pcm[(j * in_rate) // out_rate] for j in range(n_out)]
-
-
-def resample_mp4(payload: bytes, out_rate: int) -> bytes:
-    """REAL audio resample for uncompressed-PCM mp4 tracks: decode
-    through the sample table, nearest-sample resample to ``out_rate``,
-    re-encode as a standalone ``twos`` mp4 at the new rate (PCM-exact
-    on the retained samples).  The audio analog of ``resize_bmp`` /
-    ``resize_y4m`` — output duration-in-seconds is preserved within
-    one sample while the sample count normalizes, which is what makes
-    downstream training batches rectangular.  Compressed codecs raise
-    NotImplementedError (codec seam)."""
-    t, samples = _pcm16_track_samples(payload)
-    in_rate = t.timescale or MP4_TIMESCALE
-    return _encode_mp4_pcm(
-        _pick_nearest(list(samples), in_rate, out_rate), out_rate
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -996,8 +936,6 @@ _MP3_SAMPLES_PER_FRAME = {1: 384, 2: 1152, 3: 1152}
 #: SQL oracle's size formula has no per-frame conditional.
 MP3_FRAME_LEN = 288
 MP3_FRAME_PAYLOAD = MP3_FRAME_LEN - 4
-MP3_SAMPLERATE = 32000
-MP3_SAMPLES_PER_FRAME = 1152
 _MP3_SYNTH_HEADER = bytes([0xFF, 0xFB, 0x58, 0xC4])
 
 #: Fixed ID3v2.4 tag the synthesizer prepends (10-byte header + 22
@@ -1019,9 +957,9 @@ def synthesize_mp3(data: bytes) -> bytes:
     4-byte headers are spec-valid (sync/version/layer/bitrate/
     samplerate) and whose payload region carries the source bytes
     (zero-padded tail).  The payload is FRAMING-real but not
-    Layer-III-entropy-real — exactly the layer this module implements;
-    ``decode_mp3`` stays the loud codec seam, and the parser works
-    identically on real mp3 files."""
+    Layer-III-entropy-real — exactly the layer this module implements
+    (``sources/layer3.py`` decodes the spectral layer), and the parser
+    works identically on real mp3 files."""
     n = len(data)
     n_frames = -(-n // MP3_FRAME_PAYLOAD)
     tag = b"ID3\x04\x00\x00" + _synchsafe(_ID3_BODY_LEN) + b"\x00" * _ID3_BODY_LEN
@@ -1032,12 +970,6 @@ def synthesize_mp3(data: bytes) -> bytes:
             _MP3_SYNTH_HEADER + chunk.ljust(MP3_FRAME_PAYLOAD, b"\x00")
         )
     return tag + b"".join(frames)
-
-
-def mp3_n_bytes(n: int) -> int:
-    """Closed-form byte size of ``synthesize_mp3`` for ``n`` source
-    bytes — mirrored by the SQL oracle."""
-    return MP3_ID3_LEN + MP3_FRAME_LEN * (-(-n // MP3_FRAME_PAYLOAD))
 
 
 def _id3v2_len(payload: bytes) -> int:
@@ -1159,34 +1091,9 @@ def mp3_frames(payload: bytes) -> list[bytes]:
     return [payload[o : o + ln] for o, ln in parsed["frames"]]
 
 
-def decode_mp3(payload: bytes) -> list[float]:
-    """The honest codec seam, NARROWED in round 11: the spectral
-    layers (side info, count1 Huffman table B, requantization, alias
-    reduction, IMDCT to subband samples) are implemented for real in
-    ``sources/layer3.py`` over its documented profile; what still
-    needs absent spec DATA is the big-values Huffman tables, the
-    scalefactor band widths, and the 512-coefficient polyphase window
-    — so full general-input PCM remains this loud error.  The
-    CONTAINER layer — ``parse_mp3``/``mp3_frames`` — is implemented
-    above and real."""
-    raise NotImplementedError(
-        "general mp3 PCM decode requires spec data tables not present "
-        "in this environment (spectral/profile decode: "
-        "sources/layer3.py; frame metadata and spans: "
-        "parse_mp3/describe_containers)"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Spark plumbing
 # ---------------------------------------------------------------------------
-
-CONTAINER_META_SCHEMA = (
-    "doc_id bigint, modality string, n_bytes bigint, n_units bigint, "
-    "first_unit_bytes bigint, first_unit_value bigint, "
-    "duration_ticks bigint, timescale bigint, codec string"
-)
-
 
 def binarize_mp4_documents(documents: DataFrame) -> DataFrame:
     """Documents table → mp4-modality binary table (same shape contract
@@ -1344,122 +1251,6 @@ def audit_payload_parses(binarized: DataFrame) -> DataFrame:
             yield out
 
     return binarized.mapInPandas(audit, PARSE_AUDIT_SCHEMA)
-
-
-def resample_audio_payloads(binarized: DataFrame, out_rate: int) -> DataFrame:
-    """The audio-modality resample seam, FOR REAL (round 9 — the
-    resize verb's audio analog, completing the verb across modalities:
-    images/video had real resizes since rounds 4–7, audio only had the
-    text stand-in): every ``audio`` (WAV) or ``mp4`` payload is
-    rate-normalized to ``out_rate`` via the all-integer nearest-sample
-    pick and re-encoded through the same writers as synthesis, so
-    outputs stay decodable containers at the new rate.  Same
-    mapInPandas shape as ``multimodal.resize_image_payloads``;
-    metadata recomputed in the same pass so it can never drift."""
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        MODALITY_SCHEMA,
-        resample_wav,
-    )
-
-    def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized, modality_out = [], []
-            for p, m in zip(pdf["payload"], pdf["modality"]):
-                p = bytes(p)
-                if m == "audio":
-                    resized.append(resample_wav(p, out_rate))
-                elif m in ("mp4", "fmp4"):
-                    # span resolution is layout-agnostic; the re-encode
-                    # emits the progressive layout, so a fragmented
-                    # input is honestly relabeled 'mp4' on the way out
-                    resized.append(resample_mp4(p, out_rate))
-                    m = "mp4"
-                else:
-                    raise ValueError(
-                        f"resample_audio_payloads got modality {m!r}"
-                    )
-                modality_out.append(m)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": modality_out,
-                    "payload": resized,
-                    "meta_mime": pdf["meta_mime"],
-                    "meta_n_bytes": [len(p) for p in resized],
-                }
-            )
-
-    return binarized.mapInPandas(rz, MODALITY_SCHEMA)
-
-
-def describe_containers(binarized: DataFrame) -> DataFrame:
-    """Container-metadata extraction over a binary modality table —
-    the 100 TB curation operation these parsers exist for: one Arrow
-    batch pass, raw payloads projected away in the same pass (only
-    fixed-width metadata survives to shuffle).  mp4 rows resolve the
-    full sample table (n_units = samples, first_unit = first CHUNK,
-    first_unit_value = first decoded PCM sample for PCM codecs, else
-    0); mp3 rows walk the frame syncs (n_units = frames,
-    first_unit_value = first payload byte of frame 0)."""
-
-    def meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k.split()[0]: [] for k in
-                                    CONTAINER_META_SCHEMA.split(", ")}
-            for doc_id, modality, payload in zip(
-                pdf["doc_id"], pdf["modality"], pdf["payload"]
-            ):
-                payload = bytes(payload)
-                if modality in ("mp4", "fmp4"):
-                    parsed = parse_mp4(payload)
-                    t = _first_audio_track(parsed)
-                    chunks = t.chunks
-                    if t.codec in _PCM16_FOURCC and t.spans:
-                        o, s = t.spans[0]
-                        (v0,) = struct.unpack(
-                            f"{_PCM16_FOURCC[t.codec]}h", payload[o : o + 2]
-                        )
-                    else:
-                        v0 = 0
-                    row = (
-                        t.n_samples,
-                        chunks[0][1] if chunks else 0,
-                        v0,
-                        t.duration,
-                        t.timescale,
-                        t.codec,
-                    )
-                elif modality == "mp3":
-                    parsed = parse_mp3(payload)
-                    fr = parsed["frames"]
-                    row = (
-                        len(fr),
-                        fr[0][1] if fr else 0,
-                        payload[fr[0][0] + 4] if fr else 0,
-                        # the walk's per-frame sum — rederiving as
-                        # n_frames x first frame's constant diverges
-                        # on mixed-layer streams (round-9 review)
-                        parsed["total_samples"],
-                        parsed["samplerate"] or MP3_SAMPLERATE,
-                        "mp3",
-                    )
-                else:
-                    raise ValueError(
-                        f"describe_containers: unsupported modality "
-                        f"{modality!r}"
-                    )
-                out["doc_id"].append(doc_id)
-                out["modality"].append(modality)
-                out["n_bytes"].append(len(payload))
-                for k, v in zip(
-                    ("n_units", "first_unit_bytes", "first_unit_value",
-                     "duration_ticks", "timescale", "codec"),
-                    row,
-                ):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return binarized.mapInPandas(meta, CONTAINER_META_SCHEMA)
 
 
 #: Fixed skeleton size: every box except the per-sample tables.

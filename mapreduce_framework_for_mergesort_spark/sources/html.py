@@ -272,7 +272,7 @@ def synthesize_http_response(
     optional content-coding (stored deflate with closed-form sizes;
     br/zstd via the Arrow codecs — round 11 closed that seam), then
     optional chunked transfer-coding — the RFC 9112 composition order
-    ``http_response_body`` must invert."""
+    ``warc._decode_http_body`` must invert."""
     if content_encoding in ("gzip", "x-gzip"):
         body = W._gzip_member_stored(body)
     elif content_encoding == "deflate":

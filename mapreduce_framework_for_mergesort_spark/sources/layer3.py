@@ -4,7 +4,7 @@ spec publishes but this offline build cannot reproduce".
 
 Round 9/10 implemented the mp3 CONTAINER layer for real
 (``sources/containers.py parse_mp3``: frame-sync walk, bitrate/
-samplerate tables, ID3v2) and left ``decode_mp3`` a loud
+samplerate tables, ID3v2) and left PCM decode a loud
 NotImplementedError.  This module implements the CODEC layers that are
 ARITHMETIC in ISO/IEC 11172-3:
 

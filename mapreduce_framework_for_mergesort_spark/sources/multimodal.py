@@ -14,7 +14,7 @@ covering 1/3-component frames, sampling factors up to 2x2 (4:4:4 and
 4:2:0), restart intervals, and multi-scan progressive coefficient
 accumulation (spectral selection + successive approximation, round 9),
 plus closed-form flat-block encoders, see the JPEG section comments —
-and YUV4MPEG2 grayscale video) across synthesize/decode/resize/frame
+and YUV4MPEG2 grayscale video) across synthesize/decode/frame
 verbs.  MP4 and MP3 are parsed at the CONTAINER layer for real
 (round 9, ``sources/containers.py``: ISO-BMFF box walk + sample-table
 span resolution; MPEG frame-sync walk + ID3 handling) — decode is real
@@ -116,8 +116,8 @@ def synthesize_wav(data: bytes, rate: int = AUDIO_RATE) -> bytes:
 
 
 def _wav_pcm16(payload: bytes) -> tuple[int, tuple[int, ...]]:
-    """The ONE RIFF parse → (rate, PCM16 samples) path, shared by
-    decode and resample (round-9 review: each carried a copy of the
+    """The ONE RIFF parse → (rate, PCM16 samples) path (round-9
+    review: decode and a resampler each carried a copy of the
     width/channel/truncation validation; a fix to one would silently
     miss the other).  Same loud-ValueError contract as the BMP/Y4M
     parsers, so a caller routing malformed payloads to quarantine on
@@ -169,41 +169,13 @@ def decode_wav(payload: bytes) -> list[float]:
     ]
 
 
-def resample_wav(payload: bytes, out_rate: int) -> bytes:
-    """REAL audio resample for the WAV modality (round 9): parse the
-    RIFF container, nearest-sample resample to ``out_rate`` (the
-    all-integer pick ``containers._pick_nearest`` — the audio analog
-    of the image verbs' nearest-neighbor resize), re-encode through
-    the same stdlib ``wave`` writer as synthesis so the output stays
-    a decodable PCM16 mono WAV at the new rate.  Retained samples are
-    bit-exact; rate normalization is what makes downstream audio
-    batches rectangular."""
-    import io
-    import struct
-    import wave
-
-    from mapreduce_framework_for_mergesort_spark.sources.containers import (
-        _pick_nearest,
-    )
-
-    in_rate, samples = _wav_pcm16(payload)
-    picked = _pick_nearest(list(samples), in_rate, out_rate)
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(out_rate)
-        w.writeframes(struct.pack(f"<{len(picked)}h", *picked))
-    return buf.getvalue()
-
-
 IMG_WIDTH = 16  # 16 px × 3 bytes = 48-byte rows: already 4-aligned, no pad
 IMG_HEADER = 54  # BITMAPFILEHEADER (14) + BITMAPINFOHEADER (40)
 
 
 def _encode_bmp(px: list[int], width: int, h: int) -> bytes:
-    """The ONE BMP encoder (shared by synthesis and resize so header
-    constants and row layout can never drift): logical top-down
+    """The ONE BMP encoder (synthesis and frame tiling share it, so
+    header constants and row layout can never drift): logical top-down
     grayscale pixels → 'BM' + BITMAPINFOHEADER + 24-bit 4-aligned
     bottom-up rows."""
     import struct
@@ -338,58 +310,6 @@ def _bmp_pixels(payload: bytes) -> tuple[int, int, list[int]]:
     return width, h, px
 
 
-def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL nearest-neighbor BMP resize (pure integer arithmetic):
-    output pixel (x, y) samples source (x·w_in // w_out,
-    y·h_in // h_out).  Parse → sample → re-encode through the shared
-    encoder, so a resized payload is itself a valid input to
-    ``decode_bmp``/``resize_bmp``.  An EMPTY source (the height-0 BMP
-    an empty document synthesizes to) resizes to an all-zero target —
-    the seam stays total over everything ``synthesize_bmp`` emits."""
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"target dimensions must be positive, got {out_w}x{out_h}")
-    w, h, px = _bmp_pixels(payload)
-    if not px:
-        return _encode_bmp([0] * (out_w * out_h), out_w, out_h)
-    out = [
-        px[(y * h // out_h) * w + (x * w // out_w)]
-        for y in range(out_h)
-        for x in range(out_w)
-    ]
-    return _encode_bmp(out, out_w, out_h)
-
-
-def resize_image_payloads(
-    binarized: DataFrame, out_w: int, out_h: int
-) -> DataFrame:
-    """The image-modality resize seam, FOR REAL: every payload becomes
-    a ``out_w`` × ``out_h`` BMP via nearest-neighbor sampling (the
-    uniform-shape normalization a vision batch needs — downstream
-    Arrow batches turn rectangular).  Same mapInPandas shape as
-    ``resize_payload``; metadata recomputed in the same pass."""
-
-    def rz_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = []
-            for p, m in zip(pdf["payload"], pdf["modality"]):
-                if m != "image":
-                    raise ValueError(
-                        f"resize_image_payloads got modality {m!r}"
-                    )
-                resized.append(resize_bmp(p, out_w, out_h))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "payload": resized,
-                    "meta_mime": pdf["meta_mime"],
-                    "meta_n_bytes": [len(p) for p in resized],
-                }
-            )
-
-    return binarized.mapInPandas(rz_batches, MODALITY_SCHEMA)
-
-
 # --- PNG: the first COMPRESSED image container (round 6) --------------
 # Real spec-level PNG within the stdlib-only discipline: zlib gives the
 # DEFLATE inflate, CRC-32, and Adler-32 the format needs; the chunk
@@ -410,7 +330,8 @@ _ZBLOCK = 65535  # max stored-deflate block payload
 def _stored_zlib(data: bytes) -> bytes:
     """A zlib stream of STORED deflate blocks: 2-byte header +
     5 bytes per block + payload + 4-byte Adler-32.  Deterministic and
-    size-predictable (``_zlib_stored_len``); inflates with any zlib."""
+    size-predictable (a closed form of the payload length); inflates
+    with any zlib."""
     import zlib
 
     out = bytearray(b"\x78\x01")
@@ -428,10 +349,6 @@ def _stored_zlib(data: bytes) -> bytes:
             )
     out += zlib.adler32(data).to_bytes(4, "big")
     return bytes(out)
-
-
-def _zlib_stored_len(n: int) -> int:
-    return 2 + 5 * max(1, -(-n // _ZBLOCK)) + n + 4
 
 
 def _png_chunk(typ: bytes, data: bytes) -> bytes:
@@ -452,9 +369,9 @@ def _encode_png(
     level: int = 0,
     filter_type: int = 0,
 ) -> bytes:
-    """The ONE PNG encoder (synthesis, resize, and band tiling share
-    it): logical top-down grayscale pixels → 8-bit greyscale (color
-    type 0) PNG.  ``level=0`` (the pipeline default) emits stored
+    """The ONE PNG encoder (synthesis and band tiling share it):
+    logical top-down grayscale pixels → 8-bit greyscale (color type 0)
+    PNG.  ``level=0`` (the pipeline default) emits stored
     deflate blocks — size closed-form, oracle-pinnable; ``level>0``
     really compresses via zlib (test path).  ``filter_type`` applies
     one of the five PNG scanline filters on encode — the decode side
@@ -658,25 +575,6 @@ def binarize_png_documents(documents: DataFrame) -> DataFrame:
     return documents.select("doc_id", "text").mapInPandas(
         synth_batches, MODALITY_SCHEMA
     )
-
-
-def resize_png(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Nearest-neighbor PNG resize — parse → sample → re-encode through
-    the shared encoder (same arithmetic as ``resize_bmp``); output is
-    itself a valid ``decode_png``/``resize_png`` input."""
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(
-            f"target dimensions must be positive, got {out_w}x{out_h}"
-        )
-    w, h, px = _png_pixels(payload)
-    if not px:
-        return _encode_png([0] * (out_w * out_h), out_w, out_h)
-    out = [
-        px[(y * h // out_h) * w + (x * w // out_w)]
-        for y in range(out_h)
-        for x in range(out_w)
-    ]
-    return _encode_png(out, out_w, out_h)
 
 
 # --- baseline JPEG (JFIF), greyscale ---------------------------------
@@ -1529,11 +1427,6 @@ def _jpeg_pixels_array(payload: bytes):
     return w, h, px[:h, :w].reshape(-1)
 
 
-def _jpeg_pixels(payload: bytes) -> tuple[int, int, list[int]]:
-    w, h, px = _jpeg_pixels_array(payload)
-    return w, h, [int(v) for v in px]
-
-
 def decode_jpeg(payload: bytes) -> list[float]:
     """JPEG decode → the SAME FEATURE_DIM features as decode_bmp /
     decode_png (identical pixel semantics, third container): [width,
@@ -1600,37 +1493,6 @@ def binarize_jpeg_documents(documents: DataFrame) -> DataFrame:
     )
 
 
-def resize_jpeg(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Block-granular JPEG resize: decode, average-pool each output
-    8x8 block's nearest source block, re-encode through the flat-block
-    encoder.  Output dimensions must be block multiples with one block
-    per row (the synthesis profile).  A real pooling resize for ANY
-    baseline greyscale input; EXACT (value-preserving) when the source
-    blocks are flat, as synthesized payloads are."""
-    if out_w != 8 or out_h <= 0 or out_h % 8:
-        raise ValueError(
-            "resize_jpeg emits the synthesis profile: out_w must be 8 "
-            f"and out_h a positive block multiple, got {out_w}x{out_h}"
-        )
-    w, h, px = _jpeg_pixels(payload)
-    if not px:
-        return synthesize_jpeg(bytes(out_h // 8))
-    bh_out = out_h // 8
-    vals = []
-    for by in range(bh_out):
-        # nearest source BLOCK row (block-granular nearest-neighbor,
-        # same arithmetic as resize_bmp one level up), averaged over
-        # the whole 8-row band and ALL columns (rows clamped for
-        # heights that are not block multiples) — exact for flat
-        # synthesized blocks (mean of a constant band is its value)
-        bh_src = -(-h // 8)
-        sy = (by * bh_src // bh_out) * 8
-        rows = [min(sy + r, h - 1) for r in range(8)]
-        band = [px[r * w + c] for r in rows for c in range(w)]
-        vals.append(sum(band) // len(band))
-    return synthesize_jpeg(bytes(vals))
-
-
 # --- baseline JPEG (JFIF), YCbCr color -------------------------------
 #
 # The color half of the JPEG modality (round 7): 4:4:4 baseline color
@@ -1659,33 +1521,6 @@ _JPEGC_R_CR = 1.402
 _JPEGC_G_CB = 0.344136
 _JPEGC_G_CR = 0.714136
 _JPEGC_B_CB = 1.772
-
-
-def _jpegc_cb(v: int) -> int:
-    """Synthesis chroma-blue channel for source byte v (any bijective
-    byte map works; this one keeps the SQL oracle a one-liner)."""
-    return 255 - v
-
-
-def _jpegc_cr(v: int) -> int:
-    """Synthesis chroma-red channel for source byte v."""
-    return (3 * v + 7) % 256
-
-
-def _ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
-    """JFIF color conversion over EXACT integer inputs, rounded with
-    floor(x + 0.5) and clamped — the exact expression tree the DuckDB
-    oracle replicates (identical literals, identical op order, so the
-    IEEE doubles agree bit-for-bit)."""
-    import math
-
-    def cl(x: float) -> int:
-        return max(0, min(255, math.floor(x + 0.5)))
-
-    r = cl(y + _JPEGC_R_CR * (cr - 128))
-    g = cl(y - _JPEGC_G_CB * (cb - 128) - _JPEGC_G_CR * (cr - 128))
-    b = cl(y + _JPEGC_B_CB * (cb - 128))
-    return r, g, b
 
 
 def _jpegc_header(height: int) -> bytes:
@@ -1729,8 +1564,8 @@ JPEGC_HEADER = len(_jpegc_header(0)) + 2
 
 
 def _encode_jpegc_blocks(blocks: list[tuple[int, int, int]]) -> bytes:
-    """The ONE color flat-block encoder (synthesis, resize and band
-    tiling share it): each (y, cb, cr) triple becomes one 4:4:4 MCU of
+    """The ONE color flat-block encoder (synthesis and band tiling
+    share it): each (y, cb, cr) triple becomes one 4:4:4 MCU of
     three DC-only blocks — 16 bits per block, 6 bytes per MCU,
     per-component DC predictors, provably stuffing-free."""
     import numpy as np
@@ -1764,8 +1599,7 @@ def synthesize_jpeg_color(data: bytes) -> bytes:
     size stay exact despite the lossy codec).  The channel maps run
     as three whole-payload numpy expressions (round 8: the per-byte
     scalar comprehension was 6.7x the greyscale synthesis and the
-    color chain's dominant cost; the scalar ``_jpegc_cb``/``_jpegc_cr``
-    forms remain the pinned reference in tests)."""
+    color chain's dominant cost)."""
     import numpy as np
 
     v = np.frombuffer(data, dtype=np.uint8).astype(np.int64)
@@ -1815,9 +1649,9 @@ def _jpeg_ycbcr(payload: bytes) -> tuple[int, int, list, list, list]:
 def _rgb_from_ycbcr_rows(vals):
     """Vectorized JFIF conversion over an (n, 3) int array of
     (Y, Cb, Cr) rows → (n, 3) int64 (R, G, B) rows — the array twin of
-    ``_ycbcr_to_rgb`` (same literals, same op order, same floor(x+0.5)
-    rounding, so the float64 results are identical — pinned against
-    the scalar form in tests)."""
+    ``tests/references.ycbcr_to_rgb`` (same literals, same op order,
+    same floor(x+0.5) rounding, so the float64 results are identical —
+    pinned against the scalar form in tests)."""
     import numpy as np
 
     a = np.asarray(vals, dtype=np.float64)
@@ -1846,11 +1680,6 @@ def _jpeg_rgb_array(payload: bytes):
         [np.asarray(p, dtype=np.int64) for p in (yp, cbp, crp)], axis=-1
     )
     return w, h, _rgb_from_ycbcr_rows(ycc).reshape(-1)
-
-
-def _jpeg_rgb(payload: bytes) -> tuple[int, int, list[int]]:
-    w, h, rgb = _jpeg_rgb_array(payload)
-    return w, h, rgb.tolist()
 
 
 def decode_jpeg_color(payload: bytes) -> list[float]:
@@ -1991,36 +1820,6 @@ def jpegc_band_encode(payload: bytes) -> list[bytes]:
     return _band_payloads(triples, lambda k: _jpegc_header(8 * k), 6)
 
 
-def resize_jpeg_color(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """Block-granular color JPEG resize: decode, average-pool each
-    output MCU's nearest source band PER COMPONENT, re-encode through
-    the shared color flat-block encoder.  Same contract as
-    ``resize_jpeg`` (out_w fixed at 8, out_h a block multiple); exact
-    (value-preserving, chroma included) on flat synthesized MCUs."""
-    if out_w != 8 or out_h <= 0 or out_h % 8:
-        raise ValueError(
-            "resize_jpeg_color emits the synthesis profile: out_w must "
-            f"be 8 and out_h a positive block multiple, got {out_w}x{out_h}"
-        )
-    w, h, yp, cbp, crp = _jpeg_ycbcr(payload)
-    if h == 0:
-        return synthesize_jpeg_color(bytes(out_h // 8))
-    bh_out = out_h // 8
-    bh_src = -(-h // 8)
-    triples = []
-    for by in range(bh_out):
-        sy = (by * bh_src // bh_out) * 8
-        rows = [min(sy + r, h - 1) for r in range(8)]
-        n = len(rows) * w
-        triples.append(
-            tuple(
-                int(sum(int(p[r, c]) for r in rows for c in range(w)) // n)
-                for p in (yp, cbp, crp)
-            )
-        )
-    return _encode_jpegc_blocks(triples)
-
-
 VID_WIDTH = 8
 VID_HEIGHT = 4
 VID_FRAME_PX = VID_WIDTH * VID_HEIGHT  # 32 luma bytes per frame
@@ -2028,8 +1827,8 @@ VID_FRAME_HDR = 6  # len(b"FRAME\n") — per-frame marker line
 
 
 def _y4m_header(w: int, h: int) -> bytes:
-    """The ONE Y4M stream-header builder (shared by synthesis, frame
-    tiling and resize).  YUV4MPEG2 is a real public uncompressed video
+    """The ONE Y4M stream-header builder (shared by synthesis and
+    frame tiling).  YUV4MPEG2 is a real public uncompressed video
     container (mjpegtools/ffmpeg interchange): one ASCII parameter
     line, then ``FRAME\\n`` + raw planes per frame.  ``Cmono`` (luma
     only) is the spec's grayscale colorspace — one plane per frame, so
@@ -2167,58 +1966,6 @@ def binarize_video_documents(documents: DataFrame) -> DataFrame:
     )
 
 
-def resize_y4m(payload: bytes, out_w: int, out_h: int) -> bytes:
-    """REAL per-frame nearest-neighbor video resize (pure integer
-    arithmetic, same sampling rule as ``resize_bmp``): every frame's
-    luma plane is resampled to ``out_w`` × ``out_h`` and the clip is
-    re-encoded through the shared encoder — frame COUNT is preserved,
-    frame SHAPE is normalized (the spatial half of video preprocessing;
-    temporal subsampling is ``sample_frames``).  A zero-frame clip
-    resizes to a zero-frame clip at the new dimensions."""
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"target dimensions must be positive, got {out_w}x{out_h}")
-    w, h, planes = _y4m_planes(payload)
-    out = [
-        bytes(
-            p[(y * h // out_h) * w + (x * w // out_w)]
-            for y in range(out_h)
-            for x in range(out_w)
-        )
-        for p in planes
-    ]
-    return _encode_y4m(out, out_w, out_h)
-
-
-def resize_video_payloads(
-    binarized: DataFrame, out_w: int, out_h: int
-) -> DataFrame:
-    """The video-modality resize seam: every clip's frames become
-    ``out_w`` × ``out_h`` via nearest-neighbor sampling.  Same
-    mapInPandas shape as ``resize_image_payloads``; metadata recomputed
-    in the same pass."""
-
-    def rz_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = []
-            for p, m in zip(pdf["payload"], pdf["modality"]):
-                if m != "video":
-                    raise ValueError(
-                        f"resize_video_payloads got modality {m!r}"
-                    )
-                resized.append(resize_y4m(p, out_w, out_h))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "payload": resized,
-                    "meta_mime": pdf["meta_mime"],
-                    "meta_n_bytes": [len(p) for p in resized],
-                }
-            )
-
-    return binarized.mapInPandas(rz_batches, MODALITY_SCHEMA)
-
-
 def decode_stub(payload: bytes, modality: str) -> list[float]:
     """The real decode seam.  'text' uses the closed-form byte
     featurizer; 'audio' is a REAL stdlib WAV/PCM parse (round 3);
@@ -2353,9 +2100,9 @@ def frame_stub(payload: bytes, modality: str, chunk: int = FRAME_BYTES) -> list[
         # re-encodes through the flat-block encoder as a standalone
         # decodable JPEG; exact for synthesized payloads (the band
         # carries its blocks' values verbatim), and for general inputs
-        # each block stores its 8-row-band average (the same pooling
-        # contract as resize_jpeg).  Pooling and unit emission are
-        # whole-payload vectorized passes (shared with the color twin).
+        # each block stores its 8-row-band average.  Pooling and unit
+        # emission are whole-payload vectorized passes (shared with the
+        # color twin).
         import numpy as np
 
         w, h, px = _jpeg_pixels_array(payload)
@@ -2372,7 +2119,7 @@ def frame_stub(payload: bytes, modality: str, chunk: int = FRAME_BYTES) -> list[
         # REAL temporal frame extraction: parse the Y4M container and
         # re-encode each frame as a standalone single-frame clip
         # through the shared encoder — every emitted frame is itself a
-        # valid Y4M input to decode_y4m/resize_y4m
+        # valid Y4M input to decode_y4m
         w, h, planes = _y4m_planes(payload)
         return [_encode_y4m([p], w, h) for p in planes]
     if modality in ("mp4", "fmp4"):
@@ -2426,37 +2173,6 @@ def sample_frames(binarized: DataFrame, every_n: int = 2) -> DataFrame:
             yield pd.DataFrame(out)
 
     return binarized.mapInPandas(frame_batches, FRAME_SCHEMA)
-
-
-def resize_payload(binarized: DataFrame, target_bytes: int) -> DataFrame:
-    """Resize seam: normalize every payload to ``target_bytes`` (the
-    image-resize analog — output size becomes uniform, which is what
-    makes downstream batches rectangular).  The 'text' stand-in
-    truncates / zero-pads; metadata is recomputed in the same
-    projection so it can never drift from the payload."""
-
-    def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            def rz(p, m):
-                if m != "text":
-                    raise NotImplementedError(
-                        f"resize for modality {m!r} requires codec libraries"
-                    )
-                p = p or b""
-                return p[:target_bytes].ljust(target_bytes, b"\x00")
-
-            resized = [rz(p, m) for p, m in zip(pdf["payload"], pdf["modality"])]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": pdf["modality"],
-                    "payload": resized,
-                    "meta_mime": pdf["meta_mime"],
-                    "meta_n_bytes": [len(p) for p in resized],
-                }
-            )
-
-    return binarized.mapInPandas(resize_batches, MODALITY_SCHEMA)
 
 
 def extract_features(binarized: DataFrame) -> DataFrame:

@@ -224,7 +224,7 @@ def parse_warc(payload: bytes) -> list[dict]:
 def _http_split(payload: bytes) -> tuple[int, dict, bytes]:
     """STRUCTURAL half of the HTTP extraction: status line + header
     block parse, raw (still transfer/content-encoded) body returned
-    as-is.  Split out of ``http_response_body`` (round 10) so the
+    as-is.  Kept apart from ``_decode_http_body`` (round 10) so the
     quarantine audit can report a record's content-encoding and status
     even when the DECODE half fails on it."""
     sep = payload.find(_CRLF + _CRLF)
@@ -267,22 +267,6 @@ def _decode_http_body(headers: dict, body: bytes) -> bytes:
         except Exception as ex:
             raise ValueError(f"corrupt {coding} body: {ex}") from None
     return body
-
-
-def http_response_body(payload: bytes) -> tuple[int, dict, bytes]:
-    """Split a WARC ``response`` record's ``application/http`` payload
-    into ``(status, headers, body)`` — the extraction that turns a raw
-    crawl into usable text (what Common Crawl's WET derivative does).
-    Handles ``Transfer-Encoding: chunked`` (size-line framing decoded
-    exactly; trailing headers skipped) and every ``Content-Encoding``
-    ``sources/encodings.py`` decodes (applied after de-chunking, per
-    RFC 9112 ordering).  Unknown content-encodings raise
-    ``NotImplementedError`` (codec seam); structural damage — no
-    header terminator, bad status line, malformed chunk sizes,
-    truncated chunks, corrupt or over-cap compressed bodies — raises
-    ValueError, same loud contract as the record grammar."""
-    status, headers, raw = _http_split(payload)
-    return status, headers, _decode_http_body(headers, raw)
 
 
 def _dechunk(data: bytes) -> bytes:

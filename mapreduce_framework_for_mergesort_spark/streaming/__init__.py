@@ -22,16 +22,8 @@ from mapreduce_framework_for_mergesort_spark.streaming.stateful import (  # noqa
 )
 from mapreduce_framework_for_mergesort_spark.streaming.dedup import (  # noqa: F401
     dedup_stream,
-    dedup_stream_within_watermark,
     enrich_stream_with_dim,
-    near_dup_pairs_stream,
 )
 from mapreduce_framework_for_mergesort_spark.streaming.joins import (  # noqa: F401
     interval_join_events,
-)
-from mapreduce_framework_for_mergesort_spark.streaming.sketch import (  # noqa: F401
-    compact_frequency_sketch,
-    frequency_sketch_stream,
-    read_frequency_sketch,
-    update_frequency_sketch,
 )

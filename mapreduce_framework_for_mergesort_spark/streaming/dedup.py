@@ -4,18 +4,10 @@ Streaming twins of batch operators the engine already has (exact dedup in
 ``operators/dedup.py``; join enrichment in ``operators/relational.py``).
 The reference has neither mode — these are north-star surface.
 
-Dedup state discipline at scale:
-
-* ``dedup_stream`` (plain ``dropDuplicates``) keeps one state row per
-  distinct key **forever** — correct and exact, but only viable when the
-  key space is bounded (entity ids, (user, type) pairs), not for
-  ever-growing ids.
-* ``dedup_stream_within_watermark`` bounds state by event time: a key's
-  state is dropped once the watermark passes it, so an unbounded id
-  space is fine, at the price of re-admitting a duplicate that arrives
-  later than the watermark delay.  That trade is the only one available
-  on infinite streams — pick the delay to cover the real re-delivery
-  window (e.g. Kafka producer retries land within seconds, not days).
+Dedup state discipline: ``dedup_stream`` (plain ``dropDuplicates``)
+keeps one state row per distinct key **forever** — correct and exact,
+but only viable when the key space is bounded (entity ids, (user, type)
+pairs), not for ever-growing ids.
 """
 
 from __future__ import annotations
@@ -28,153 +20,6 @@ def dedup_stream(events: DataFrame, keys: list[str]) -> DataFrame:
     """Exact streaming dedup on ``keys`` (state: one row per distinct
     key, kept for the lifetime of the query)."""
     return events.select(*keys).dropDuplicates(keys)
-
-
-def dedup_stream_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermark-bounded streaming dedup — the unbounded-key-space scale
-    path (state dropped once event time passes the watermark)."""
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def near_dup_pairs_stream(
-    documents: DataFrame,
-    ts_col: str | None = None,
-    horizon: str = "1 hour",
-    max_docs_per_band: int | None = None,
-) -> DataFrame:
-    """Streaming NEAR-dup detection: emit LSH candidate pairs
-    incrementally as documents arrive — the ingestion-time form of
-    ``operators/dedup.lsh_candidate_pairs``.  A pair (a, b) surfaces in
-    the microbatch where the LATER of the two documents arrives, so an
-    ingest pipeline can flag a near-duplicate the moment it shows up
-    instead of waiting for a batch dedup pass.
-
-    Shape: the same Arrow band kernel as batch (tokenize → shingle →
-    minhash → band, zero extra Python), exploded to (band_id, band_val,
-    doc_id) rows; ``applyInPandasWithState`` keyed by band keeps the
-    doc ids seen per band (the streaming LSH *index* as state) and
-    emits new×seen pairs.  The drained pair SET is order-independent —
-    whatever the arrival order or batching, it equals the batch
-    operator's output exactly (pinned in tests), because pair
-    membership depends only on band collisions, not timing.
-
-    State discipline — the two modes:
-
-    * ``ts_col=None`` (default): one state row per distinct band value,
-      growing with the corpus — same asymptotics as the batch index,
-      exact batch parity, viable only for bounded corpora.
-    * ``ts_col`` given: the UNBOUNDED-stream scale path.  The input is
-      watermarked on ``ts_col`` by ``horizon`` and each band's state
-      carries an event-time TTL: the band is DROPPED once the watermark
-      passes its newest document's event time + ``horizon`` (idle
-      timeout — any new arrival in the band re-arms it).  State is then
-      bounded by the docs arriving within one horizon, at the price of
-      re-admitting a duplicate that arrives more than ``horizon`` after
-      every earlier copy's band activity — the only trade available on
-      an infinite stream, same as ``dedup_stream_within_watermark``.
-      Within the horizon the pair set still equals the batch operator
-      (pinned in tests).
-
-    Hot bands (boilerplate) concentrate both state and pair fan-out;
-    ``max_docs_per_band`` is the guardrail: a band keeps only its first
-    K arrivals as REPRESENTATIVES — later docs still pair against those
-    K (so membership in the hot cluster is still detected and each can
-    still be routed to the same survivor) but stop growing state or
-    fan-out, bounding a band's state at K rows and its per-arrival
-    emission at K pairs instead of the unbounded new×seen product.
-    Default ``None`` keeps exact batch parity.  Callers wanting
-    distinct pairs across bands apply ``.dropDuplicates()`` (or
-    DISTINCT on the sink), exactly as batch does after its band join.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from mapreduce_framework_for_mergesort_spark.operators.dedup import (
-        minhash_bands,
-    )
-    from mapreduce_framework_for_mergesort_spark.streaming.stateful import (
-        _gap_to_us,
-    )
-
-    horizon_ms = _gap_to_us(horizon) // 1000 if ts_col else 0
-    if ts_col:
-        documents = documents.withWatermark(ts_col, horizon)
-
-    # The batch band projection runs unchanged on a streaming DataFrame
-    # (pure per-row Arrow kernel) — one definition for both modes, so
-    # the 'drained set equals batch' contract can't drift.  The event
-    # time column (if any) rides the band rows so the watermark
-    # propagates into the stateful operator.
-    bands = minhash_bands(documents, carry=(ts_col,) if ts_col else ())
-
-    def fn(key, pdfs, state):
-        if state.hasTimedOut:
-            # idle band: watermark passed its newest doc + horizon —
-            # physically evict the state row
-            state.remove()
-            return
-        seen: list[int]
-        last_ms: int
-        seen, last_ms = (
-            (list(state.get[0]), state.get[1]) if state.exists else ([], 0)
-        )
-        wm = state.getCurrentWatermarkMs() if ts_col else 0
-        if ts_col and seen and wm > last_ms + horizon_ms:
-            # the band's TTL expired but new data arrived in the very
-            # trigger that would have timed it out — Spark only delivers
-            # hasTimedOut to DATA-LESS keys, so the horizon must also be
-            # enforced here: start from empty state (logical eviction),
-            # re-admitting the new arrivals
-            seen = []
-        incoming: set[int] = set()
-        max_ts_ms = 0
-        for pdf in pdfs:
-            if len(pdf) == 0:
-                continue  # empty chunk: .max() would yield NaT
-            incoming.update(int(d) for d in pdf["doc_id"])
-            if ts_col:
-                m = pd.to_datetime(pdf[ts_col]).max()
-                max_ts_ms = max(max_ts_ms, m.value // 1_000_000)
-        out_a: list[int] = []
-        out_b: list[int] = []
-        for d in sorted(incoming - set(seen)):
-            out_a.extend(min(s, d) for s in seen)
-            out_b.extend(max(s, d) for s in seen)
-            if (
-                max_docs_per_band is None
-                or len(seen) < max_docs_per_band
-            ):
-                seen.append(d)
-        state.update((seen, max(last_ms, max_ts_ms)))
-        if ts_col:
-            # idle TTL from the band's newest event time; a band fed
-            # only late data (behind the watermark) gets the minimum
-            # legal timeout and evicts on the next batch
-            state.setTimeoutTimestamp(
-                max(max(last_ms, max_ts_ms) + horizon_ms, wm + 1)
-            )
-        if out_a:
-            yield pd.DataFrame({"doc_a": out_a, "doc_b": out_b})
-
-    return bands.groupBy("band_id", "band_val").applyInPandasWithState(
-        fn,
-        outputStructType="doc_a long, doc_b long",
-        stateStructType="seen array<bigint>, last_ms bigint",
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if ts_col
-            else GroupStateTimeout.NoTimeout
-        ),
-    )
 
 
 def enrich_stream_with_dim(

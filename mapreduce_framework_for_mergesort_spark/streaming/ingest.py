@@ -38,12 +38,9 @@ Per microbatch (``foreachBatch``), with ONE banding pass:
 Scale shape: the stored corpus is NEVER re-banded or re-scanned — each
 batch pays O(batch) banding + one hash anti-join + one band equi-join
 + three appends; the band index is partitioned by band_id so the join
-prunes band-aligned files.  (``<index>/bands`` is readable as the
-``index_bands`` input of ``dedup.incremental_candidate_pairs`` for ad
-hoc pair queries against the same index.)
+prunes band-aligned files.
 
-Delivery: EXACTLY-ONCE via epoch-keyed overwrite (round 5 — the same
-idempotence scheme the CMS stream pioneered in ``streaming/sketch.py``).
+Delivery: EXACTLY-ONCE via epoch-keyed overwrite (round 5).
 Each microbatch writes its corpus rows, hash rows, and band rows to its
 own ``epoch=N`` partition with ``overwrite`` mode, so a retried epoch
 REPLACES its own (possibly partial) output instead of appending a
@@ -345,8 +342,7 @@ def retract_documents(spark, out_path: str, doc_ids, batch_id: str) -> bool:
     * ``accept_batch`` excludes the retracted docs' index rows from
       its exact-hash and band decisions, so a FUTURE copy of retracted
       content gets fresh judgment instead of silently deduping against
-      a document that no longer ships (same policy note as
-      ``dedup.delete_from_lsh_index`` — legal-takedown pipelines that
+      a document that no longer ships (legal-takedown pipelines that
       must keep CATCHING re-uploads want a retained blocklist through
       ``dedup.decontaminate``, not tombstones);
     * the next ``compact_ingest_state`` fold makes the removal

@@ -11,7 +11,8 @@ Two entry points:
 * ``sessionize_batch`` — the same semantics in pure DataFrame algebra
   (lag → gap flag → running count → aggregate), usable as a batch
   operator and as the oracle for the streaming path.
-* ``sessionize_stream`` — the drain-deterministic streaming operator.
+* ``sessionize_stream`` — the drain-deterministic streaming operator
+  that serves the ``q_stream_sessionize`` key.
   State is four parallel arrays (starts, ends, counts, totals-in-cents)
   of *open* sessions plus the emitted-boundary high-water mark;
   intervals are merged order-robustly, so out-of-order events land
@@ -24,17 +25,19 @@ Two entry points:
   ``late_counter`` (an accumulator) and every such arrival is counted
   against the state's high-water mark, so a silent-split source is
   detected instead of trusted.  For sources that can be later than
-  that, use ``sessionize_stream_watermarked``, which only emits below
-  the query watermark.  The per-key-max variant exists because it is
+  that, the watermarked contract below only emits below the query
+  watermark.  The per-key-max variant exists because it is
   drain-deterministic: drained with availableNow it emits every
   closeable session regardless of final watermark position, which is
   what lets the driver hash-compare it against a batch oracle.
 
-* ``sessionize_stream_watermarked`` — the production variant for
+* ``sessionize_stream_watermarked`` — the watermarked contract for
   genuinely out-of-order unbounded sources: emission is gated on the
   query watermark (``GroupState.getCurrentWatermarkMs``), and idle keys
   flush via ``EventTimeTimeout`` timeouts, so any event the watermark
-  still admits can extend its session before emission.
+  still admits can extend its session before emission.  No key runs
+  it; only tests do.  It is kept as the contract the one-sessionizer
+  port (ROADMAP §5) must serve together with ``q_stream_sessionize``.
 
 Scale notes: state is per-user and bounded by the number of *open*
 sessions (almost always 1); the shuffle is the groupBy(user_id) hash
@@ -189,8 +192,8 @@ def sessionize_stream(
     boundary (``end + gap`` high-water mark, carried in state) is
     counted — such events silently produce split sessions, which is
     exactly the failure mode the round-2 advisory wanted surfaced.
-    Monitoring jobs alert on a nonzero counter and switch the source to
-    ``sessionize_stream_watermarked``.
+    A nonzero counter means the source needs the watermarked contract
+    (``sessionize_stream_watermarked``).
     """
     gap_us = _gap_to_us(gap)
 
@@ -274,7 +277,10 @@ def _to_output(sessions: DataFrame) -> DataFrame:
 def sessionize_stream_watermarked(
     events: DataFrame, gap: str = DEFAULT_GAP, watermark: str = "2 hours"
 ) -> DataFrame:
-    """Watermark-gated gap sessionization for out-of-order sources.
+    """Watermark-gated gap sessionization for out-of-order sources: the
+    watermarked contract, kept (only tests reach it) for the
+    one-sessionizer port of ROADMAP §5; ``sessionize_stream`` serves
+    ``q_stream_sessionize``.
 
     Emission is bounded by the *query watermark*, not the key's own max
     event time: a session leaves state only when ``end + gap`` is below

@@ -55,9 +55,10 @@ def sf_oracle() -> str:
 SLOW_TESTS = frozenset({
     "tests/test_bpe.py::test_bpe_shards_tokenizer_true_budgets",
     "tests/test_bpe.py::test_train_bpe_textbook_merge_sequence",
-    "tests/test_classifier.py::test_curate_documents_with_quality_model",
-    "tests/test_classifier.py::test_quality_filter_generalizes",
-    "tests/test_classifier.py::test_scoring_separates_and_stays_jvm",
+    "tests/test_examples.py::test_example_runs[crawl_to_corpus]",
+    "tests/test_examples.py::test_example_runs[curate_and_shard]",
+    "tests/test_examples.py::test_example_runs[index_and_append]",
+    "tests/test_examples.py::test_example_runs[ingest_and_compact]",
     "tests/test_fault_tolerance.py::test_task_retry_recovers_injected_faults",
     "tests/test_html.py::test_crawl_feed_composes_with_continuous_ingestion",
     "tests/test_llm_ops.py::test_cluster_pairs_long_chain_converges",
@@ -70,8 +71,6 @@ SLOW_TESTS = frozenset({
     "tests/test_llm_ops.py::test_curation_strip_spans_rewrites[codegen]",
     "tests/test_llm_ops.py::test_curation_strip_spans_rewrites[kernel]",
     "tests/test_llm_ops.py::test_leakage_safe_split_clusters_never_straddle",
-    "tests/test_llm_ops.py::test_lsh_index_bucketed_delete_lifecycle",
-    "tests/test_llm_ops.py::test_lsh_index_delete_lifecycle",
     "tests/test_llm_ops.py::test_near_dedup_collapse_exact_identical_kept_set",
     "tests/test_llm_ops.py::test_prepare_training_shards_end_to_end",
     "tests/test_llm_ops.py::test_prepare_training_shards_leakage_safe",
@@ -90,10 +89,6 @@ SLOW_TESTS = frozenset({
     "tests/test_property_sort.py::test_merge_sorted_runs_matches_sorted",
     "tests/test_property_sort.py::test_rank_is_dense_and_multiset_preserved",
     "tests/test_robots.py::test_disallowed_set_feeds_takedown",
-    "tests/test_sketches.py::test_dyadic_cms_parity_rank_bounds_and_merge",
-    "tests/test_streaming.py::test_near_dup_pairs_stream_equals_batch",
-    "tests/test_streaming.py::test_near_dup_stream_band_cap_bounds_fanout",
-    "tests/test_streaming.py::test_near_dup_stream_ttl_evicts_and_bounds_state",
     "tests/test_streaming_ingest.py::test_assign_splits_stable_bridging_near_dup",
     "tests/test_streaming_ingest.py::test_assign_splits_stable_epoch_replay",
     "tests/test_streaming_ingest.py::test_assign_splits_stable_null_text_edges",
@@ -104,7 +99,6 @@ SLOW_TESTS = frozenset({
     "tests/test_streaming_ingest.py::test_compact_epochs_recovers_success_but_no_folded_temp",
     "tests/test_streaming_ingest.py::test_compact_epochs_recovery_is_listing_order_safe",
     "tests/test_streaming_ingest.py::test_compact_epochs_recovery_restore_crash_and_occupied_target",
-    "tests/test_streaming_ingest.py::test_frequency_sketch_stream_equals_batch_and_is_idempotent",
     "tests/test_streaming_ingest.py::test_ingest_rejected_doc_cannot_evict_earlier_representative",
     "tests/test_streaming_ingest.py::test_ingest_rejects_transitive_chain_to_history",
     "tests/test_streaming_ingest.py::test_ingest_stale_epoch_replay_refused",
@@ -120,7 +114,6 @@ SLOW_TESTS = frozenset({
     "tests/test_streaming_watermark.py::test_watermarked_drain_equals_batch_algebra_below_watermark",
     "tests/test_streaming_watermark.py::test_watermarked_sessionize_merges_admissible_late_event",
     "tests/test_urls.py::test_property_normalize_invariants",
-    "tests/test_urls.py::test_psl_full_list_strategies_match_reference",
     "tests/test_warc.py::test_republish_after_takedown_excludes_retracted",
 })
 

@@ -11,9 +11,7 @@ Four layers, mirroring the JPEG test strategy:
    own encoder;
 3. adversarial corruption: every malformed input fails LOUDLY
    (ValueError, or NotImplementedError only at the codec seam);
-4. Spark plumbing: ``describe_containers`` cross-checked against a
-   DuckDB replica of its closed forms at sf0.001 (the same check the
-   registry's tagged branches get from the driver at sf0.01), and the
+4. Spark plumbing: the corrupt-payload audit and the
    ``decode_stub``/``frame_stub`` dispatch.
 """
 
@@ -27,6 +25,12 @@ from hypothesis import strategies as st
 
 from mapreduce_framework_for_mergesort_spark.sources import containers as C
 from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
+from tests import references as R
+
+
+def _chunk_spans(payload: bytes) -> list[tuple[int, int]]:
+    """(offset, n_bytes) per chunk of the first audio track."""
+    return C._first_audio_track(C.parse_mp4(payload)).chunks
 
 # ---------------------------------------------------------------------------
 # 1. synth → parse round trips
@@ -39,7 +43,7 @@ from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
 def test_mp4_round_trip_closed_forms(n):
     data = bytes((7 * i + 3) % 256 for i in range(n))
     p = C.synthesize_mp4(data)
-    assert len(p) == C.mp4_n_bytes(n)
+    assert len(p) == R.mp4_n_bytes(n)
     parsed = C.parse_mp4(p)
     assert parsed["major_brand"] == "isom"
     assert parsed["timescale"] == C.MP4_TIMESCALE
@@ -62,7 +66,7 @@ def test_mp4_chunk_boundaries_from_stsc_not_adjacency():
     # were derived by merging byte-adjacent spans, this would collapse
     # to a single chunk (the round-9 self-review bug)
     p = C.synthesize_mp4(bytes(range(40)))
-    chunks = C.mp4_chunk_spans(p)
+    chunks = _chunk_spans(p)
     assert [sz for _o, sz in chunks] == [32, 32, 16]
     assert chunks[1][0] == chunks[0][0] + 32  # adjacent yet distinct
 
@@ -91,7 +95,7 @@ def test_mp4_frames_standalone_decodable():
 @given(st.binary(max_size=600))
 def test_mp4_property_round_trip(data):
     p = C.synthesize_mp4(data)
-    assert len(p) == C.mp4_n_bytes(len(data))
+    assert len(p) == R.mp4_n_bytes(len(data))
     t = C._first_audio_track(C.parse_mp4(p))
     assert t.n_samples == len(data)
     assert sum(sz for _o, sz in t.chunks) == 2 * len(data)
@@ -105,7 +109,7 @@ def test_mp4_property_round_trip(data):
 def test_mp3_round_trip_closed_forms(n):
     data = bytes((11 * i + 5) % 256 for i in range(n))
     m = C.synthesize_mp3(data)
-    assert len(m) == C.mp3_n_bytes(n)
+    assert len(m) == R.mp3_n_bytes(n)
     parsed = C.parse_mp3(m)
     nf = -(-n // C.MP3_FRAME_PAYLOAD) if n else 0
     assert parsed["id3_bytes"] == C.MP3_ID3_LEN
@@ -130,7 +134,7 @@ def test_mp3_round_trip_closed_forms(n):
 def test_mp3_property_round_trip(data):
     m = C.synthesize_mp3(data)
     parsed = C.parse_mp3(m)
-    assert len(m) == C.mp3_n_bytes(len(data))
+    assert len(m) == R.mp3_n_bytes(len(data))
     # frames tile the file exactly: ID3, then back-to-back frames
     pos = parsed["id3_bytes"]
     for off, ln in parsed["frames"]:
@@ -261,49 +265,6 @@ def test_handmade_mp4_frames_are_pcm_exact():
     assert got == samples
 
 
-@pytest.mark.parametrize("out_rate,expect", [
-    # in_rate 8000; pcm = (b-128)*256 for b'abcd' = [-7936..-7168 step 256]
-    (4000, [0, 2]),      # every 2nd index
-    (16000, [0, 0, 1, 1, 2, 2, 3, 3]),  # each index doubled
-    (8000, [0, 1, 2, 3]),  # identity
-    (6000, [0, 1, 2]),   # 3/4: indices floor(j*4/3) = 0,1,2
-])
-def test_mp4_resample_picks_exact_indices(out_rate, expect):
-    data = b"abcd"
-    pcm_in = [(b - 128) * 256 for b in data]
-    out = C.resample_mp4(C.synthesize_mp4(data), out_rate)
-    t = C._first_audio_track(C.parse_mp4(out))
-    assert t.timescale == out_rate and t.sample_rate == out_rate
-    raw = b"".join(out[o : o + s] for o, s in t.spans)
-    got = list(struct.unpack(f">{len(raw) // 2}h", raw))
-    assert got == [pcm_in[i] for i in expect]
-    # output is itself a first-class decodable input
-    assert C.decode_mp4(out)[0] == len(expect)
-    assert C.decode_mp4(out)[1] == out_rate
-
-
-def test_wav_and_mp4_resample_agree():
-    # same samples, same rates -> identical PCM streams out of both
-    # container resamplers (they share _pick_nearest)
-    data = bytes((5 * i + 1) % 256 for i in range(200))
-    for out_rate in (3000, 8000, 11025, 20000):
-        w = M.resample_wav(M.synthesize_wav(data), out_rate)
-        m = C.resample_mp4(C.synthesize_mp4(data), out_rate)
-        fw = M.decode_wav(w)
-        fm = C.decode_mp4(m)
-        assert fw == fm
-        assert fw[1] == out_rate
-        assert fw[0] == (len(data) * out_rate) // 8000
-
-
-def test_resample_compressed_codec_is_the_seam():
-    q = C.synthesize_mp4(b"x" * 20).replace(b"twos", b"mp4a", 1)
-    with pytest.raises(NotImplementedError, match="mp4a"):
-        C.resample_mp4(q, 16000)
-    with pytest.raises(ValueError, match="invalid rates"):
-        C.resample_mp4(C.synthesize_mp4(b"xy"), 0)
-
-
 def test_handmade_mp3_vbr_and_id3v1():
     """A VBR stream (per-frame bitrate varies) with no ID3v2 tag but an
     ID3v1 trailer — neither produced by the synthesizer."""
@@ -416,7 +377,7 @@ def test_mp4_codec_seam_is_explicit():
     with pytest.raises(NotImplementedError, match="mp4a"):
         C.mp4_frames(q)
     # chunk spans stay available for any codec
-    assert C.mp4_chunk_spans(q) == C.mp4_chunk_spans(p)
+    assert _chunk_spans(q) == _chunk_spans(p)
 
 
 def test_mp4_no_audio_track_is_loud():
@@ -437,7 +398,7 @@ def test_mp4_no_audio_track_is_loud():
 def test_fmp4_round_trip_closed_forms(n):
     data = bytes((11 * i + 5) % 256 for i in range(n))
     p = C.synthesize_fmp4(data)
-    assert len(p) == C.fmp4_n_bytes(n)
+    assert len(p) == R.fmp4_n_bytes(n)
     parsed = C.parse_mp4(p)
     assert parsed["major_brand"] == "isom"
     t = C._first_audio_track(parsed)
@@ -462,7 +423,7 @@ def test_fmp4_decode_and_frames_equal_progressive():
     data = b"fragmented equals progressive, sample for sample" * 3
     f, g = C.synthesize_fmp4(data), C.synthesize_mp4(data)
     assert C.decode_mp4(f) == C.decode_mp4(g)
-    assert C.mp4_chunk_spans(f) != C.mp4_chunk_spans(g)  # layouts differ
+    assert _chunk_spans(f) != _chunk_spans(g)  # layouts differ
     assert C.mp4_frames(f) == C.mp4_frames(g)  # re-encoded units agree
 
 
@@ -641,15 +602,6 @@ def test_fmp4_audit_routes_fragment_corruption(spark):
     assert "outside" in got[2]["parse_err"] or "overruns" in got[2]["parse_err"]
 
 
-def test_fmp4_resample_relabels_to_progressive(spark):
-    f = C.synthesize_fmp4(b"resample across layouts")
-    rows = [(1, "fmp4", f, "video/mp4", len(f))]
-    df = spark.createDataFrame(rows, M.MODALITY_SCHEMA)
-    out = C.resample_audio_payloads(df, 4000).collect()[0]
-    assert out["modality"] == "mp4"  # re-encode emits progressive
-    assert bytes(out["payload"]) == C.resample_mp4(f, 4000)
-
-
 def test_mp4_stts_without_stsz_is_loud():
     # drop the stsz box from the stbl (shrink stbl/minf/mdia/trak/moov
     # sizes accordingly): stts still promises samples, and the parse
@@ -710,10 +662,6 @@ def test_mp3_corruption_is_loud():
     bad[6] = 0x80  # non-synchsafe ID3 size byte
     with pytest.raises(ValueError, match="synchsafe"):
         C.parse_mp3(bytes(bad))
-    # round 11: general-input PCM decode remains loud (the spectral
-    # profile decode lives in sources/layer3.py)
-    with pytest.raises(NotImplementedError, match="spec data"):
-        C.decode_mp3(m)
 
 
 def test_mp3_samplerate_change_mid_stream_is_loud():
@@ -728,102 +676,6 @@ def test_mp3_samplerate_change_mid_stream_is_loud():
 # ---------------------------------------------------------------------------
 # 4. Spark plumbing
 # ---------------------------------------------------------------------------
-
-#: DuckDB replica of describe_containers' closed forms — the same SQL
-#: shape the registry oracles use; kept test-side because the registry
-#: holds the driver's 50-key cap (the tagged mp4/mp3 branches inside
-#: q_multimodal_features / q_multimodal_frames are the registry-checked
-#: surface; this pins the container-metadata columns those branches
-#: don't carry: n_units, durations, codec identity, first-unit values).
-_CONTAINER_ORACLE = f"""
-SELECT doc_id,
-       'mp4' AS modality,
-       CASE WHEN n = 0 THEN {C.MP4_EMPTY}
-            ELSE {C.MP4_EMPTY} + 2 * n + 8
-                 + 12 * (CASE WHEN n > {C.MP4_SAMPLES_PER_CHUNK}
-                               AND n % {C.MP4_SAMPLES_PER_CHUNK} <> 0
-                         THEN 2 ELSE 1 END)
-                 + 4 * ((n + {C.MP4_SAMPLES_PER_CHUNK - 1})
-                        // {C.MP4_SAMPLES_PER_CHUNK})
-       END AS n_bytes,
-       n AS n_units,
-       2 * least(n, {C.MP4_SAMPLES_PER_CHUNK}) AS first_unit_bytes,
-       CASE WHEN n > 0 THEN (unicode(substr(text, 1, 1)) - 128) * 256
-            ELSE 0 END AS first_unit_value,
-       n AS duration_ticks,
-       {C.MP4_TIMESCALE} AS timescale,
-       'twos' AS codec
-FROM (SELECT doc_id, text, CAST(strlen(text) AS BIGINT) AS n FROM documents)
-UNION ALL
-SELECT doc_id,
-       'mp3' AS modality,
-       {C.MP3_ID3_LEN} + {C.MP3_FRAME_LEN} * nf AS n_bytes,
-       nf AS n_units,
-       CASE WHEN nf > 0 THEN {C.MP3_FRAME_LEN} ELSE 0 END AS first_unit_bytes,
-       CASE WHEN nf > 0 THEN unicode(substr(text, 1, 1)) ELSE 0 END
-           AS first_unit_value,
-       nf * {C.MP3_SAMPLES_PER_FRAME} AS duration_ticks,
-       {C.MP3_SAMPLERATE} AS timescale,
-       'mp3' AS codec
-FROM (SELECT doc_id, text,
-             CAST((strlen(text) + {C.MP3_FRAME_PAYLOAD - 1})
-                  // {C.MP3_FRAME_PAYLOAD} AS BIGINT) AS nf
-      FROM documents)
-"""
-
-
-def test_describe_containers_vs_duckdb(spark, sf_smoke):
-    from mapreduce_framework_for_mergesort_spark.io import load_table
-    from tests.oracle import run_oracle
-
-    docs = load_table(spark, sf_smoke, "documents")
-    b = C.binarize_mp4_documents(docs).unionByName(
-        C.binarize_mp3_documents(docs)
-    )
-    sdf = C.describe_containers(b)
-    cols = sorted(sdf.columns)
-    srows = sorted(tuple(r[c] for c in cols) for r in sdf.collect())
-    ocols, orows = run_oracle(_CONTAINER_ORACLE, sf_smoke)
-    idx = [ocols.index(c) for c in cols]
-    orows = sorted(tuple(r[i] for i in idx) for r in orows)
-    assert len(srows) == len(orows) and srows[:1]  # non-degenerate
-    assert srows == orows
-
-
-def test_resample_audio_payloads_spark(spark, sf_smoke):
-    """The Spark resample seam over BOTH audio containers: every
-    output payload re-parses at the target rate with the closed-form
-    sample count, WAV and mp4 agree sample-for-sample (shared pick),
-    and metadata is recomputed in the same pass."""
-    from mapreduce_framework_for_mergesort_spark.io import load_table
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        binarize_audio_documents,
-        decode_wav,
-    )
-
-    docs = load_table(spark, sf_smoke, "documents").limit(40)
-    b = binarize_audio_documents(docs).unionByName(
-        C.binarize_mp4_documents(docs)
-    )
-    out = C.resample_audio_payloads(b, 4000).collect()
-    assert len(out) == 80
-    by_doc: dict[int, dict[str, list[float]]] = {}
-    for r in out:
-        assert r["meta_n_bytes"] == len(r["payload"])
-        feats = (
-            decode_wav(bytes(r["payload"]))
-            if r["modality"] == "audio"
-            else C.decode_mp4(bytes(r["payload"]))
-        )
-        assert feats[1] == 4000 or feats[0] == 0  # rate, unless empty
-        by_doc.setdefault(r["doc_id"], {})[r["modality"]] = feats
-    n_src = {
-        r["doc_id"]: len(r["text"].encode("utf-8"))
-        for r in docs.collect()
-    }
-    for doc_id, m in by_doc.items():
-        assert m["audio"] == m["mp4"]
-        assert m["audio"][0] == (n_src[doc_id] * 4000) // 8000
 
 
 def test_audit_payload_parses_routes_corruption(spark):
@@ -889,15 +741,11 @@ def test_audit_routes_truncated_bmp_not_struct_error(spark):
     assert "truncated BMP" in got[2]["parse_err"]
 
 
-def test_mp3_mixed_layer_duration_uses_per_frame_sum(spark):
-    """Round-9 review: describe_containers rederived duration as
-    n_frames x the FIRST frame's samples_per_frame; a mixed-layer
-    stream (Layer I then Layer III — legal) under-reported ~3x.  It
-    now carries the walk's per-frame sum."""
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        MODALITY_SCHEMA,
-    )
-
+def test_mp3_mixed_layer_duration_uses_per_frame_sum():
+    """Round-9 review: a duration rederived as n_frames x the FIRST
+    frame's samples_per_frame under-reports a mixed-layer stream
+    (Layer I then Layer III — legal) ~3x; the frame walk carries the
+    per-frame sum."""
     l1 = bytes([0xFF, 0xFF, 0x38, 0xC4])  # L1, 96k @ 32000 -> 144 bytes
     f1 = l1 + b"\x00" * (144 - 4)
     l3 = bytes([0xFF, 0xFB, 0x58, 0xC4])  # L3, 64k @ 32000 -> 288 bytes
@@ -905,12 +753,7 @@ def test_mp3_mixed_layer_duration_uses_per_frame_sum(spark):
     mixed = f1 + f3
     parsed = C.parse_mp3(mixed)
     assert parsed["total_samples"] == 384 + 1152
-    df = spark.createDataFrame(
-        [(1, "mp3", mixed, "audio/mpeg", len(mixed))], MODALITY_SCHEMA
-    )
-    (row,) = C.describe_containers(df).collect()
-    assert row["duration_ticks"] == 384 + 1152
-    assert row["n_units"] == 2
+    assert len(parsed["frames"]) == 2
 
 
 def test_dispatch_through_modality_stubs():
@@ -935,7 +778,7 @@ def test_dispatch_through_modality_stubs():
 @given(st.binary(max_size=600))
 def test_fmp4_property_round_trip(data):
     p = C.synthesize_fmp4(data)
-    assert len(p) == C.fmp4_n_bytes(len(data))
+    assert len(p) == R.fmp4_n_bytes(len(data))
     t = C._first_audio_track(C.parse_mp4(p))
     assert t.n_samples == len(data)
     assert sum(sz for _o, sz in t.chunks) == 2 * len(data)

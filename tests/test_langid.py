@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
 from mapreduce_framework_for_mergesort_spark.operators import langid as L
 from mapreduce_framework_for_mergesort_spark.operators import text as T
+from tests import references as R
 
 # ---------------------------------------------------------------------------
 # tokenizer
@@ -68,14 +69,11 @@ def test_cjk_token_counts_are_character_counts(spark):
     12 tokens now, not 1."""
     zh = "我们的数据系统每天在增长"
     assert len(zh) == 12
-    df = spark.createDataFrame([(1, zh, "zh", len(zh))],
-                               "doc_id long, text string, lang string, "
-                               "n_chars long")
-    row = T.token_counts(df).collect()[0]
+    df = spark.createDataFrame([(1, zh)], "doc_id long, text string")
+    row = df.select(
+        F.expr(f"size({H.spark_tokens('text')})").alias("n_tokens")
+    ).collect()[0]
     assert row["n_tokens"] == 12
-    # the BPE-ish subword proxy already treated each CJK char as a
-    # singleton (the [^a-zA-Z0-9 ...] class) — counts agree
-    assert row["n_subwords"] == 12
 
 
 def test_chunking_parity_on_cjk(spark):
@@ -101,7 +99,7 @@ def test_chunking_parity_on_cjk(spark):
     want = sorted(
         tuple(r)
         for r in con.execute(
-            T.duckdb_chunk_sql(chunk_tokens=8, overlap_tokens=2)
+            R.duckdb_chunk_sql(chunk_tokens=8, overlap_tokens=2)
         ).fetchall()
     )
     assert got == want

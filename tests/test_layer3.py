@@ -148,15 +148,6 @@ def test_data_gaps_are_loud():
         L.encode_tone_frame([(5, 1), (5, -1)])
 
 
-def test_general_pcm_seam_still_loud():
-    from mapreduce_framework_for_mergesort_spark.sources import (
-        containers as CT,
-    )
-
-    with pytest.raises(NotImplementedError, match="spec data"):
-        CT.decode_mp3(L.encode_tone_frame([(27, 1)]))
-
-
 def test_feature_kernel_matches_closed_form():
     for text in ["", "a", "Hello", "xyzw123", "é中", "    "]:
         f = L.decode_mp3_l3_features(L.synthesize_mp3_l3(text))

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.operators import layout as L
+from tests import references as R
 
 
 def test_zorder_key_matches_python_reference(spark):
@@ -21,7 +22,7 @@ def test_zorder_key_matches_python_reference(spark):
         "x", "y", F.expr(L.spark_zorder_key(["x", "y"])).alias("z")
     ).collect()
     for r in got:
-        assert r["z"] == L.python_zorder_key([r["x"], r["y"]])
+        assert r["z"] == R.python_zorder_key([r["x"], r["y"]])
     # interleave sanity: (1,0) -> bit 0, (0,1) -> bit 1
     z = {(r["x"], r["y"]): r["z"] for r in got}
     assert z[(1, 0)] == 1 and z[(0, 1)] == 2 and z[(0, 0)] == 0
@@ -70,10 +71,10 @@ def test_zorder_key_correct_on_int32_columns(spark):
         "x", "y", F.expr(L.spark_zorder_key(["x", "y"])).alias("z")
     ).collect()
     for r in got:
-        assert r["z"] == L.python_zorder_key([r["x"], r["y"]]), r
+        assert r["z"] == R.python_zorder_key([r["x"], r["y"]]), r
     assert {r["z"] for r in got} == {
         (1 << 32) - 1,
-        L.python_zorder_key([65535, 0]),
+        R.python_zorder_key([65535, 0]),
         3,
     }
 
@@ -102,10 +103,10 @@ def test_zordered_layout_prunes_on_both_dimensions(spark, sf_oracle, tmp_path):
 
     lo_c, hi_c = 10, 110  # ~7% of custkey space
     lo_p, hi_p = 1000, 21000  # low slice of totalprice
-    z_cust = L.files_matching(zpath, "o_custkey", lo_c, hi_c)
-    u_cust = L.files_matching(upath, "o_custkey", lo_c, hi_c)
-    z_price = L.files_matching(zpath, "o_price_int", lo_p, hi_p)
-    u_price = L.files_matching(upath, "o_price_int", lo_p, hi_p)
+    z_cust = R.files_matching(zpath, "o_custkey", lo_c, hi_c)
+    u_cust = R.files_matching(upath, "o_custkey", lo_c, hi_c)
+    z_price = R.files_matching(zpath, "o_price_int", lo_p, hi_p)
+    u_price = R.files_matching(upath, "o_price_int", lo_p, hi_p)
     # hash-scattered: every file spans the whole range -> zero skipping
     assert u_cust == n_files and u_price == n_files
     # z-ordered: BOTH dimensions prune (the single-sort layout can't)
@@ -133,29 +134,9 @@ def test_zorder_beats_single_column_sort_on_second_dim(
         orders, zpath, ["o_custkey", "o_price_int"], num_files=n_files
     )
     lo_p, hi_p = 1000, 21000
-    s_price = L.files_matching(spath, "o_price_int", lo_p, hi_p)
-    z_price = L.files_matching(zpath, "o_price_int", lo_p, hi_p)
+    s_price = R.files_matching(spath, "o_price_int", lo_p, hi_p)
+    z_price = R.files_matching(zpath, "o_price_int", lo_p, hi_p)
     assert z_price < s_price, (z_price, s_price)
-
-
-def test_compact_parquet(spark, sf_oracle, tmp_path):
-    """64 tiny files -> few files near the target size; rows and
-    values preserved; in-place compaction refused."""
-    orders = load_table(spark, sf_oracle, "orders")
-    frag = str(tmp_path / "frag")
-    orders.repartition(64).write.parquet(frag)
-    dest = str(tmp_path / "compact")
-    total = sum(
-        os.path.getsize(os.path.join(frag, f))
-        for f in os.listdir(frag)
-        if f.endswith(".parquet")
-    )
-    stats = L.compact_parquet(spark, frag, dest, target_file_bytes=total // 3)
-    assert stats["files_before"] == 64
-    assert stats["files_after"] <= 4
-    assert spark.read.parquet(dest).count() == orders.count()
-    with pytest.raises(ValueError):
-        L.compact_parquet(spark, frag, frag)
 
 
 def test_input_bytes_and_adaptive_materialization(spark, sf_oracle):

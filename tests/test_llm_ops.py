@@ -13,7 +13,18 @@ from mapreduce_framework_for_mergesort_spark.operators import similarity as S
 from mapreduce_framework_for_mergesort_spark.queries import ORACLE, QUERIES
 from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
 
+from tests import references as R
 from tests.oracle import compare_query
+
+
+def _jpeg_pixels(payload: bytes) -> tuple[int, int, list[int]]:
+    w, h, px = M._jpeg_pixels_array(payload)
+    return w, h, [int(v) for v in px]
+
+
+def _jpeg_rgb(payload: bytes) -> tuple[int, int, list]:
+    w, h, rgb = M._jpeg_rgb_array(payload)
+    return w, h, rgb.tolist()
 
 # Round-2 consolidation: q_token_count/q_quality_score/q_regex_funcs →
 # q_text_doc_profile; q_fingerprint → q_lang_id; q_dedup_minhash_bands'
@@ -487,10 +498,10 @@ def test_prepare_training_shards_leakage_safe(spark, sf_oracle, tmp_path):
 
 
 def test_prepare_training_shards_quarantines_straddlers(spark, tmp_path):
-    """Round-7 verdict item 4: the stable split router reports
+    """Round-7 verdict item 4: the stable split router leaves
     structural straddles (a bridge doc merging clusters whose members
-    were already shipped to different splits) but nothing acted on
-    them — the pipeline owner had to remember ``split_leakage_report``.
+    were already shipped to different splits) in place, and nothing
+    acted on them.
     ``prepare_training_shards(quarantine_straddlers=True,
     split_mode='stable')`` now drops a straddling cluster's VAL/TEST
     members before packing (train members kept — train is the safe
@@ -615,7 +626,7 @@ def test_prepare_training_shards_quarantines_straddlers(spark, tmp_path):
 
 def test_curation_features_match_operator_outputs(spark, sf_oracle):
     """The fused one-scan feature projection must agree row-for-row
-    with the standalone quality_scores / lang_id operators."""
+    with the standalone doc_profile / lang_id operators."""
     from mapreduce_framework_for_mergesort_spark import pipelines
     from mapreduce_framework_for_mergesort_spark.operators import text as T
 
@@ -624,20 +635,9 @@ def test_curation_features_match_operator_outputs(spark, sf_oracle):
         r["doc_id"]: (r["quality"], r["pred_lang"])
         for r in pipelines.with_curation_features(docs).collect()
     }
-    q = {r["doc_id"]: r["quality"] for r in T.quality_scores(docs).collect()}
+    q = {r["doc_id"]: r["quality"] for r in T.doc_profile(docs).collect()}
     l = {r["doc_id"]: r["pred_lang"] for r in T.lang_id(docs).collect()}
     assert fused == {k: (q[k], l[k]) for k in fused}
-    # the fused dup_token_frac shares its definition with the
-    # repetition operator (single-sourced in text_feature_exprs)
-    fused_dup = {
-        r["doc_id"]: r["dup_token_frac"]
-        for r in pipelines.with_curation_features(docs).collect()
-    }
-    rep = {
-        r["doc_id"]: r["dup_token_frac"]
-        for r in T.repetition_profile(docs).collect()
-    }
-    assert fused_dup == {k: rep[k] for k in fused_dup}
 
 
 def test_curation_repetition_filter(spark):
@@ -739,7 +739,7 @@ def test_fingerprint_kernel_survives_non_ascii_and_null(spark):
     want = {
         r["doc_id"]: r["fp"]
         for r in df.select(
-            "doc_id", F.expr(H.spark_fingerprint("text")).alias("fp")
+            "doc_id", F.expr(R.spark_fingerprint("text")).alias("fp")
         ).collect()
     }
     assert got == want
@@ -807,7 +807,7 @@ def test_redact_pii_digit_boundaries_and_duckdb_parity(spark):
     con.register("docs", pdf)
     oracle = dict(
         con.execute(
-            f"SELECT doc_id, {T.duckdb_redact_sql('text')} FROM docs"
+            f"SELECT doc_id, {R.duckdb_redact_sql('text')} FROM docs"
         ).fetchall()
     )
     assert oracle == got
@@ -993,45 +993,37 @@ def test_kmeans_training_reduces_objective(spark, sf_oracle):
     import numpy as np
 
     emb = load_table(spark, sf_oracle, "embeddings")
-    xqv = S.quantize_normalized(emb).select("vec_id", "xq").localCheckpoint()
+    xqv = R.quantize_normalized(emb).select("vec_id", "xq").localCheckpoint()
     X = np.array([r.xq for r in xqv.collect()], dtype=np.int64)
 
-    def sse(cents_df):
-        M_ = np.stack(
-            [np.array(r.cq, dtype=np.int64) for r in cents_df.collect()]
-        )
+    def sse(cents):
+        M_ = np.stack([np.array(cq, dtype=np.int64) for _cid, cq in cents])
         d = ((X[:, None, :] - M_[None, :, :]) ** 2).sum(axis=2)
         return int(d.min(axis=1).sum())
 
-    from pyspark.sql import functions as F
-
-    s0 = sse(
-        xqv.where(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("cid"), F.col("xq").alias("cq")
-        )
-    )
-    s1 = sse(S.kmeans_centroids(xqv, 8, iters=1))
-    s2 = sse(S.kmeans_centroids(xqv, 8, iters=2))
+    s0 = sse(S._trained_cents(emb, 8, iters=0))
+    s1 = sse(S._trained_cents(emb, 8, iters=1))
+    s2 = sse(S._trained_cents(emb, 8, iters=2))
     assert s1 < s0 * 0.75, (s0, s1)  # measured: 42% drop at sf0.01
     assert s2 <= s1, (s1, s2)
 
 
 def test_kmeans_np_trainer_matches_distributed(spark, sf_oracle):
     """The driver-side NumPy trainer (what ``_trained_cents`` runs — one
-    collect job) and the distributed DataFrame trainer (the formulation
-    for oversized samples) must produce the IDENTICAL centroid list:
-    both are definitions of the same exact integer arithmetic."""
+    collect job) and the distributed DataFrame trainer (the reference
+    formulation) must produce the IDENTICAL centroid list: both are
+    definitions of the same exact integer arithmetic."""
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_oracle, "embeddings")
     sample = 8 * S.KM_SAMPLE_FACTOR
     smp = (
-        S.quantize_normalized(emb)
+        R.quantize_normalized(emb)
         .where(F.col("vec_id") < sample)
         .select("vec_id", "xq")
         .localCheckpoint()
     )
-    dist = S._kmeans_train(smp, 8, S.KM_ITERS)
+    dist = R._kmeans_train(smp, 8, S.KM_ITERS)
     via_np = S._trained_cents(emb, 8, S.KM_ITERS)
     assert via_np == dist
 
@@ -1056,7 +1048,7 @@ def test_kernel_quantize_matches_sql_expression(spark, sf_oracle):
     for sf in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         emb = load_table(spark, sf, "embeddings")
         rows = (
-            S.quantize_normalized(emb)
+            R.quantize_normalized(emb)
             .select("vec_id", "embedding", "xq")
             .collect()
         )
@@ -1082,7 +1074,7 @@ def test_fingerprint_kernel_matches_sql_expression(spark, sf_oracle):
     both = docs.unionByName(edge).select(
         "doc_id",
         H.fingerprint_udf()(F.col("text")).alias("kern"),
-        F.expr(H.spark_fingerprint("text")).alias("sql"),
+        F.expr(R.spark_fingerprint("text")).alias("sql"),
     )
     bad = both.where(F.col("kern") != F.col("sql")).count()
     assert bad == 0
@@ -1103,7 +1095,7 @@ def test_band_structs_kernel_matches_sql_expression(spark, sf_oracle):
         "doc_id: bigint, text: string",
     )
     both = docs.unionByName(edge)
-    sql_expr = H.spark_band_structs(
+    sql_expr = R.spark_band_structs(
         H.spark_shingles(H.spark_tokens("text"))
     )
     rows = both.select(
@@ -1130,7 +1122,7 @@ def test_simhash_kernel_matches_sql_expression(spark, sf_oracle):
     both = docs.unionByName(edge).select(
         "doc_id",
         H.simhash_udf()(F.col("text")).alias("kern"),
-        F.expr(H.spark_simhash(H.spark_tokens("text"))).alias("sql"),
+        F.expr(R.spark_simhash(H.spark_tokens("text"))).alias("sql"),
     )
     # null-safe inequality so a kern=NULL/sql=0 divergence can't hide
     assert both.where(~F.col("kern").eqNullSafe(F.col("sql"))).count() == 0
@@ -1158,49 +1150,10 @@ def test_gram_rows_kernel_matches_sql_expression(spark, sf_oracle):
     )
     both = docs.unionByName(rep).unionByName(edge)
     kern = D.positional_ngrams(both)
-    sql = D.positional_ngrams_sql(both)
+    sql = R.positional_ngrams_sql(both)
     assert sorted(map(tuple, kern.collect())) == sorted(
         map(tuple, sql.collect())
     )
-
-
-def test_persisted_ivf_index_probe(spark, sf_oracle, tmp_path):
-    """The write-once/probe-many path: a probe of the persisted index
-    must (a) PRUNE to the query's cell directory — the plan carries a
-    PartitionFilters entry on ``cell``, i.e. the 1/C-of-storage claim —
-    and (b) return exactly what the in-memory ``ivf_topk`` returns for
-    the same query vector (same cells, same exact-cosine rerank)."""
-    emb = load_table(spark, sf_oracle, "embeddings")
-    path = str(tmp_path / "ivf_index")
-    cents = S.write_ivf_index(emb, path, num_centroids=8)
-
-    qvec = emb.where("vec_id = 17").collect()[0]["embedding"]
-    probe = S.probe_ivf_index(spark, path, cents, qvec, 10)
-
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "cell" in plan.split(
-        "PartitionFilters:"
-    )[1].split("]")[0], plan
-
-    got = [(r["vec_id"], r["score"]) for r in probe.collect()]
-    want = [
-        (r["vec_id"], r["score"])
-        for r in S.ivf_topk(emb, 17, 10, 8).collect()
-    ]
-    assert got == want
-
-    # multi-probe against the persisted index agrees with the in-memory
-    # operator at the same nprobe (IN-filter pruning, same rerank)
-    got2 = [
-        (r["vec_id"], r["score"])
-        for r in S.probe_ivf_index(spark, path, cents, qvec, 10, nprobe=2)
-        .collect()
-    ]
-    want2 = [
-        (r["vec_id"], r["score"])
-        for r in S.ivf_topk(emb, 17, 10, 8, nprobe=2).collect()
-    ]
-    assert got2 == want2
 
 
 def test_multimodal_feature_pipeline(spark, sf_smoke):
@@ -1242,7 +1195,7 @@ def test_png_container_roundtrip_and_real_compression():
     h = -(-len(data) // M.IMG_WIDTH)
     assert png[:8] == M.PNG_SIG
     raw = h * (M.IMG_WIDTH + 1)
-    assert len(png) == 57 + M._zlib_stored_len(raw)  # oracle formula
+    assert len(png) == 57 + R.zlib_stored_len(raw)  # oracle formula
     # identical pixel semantics as the BMP twin
     assert M.decode_png(png) == M.decode_bmp(M.synthesize_bmp(data))
     assert M.decode_png(M.synthesize_png(b"")) == [0.0] * M.FEATURE_DIM
@@ -1256,10 +1209,6 @@ def test_png_container_roundtrip_and_real_compression():
         # (deflate block type bits differ from the stored encoder's)
         assert p != png or (level, ft) == (0, 0)
 
-    # resize re-encodes through the shared encoder (decodable output)
-    r = M.resize_png(png, 8, 8)
-    w2, h2, px2 = M._png_pixels(r)
-    assert (w2, h2) == (8, 8)
     # band tiling is pixel-exact and every band decodes standalone
     tot = []
     for f in M.frame_stub(png, "png"):
@@ -1294,7 +1243,7 @@ def test_jpeg_container_roundtrip_size_and_features():
     # no 0xFF anywhere in the entropy segment — no stuffing needed,
     # the closed-form size proof's load-bearing property
     assert b"\xff" not in p[len(p) - 2 - 2 * len(data):-2]
-    w, h, px = M._jpeg_pixels(p)
+    w, h, px = _jpeg_pixels(p)
     assert (w, h) == (M.JPEG_WIDTH, 8 * len(data))
     assert px == [b for b in data for _ in range(64)]
     n = len(data)
@@ -1305,13 +1254,7 @@ def test_jpeg_container_roundtrip_size_and_features():
     ]
     assert M.decode_jpeg(M.synthesize_jpeg(b"")) == [0.0] * M.FEATURE_DIM
 
-    # resize pools block rows (exact for flat sources) and re-encodes
-    # through the same profile; frames are standalone decodable JPEGs
-    r = M.resize_jpeg(M.synthesize_jpeg(b"abcdef"), 8, 24)
-    assert [M._jpeg_pixels(r)[2][i * 64] for i in range(3)] == [
-        ord("a"), ord("c"), ord("e"),
-    ]
-    # bands group JPEG_BAND_BLOCKS blocks (~the other branches' 64-byte
+    # frames are standalone decodable JPEGs; bands group JPEG_BAND_BLOCKS blocks (~the other branches' 64-byte
     # windows); a short payload is one band carrying its blocks verbatim
     frames = M.frame_stub(M.synthesize_jpeg(b"xyz"), "jpeg")
     assert frames == [M.synthesize_jpeg(b"xyz")]
@@ -1324,9 +1267,9 @@ def test_jpeg_container_roundtrip_size_and_features():
 
     # corruption is loud, never an empty decode
     with pytest.raises(ValueError, match="not a JPEG"):
-        M._jpeg_pixels(b"BM" + bytes(60))
+        _jpeg_pixels(b"BM" + bytes(60))
     with pytest.raises(ValueError, match="exhausted|truncated"):
-        M._jpeg_pixels(p[:-10])
+        _jpeg_pixels(p[:-10])
     with pytest.raises(ValueError, match="at most 8191"):
         M.synthesize_jpeg(bytes(9000))
 
@@ -1462,7 +1405,7 @@ def test_jpeg_decoder_general_baseline_path():
             .reshape(-1)
         ]
 
-    w, h, px = M._jpeg_pixels(jfif(entropy))
+    w, h, px = _jpeg_pixels(jfif(entropy))
     assert (w, h) == (16, 16)
     assert px == reference(blocks)
 
@@ -1477,7 +1420,7 @@ def test_jpeg_decoder_general_baseline_path():
             break
     assert stuffed is not None, "no stuffed byte found in search space"
     cand, ent = stuffed
-    w, h, px = M._jpeg_pixels(jfif(ent))
+    w, h, px = _jpeg_pixels(jfif(ent))
     assert px == reference(cand)
 
 
@@ -1541,42 +1484,6 @@ def test_bmp_synthesis_roundtrip():
         M.decode_bmp(bmp[:-1])
 
 
-def test_bmp_resize_nearest_neighbor(spark):
-    """Real image resize: output is itself a valid BMP whose pixels are
-    the nearest-neighbor samples of the source, and the distributed
-    seam normalizes every payload to the target shape."""
-    data = bytes(range(32, 32 + 64))  # 4 full 16-px rows
-    bmp = M.synthesize_bmp(data)
-    small = M.resize_bmp(bmp, 8, 2)
-    w, h, px = M._bmp_pixels(small)
-    assert (w, h) == (8, 2)
-    # nearest neighbor: (x, y) samples source (x*16//8, y*4//2)
-    want = [data[(y * 4 // 2) * 16 + (x * 16 // 8)] for y in range(2) for x in range(8)]
-    assert px == want
-    # upscale also works and stays decodable end-to-end
-    up = M.resize_bmp(small, 16, 16)
-    assert M.decode_bmp(up)[0:3] == [16.0, 16.0, 256.0]
-    # empty source resizes to an all-zero target (the seam is total
-    # over synthesize_bmp's range); bad target dims fail loudly
-    empty_rz = M.resize_bmp(M.synthesize_bmp(b""), 4, 4)
-    assert M.decode_bmp(empty_rz) == [4.0, 4.0, 16.0, 0, 0, 0, 0, 0]
-    with pytest.raises(ValueError):
-        M.resize_bmp(bmp, 0, 4)
-    with pytest.raises(ValueError):
-        M.resize_bmp(bmp, 4, -1)
-
-    docs = spark.createDataFrame(
-        [(1, "x" * 40), (2, "y" * 7)], ["doc_id", "text"]
-    )
-    out = M.resize_image_payloads(
-        M.binarize_image_documents(docs), 4, 4
-    ).collect()
-    for r in out:
-        ww, hh, _ = M._bmp_pixels(bytes(r["payload"]))
-        assert (ww, hh) == (4, 4)
-        assert r["meta_n_bytes"] == len(r["payload"])
-
-
 def test_y4m_synthesis_roundtrip():
     """The video seam is a REAL YUV4MPEG2 container: ASCII stream
     header, per-FRAME markers, raw Cmono luma planes; decode inverts
@@ -1622,10 +1529,9 @@ def test_y4m_synthesis_roundtrip():
         M.decode_y4m(b"YUV4MPEG2 Cmono\n")
 
 
-def test_y4m_frames_and_resize(spark):
-    """Temporal frame extraction and per-frame spatial resize are real:
-    every emitted frame is itself a decodable single-frame Y4M, and
-    resize preserves frame count while normalizing shape."""
+def test_y4m_frames_and_resize():
+    """Temporal frame extraction is real: every emitted frame is itself
+    a decodable single-frame Y4M carrying its slice of the source."""
     data = bytes((i * 7) % 256 for i in range(100))  # 4 frames
     y4m = M.synthesize_y4m(data)
     frames = M.frame_stub(y4m, "video")
@@ -1635,32 +1541,6 @@ def test_y4m_frames_and_resize(spark):
         w, h, planes = M._y4m_planes(f)
         assert (w, h, len(planes)) == (M.VID_WIDTH, M.VID_HEIGHT, 1)
         assert planes[0] == padded[i * M.VID_FRAME_PX : (i + 1) * M.VID_FRAME_PX]
-    # nearest-neighbor resize: frame count preserved, every plane
-    # resampled by the same integer rule as the BMP seam
-    rz = M.resize_y4m(y4m, 4, 2)
-    w, h, planes = M._y4m_planes(rz)
-    assert (w, h, len(planes)) == (4, 2, 4)
-    want0 = bytes(
-        padded[(y * M.VID_HEIGHT // 2) * M.VID_WIDTH + (x * M.VID_WIDTH // 4)]
-        for y in range(2)
-        for x in range(4)
-    )
-    assert planes[0] == want0
-    # zero-frame clips resize to zero-frame clips at the new dims
-    assert M._y4m_planes(M.resize_y4m(M.synthesize_y4m(b""), 2, 2))[2] == []
-    with pytest.raises(ValueError):
-        M.resize_y4m(y4m, 0, 2)
-
-    docs = spark.createDataFrame(
-        [(1, "x" * 40), (2, "y" * 7), (3, "")], ["doc_id", "text"]
-    )
-    out = M.resize_video_payloads(
-        M.binarize_video_documents(docs), 4, 4
-    ).collect()
-    for r in out:
-        ww, hh, pl = M._y4m_planes(bytes(r["payload"]))
-        assert (ww, hh) == (4, 4)
-        assert r["meta_n_bytes"] == len(r["payload"])
 
 
 def test_wav_synthesis_roundtrip():
@@ -1702,20 +1582,6 @@ def test_wav_synthesis_roundtrip():
             w.setframerate(8000)
             w.writeframes(b"\x00\x00\x00\x00")
         M.decode_wav(buf.getvalue())
-
-
-def test_multimodal_resize_normalizes_and_errors(spark, sf_smoke):
-    docs = load_table(spark, sf_smoke, "documents").limit(10)
-    resized = M.resize_payload(M.binarize_documents(docs), 32).collect()
-    assert all(
-        r["meta_n_bytes"] == 32 and len(r["payload"]) == 32 for r in resized
-    )
-    video = spark.createDataFrame(
-        [(1, "video", bytearray(b"xx"), "video/mp4", 2)],
-        "doc_id long, modality string, payload binary, meta_mime string, meta_n_bytes long",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|resize"):
-        M.resize_payload(video, 32).collect()
 
 
 def test_multimodal_frame_sampling_fans_out(spark, sf_smoke):
@@ -1985,7 +1851,6 @@ def test_chunk_documents_matches_duckdb(spark, sf_oracle):
     projection — no shuffle, no Python."""
     from mapreduce_framework_for_mergesort_spark.operators.text import (
         chunk_documents,
-        duckdb_chunk_sql,
     )
     from mapreduce_framework_for_mergesort_spark.plans import audit
     from tests.oracle import run_oracle
@@ -1997,7 +1862,7 @@ def test_chunk_documents_matches_duckdb(spark, sf_oracle):
         for r in out.collect()
     )
     _cols, rows = run_oracle(
-        duckdb_chunk_sql(chunk_tokens=16, overlap_tokens=4), sf_oracle
+        R.duckdb_chunk_sql(chunk_tokens=16, overlap_tokens=4), sf_oracle
     )
     want = sorted(rows)
     assert got == want and len(got) > 0
@@ -2025,90 +1890,54 @@ def test_chunk_documents_matches_duckdb(spark, sf_oracle):
 
 
 def test_repetition_profile_matches_duckdb(spark, sf_oracle):
-    """The Gopher-style repetition metrics must agree value-for-value
-    with a DuckDB replication of the same algebra over the real
+    """The Gopher-style repetition metric the curation filter reads
+    (``dup_token_frac``, projected by ``with_curation_features``) must
+    agree value-for-value with a DuckDB replication over the real
     corpus."""
+    from mapreduce_framework_for_mergesort_spark import pipelines
     from mapreduce_framework_for_mergesort_spark.functions import (
         hashing as H,
     )
-    from mapreduce_framework_for_mergesort_spark.operators.text import (
-        repetition_profile,
-    )
     from tests.oracle import run_oracle
 
-    toks = H.duckdb_tokens("text")
     sql = f"""
-    WITH t AS (SELECT doc_id, {toks} AS toks FROM documents),
-    bg AS (SELECT doc_id,
-           CASE WHEN len(toks) >= 2 THEN
-             list_transform(range(1, len(toks)),
-                            i -> concat_ws(' ', toks[i], toks[i + 1]))
-           ELSE [] END AS bigrams FROM t),
-    e AS (SELECT doc_id, unnest(bigrams) AS bigram FROM bg),
-    c AS (SELECT doc_id, bigram, COUNT(*) AS cnt FROM e GROUP BY 1, 2),
-    top AS (SELECT doc_id, bigram, cnt,
-            row_number() OVER (PARTITION BY doc_id
-                               ORDER BY cnt DESC, bigram) AS rn FROM c)
-    SELECT t.doc_id,
-           len(t.toks) AS n_tokens,
-           CASE WHEN len(t.toks) = 0 THEN CAST(0 AS DOUBLE)
+    WITH t AS (SELECT doc_id, {H.duckdb_tokens('text')} AS toks
+               FROM documents)
+    SELECT doc_id,
+           CASE WHEN len(toks) = 0 THEN CAST(0 AS DOUBLE)
                 ELSE CAST(1 AS DOUBLE)
-                     - CAST(len(list_distinct(t.toks)) AS DOUBLE)
-                       / len(t.toks) END AS dup_token_frac,
-           top.bigram AS top_bigram,
-           CASE WHEN len(bg.bigrams) > 0
-                THEN CAST(top.cnt AS DOUBLE) / len(bg.bigrams)
-                ELSE CAST(0 AS DOUBLE) END AS top_bigram_frac
-    FROM t JOIN bg USING (doc_id)
-    LEFT JOIN top ON top.doc_id = t.doc_id AND top.rn = 1
+                     - CAST(len(list_distinct(toks)) AS DOUBLE)
+                       / len(toks) END AS dup_token_frac
+    FROM t
     """
     docs = load_table(spark, sf_oracle, "documents")
     got = {
-        r["doc_id"]: (
-            r["n_tokens"],
-            round(r["dup_token_frac"], 12),
-            r["top_bigram"],
-            round(r["top_bigram_frac"], 12),
-        )
-        for r in repetition_profile(docs).collect()
+        r["doc_id"]: round(r["dup_token_frac"], 12)
+        for r in pipelines.with_curation_features(docs).collect()
     }
-    cols, rows = run_oracle(sql, sf_oracle)
-    idx = {c: i for i, c in enumerate(cols)}
-    want = {
-        r[idx["doc_id"]]: (
-            r[idx["n_tokens"]],
-            round(r[idx["dup_token_frac"]], 12),
-            r[idx["top_bigram"]],
-            round(r[idx["top_bigram_frac"]], 12),
-        )
-        for r in rows
-    }
-    assert got == want
+    _cols, rows = run_oracle(sql, sf_oracle)
+    assert got == {r[0]: round(r[1], 12) for r in rows}
 
 
 def test_repetition_profile_edge_cases(spark):
-    from mapreduce_framework_for_mergesort_spark.operators.text import (
-        repetition_profile,
-    )
+    from mapreduce_framework_for_mergesort_spark import pipelines
 
     docs = spark.createDataFrame(
         [
             (1, ""),                       # no tokens
-            (2, "solo"),                   # 1 token → no bigrams
+            (2, "solo"),                   # 1 token
             (3, "a a a"),                  # pure repetition
             (4, "alpha beta alpha beta"),  # repeating bigram chain
         ],
         ["doc_id", "text"],
     )
-    got = {r["doc_id"]: r.asDict() for r in repetition_profile(docs).collect()}
-    assert got[1]["n_tokens"] == 0 and got[1]["dup_token_frac"] == 0.0
-    assert got[1]["top_bigram"] is None and got[1]["top_bigram_frac"] == 0.0
-    assert got[2]["top_bigram"] is None and got[2]["top_bigram_frac"] == 0.0
-    assert got[3]["dup_token_frac"] == pytest.approx(2 / 3)
-    assert got[3]["top_bigram"] == "a a" and got[3]["top_bigram_frac"] == 1.0
-    # bigrams: 'alpha beta' x2, 'beta alpha' x1 → top 'alpha beta' 2/3
-    assert got[4]["top_bigram"] == "alpha beta"
-    assert got[4]["top_bigram_frac"] == pytest.approx(2 / 3)
+    got = {
+        r["doc_id"]: r["dup_token_frac"]
+        for r in pipelines.with_curation_features(docs).collect()
+    }
+    assert got[1] == 0.0 and got[2] == 0.0
+    assert got[3] == pytest.approx(2 / 3)
+    assert got[4] == pytest.approx(1 / 2)
 
 
 def test_pack_documents_matches_duckdb_window(spark, sf_oracle):
@@ -2205,14 +2034,18 @@ def test_pack_documents_partitioning_proof(spark, sf_oracle):
 
 
 def test_hash_sample_deterministic_and_duckdb_exact(spark, sf_oracle):
-    """hash_sample must select the IDENTICAL id set as the DuckDB
-    predicate built from the same threshold, be partitioning-proof, and
-    be nested across rates (kept@0.1 ⊆ kept@0.3)."""
+    """The salted hash-sample predicate must select the IDENTICAL id
+    set as the DuckDB predicate built from the same threshold, be
+    partitioning-proof, and be nested across rates (kept@0.1 ⊆
+    kept@0.3)."""
     from mapreduce_framework_for_mergesort_spark.operators.sampling import (
         duckdb_sample_predicate,
-        hash_sample,
+        sample_predicate,
     )
     from tests.oracle import run_oracle
+
+    def hash_sample(df, rate):
+        return df.where(sample_predicate("doc_id", rate))
 
     docs = load_table(spark, sf_oracle, "documents")
     got = {
@@ -2293,200 +2126,6 @@ def test_balanced_sample_caps_and_is_partition_proof(spark):
     )
     got = balanced_sample(with_nulls, "cluster", cap=10, key="doc_id").collect()
     assert [(r["doc_id"], r["cluster"]) for r in got] == [(2, "x")]
-
-
-def test_stratified_hash_sample_rates_and_nesting(spark, sf_oracle):
-    from mapreduce_framework_for_mergesort_spark.operators.sampling import (
-        hash_sample,
-        stratified_hash_sample,
-    )
-
-    docs = load_table(spark, sf_oracle, "documents")
-    langs = [r["lang"] for r in docs.select("lang").distinct().collect()]
-    a, b = sorted(langs)[:2]
-    out = stratified_hash_sample(
-        docs, {a: 1.0, b: 0.0}, "lang", default_rate=0.5
-    )
-    rows = out.select("doc_id", "lang").collect()
-    got_a = {r["doc_id"] for r in rows if r["lang"] == a}
-    all_a = {
-        r["doc_id"] for r in docs.where(F.col("lang") == a).collect()
-    }
-    assert got_a == all_a          # rate 1.0 keeps everything
-    assert not any(r["lang"] == b for r in rows)  # rate 0.0 drops all
-    # non-listed strata follow default_rate — and the per-stratum
-    # decisions coincide with plain hash_sample at the same rate
-    others = {r["doc_id"] for r in rows if r["lang"] not in (a, b)}
-    plain = {
-        r["doc_id"]
-        for r in hash_sample(
-            docs.where(~F.col("lang").isin(a, b)), 0.5
-        ).collect()
-    }
-    assert others == plain
-
-
-def test_incremental_lsh_index_equals_batch(spark, sf_oracle, tmp_path):
-    """Incremental dedup contract: pairs(batch over corpus∪new) =
-    pairs(corpus alone) ∪ incremental(new vs index) — nothing lost,
-    nothing double-counted, old×old never recomputed."""
-    docs = load_table(spark, sf_oracle, "documents")
-    old = docs.where("doc_id % 2 = 0")
-    new = docs.where("doc_id % 2 = 1")
-
-    path = str(tmp_path / "lsh_index")
-    D.write_lsh_index(old, path)
-    index = spark.read.parquet(path)
-
-    inc = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(new, index).collect()
-    }
-    old_pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(D.minhash_bands(old)).collect()
-    }
-    full = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.lsh_candidate_pairs(D.minhash_bands(docs)).collect()
-    }
-    assert old_pairs | inc == full
-    assert old_pairs.isdisjoint(inc)
-    assert inc, "fixture corpus must produce cross-half candidates"
-
-
-def test_lsh_index_bucketed_probe_is_index_shuffle_free(spark, sf_oracle):
-    """write_lsh_index_bucketed (round 8): the docstring claim
-    'bucketed index -> the probe join needs no index-side shuffle'
-    becomes pinned behavior.  (a) the probe plan has exactly ONE
-    Exchange — the tiny batch side hash-partitioning to the bucket
-    layout — and the index FileScan is ``Bucketed: true`` with no
-    Exchange above it; (b) incremental pairs over the bucketed index
-    equal those over the parquet-path index."""
-    import re
-
-    docs = load_table(spark, sf_oracle, "documents")
-    old = docs.where("doc_id % 2 = 0")
-    new = docs.where("doc_id % 2 = 1")
-    D.write_lsh_index_bucketed(old, "lsh_idx_bucketed_test", num_buckets=8)
-    idx = D.read_lsh_index_bucketed(spark, "lsh_idx_bucketed_test")
-
-    n, o = D.minhash_bands(new).alias("n"), idx.alias("o")
-    probe = n.join(
-        o,
-        (F.col("n.band_id") == F.col("o.band_id"))
-        & (F.col("n.band_val") == F.col("o.band_val"))
-        & (F.col("n.doc_id") != F.col("o.doc_id")),
-    )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"Exchange", plan)) == 1, plan
-    assert "Bucketed: true" in plan, plan
-    # the one exchange hangs over the BATCH scan, not the index scan:
-    # no Exchange line may mention the bucketed table's columns' side
-    idx_scan = [l for l in plan.splitlines() if "lsh_idx_bucketed_test" in l]
-    assert idx_scan and all("Exchange" not in l for l in idx_scan)
-
-    got = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(new, idx).collect()
-    }
-    want = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.minhash_bands(old)
-        ).collect()
-    }
-    assert got == want and got
-    spark.sql("DROP TABLE IF EXISTS lsh_idx_bucketed_test")
-
-
-def test_lsh_index_delete_lifecycle(spark, sf_oracle, tmp_path):
-    """delete_from_lsh_index (round 8 — the dedup-index twin of the
-    IVFADC tombstones): a retracted document's bands stop generating
-    candidate pairs without re-banding the corpus.
-
-    (a) EXCLUSION-EQUIVALENCE: after tombstoning, incremental pairs
-    against ``lsh_index_bands`` equal pairs against an index built
-    WITHOUT the deleted docs; (b) IDEMPOTENCE + slug validation;
-    (c) EMPTY takedown publishes harmlessly; (d) a crash-leftover temp
-    is invisible; (e) the plain parquet read of the band partitions is
-    untouched (tombstones are metadata under an underscore dir);
-    (f) a ``write_lsh_index(retained, mode='overwrite')`` rebuild
-    folds band rows AND tombstones away physically."""
-    import os
-
-    docs = load_table(spark, sf_oracle, "documents")
-    old = docs.where("doc_id % 2 = 0")
-    new = docs.where("doc_id % 2 = 1")
-    path = str(tmp_path / "lsh_del")
-    D.write_lsh_index(old, path)
-
-    # choose victims that actually participate in cross-half pairs
-    base_inc = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.lsh_index_bands(spark, path)
-        ).collect()
-    }
-    assert base_inc
-    indexed_in_pairs = sorted(
-        {a for a, _b in base_inc} | {b for _a, b in base_inc}
-    )
-    doomed = [d for d in indexed_in_pairs if d % 2 == 0][:2]
-    assert doomed, "need indexed docs participating in pairs"
-
-    assert D.delete_from_lsh_index(spark, doomed, path, "t1") is True
-    after = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.lsh_index_bands(spark, path)
-        ).collect()
-    }
-    retained_index = old.where(~F.col("doc_id").isin(doomed))
-    path2 = str(tmp_path / "lsh_retained")
-    D.write_lsh_index(retained_index, path2)
-    want = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.lsh_index_bands(spark, path2)
-        ).collect()
-    }
-    assert after == want and after != base_inc
-
-    # idempotence, slug validation, empty takedown, crash leftover
-    assert D.delete_from_lsh_index(spark, doomed, path, "t1") is False
-    with pytest.raises(ValueError, match="plain slug"):
-        D.delete_from_lsh_index(spark, [1], path, ".bad")
-    assert D.delete_from_lsh_index(spark, [], path, "t-empty") is True
-    import shutil
-
-    shutil.copytree(
-        f"{path}/_tombstones/t1", f"{path}/_tombstones/.tmp-t2"
-    )
-    assert {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.lsh_index_bands(spark, path)
-        ).collect()
-    } == want
-
-    # the raw band partitions are untouched by deletion
-    assert spark.read.parquet(path).where(
-        F.col("doc_id").isin(doomed)
-    ).count() > 0
-
-    # rebuild folds everything
-    D.write_lsh_index(retained_index, path, mode="overwrite")
-    assert not os.path.exists(f"{path}/_tombstones")
-    assert spark.read.parquet(path).where(
-        F.col("doc_id").isin(doomed)
-    ).count() == 0
-    assert {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.lsh_index_bands(spark, path)
-        ).collect()
-    } == want
 
 
 def test_near_dedup_collapse_exact_identical_kept_set(spark, sf_oracle):
@@ -2969,7 +2608,7 @@ def test_redact_pii_iban_and_aggressive_shapes(spark):
         oracle = dict(
             con.execute(
                 f"SELECT doc_id,"
-                f" {T.duckdb_redact_sql('text', aggressive=mode)}"
+                f" {R.duckdb_redact_sql('text', aggressive=mode)}"
                 f" FROM docs"
             ).fetchall()
         )
@@ -3131,7 +2770,7 @@ def test_feature_hash_embed_parity_and_retrieval(spark, sf_oracle):
     want = {
         d: [float(v) for v in vec]
         for d, vec in con.execute(
-            f"SELECT doc_id, {S.duckdb_feature_hash_sql('text', DIM)}"
+            f"SELECT doc_id, {R.duckdb_feature_hash_sql('text', DIM)}"
             f" FROM documents"
         ).fetchall()
     }
@@ -3183,9 +2822,9 @@ def test_jpeg_color_container_roundtrip_size_and_features():
 
     # pinned conversion: vectorized twin == scalar form, channel by
     # channel, including clamp-active extremes
-    _w, _h, rgb = M._jpeg_rgb(p)
+    _w, _h, rgb = _jpeg_rgb(p)
     for i, v in enumerate(data):
-        want = M._ycbcr_to_rgb(v, 255 - v, (3 * v + 7) % 256)
+        want = R.ycbcr_to_rgb(v, 255 - v, (3 * v + 7) % 256)
         assert tuple(rgb[i * 192 : i * 192 + 3]) == want
         # and the scalar form really is floor(x+0.5) with the literals
         cl = lambda x: max(0, min(255, math.floor(x + 0.5)))
@@ -3206,8 +2845,8 @@ def test_jpeg_color_container_roundtrip_size_and_features():
     assert M.decode_jpeg(g) == M.decode_jpeg(g[:2] + com + g[2:])
     assert M.decode_jpeg_color(M.synthesize_jpeg_color(b"")) == [0.0] * M.FEATURE_DIM
 
-    # resize pools per COMPONENT (chroma survives), frames are
-    # standalone decodable color JPEGs carrying their MCUs verbatim
+    # frames are standalone decodable color JPEGs carrying their MCUs
+    # verbatim
     frames = M.frame_stub(M.synthesize_jpeg_color(b"xyz"), "jpeg_color")
     assert frames == [M.synthesize_jpeg_color(b"xyz")]
     long = bytes(range(64, 64 + 20))
@@ -3216,19 +2855,10 @@ def test_jpeg_color_container_roundtrip_size_and_features():
         M.JPEGC_HEADER + 48, M.JPEGC_HEADER + 48, M.JPEGC_HEADER + 24,
     ]
     assert frames[1] == M.synthesize_jpeg_color(long[8:16])
-    r = M.resize_jpeg_color(M.synthesize_jpeg_color(b"abcdef"), 8, 24)
-    _w2, h2, yp2, cbp2, crp2 = M._jpeg_ycbcr(r)
-    assert h2 == 24
-    assert [int(yp2[8 * i][0]) for i in range(3)] == [
-        ord("a"), ord("c"), ord("e"),
-    ]
-    assert [int(cbp2[8 * i][0]) for i in range(3)] == [
-        255 - ord("a"), 255 - ord("c"), 255 - ord("e"),
-    ]
 
     # cross-profile misuse is a loud error, both directions
     with pytest.raises(ValueError, match="use the jpeg_color verbs"):
-        M._jpeg_pixels(p)
+        _jpeg_pixels(p)
     with pytest.raises(ValueError, match="use the\n?.*greyscale jpeg verbs"):
         M._jpeg_ycbcr(M.synthesize_jpeg(b"abc"))
     with pytest.raises(ValueError, match="at most 8191"):
@@ -3421,8 +3051,8 @@ def test_jpeg_color_decoder_general_baseline_path():
     assert np.array_equal(np.asarray(crp), up(crref))
 
     # RGB conversion on the general path equals the scalar pinned form
-    _w, _h, rgb = M._jpeg_rgb(payload)
-    want00 = M._ycbcr_to_rgb(int(yref[0, 0]), int(cbref[0, 0]), int(crref[0, 0]))
+    _w, _h, rgb = _jpeg_rgb(payload)
+    want00 = R.ycbcr_to_rgb(int(yref[0, 0]), int(cbref[0, 0]), int(crref[0, 0]))
     assert tuple(rgb[0:3]) == want00
 
     # byte-stuffing branch: drive both chroma DCs until the stream
@@ -3618,137 +3248,6 @@ def test_jpeg_decoder_restart_intervals():
     # a wrong restart-marker index is corruption, not silently skipped
     with pytest.raises(ValueError, match="expected RST0"):
         M._jpeg_ycbcr(build([1, 0]))
-
-
-def test_lsh_index_rebuild_folds_tombstones_under_dynamic_overwrite(
-    spark, sf_oracle, tmp_path
-):
-    """Round-8 review: the rebuild's 'overwrite folds tombstones away'
-    contract relied on STATIC partitionOverwriteMode semantics — under
-    ``dynamic`` (a common production session default) a partitioned
-    overwrite replaces only the band partitions present in the write
-    and left ``_tombstones`` alive, masking re-included docs forever.
-    write_lsh_index now deletes the index root explicitly on
-    overwrite; pin the fold under the dynamic mode."""
-    import os
-
-    docs = load_table(spark, sf_oracle, "documents").limit(60)
-    path = str(tmp_path / "lsh_dyn")
-    D.write_lsh_index(docs, path)
-    doomed = [int(docs.first()["doc_id"])]
-    assert D.delete_from_lsh_index(spark, doomed, path, "t1") is True
-    assert os.path.isdir(f"{path}/_tombstones")
-
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        D.write_lsh_index(docs, path, mode="overwrite")
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    assert not os.path.exists(f"{path}/_tombstones")
-    # the re-included doc's bands are live again
-    assert D.lsh_index_bands(spark, path).where(
-        F.col("doc_id").isin(doomed)
-    ).count() > 0
-
-
-def test_lsh_index_bucketed_delete_lifecycle(spark, sf_oracle):
-    """Round 9: the bucketed band index — the layout recommended at
-    real scale — takes a takedown WITHOUT a full rebuild, composing
-    the two halves of round 8's work.  (a) after the same delete, the
-    bucketed probe's pairs equal the parquet-path probe's; (b) the
-    probe plan keeps ZERO shuffle exchanges on the index side (the
-    tombstone anti-join is a broadcast, the index scan stays
-    ``Bucketed: true``); (c) idempotence + empty batch + crash
-    leftovers behave like every other tombstone surface; (d) a rebuild
-    through write_lsh_index_bucketed folds tombstones away."""
-    import os
-    import shutil
-
-    docs = load_table(spark, sf_oracle, "documents")
-    old = docs.where("doc_id % 2 = 0")
-    new = docs.where("doc_id % 2 = 1")
-    table = "lsh_idx_bucketed_del_test"
-    D.write_lsh_index_bucketed(old, table, num_buckets=8)
-
-    base = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.read_lsh_index_bucketed(spark, table)
-        ).collect()
-    }
-    assert base
-    participants = sorted({a for a, _ in base} | {b for _, b in base})
-    doomed = [d for d in participants if d % 2 == 0][:2]
-    assert doomed
-
-    # (c) publish + hygiene
-    assert D.delete_from_lsh_index_bucketed(spark, doomed, table, "t1")
-    assert (
-        D.delete_from_lsh_index_bucketed(spark, doomed, table, "t1")
-        is False
-    )
-    assert D.delete_from_lsh_index_bucketed(spark, [], table, "t-empty")
-    loc = D._bucketed_table_location(spark, table).removeprefix("file:")
-    shutil.copytree(
-        f"{loc}/_tombstones/t1", f"{loc}/_tombstones/.tmp-x"
-    )
-
-    # (a) pair-identical to the parquet-path layout after the same
-    # delete (exclusion-equivalence)
-    idx = D.read_lsh_index_bucketed(spark, table)
-    after = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(new, idx).collect()
-    }
-    import tempfile
-
-    pdir = tempfile.mkdtemp(prefix="lsh_parquet_")
-    try:
-        D.write_lsh_index(old, pdir)
-        assert D.delete_from_lsh_index(spark, doomed, pdir, "t1") is True
-        want = {
-            (r["doc_a"], r["doc_b"])
-            for r in D.incremental_candidate_pairs(
-                new, D.lsh_index_bands(spark, pdir)
-            ).collect()
-        }
-    finally:
-        shutil.rmtree(pdir, ignore_errors=True)
-    assert after == want and after != base
-
-    # (b) index side still shuffle-free: every Exchange in the probe
-    # plan is either the batch side's hash-partitioning or the
-    # tombstones' broadcast; the index scan stays bucketed with no
-    # shuffle above it
-    n, o = D.minhash_bands(new).alias("n"), idx.alias("o")
-    probe = n.join(
-        o,
-        (F.col("n.band_id") == F.col("o.band_id"))
-        & (F.col("n.band_val") == F.col("o.band_val"))
-        & (F.col("n.doc_id") != F.col("o.doc_id")),
-    )
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    shuffles = [
-        l for l in plan.splitlines()
-        if "Exchange" in l and "BroadcastExchange" not in l
-    ]
-    assert len(shuffles) == 1, plan  # the batch side only
-    assert "Bucketed: true" in plan, plan
-    idx_scan = [l for l in plan.splitlines() if table in l]
-    assert idx_scan and all("Exchange" not in l for l in idx_scan)
-
-    # (d) rebuild folds rows and tombstones away together
-    D.write_lsh_index_bucketed(old, table, num_buckets=8)
-    assert not os.path.exists(f"{loc}/_tombstones")
-    rebuilt = {
-        (r["doc_a"], r["doc_b"])
-        for r in D.incremental_candidate_pairs(
-            new, D.read_lsh_index_bucketed(spark, table)
-        ).collect()
-    }
-    assert rebuilt == base
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
 def _prog_jpeg_toolkit():
@@ -4014,7 +3513,7 @@ def test_jpeg_decoder_progressive_greyscale():
         want[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = _idct_ref(blk, q)
     want = np.clip(np.rint(want + 128), 0, 255).astype(np.int64)
 
-    w, h, got = M._jpeg_pixels(payload)
+    w, h, got = _jpeg_pixels(payload)
     assert (w, h) == (16, 16)
     assert np.array_equal(np.array(got).reshape(16, 16), want)
 
@@ -4028,17 +3527,17 @@ def test_jpeg_decoder_progressive_greyscale():
         t["seg"](0xFFDA, bytes([3, 1, 0, 2, 0, 3, 0, 1, 20, AL])),
     )
     with pytest.raises(ValueError, match="exactly one component"):
-        M._jpeg_pixels(bad)
+        _jpeg_pixels(bad)
     # invalid successive approximation (Ah must be Al+1)
     bad = payload.replace(
         t["sos"]([(1, 0x00)], 1, 20, 1, 0),
         t["sos"]([(1, 0x00)], 1, 20, 2, 0),
     )
     with pytest.raises(ValueError, match="successive approximation"):
-        M._jpeg_pixels(bad)
+        _jpeg_pixels(bad)
     # truncation mid-scan
     with pytest.raises(ValueError):
-        M._jpeg_pixels(payload[: len(payload) - 40])
+        _jpeg_pixels(payload[: len(payload) - 40])
 
 
 def test_jpeg_decoder_progressive_color_420_with_restarts():

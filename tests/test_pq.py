@@ -82,38 +82,6 @@ def test_pq_validation():
         P.train_codebooks(None, dim=65, m=4)  # not divisible
 
 
-def test_pq_persisted_index_probe_matches_inline(spark, emb, tmp_path):
-    """write-once/probe-many: the persisted index (compressed codes +
-    codebooks) must reproduce the inline operator's top-k exactly for
-    the same query vector, and the codes must actually be small
-    relative to the raw vectors (the compression story)."""
-    import os
-
-    path = str(tmp_path / "pqidx")
-    books = P.write_pq_index(emb, path, DIM)
-    assert [sorted(b) for b in books] == P.read_codebooks(spark, path)
-    qe = emb.where(F.col("vec_id") == 0).collect()[0]["embedding"]
-    got = [
-        (r["vec_id"], r["score"])
-        for r in P.probe_pq_index(spark, path, emb, list(qe), 10, DIM).collect()
-    ]
-    want = [
-        (r["vec_id"], r["score"])
-        for r in P.pq_adc_topk(emb, 0, 10, DIM).collect()
-    ]
-    assert got == want
-
-    def dir_bytes(d):
-        return sum(
-            os.path.getsize(os.path.join(d, f))
-            for f in os.listdir(d)
-            if f.endswith(".parquet")
-        )
-
-    emb_path = "/root/testdata/sf0.01/embeddings.parquet"
-    assert dir_bytes(f"{path}/codes") < os.path.getsize(emb_path) / 5
-
-
 def test_pq_adc_plan_is_codegen_take_ordered(spark, emb):
     """The compressed-domain scan must stay JVM-side: one Arrow encode
     pass (ArrowEvalPython), ADC as a literal-array projection (no join,

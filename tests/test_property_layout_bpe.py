@@ -20,6 +20,7 @@ from hypothesis import strategies as st
 
 from mapreduce_framework_for_mergesort_spark.operators import bpe as B
 from mapreduce_framework_for_mergesort_spark.operators import layout as L
+from tests import references as R
 
 
 @settings(max_examples=200, deadline=None)
@@ -37,7 +38,7 @@ def test_zorder_duckdb_matches_python_reference(vals, bits):
     got = duckdb.sql(
         f"SELECT {L.duckdb_zorder_key(cols, bits)} AS z FROM (SELECT {sel})"
     ).fetchone()[0]
-    assert got == L.python_zorder_key(vals, bits)
+    assert got == R.python_zorder_key(vals, bits)
 
 
 @settings(max_examples=200, deadline=None)

@@ -202,53 +202,3 @@ def test_asof_join_stays_linear_union_merge(spark, sf_oracle):
     assert "Join" not in plan, plan          # no join operator of any kind
     assert plan.count("Union") == 1, plan
     assert plan.count("Exchange") == 1, plan  # the one (user, time) shuffle
-
-
-def test_salted_join_equals_plain_join(spark, sf_oracle):
-    """salted_join == plain join row-for-row on real data with a hot
-    key, the join shuffles on key+salt (hot key spread across
-    reducers), and key-column salting is rejected."""
-    from pyspark.sql import functions as F
-
-    from mapreduce_framework_for_mergesort_spark.io import load_table
-    from mapreduce_framework_for_mergesort_spark.operators.relational import (
-        salted_join,
-    )
-    from mapreduce_framework_for_mergesort_spark.plans import audit
-
-    orders = load_table(spark, sf_oracle, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    # skewed fact: pile extra copies of one customer's orders on top
-    hot = orders.limit(20).withColumn(
-        "o_custkey", F.lit(1).cast("bigint")
-    )
-    fact = orders
-    for _ in range(3):
-        fact = fact.unionByName(hot)
-    dim = (
-        load_table(spark, sf_oracle, "customer")
-        .select("c_custkey", "c_name")
-        .withColumnRenamed("c_custkey", "o_custkey")
-    )
-    got = sorted(
-        (r["o_orderkey"], r["o_custkey"], r["c_name"])
-        for r in salted_join(
-            fact, dim, ["o_custkey"], salt_col="o_orderkey", n_salts=8
-        ).collect()
-    )
-    want = sorted(
-        (r["o_orderkey"], r["o_custkey"], r["c_name"])
-        for r in fact.join(dim, "o_custkey").collect()
-    )
-    assert got == want and len(got) > 0
-
-    # the join key includes the salt: hashpartitioning on both cols
-    plan = audit(
-        salted_join(fact, dim, ["o_custkey"], salt_col="o_orderkey")
-    ).text
-    assert "_salt" in plan
-    with pytest.raises(ValueError, match="join key"):
-        salted_join(fact, dim, ["o_custkey"], salt_col="o_custkey")
-    with pytest.raises(ValueError, match="at least one"):
-        salted_join(fact, dim, [], salt_col="o_orderkey")

@@ -99,31 +99,6 @@ def test_q_stream_interval_join_oracle(spark, sf_oracle):
     compare_query(spark, "q_stream_interval_join", sf_oracle, QUERIES, ORACLE)
 
 
-def test_dedup_within_watermark_bounds_state(spark, sf_smoke):
-    """Watermarked dedup: every key survives at least once, and the
-    output never exceeds the input (keep-first semantics are
-    arrival-order-dependent, so this is a rows/keys invariant check,
-    not value-exact)."""
-    from mapreduce_framework_for_mergesort_spark.streaming import (
-        dedup_stream_within_watermark,
-    )
-
-    got = run_to_memory(
-        dedup_stream_within_watermark(
-            stream_events(spark, sf_smoke), ["user_id", "event_type"]
-        ),
-        "t_dedup_wm",
-        output_mode="append",
-    )
-    events = load_table(spark, sf_smoke, "events")
-    n_in = events.count()
-    n_keys = events.select("user_id", "event_type").distinct().count()
-    n_out = got.count()
-    assert n_keys <= n_out <= n_in
-    # within one watermark era over static input, exact dedup is achieved
-    assert got.select("user_id", "event_type").distinct().count() == n_keys
-
-
 def test_file_sink_exactly_once_across_restarts(spark, sf_smoke, tmp_path):
     """Durable stream->parquet with checkpointing: a re-drain over
     already-committed input must be a no-op (no duplicate rows), and the
@@ -157,174 +132,6 @@ def test_file_sink_exactly_once_across_restarts(spark, sf_smoke, tmp_path):
             .collect())
     )
     assert second == want
-
-
-def test_near_dup_pairs_stream_equals_batch(spark, sf_smoke, tmp_path):
-    """Streaming LSH pair emission drained over the corpus must produce
-    EXACTLY the batch candidate-pair set — including a pair whose two
-    docs arrive in DIFFERENT microbatches (the case that requires the
-    band state to survive across batches).  maxFilesPerTrigger=1 over
-    two files forces two microbatches; docs 1 (file A) and 2 (file B)
-    are exact duplicates, so their pair can only come from state."""
-    from mapreduce_framework_for_mergesort_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_bands,
-    )
-    from mapreduce_framework_for_mergesort_spark.streaming.dedup import (
-        near_dup_pairs_stream,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again ok"
-    near = "the quick brown fox jumps over the lazy dog again and again yes"
-    other = "completely different content about spark shuffles and sorting"
-    f_a = [(1, base), (4, other)]
-    f_b = [(2, base), (3, near), (5, "tiny doc")]
-    docs_a = spark.createDataFrame(f_a, ["doc_id", "text"])
-    docs_b = spark.createDataFrame(f_b, ["doc_id", "text"])
-    d = str(tmp_path / "docs_stream")
-    docs_a.coalesce(1).write.mode("overwrite").parquet(d)
-    docs_b.coalesce(1).write.mode("append").parquet(d)
-
-    schema = spark.read.parquet(d).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-    got = run_to_memory(
-        near_dup_pairs_stream(stream), "t_near_dup_stream"
-    ).dropDuplicates()
-    got_pairs = {(r["doc_a"], r["doc_b"]) for r in got.collect()}
-
-    all_docs = docs_a.unionByName(docs_b)
-    want_pairs = {
-        (r["doc_a"], r["doc_b"])
-        for r in lsh_candidate_pairs(minhash_bands(all_docs)).collect()
-    }
-    assert got_pairs == want_pairs
-    assert (1, 2) in got_pairs  # the cross-microbatch pair
-
-
-def _write_ts_batches(spark, d, batches):
-    """Write each batch as one parquet file with strictly increasing
-    mtimes so FileStreamSource (which orders by file timestamp) replays
-    them as distinct microbatches in this exact order."""
-    import glob
-    import os
-
-    seen: set = set()
-    for i, rows in enumerate(batches):
-        df = spark.createDataFrame(
-            rows, "doc_id long, text string, ts timestamp"
-        )
-        df.coalesce(1).write.mode("append").parquet(d)
-        new = set(glob.glob(d + "/part-*")) - seen
-        for f in new:
-            os.utime(f, (1_000_000 + i * 100, 1_000_000 + i * 100))
-        seen |= new
-
-
-def test_near_dup_stream_ttl_evicts_and_bounds_state(spark, tmp_path):
-    """The watermark/TTL mode must (a) DROP band state once the
-    watermark passes a band's last activity + horizon — a duplicate
-    arriving a full watermark era later is re-admitted, not paired —
-    (b) still pair duplicates within the horizon, and (c) keep the
-    state store strictly smaller than the TTL-less run over the same
-    3-horizon stream."""
-    from datetime import datetime, timedelta
-
-    from mapreduce_framework_for_mergesort_spark.streaming.dedup import (
-        near_dup_pairs_stream,
-    )
-    from mapreduce_framework_for_mergesort_spark.streaming.sources import (
-        run_to_memory_with_progress,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again ok"
-    filler = "some totally different filler text about warehouse engines ok"
-    t0 = datetime(2026, 1, 1, 0, 0, 0)
-    h = timedelta(hours=1)
-    unique = "ancient manuscript fragments catalogued by monastery scholars"
-    batches = [
-        # doc 5's bands never recur → they can only leave the store via
-        # the PHYSICAL timeout path (idle key); doc 1's bands recur in
-        # batch 3 → they exercise the LOGICAL data-path eviction
-        [(1, base, t0), (5, unique, t0)],
-        # 3 h later: pushes the watermark past batch 1's TTL before the
-        # next batch (watermark lags one batch, so an intermediate
-        # batch is what makes the eviction observable)
-        [(10, filler, t0 + 3 * h)],
-        # within one horizon of batch 2: (10,11) must pair; doc 2 is an
-        # exact dup of doc 1 whose band state has been evicted
-        [(2, base, t0 + 3 * h + timedelta(minutes=2)),
-         (11, filler, t0 + 3 * h + timedelta(minutes=2))],
-    ]
-    d = str(tmp_path / "ttl_docs")
-    _write_ts_batches(spark, d, batches)
-    schema = spark.read.parquet(d).schema
-    mk = lambda: (  # noqa: E731
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d)
-    )
-
-    ttl_df, ttl_prog = run_to_memory_with_progress(
-        near_dup_pairs_stream(mk(), ts_col="ts", horizon="1 hour"),
-        "t_ttl_pairs",
-    )
-    ttl_pairs = {(r["doc_a"], r["doc_b"]) for r in ttl_df.collect()}
-    assert ttl_pairs == {(10, 11)}  # (1,2) suppressed by eviction
-
-    nottl_df, nottl_prog = run_to_memory_with_progress(
-        near_dup_pairs_stream(mk()), "t_nottl_pairs"
-    )
-    nottl_pairs = {(r["doc_a"], r["doc_b"]) for r in nottl_df.collect()}
-    assert nottl_pairs == {(1, 2), (10, 11)}
-
-    def final_state_rows(prog):
-        rows = [
-            p["stateOperators"][0]["numRowsTotal"]
-            for p in prog
-            if p.get("stateOperators")
-        ]
-        assert rows, prog
-        return rows[-1]
-
-    # doc 1's bands were evicted in the TTL run (then base's bands were
-    # re-admitted by doc 2) while the TTL-less run retains every band
-    # ever seen — strict inequality proves rows actually left the store
-    assert final_state_rows(ttl_prog) < final_state_rows(nottl_prog)
-
-
-def test_near_dup_stream_band_cap_bounds_fanout(spark, tmp_path):
-    """max_docs_per_band keeps only the first K arrivals as
-    representatives: later docs pair against those K (hot-cluster
-    membership still detected) but fan-out stops growing — K pairs per
-    arrival instead of new x seen."""
-    from mapreduce_framework_for_mergesort_spark.streaming.dedup import (
-        near_dup_pairs_stream,
-    )
-
-    text = "the exact same boilerplate text repeated by every document ok"
-    rows = [(i, text) for i in range(1, 6)]
-    d = str(tmp_path / "cap_docs")
-    spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    schema = spark.read.parquet(d).schema
-    mk = lambda: spark.readStream.schema(schema).parquet(d)  # noqa: E731
-
-    capped = run_to_memory(
-        near_dup_pairs_stream(mk(), max_docs_per_band=2), "t_cap_pairs"
-    ).dropDuplicates()
-    got = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
-    # reps are docs 1 and 2; every later doc pairs against exactly them
-    assert got == {(1, 2), (1, 3), (2, 3), (1, 4), (2, 4), (1, 5), (2, 5)}
-
-    full = run_to_memory(
-        near_dup_pairs_stream(mk()), "t_uncap_pairs"
-    ).dropDuplicates()
-    assert len(full.collect()) == 10  # C(5,2): the uncapped product
 
 
 _MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"

