@@ -76,22 +76,6 @@ def duckdb_kmv_hash(key_sql: str) -> str:
     return H.duckdb_base_hash(f"CAST({key_sql} AS VARCHAR) || '{KMV_SALT}'")
 
 
-def kmv_min_hashes(df: DataFrame, key: str, k: int = KMV_K) -> DataFrame:
-    """The sketch itself: the ``k`` smallest distinct hash values of
-    ``df[key]`` as one ``h`` column (NULL keys contribute nothing —
-    md5(NULL) is NULL and is filtered, mirroring COUNT DISTINCT).
-    This is plain data: persist it, merge it, or estimate from it
-    (``duckdb_kmv_cte`` spells the estimator)."""
-    h = F.expr(_spark_kmv_hash(key))
-    return (
-        df.select(h.alias("h"))
-        .where(F.col("h").isNotNull())
-        .distinct()
-        .orderBy("h")
-        .limit(k)
-    )
-
-
 CMS_D = 4  # hash rows (error probability ~ e^-D)
 CMS_W = 512  # buckets per row (overestimate ~ 2N/W per Cormode-Muthukrishnan)
 CMS_SALT = "#cms"
@@ -283,10 +267,10 @@ def duckdb_cms_cte(
 
 
 def duckdb_kmv_cte(key_sql: str, table: str, k: int = KMV_K) -> str:
-    """Oracle CTE body of the KMV estimate over ``kmv_min_hashes``
-    (select from it as ``(kk, est_distinct)``) — same hash, same min-k,
-    same integer estimator, so the driver hash-checks the sketch
-    value-for-value."""
+    """Oracle CTE body of the KMV estimate — the ``k`` smallest distinct
+    key hashes (select from it as ``(kk, est_distinct)``) — same hash,
+    same min-k, same integer estimator as ``q_profile_stats``, so the
+    driver hash-checks the sketch value-for-value."""
     return f"""
       SELECT kk,
              CASE WHEN kk < {k} THEN kk

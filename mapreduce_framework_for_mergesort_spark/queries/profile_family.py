@@ -422,7 +422,7 @@ l_uniq AS (
          COUNT(DISTINCT l_orderkey, l_linenumber) AS n_keys
   FROM __qps_lineitem___QPS_SFX__),
 kmvsk AS (
-  -- NULL filter BEFORE the ORDER BY/LIMIT (matches kmv_min_hashes):
+  -- NULL filter BEFORE the ORDER BY/LIMIT, as in COUNT DISTINCT:
   -- Spark sorts NULLS FIRST, so a post-limit filter would let NULL h
   -- evict real hashes from the sketch.  Safe either way on today's
   -- non-null md5 truth keys, but kept exact for copy-paste reuse.

@@ -13,11 +13,11 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
-from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.io import (
     normalize_events_ts,
+    parquet_footer_schema,
     scoped_session_confs,
     set_events_read_confs,
     table_path,
@@ -63,49 +63,6 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
         return 2 * cores
     by_bytes = -(-size // sizing.STREAM_STATE_BYTES_PER_PARTITION)
     return max(min(cores, 4), min(by_bytes, 2 * cores))
-
-
-def parquet_footer_schema(spark: SparkSession, path: str) -> StructType:
-    """The Spark schema of the parquet file (or directory) at ``path``,
-    read from one footer on the driver.
-
-    ``spark.read.parquet(path).schema`` runs a Spark job to read the
-    footer; this reads the same footer with the session's Hadoop conf
-    and converts it with Spark's own converter under the session's SQL
-    conf (so ``nanosAsLong`` still maps TIMESTAMP(NANOS) to ``bigint``).
-    With ``mergeSchema`` off Spark's inference also reads one footer.
-    A directory is read through its first data file in name order;
-    ``_``/``.`` names are skipped, as in ``sizing.input_bytes``.
-    On the sf0.001 events table, the median of 12 calls on a 4-vCPU
-    host is 14–19 ms here against 98–124 ms for the job."""
-    jvm = spark._jvm
-    state = spark._jsparkSession.sessionState()
-    conf = state.newHadoopConf()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
-    status = fs.getFileStatus(p)
-    if status.isDirectory():
-        files = fs.listFiles(p, True)
-        names = []
-        while files.hasNext():
-            f = files.next().getPath()
-            if not f.getName().startswith(("_", ".")):
-                names.append(f.toString())
-        if not names:
-            raise FileNotFoundError(f"no parquet data file under {path}")
-        p = jvm.org.apache.hadoop.fs.Path(min(names))
-    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
-    footer = parquet.ParquetFooterReader.readFooter(
-        jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf),
-        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
-        .SKIP_ROW_GROUPS,
-    )
-    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
-        jvm.org.apache.parquet.hadoop.Footer(p, footer),
-        parquet.ParquetToSparkSchemaConverter(state.conf()),
-    )
-    # Spark's file readers treat every column as nullable.
-    return _parse_datatype_json_string(schema.asNullable().json())
 
 
 def stream_events(

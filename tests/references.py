@@ -20,6 +20,7 @@ from mapreduce_framework_for_mergesort_spark.functions import vector as V
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 from mapreduce_framework_for_mergesort_spark.operators import layout as L
 from mapreduce_framework_for_mergesort_spark.operators import similarity as S
+from mapreduce_framework_for_mergesort_spark.operators import sketches as K
 from mapreduce_framework_for_mergesort_spark.operators import text as T
 from mapreduce_framework_for_mergesort_spark.sources import containers as CT
 from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
@@ -217,6 +218,24 @@ def _kmeans_train(xqv: DataFrame, num_centroids: int, iters: int) -> S.Cents:
             for cell, comp in by_cell.items()
         )
     return cents
+
+
+# --- KMV sketch: the DataFrame spelling of q_profile_stats' SQL -----------
+
+def kmv_min_hashes(df: DataFrame, key: str, k: int = K.KMV_K) -> DataFrame:
+    """The sketch itself: the ``k`` smallest distinct hash values of
+    ``df[key]`` as one ``h`` column (NULL keys contribute nothing —
+    md5(NULL) is NULL and is filtered, mirroring COUNT DISTINCT).
+    This is plain data: persist it, merge it, or estimate from it
+    (``duckdb_kmv_cte`` spells the estimator)."""
+    h = F.expr(K._spark_kmv_hash(key))
+    return (
+        df.select(h.alias("h"))
+        .where(F.col("h").isNotNull())
+        .distinct()
+        .orderBy("h")
+        .limit(k)
+    )
 
 
 # --- feature-hash embedding: DuckDB replica -------------------------------

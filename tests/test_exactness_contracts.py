@@ -27,7 +27,7 @@ from pyspark.sql.types import _parse_datatype_string
 from mapreduce_framework_for_mergesort_spark.streaming import run_to_memory
 from mapreduce_framework_for_mergesort_spark.streaming.stateful import (
     OUTPUT_SCHEMA,
-    _fold_batch,
+    _fold,
     sessionize_batch,
     sessionize_stream,
 )
@@ -104,15 +104,18 @@ def test_stream_cents_match_batch_decimal_on_half_up_boundaries(
 
 def test_null_value_fails_the_fold(spark, tmp_path):
     """A NULL value reaches the kernel as a NULL cent, which has no
-    integer total: the fold raises instead of summing NaN."""
-    with pytest.raises(ValueError, match="non-NULL event value"):
-        _fold_batch(
-            [],
-            pd.DataFrame(
-                {"ts_us": [1_000_000, 2_000_000], "cents": [100, None]}
-            ),
-            0,
+    integer total: the fold raises instead of summing NaN.  A NULL user
+    has no session to fold into, and fails the same way."""
+    for user, cents, error in (
+        (None, 100, "non-NULL user_id"),
+        (1, None, "non-NULL event value"),
+    ):
+        batch = pd.DataFrame(
+            {"user_id": [1, user], "ts_us": [1_000_000, 2_000_000],
+             "cents": [100, cents]}
         )
+        with pytest.raises(ValueError, match=error):
+            _fold(None, batch, gap_us=0, buckets=1)
     rows = [(1, 0, _HOUR_US, 1.5), (1, 1, _HOUR_US + 1, None),
             (1, 2, 4 * _HOUR_US, 0.0)]
     _, stream = _event_stream(spark, rows, str(tmp_path / "ev"))

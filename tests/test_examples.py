@@ -33,11 +33,10 @@ def test_example_runs(example, sf_smoke, tmp_path):
     proc = subprocess.run(
         [sys.executable, os.path.join(_REPO, "examples", f"{example}.py"),
          sf_smoke, str(tmp_path / "out")],
+        # outside the repository, with no PYTHONPATH of its own: the
+        # example must make the package importable for the Python workers
         cwd=str(tmp_path),
-        # the Python workers import the package too, not just the driver
-        env={**os.environ, "PYTHONPATH": os.pathsep.join(
-            filter(None, [_REPO, os.environ.get("PYTHONPATH")])
-        )},
+        env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
         capture_output=True,
         text=True,
         timeout=900,

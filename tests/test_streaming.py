@@ -8,6 +8,7 @@ DuckDB SQL (the driver's t2 gate).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -18,6 +19,9 @@ from mapreduce_framework_for_mergesort_spark.streaming import (
     sessionize_stream,
     stream_events,
     windowed_event_aggregate,
+)
+from mapreduce_framework_for_mergesort_spark.streaming.sources import (
+    run_to_memory_with_progress,
 )
 from mapreduce_framework_for_mergesort_spark.streaming.stateful import (
     _gap_to_us,
@@ -35,15 +39,12 @@ def test_stream_windowed_equals_batch(spark, sf_smoke):
     )
 
 
-def test_stream_sessionize_emits_closed_sessions(spark, sf_smoke):
-    gap = "30 minutes"
-    got = run_to_memory(
-        sessionize_stream(stream_events(spark, sf_smoke), gap=gap),
-        "t_sess_unify",
-    )
-    sessions = sessionize_batch(load_table(spark, sf_smoke, "events"), gap)
+def _closed_batch_sessions(spark, sf_dir, gap):
+    """``sessionize_batch``'s sessions that the stream emits: those that
+    end more than ``gap`` before their user's last event."""
+    sessions = sessionize_batch(load_table(spark, sf_dir, "events"), gap)
     by_user = Window.partitionBy("user_id")
-    closed = (
+    return (
         sessions.withColumn("__mx", F.max("session_end").over(by_user))
         .where(
             F.unix_micros("session_end") + _gap_to_us(gap)
@@ -51,28 +52,102 @@ def test_stream_sessionize_emits_closed_sessions(spark, sf_smoke):
         )
         .drop("__mx")
     )
+
+
+def _events_in_files(sf_dir, out, n_files: int) -> str:
+    """Write the events table, sorted by time, as ``n_files`` files
+    named ``events*.parquet`` under ``out`` with increasing mtimes (the
+    file stream source takes files in mtime order); return ``out``."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    out.mkdir(parents=True, exist_ok=True)
+    table = pq.read_table(f"{sf_dir}/events.parquet").sort_by("ts")
+    step = -(-table.num_rows // n_files)
+    for i in range(n_files):
+        path = out / ("events.parquet" if i == 0 else f"events_{i}.parquet")
+        pq.write_table(table.slice(i * step, step), path)
+        os.utime(path, (1_700_000_000 + i * 100,) * 2)
+    return str(out)
+
+
+def test_stream_sessionize_emits_closed_sessions(spark, sf_smoke):
+    gap = "30 minutes"
+    got = run_to_memory(
+        sessionize_stream(stream_events(spark, sf_smoke), gap=gap),
+        "t_sess_unify",
+    )
+    closed = _closed_batch_sessions(spark, sf_smoke, gap)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, closed.collect())
     )
 
 
-def test_stream_multibatch_state_carries(spark, sf_smoke):
-    """maxFilesPerTrigger=1 still yields one deterministic drain (state
-    must merge correctly across microbatches when the source splits)."""
+def test_stream_multibatch_state_carries(spark, sf_smoke, tmp_path):
+    """The events, in time order, cut into three files and drained one
+    file per micro-batch: state carries each user's open session across
+    the batches, so the drain equals the single-batch drain and the
+    batch operator's closed sessions, with no ordering violation."""
     gap = "30 minutes"
-    one = run_to_memory(
+    src = _events_in_files(sf_smoke, tmp_path / "events", 3)
+    late = spark.sparkContext.accumulator(0)
+    multi, progress = run_to_memory_with_progress(
         sessionize_stream(
-            stream_events(spark, sf_smoke, max_files_per_trigger=1), gap=gap
+            stream_events(spark, src, max_files_per_trigger=1),
+            gap=gap,
+            late_counter=late,
         ),
         "t_sess_multibatch",
     )
-    ref = run_to_memory(
-        sessionize_stream(stream_events(spark, sf_smoke), gap=gap),
+    assert sum(p["numInputRows"] > 0 for p in progress) >= 3
+    one, progress = run_to_memory_with_progress(
+        sessionize_stream(stream_events(spark, src), gap=gap),
         "t_sess_singlebatch",
     )
-    assert sorted(map(tuple, one.collect())) == sorted(
-        map(tuple, ref.collect())
+    assert sum(p["numInputRows"] > 0 for p in progress) == 1
+    rows = sorted(map(tuple, multi.collect()))
+    assert rows == sorted(map(tuple, one.collect()))
+    assert rows == sorted(
+        map(tuple, _closed_batch_sessions(spark, sf_smoke, gap).collect())
     )
+    assert late.value == 0
+
+
+def test_sessionize_restart_under_other_bucket_count_fails(
+    spark, sf_smoke, tmp_path
+):
+    """A restarted drain keeps its checkpoint's state partition count,
+    but the sessionizer plans its user-bucket count from the session's
+    ``spark.sql.shuffle.partitions``.  When the two differ the drain
+    fails loudly instead of splitting sessions across buckets."""
+    from mapreduce_framework_for_mergesort_spark.io import (
+        scoped_session_confs,
+    )
+
+    src = _events_in_files(sf_smoke, tmp_path / "events", 2)
+    later = tmp_path / "events" / "events_1.parquet"
+    held = later.rename(tmp_path / "held.parquet")
+    checkpoint = str(tmp_path / "ckpt")
+
+    def drain(partitions: int) -> None:
+        with scoped_session_confs(
+            spark, (("spark.sql.shuffle.partitions", str(partitions)),)
+        ):
+            q = (
+                sessionize_stream(stream_events(spark, src))
+                .writeStream.format("noop")
+                .option("checkpointLocation", checkpoint)
+                .outputMode("update")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+    drain(2)
+    held.rename(later)
+    with pytest.raises(Exception, match="B=2 but this plan buckets users by B=3"):
+        drain(3)
 
 
 def test_q_sessionize_gap_oracle(spark, sf_oracle):
@@ -229,10 +304,8 @@ def test_footer_schema_matches_batch_inference(spark, sf_smoke, tmp_path):
     import pyarrow.parquet as pq
 
     from mapreduce_framework_for_mergesort_spark.io import (
-        set_events_read_confs,
-    )
-    from mapreduce_framework_for_mergesort_spark.streaming.sources import (
         parquet_footer_schema,
+        set_events_read_confs,
     )
 
     set_events_read_confs(spark)
@@ -269,8 +342,9 @@ def test_footer_schema_matches_batch_inference(spark, sf_smoke, tmp_path):
 
 
 def test_stream_events_starts_no_job(spark, sf_smoke):
-    """``stream_events`` reads its schema without a Spark job; the
-    batch inference it replaced shows up in the same probe."""
+    """``stream_events`` and ``load_table`` of a table other than
+    ``events`` read their schema without a Spark job; the batch
+    inference they replaced shows up in the same probe."""
     tracker = spark.sparkContext.statusTracker()
 
     def new_jobs(call) -> set:
@@ -279,6 +353,7 @@ def test_stream_events_starts_no_job(spark, sf_smoke):
         return set(tracker.getJobIdsForGroup(None)) - before
 
     assert new_jobs(lambda: stream_events(spark, sf_smoke)) == set()
+    assert new_jobs(lambda: load_table(spark, sf_smoke, "customer")) == set()
     path = f"{sf_smoke}/events.parquet"
     assert new_jobs(lambda: spark.read.parquet(path).schema)
 
