@@ -1008,32 +1008,18 @@ def _multimodal_modality_times(spark, sf_dir: str) -> dict[str, float]:
     from mapreduce_framework_for_mergesort_spark.operators import (
         dedup as D,
     )
+    from mapreduce_framework_for_mergesort_spark.queries import (
+        multimodal_family as MF,
+    )
     from mapreduce_framework_for_mergesort_spark.sources import (
         multimodal as M,
     )
 
-    from mapreduce_framework_for_mergesort_spark.sources import (
-        containers as CT,
-    )
-
     docs = load_table(spark, sf_dir, "documents")
     reps = docs.join(D.exact_rep_ids(docs), "doc_id", "semi")
-    chains = {
-        "text": M.binarize_documents,
-        "audio_wav": M.binarize_audio_documents,
-        "audio_mp4": CT.binarize_mp4_documents,
-        "audio_fmp4": CT.binarize_fmp4_documents,
-        "image_bmp": M.binarize_image_documents,
-        "image_png": M.binarize_png_documents,
-        "image_jpeg": M.binarize_jpeg_documents,
-        "image_jpeg_color": M.binarize_jpeg_color_documents,
-        "video_y4m": M.binarize_video_documents,
-    }
-    from mapreduce_framework_for_mergesort_spark.sources import (
-        layer3 as L3,
-    )
-
-    chains["audio_mp3_l3"] = L3.binarize_mp3l3_documents
+    chains = {"text": M.binarize_documents}
+    for branch in MF.FEATURE_BRANCHES:
+        chains[branch] = lambda d, branch=branch: M.binarize(d, branch)
     out = {}
     for name, fn in chains.items():
         ts = []

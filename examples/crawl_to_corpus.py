@@ -64,11 +64,6 @@ import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-# Spark's Python workers import the package too; they inherit
-# PYTHONPATH from the JVM that get_spark starts.
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    filter(None, [_REPO, os.environ.get("PYTHONPATH")])
-)
 
 from pyspark.sql import functions as F
 
@@ -77,6 +72,7 @@ from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.session import get_spark
 from mapreduce_framework_for_mergesort_spark.sources import containers as CT
 from mapreduce_framework_for_mergesort_spark.sources import html as H
+from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
 from mapreduce_framework_for_mergesort_spark.sources import warc as W
 
 
@@ -293,8 +289,8 @@ def main() -> None:
     )
 
     # 5. row-level modality audit over the same docs as mp4/mp3
-    binarized = CT.binarize_mp4_documents(docs.limit(200)).unionByName(
-        CT.binarize_mp3_documents(docs.limit(200))
+    binarized = M.binarize(docs.limit(200), "audio_mp4").unionByName(
+        M.binarize(docs.limit(200), "audio_mp3")
     )
     counts = (
         CT.audit_payload_parses(binarized)

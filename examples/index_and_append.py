@@ -37,11 +37,6 @@ import tempfile
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-# Spark's Python workers import the package too; they inherit
-# PYTHONPATH from the JVM that get_spark starts.
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    filter(None, [_REPO, os.environ.get("PYTHONPATH")])
-)
 
 from pyspark.sql import functions as F
 

@@ -35,11 +35,6 @@ import sys
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
-# Spark's Python workers import the package too; they inherit
-# PYTHONPATH from the JVM that get_spark starts.
-os.environ["PYTHONPATH"] = os.pathsep.join(
-    filter(None, [_REPO, os.environ.get("PYTHONPATH")])
-)
 
 from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.session import get_spark

@@ -3,13 +3,15 @@
 ``q_multimodal_binary`` proves the binary plumbing end-to-end with full
 oracle parity (payload bytes, lengths, sha256 digests agree across
 engines).  ``q_multimodal_features`` runs the decode/feature seam over
-four modalities — the closed-form text featurizer plus real stdlib
-container parses for WAV/PCM audio, 24-bit BMP images, and YUV4MPEG2
-grayscale video — all with exact SQL oracles recomputed from the source
-text (the features are closed-form over the payload bytes by
-construction; the fixture being ASCII — pinned in
-tests/test_llm_ops.py — is what makes char arithmetic equal byte
-arithmetic in the oracle).
+ten branches (``FEATURE_BRANCHES`` after the text branch) and
+``q_multimodal_frames`` the frame-sampling seam over nine
+(``FRAME_BRANCHES``) — the closed-form text featurizer plus real
+container parses for WAV/PCM audio, plain and fragmented mp4, MPEG
+audio, BMP, PNG, greyscale and color JPEG, and YUV4MPEG2 video — all
+with exact SQL oracles recomputed from the source text (the features
+are closed-form over the payload bytes by construction; the fixture
+being ASCII — pinned in tests/test_llm_ops.py — is what makes char
+arithmetic equal byte arithmetic in the oracle).
 """
 
 from __future__ import annotations
@@ -24,8 +26,20 @@ from mapreduce_framework_for_mergesort_spark.io import (
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 from mapreduce_framework_for_mergesort_spark.queries import query
 from mapreduce_framework_for_mergesort_spark.sources import containers as CT
-from mapreduce_framework_for_mergesort_spark.sources import layer3 as L3
 from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
+
+# The synthesized branches (``multimodal.BRANCHES``) of each key's union,
+# in union order after the JVM-side text branch.  The features key ends
+# on the Layer III spectral decode (``sources/layer3.py``, round 11);
+# the frames key samples the container mp3 instead.
+FEATURE_BRANCHES = (
+    "audio_wav", "audio_mp4", "audio_fmp4", "image_bmp", "image_png",
+    "image_jpeg", "image_jpeg_color", "video_y4m", "audio_mp3_l3",
+)
+FRAME_BRANCHES = (
+    "image_bmp", "image_png", "image_jpeg", "image_jpeg_color", "video_y4m",
+    "audio_mp4", "audio_fmp4", "audio_mp3",
+)
 
 
 def _spread_reps(
@@ -49,6 +63,14 @@ def _spread_reps(
     if n <= 1 or scan_parallelism(docs) >= cores:
         return reps
     return reps.repartition(n)
+
+
+def _binarize_union(reps: DataFrame, branches: tuple[str, ...]) -> DataFrame:
+    """The text branch, then each synthesized branch, in one union."""
+    b = M.binarize_documents(reps)
+    for branch in branches:
+        b = b.unionByName(M.binarize(reps, branch))
+    return b
 
 
 def _join_back_to_docs(
@@ -436,25 +458,11 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs over exact-dup representatives and the per-doc rows come
     # back through one md5(text) join.
     reps = _spread_reps(
-        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"), docs, 10
+        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"),
+        docs,
+        len(FEATURE_BRANCHES) + 1,
     )
-    b = (
-        M.binarize_documents(reps)
-        .unionByName(M.binarize_audio_documents(reps))
-        .unionByName(CT.binarize_mp4_documents(reps))
-        .unionByName(CT.binarize_fmp4_documents(reps))
-        .unionByName(M.binarize_image_documents(reps))
-        .unionByName(M.binarize_png_documents(reps))
-        .unionByName(M.binarize_jpeg_documents(reps))
-        .unionByName(M.binarize_jpeg_color_documents(reps))
-        .unionByName(M.binarize_video_documents(reps))
-        # round 11: the TENTH branch — Layer III spectral decode over
-        # the tone profile (sources/layer3.py); features ride the
-        # real count1-Huffman → requantize → alias → IMDCT chain and
-        # the oracle recomputes them from the tone-placement closed
-        # form
-        .unionByName(L3.binarize_mp3l3_documents(reps))
-    )
+    b = _binarize_union(reps, FEATURE_BRANCHES)
     feats = M.extract_features(b).select(
         F.col("doc_id").alias("__rep"),
         "modality",
@@ -614,20 +622,11 @@ def q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     # function of the text, so it runs over representatives and the
     # aggregate rows join back to every doc id
     reps = _spread_reps(
-        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"), docs, 9
+        docs.join(D.exact_rep_ids(docs), "doc_id", "semi"),
+        docs,
+        len(FRAME_BRANCHES) + 1,
     )
-    b = (
-        M.binarize_documents(reps)
-        .unionByName(M.binarize_image_documents(reps))
-        .unionByName(M.binarize_png_documents(reps))
-        .unionByName(M.binarize_jpeg_documents(reps))
-        .unionByName(M.binarize_jpeg_color_documents(reps))
-        .unionByName(M.binarize_video_documents(reps))
-        .unionByName(CT.binarize_mp4_documents(reps))
-        .unionByName(CT.binarize_fmp4_documents(reps))
-        .unionByName(CT.binarize_mp3_documents(reps))
-    )
-    frames = M.sample_frames(b, every_n=2)
+    frames = M.sample_frames(_binarize_union(reps, FRAME_BRANCHES), every_n=2)
     per_rep = frames.groupBy(
         F.col("doc_id").alias("__rep"), F.col("modality")
     ).agg(

@@ -26,6 +26,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory holding the package, for the Python workers' import path.
+_PKG_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # Defaults chosen for the test harness (local[32], 128 GiB box).  Every
 # value is overridable via extra_conf; none is load-bearing for semantics.
 _BASE_CONF: dict[str, str] = {
@@ -92,6 +95,11 @@ def get_spark(
     conf.setdefault("spark.driver.memory", "8g")
     if extra_conf:
         conf.update(extra_conf)
+    # Python workers (pandas UDFs, mapInPandas) import this package too,
+    # whatever the driver's working directory or sys.path.
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        filter(None, [_PKG_PARENT, conf.get("spark.executorEnv.PYTHONPATH")])
+    )
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1095,85 +1095,6 @@ def mp3_frames(payload: bytes) -> list[bytes]:
 # Spark plumbing
 # ---------------------------------------------------------------------------
 
-def binarize_mp4_documents(documents: DataFrame) -> DataFrame:
-    """Documents table → mp4-modality binary table (same shape contract
-    as ``multimodal.binarize_audio_documents``)."""
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        MODALITY_SCHEMA,
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [synthesize_mp4(t.encode("utf-8")) for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "mp4",
-                    "payload": payloads,
-                    "meta_mime": "audio/mp4",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth, MODALITY_SCHEMA
-    )
-
-
-def binarize_fmp4_documents(documents: DataFrame) -> DataFrame:
-    """Documents table → FRAGMENTED-mp4-modality binary table (round
-    10): same PCM content as the mp4 branch, DASH/CMAF moof/trun
-    layout — so decoding it through the fragment tables must produce
-    the identical feature vector, which is exactly what the registry
-    branch pins."""
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        MODALITY_SCHEMA,
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synthesize_fmp4(t.encode("utf-8")) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "fmp4",
-                    "payload": payloads,
-                    "meta_mime": "video/mp4",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth, MODALITY_SCHEMA
-    )
-
-
-def binarize_mp3_documents(documents: DataFrame) -> DataFrame:
-    """Documents table → mp3-modality binary table."""
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        MODALITY_SCHEMA,
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [synthesize_mp3(t.encode("utf-8")) for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "mp3",
-                    "payload": payloads,
-                    "meta_mime": "audio/mpeg",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth, MODALITY_SCHEMA
-    )
-
-
 PARSE_AUDIT_SCHEMA = (
     "doc_id bigint, modality string, payload binary, "
     "meta_mime string, meta_n_bytes bigint, "

@@ -491,38 +491,3 @@ def decode_mp3_l3_features(payload: bytes) -> list[float]:
         float(round(1000 * energy)),
         float(active),
     ]
-
-
-# ---------------------------------------------------------------------------
-# Spark plumbing (the features-key branch)
-# ---------------------------------------------------------------------------
-
-
-def binarize_mp3l3_documents(documents):
-    """Documents → profile mp3 payloads (one 288-byte Layer III frame
-    carrying the text's tone placement) via Arrow ``mapInPandas`` —
-    same ingestion shape as every other modality branch."""
-    from typing import Iterator
-
-    import pandas as pd
-
-    def synth(batches: "Iterator[pd.DataFrame]"):
-        for pdf in batches:
-            payloads = [synthesize_mp3_l3(str(t)) for t in pdf["text"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "mp3",
-                    "payload": payloads,
-                    "meta_mime": "audio/mpeg",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    from mapreduce_framework_for_mergesort_spark.sources.multimodal import (
-        MODALITY_SCHEMA,
-    )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth, MODALITY_SCHEMA
-    )

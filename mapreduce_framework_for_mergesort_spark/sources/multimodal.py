@@ -4,8 +4,11 @@ Design (per the task brief): image/audio/video payloads travel as binary
 columns with a ``modality`` tag and a metadata struct; decode/feature
 steps run as Arrow-batched ``mapInPandas`` over partition-sized batches.
 The Spark-side plumbing — schema, batch shape, UDF signature,
-partitioning — is real and tested.  Six non-text modalities are REAL
-stdlib container parses (WAV/PCM audio, 24-bit BMP images, 8-bit
+partitioning — is real and tested.  Text rides the JVM-side
+``binarize_documents``; every other modality comes from one
+``binarize(documents, branch)`` over the ``BRANCHES`` table: ten
+branches, nine modality tags.  Six of them are REAL stdlib container
+parses in this module (WAV/PCM audio, 24-bit BMP images, 8-bit
 greyscale PNG — the first COMPRESSED container, built on stdlib zlib
 with CRC-validated chunks and all five scanline filters —
 baseline AND progressive (SOF2) JFIF greyscale AND YCbCr color JPEG —
@@ -15,12 +18,14 @@ covering 1/3-component frames, sampling factors up to 2x2 (4:4:4 and
 accumulation (spectral selection + successive approximation, round 9),
 plus closed-form flat-block encoders, see the JPEG section comments —
 and YUV4MPEG2 grayscale video) across synthesize/decode/frame
-verbs.  MP4 and MP3 are parsed at the CONTAINER layer for real
-(round 9, ``sources/containers.py``: ISO-BMFF box walk + sample-table
-span resolution; MPEG frame-sync walk + ID3 handling) — decode is real
-for uncompressed-PCM mp4 tracks, and the remaining CODEC-layer seams
-(h264/aac/Layer-III entropy decode) stay an explicit
-``NotImplementedError``, never a silent fake.
+verbs.  MP4 (plain and fragmented) and MP3 are parsed at the
+CONTAINER layer for real (round 9, ``sources/containers.py``: ISO-BMFF
+box walk + sample-table span resolution; MPEG frame-sync walk + ID3
+handling) — decode is real for uncompressed-PCM mp4 tracks and for the
+Layer III profile of ``sources/layer3.py`` (the second ``mp3``
+branch), and the remaining CODEC-layer seams (h264/aac/general
+Layer-III entropy decode) stay an explicit ``NotImplementedError``,
+never a silent fake.
 
 Scale notes: payloads dominate row width, so (a) never shuffle decoded
 features together with raw bytes — project bytes away first; (b) decode
@@ -32,11 +37,15 @@ hand off to the similarity operators.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import lru_cache
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from mapreduce_framework_for_mergesort_spark.sources import containers as CT
+from mapreduce_framework_for_mergesort_spark.sources import layer3 as L3
 
 MODALITY_SCHEMA = (
     "doc_id bigint, modality string, payload binary, "
@@ -230,32 +239,6 @@ def decode_bmp(payload: bytes) -> list[float]:
         float(sum(px) % AUDIO_SUM_MOD),
         float(sum(1 for v in px if v == 32)),
     ]
-
-
-def binarize_image_documents(documents: DataFrame) -> DataFrame:
-    """Manufacture an image-modality table: each document's text bytes
-    become a real grayscale BMP payload (``synthesize_bmp``) via
-    Arrow-batched ``mapInPandas`` — same ingestion shape as the audio
-    twin."""
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synthesize_bmp(t.encode("utf-8")) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "image",
-                    "payload": payloads,
-                    "meta_mime": "image/bmp",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth_batches, MODALITY_SCHEMA
-    )
 
 
 def _bmp_pixels(payload: bytes) -> tuple[int, int, list[int]]:
@@ -552,31 +535,6 @@ def decode_png(payload: bytes) -> list[float]:
     ]
 
 
-def binarize_png_documents(documents: DataFrame) -> DataFrame:
-    """Manufacture a PNG-modality table (modality tag ``png``, mime
-    ``image/png``) — the compressed-container twin of
-    ``binarize_image_documents``."""
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synthesize_png(t.encode("utf-8")) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "png",
-                    "payload": payloads,
-                    "meta_mime": "image/png",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth_batches, MODALITY_SCHEMA
-    )
-
-
 # --- baseline JPEG (JFIF), greyscale ---------------------------------
 #
 # The sixth modality and the second COMPRESSED container (round 7,
@@ -633,30 +591,33 @@ def _jpeg_dc_codes() -> dict[int, tuple[int, int]]:
     return codes
 
 
-def _jpeg_header(height: int) -> bytes:
-    """Every segment before the entropy-coded data (SOI..SOS), fixed
-    except the SOF height field.  Memoized — band tiling re-encodes
-    one short header per band and decode re-derives the expected
-    header per payload."""
-    return _jpeg_header_cached(height)
-
-
-from functools import lru_cache  # noqa: E402 (scoped to the JPEG section)
-
-
+# 16,384 entries hold every valid SOF height (8*n, n <= 8191) of both layouts
 @lru_cache(maxsize=16384)
-def _jpeg_header_cached(height: int) -> bytes:
+def _jfif_header(height: int, components: int) -> bytes:
+    """Every segment before the entropy-coded data (SOI..SOS), fixed
+    except the SOF height field.  ``components`` is 1 (greyscale) or 3
+    (YCbCr 4:4:4: a second DQT for chroma — the same flat quantizer,
+    so the DC algebra stays closed-form — and a 3-component SOF0 and
+    interleaved SOS).  Every scan selector references the canonical
+    DC table and the 1-bit EOB AC table.  Memoized — band tiling
+    re-encodes one short header per band and decode re-derives the
+    expected header per payload."""
     import struct
 
     def seg(marker: int, body: bytes) -> bytes:
         return struct.pack(">HH", marker, len(body) + 2) + body
 
+    ids = range(1, components + 1)
     app0 = seg(0xFFE0, b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0]))
-    dqt = seg(0xFFDB, bytes([0x00]) + bytes([JPEG_Q] * 64))
+    dqt = b"".join(
+        seg(0xFFDB, bytes([t]) + bytes([JPEG_Q] * 64))
+        for t in range(min(components, 2))
+    )
+    # component c: id c, 1x1 sampling, quant table 0 (luma) / 1 (chroma)
     sof0 = seg(
         0xFFC0,
-        struct.pack(">BHHB", 8, height, JPEG_WIDTH, 1)
-        + bytes([1, 0x11, 0]),
+        struct.pack(">BHHB", 8, height, JPEG_WIDTH, components)
+        + bytes(v for c in ids for v in (c, 0x11, min(c - 1, 1))),
     )
     bits_dc = [0] * 16
     for length in range(4, 16):
@@ -665,12 +626,15 @@ def _jpeg_header_cached(height: int) -> bytes:
     dht_dc = seg(0xFFC4, bytes([0x00] + bits_dc + symbols_dc))
     bits_ac = [1] + [0] * 15
     dht_ac = seg(0xFFC4, bytes([0x10] + bits_ac + [0x00]))
-    sos = seg(0xFFDA, bytes([1, 1, 0x00, 0, 63, 0]))
+    sos = seg(
+        0xFFDA,
+        bytes([components, *(v for c in ids for v in (c, 0x00)), 0, 63, 0]),
+    )
     return b"\xff\xd8" + app0 + dqt + sof0 + dht_dc + dht_ac + sos
 
 
 # total non-entropy bytes (header + EOI) for the closed-form size oracle
-JPEG_HEADER = len(_jpeg_header(0)) + 2
+JPEG_HEADER = len(_jfif_header(0, 1)) + 2
 
 
 def _jpeg_unit16(d):
@@ -716,7 +680,7 @@ def synthesize_jpeg(data: bytes) -> bytes:
         )
     # quantized DC with q=8 (FDCT DC of a flat block) = v - 128
     dcs = np.frombuffer(data, dtype=np.uint8).astype(np.int64) - 128
-    return _jpeg_header(8 * n) + _jpeg_dc_units(dcs) + b"\xff\xd9"
+    return _jfif_header(8 * n, 1) + _jpeg_dc_units(dcs) + b"\xff\xd9"
 
 
 class _BitReader:
@@ -1414,7 +1378,7 @@ def _jpeg_pixels_array(payload: bytes):
 
     n = (len(payload) - JPEG_HEADER) // 2
     if n >= 0 and len(payload) == JPEG_HEADER + 2 * n:
-        vals = _jpeg_flat_units(payload, _jpeg_header(8 * n), 1)
+        vals = _jpeg_flat_units(payload, _jfif_header(8 * n, 1), 1)
         if vals is not None:
             return JPEG_WIDTH, 8 * n, np.repeat(vals.reshape(-1), 64)
     w, h, comps = _jpeg_decode_planes(payload)
@@ -1438,7 +1402,7 @@ def decode_jpeg(payload: bytes) -> list[float]:
     materializes."""
     n = (len(payload) - JPEG_HEADER) // 2
     if n >= 0 and len(payload) == JPEG_HEADER + 2 * n:
-        vals = _jpeg_flat_units(payload, _jpeg_header(8 * n), 1)
+        vals = _jpeg_flat_units(payload, _jfif_header(8 * n, 1), 1)
         if vals is not None:
             if n == 0:
                 return [0.0] * FEATURE_DIM
@@ -1466,31 +1430,6 @@ def decode_jpeg(payload: bytes) -> list[float]:
         float(int(px.sum()) % AUDIO_SUM_MOD),
         float(int((px == 32).sum())),
     ]
-
-
-def binarize_jpeg_documents(documents: DataFrame) -> DataFrame:
-    """Manufacture a JPEG-modality table (modality tag ``jpeg``, mime
-    ``image/jpeg``) — the entropy-coded twin of
-    ``binarize_png_documents``."""
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synthesize_jpeg(t.encode("utf-8")) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "jpeg",
-                    "payload": payloads,
-                    "meta_mime": "image/jpeg",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth_batches, MODALITY_SCHEMA
-    )
 
 
 # --- baseline JPEG (JFIF), YCbCr color -------------------------------
@@ -1523,44 +1462,8 @@ _JPEGC_G_CR = 0.714136
 _JPEGC_B_CB = 1.772
 
 
-def _jpegc_header(height: int) -> bytes:
-    """Every segment before the color entropy data: two DQTs (luma
-    table 0, chroma table 1 — same flat quantizer so the DC algebra
-    stays closed-form), a 3-component 4:4:4 SOF0, the same canonical
-    DC/AC tables as the greyscale encoder (all three scan selectors
-    reference table 0), and a 3-component interleaved SOS.  Memoized
-    like ``_jpeg_header``."""
-    return _jpegc_header_cached(height)
-
-
-@lru_cache(maxsize=16384)
-def _jpegc_header_cached(height: int) -> bytes:
-    import struct
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(body) + 2) + body
-
-    app0 = seg(0xFFE0, b"JFIF\x00" + bytes([1, 1, 0, 0, 1, 0, 1, 0, 0]))
-    dqt0 = seg(0xFFDB, bytes([0x00]) + bytes([JPEG_Q] * 64))
-    dqt1 = seg(0xFFDB, bytes([0x01]) + bytes([JPEG_Q] * 64))
-    sof0 = seg(
-        0xFFC0,
-        struct.pack(">BHHB", 8, height, JPEG_WIDTH, 3)
-        + bytes([1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1]),
-    )
-    bits_dc = [0] * 16
-    for length in range(4, 16):
-        bits_dc[length - 1] = 1
-    symbols_dc = [15 - length for length in range(4, 16)]
-    dht_dc = seg(0xFFC4, bytes([0x00] + bits_dc + symbols_dc))
-    bits_ac = [1] + [0] * 15
-    dht_ac = seg(0xFFC4, bytes([0x10] + bits_ac + [0x00]))
-    sos = seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + app0 + dqt0 + dqt1 + sof0 + dht_dc + dht_ac + sos
-
-
 # total non-entropy bytes (header + EOI) for the closed-form size oracle
-JPEGC_HEADER = len(_jpegc_header(0)) + 2
+JPEGC_HEADER = len(_jfif_header(0, 3)) + 2
 
 
 def _encode_jpegc_blocks(blocks: list[tuple[int, int, int]]) -> bytes:
@@ -1577,7 +1480,7 @@ def _encode_jpegc_blocks(blocks: list[tuple[int, int, int]]) -> bytes:
             f"height is 16-bit, height = 8*n), got {n}"
         )
     if n == 0:
-        return _jpegc_header(0) + b"\xff\xd9"
+        return _jfif_header(0, 3) + b"\xff\xd9"
     # three independent DC chains (per-component predictors) in ONE
     # unit-emitter pass: axis-0 diff runs each column as its own chain,
     # and C-order tobytes() interleaves (Y, Cb, Cr) per MCU exactly as
@@ -1586,7 +1489,7 @@ def _encode_jpegc_blocks(blocks: list[tuple[int, int, int]]) -> bytes:
     dc = np.asarray(blocks, dtype=np.int64) - 128
     diffs = np.diff(dc, axis=0, prepend=np.zeros((1, 3), dtype=np.int64))
     return (
-        _jpegc_header(8 * n)
+        _jfif_header(8 * n, 3)
         + _jpeg_unit16(diffs).astype(">u2").tobytes()
         + b"\xff\xd9"
     )
@@ -1618,7 +1521,7 @@ def _jpeg_ycbcr(payload: bytes) -> tuple[int, int, list, list, list]:
 
     n = (len(payload) - JPEGC_HEADER) // 6
     if n >= 0 and len(payload) == JPEGC_HEADER + 6 * n:
-        vals = _jpeg_flat_units(payload, _jpegc_header(8 * n), 3)
+        vals = _jpeg_flat_units(payload, _jfif_header(8 * n, 3), 3)
         if vals is not None:
             planes = [
                 np.repeat(vals[:, ci], 64).reshape(-1, 8) for ci in range(3)
@@ -1695,7 +1598,7 @@ def decode_jpeg_color(payload: bytes) -> list[float]:
 
     n = (len(payload) - JPEGC_HEADER) // 6
     if n >= 0 and len(payload) == JPEGC_HEADER + 6 * n:
-        vals = _jpeg_flat_units(payload, _jpegc_header(8 * n), 3)
+        vals = _jpeg_flat_units(payload, _jfif_header(8 * n, 3), 3)
         if vals is not None:
             if n == 0:
                 return [0.0] * FEATURE_DIM
@@ -1723,31 +1626,6 @@ def decode_jpeg_color(payload: bytes) -> list[float]:
         float(int(rgb.sum()) % AUDIO_SUM_MOD),
         float(int((rgb == 32).sum())),
     ]
-
-
-def binarize_jpeg_color_documents(documents: DataFrame) -> DataFrame:
-    """Manufacture a color-JPEG modality table (modality tag
-    ``jpeg_color``, mime ``image/jpeg``) — the 3-component twin of
-    ``binarize_jpeg_documents``."""
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synthesize_jpeg_color(t.encode("utf-8")) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "jpeg_color",
-                    "payload": payloads,
-                    "meta_mime": "image/jpeg",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth_batches, MODALITY_SCHEMA
-    )
 
 
 def _block_row_avgs(plane, h: int):
@@ -1817,7 +1695,7 @@ def jpegc_band_encode(payload: bytes) -> list[bytes]:
         ],
         axis=-1,
     ) if h else np.zeros((0, 3), dtype=np.int64)
-    return _band_payloads(triples, lambda k: _jpegc_header(8 * k), 6)
+    return _band_payloads(triples, lambda k: _jfif_header(8 * k, 3), 6)
 
 
 VID_WIDTH = 8
@@ -1940,32 +1818,6 @@ def decode_y4m(payload: bytes) -> list[float]:
     ]
 
 
-def binarize_video_documents(documents: DataFrame) -> DataFrame:
-    """Manufacture a video-modality table: each document's text bytes
-    become a real multi-frame grayscale Y4M clip (``synthesize_y4m``)
-    via Arrow-batched ``mapInPandas`` — same ingestion shape as the
-    audio/image twins."""
-
-    def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = [
-                synthesize_y4m(t.encode("utf-8")) for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "modality": "video",
-                    "payload": payloads,
-                    "meta_mime": "video/x-yuv4mpeg",
-                    "meta_n_bytes": [len(p) for p in payloads],
-                }
-            )
-
-    return documents.select("doc_id", "text").mapInPandas(
-        synth_batches, MODALITY_SCHEMA
-    )
-
-
 def decode_stub(payload: bytes, modality: str) -> list[float]:
     """The real decode seam.  'text' uses the closed-form byte
     featurizer; 'audio' is a REAL stdlib WAV/PCM parse (round 3);
@@ -1996,44 +1848,57 @@ def decode_stub(payload: bytes, modality: str) -> list[float]:
         # for real either way, see sources/containers.py).  'fmp4'
         # (round 10) is the fragmented moof/trun layout; decode_mp4
         # is layout-agnostic once parse_mp4 resolves the spans.
-        from mapreduce_framework_for_mergesort_spark.sources.containers import (
-            decode_mp4,
-        )
-
-        return decode_mp4(payload)
+        return CT.decode_mp4(payload)
     if modality == "mp3":
         # round 11: Layer III SPECTRAL decode over the profile
         # (count1 table B + requantize + alias + IMDCT; the polyphase
         # window / big-values tables remain the loud data seam —
         # sources/layer3.py docstring)
-        from mapreduce_framework_for_mergesort_spark.sources.layer3 import (
-            decode_mp3_l3_features,
-        )
-
-        return decode_mp3_l3_features(payload)
+        return L3.decode_mp3_l3_features(payload)
     raise NotImplementedError(
         f"decoder for modality {modality!r} requires codec libraries "
         "(decord/ffmpeg) not present in this environment"
     )
 
 
-def binarize_audio_documents(documents: DataFrame) -> DataFrame:
-    """Manufacture an audio-modality table: each document's text bytes
-    are synthesized into a real PCM16 WAV payload (``synthesize_wav``)
-    via Arrow-batched ``mapInPandas`` — the ingestion shape a real audio
-    corpus would arrive in (binary column + mime + size metadata)."""
+# The synthesized (non-text) ingestion branches, keyed by branch name:
+# (modality tag, mime, synthesize: utf-8 text bytes -> payload).  Two
+# branches share the tag "mp3": the container branch feeds frame
+# sampling, the Layer III profile branch feeds feature decode.
+BRANCHES: dict[str, tuple[str, str, Callable[[bytes], bytes]]] = {
+    "audio_wav": ("audio", "audio/wav", synthesize_wav),
+    "audio_mp4": ("mp4", "audio/mp4", CT.synthesize_mp4),
+    "audio_fmp4": ("fmp4", "video/mp4", CT.synthesize_fmp4),
+    "audio_mp3": ("mp3", "audio/mpeg", CT.synthesize_mp3),
+    "audio_mp3_l3": (
+        "mp3",
+        "audio/mpeg",
+        lambda data: L3.synthesize_mp3_l3(data.decode("utf-8")),
+    ),
+    "image_bmp": ("image", "image/bmp", synthesize_bmp),
+    "image_png": ("png", "image/png", synthesize_png),
+    "image_jpeg": ("jpeg", "image/jpeg", synthesize_jpeg),
+    "image_jpeg_color": ("jpeg_color", "image/jpeg", synthesize_jpeg_color),
+    "video_y4m": ("video", "video/x-yuv4mpeg", synthesize_y4m),
+}
+
+
+def binarize(documents: DataFrame, branch: str) -> DataFrame:
+    """Manufacture one branch's modality table: each document's text
+    bytes become a real container payload via Arrow-batched
+    ``mapInPandas`` — the ingestion shape a real media corpus would
+    arrive in (binary column + mime + size metadata)."""
+    modality, mime, synthesize = BRANCHES[branch]
 
     def synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payloads = [
-                synthesize_wav(t.encode("utf-8")) for t in pdf["text"]
-            ]
+            payloads = [synthesize(t.encode("utf-8")) for t in pdf["text"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "modality": "audio",
+                    "modality": modality,
                     "payload": payloads,
-                    "meta_mime": "audio/wav",
+                    "meta_mime": mime,
                     "meta_n_bytes": [len(p) for p in payloads],
                 }
             )
@@ -2109,7 +1974,7 @@ def frame_stub(payload: bytes, modality: str, chunk: int = FRAME_BYTES) -> list[
         img = px.reshape(h, w)
         vals = np.asarray(_block_row_avgs(img, h), dtype=np.int64)
         return _band_payloads(
-            vals.reshape(-1, 1), lambda k: _jpeg_header(8 * k), 2
+            vals.reshape(-1, 1), lambda k: _jfif_header(8 * k, 1), 2
         )
     if modality == "jpeg_color":
         # the color twin: per-component (YCbCr) block pooling, every
@@ -2127,20 +1992,12 @@ def frame_stub(payload: bytes, modality: str, chunk: int = FRAME_BYTES) -> list[
         # chunk re-encodes as a standalone decodable mp4 for the PCM
         # codecs — compressed fourccs raise inside.  Fragmented files
         # (round 10) take the same path: each trun run IS a chunk.
-        from mapreduce_framework_for_mergesort_spark.sources.containers import (
-            mp4_frames,
-        )
-
-        return mp4_frames(payload)
+        return CT.mp4_frames(payload)
     if modality == "mp3":
         # REAL frame-sync walk; each unit is a byte-delimited MPEG
         # frame (header + data) — see the bit-reservoir caveat on
         # containers.mp3_frames
-        from mapreduce_framework_for_mergesort_spark.sources.containers import (
-            mp3_frames,
-        )
-
-        return mp3_frames(payload)
+        return CT.mp3_frames(payload)
     raise NotImplementedError(
         f"frame decoder for modality {modality!r} requires codec libraries "
         "not present in this environment"

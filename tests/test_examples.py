@@ -34,7 +34,7 @@ def test_example_runs(example, sf_smoke, tmp_path):
         [sys.executable, os.path.join(_REPO, "examples", f"{example}.py"),
          sf_smoke, str(tmp_path / "out")],
         # outside the repository, with no PYTHONPATH of its own: the
-        # example must make the package importable for the Python workers
+        # Python workers must import the package through get_spark's conf
         cwd=str(tmp_path),
         env={k: v for k, v in os.environ.items() if k != "PYTHONPATH"},
         capture_output=True,

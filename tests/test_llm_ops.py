@@ -1167,6 +1167,53 @@ def test_multimodal_feature_pipeline(spark, sf_smoke):
     assert sorted(map(str, rows)) == sorted(map(str, again))
 
 
+def test_binarize_branch_contracts(spark):
+    """Every ``BRANCHES`` row against literal (modality, mime) pairs and
+    its named synthesizer: no oracle reads ``meta_mime``, and the
+    oracles would not tell two synthesizers of one tag apart."""
+    from mapreduce_framework_for_mergesort_spark.sources import (
+        containers as CT,
+    )
+    from mapreduce_framework_for_mergesort_spark.sources import layer3 as L3
+
+    def utf8(fn):
+        return lambda text: fn(text.encode("utf-8"))
+
+    expected = {
+        "audio_wav": ("audio", "audio/wav", utf8(M.synthesize_wav)),
+        "audio_mp4": ("mp4", "audio/mp4", utf8(CT.synthesize_mp4)),
+        "audio_fmp4": ("fmp4", "video/mp4", utf8(CT.synthesize_fmp4)),
+        "audio_mp3": ("mp3", "audio/mpeg", utf8(CT.synthesize_mp3)),
+        "audio_mp3_l3": ("mp3", "audio/mpeg", L3.synthesize_mp3_l3),
+        "image_bmp": ("image", "image/bmp", utf8(M.synthesize_bmp)),
+        "image_png": ("png", "image/png", utf8(M.synthesize_png)),
+        "image_jpeg": ("jpeg", "image/jpeg", utf8(M.synthesize_jpeg)),
+        "image_jpeg_color": (
+            "jpeg_color", "image/jpeg", utf8(M.synthesize_jpeg_color)
+        ),
+        "video_y4m": ("video", "video/x-yuv4mpeg", utf8(M.synthesize_y4m)),
+    }
+    assert list(M.BRANCHES) == list(expected)
+    texts = {1: "Hello, world", 2: "The quick brown fox jumps over it!"}
+    docs = spark.createDataFrame(
+        sorted(texts.items()), "doc_id bigint, text string"
+    )
+    union = None
+    for branch in M.BRANCHES:
+        b = M.binarize(docs, branch).withColumn("branch", F.lit(branch))
+        union = b if union is None else union.unionByName(b)
+    rows = union.collect()
+    assert sorted((r["branch"], r["doc_id"]) for r in rows) == sorted(
+        (b, d) for b in expected for d in texts
+    )
+    for r in rows:
+        modality, mime, synthesize = expected[r["branch"]]
+        payload = bytes(r["payload"])
+        assert (r["modality"], r["meta_mime"]) == (modality, mime), r["branch"]
+        assert payload == synthesize(texts[r["doc_id"]]), r["branch"]
+        assert r["meta_n_bytes"] == len(payload), r["branch"]
+
+
 def test_documents_fixture_is_ascii(spark, sf_smoke, sf_oracle):
     """Pin the precondition the multimodal oracles depend on: char-count
     SQL equals byte-count ONLY while documents.text is pure ASCII
@@ -2812,7 +2859,7 @@ def test_jpeg_color_container_roundtrip_size_and_features():
     data = b"The quick brown fox! \x00\xff\x7f"
     p = M.synthesize_jpeg_color(data)
     assert len(p) == M.JPEGC_HEADER + 6 * len(data)
-    assert b"\xff" not in p[len(M._jpegc_header(8 * len(data))) : -2]
+    assert b"\xff" not in p[len(M._jfif_header(8 * len(data), 3)) : -2]
     w, h, yp, cbp, crp = M._jpeg_ycbcr(p)
     assert (w, h) == (M.JPEG_WIDTH, 8 * len(data))
     for i, v in enumerate(data):
@@ -2890,7 +2937,7 @@ def test_jpeg_vectorized_encoder_matches_scalar_reference():
         dcs = [b - 128 for b in data]
         assert M._jpeg_dc_units(dcs) == scalar_units(dcs), trial
         assert M.synthesize_jpeg(data) == (
-            M._jpeg_header(8 * len(data)) + scalar_units(dcs) + b"\xff\xd9"
+            M._jfif_header(8 * len(data), 1) + scalar_units(dcs) + b"\xff\xd9"
         ), trial
     # max-swing chain 0<->255 exercises category 8 both signs
     swing = bytes([0, 255] * 100)
