@@ -45,6 +45,29 @@ SIMHASH_HEX_DIGITS = SIMHASH_BITS // 4
 SHINGLE_N = 3  # word n-gram width
 
 
+# --- bounded memo for the Python kernels -----------------------------------
+
+MEMO_ENTRIES = 1 << 20  # entry cap of every Memo
+
+
+class Memo(dict):
+    """``memo[key]`` is ``fn(key)``, computed once per distinct key
+    (``None`` included) and stored while the memo holds fewer than
+    ``MEMO_ENTRIES`` entries; past the cap a miss is computed, not
+    stored.  ``series.map(memo)`` looks each element up.  Each kernel
+    states the memo's lifetime where it builds one."""
+
+    def __init__(self, fn):
+        super().__init__()
+        self.fn = fn
+
+    def __missing__(self, key):
+        value = self.fn(key)
+        if len(self) < MEMO_ENTRIES:
+            self[key] = value
+        return value
+
+
 # --- let-binding combinator -------------------------------------------------
 # Spark SQL has no LET, and two Catalyst behaviors conspire against naive
 # factoring of expensive sub-expressions into withColumn steps:
@@ -268,57 +291,30 @@ def gram_rows_udf(k: int):
     ``tests/references.positional_ngrams_sql``, which it is pinned to
     row-for-row in tests.  The SQL form pays one
     interpreted concat+md5 per window inside a HOF lambda (HOFs never
-    enter codegen); the kernel makes one Arrow pass with two memos:
-
-    * window→hash — the duplicated material this pass exists to find is
-      exactly the material that repeats, so hot boilerplate windows hash
-      once per task (the simhash kernel's Zipf argument, one level up);
-    * text→rows — byte-identical documents (the dominant duplication
-      mode in replicated corpora and the 100× spot-check) skip
-      tokenization entirely.
-
-    Both memos are per-Arrow-batch (bounded by task input size, the
-    same budget as the simhash/BPE memos)."""
+    enter codegen); the kernel makes one Arrow pass."""
     import hashlib
 
     from pyspark.sql.functions import pandas_udf
 
+    def window_hash(w: str) -> int:
+        return int(hashlib.md5(w.encode()).hexdigest()[:GRAM_HEX_DIGITS], 16)
+
+    def windows(s):
+        if s is None:
+            # NULL text → no windows, matching the SQL spelling
+            # (posexplode of a NULL/empty gram array yields no
+            # rows) — and the kernel must not rely on the caller's
+            # join null-filter inference to keep None out.
+            return []
+        toks = tokenize(s)
+        return [
+            (i + 1, window_hash(" ".join(toks[i : i + k])))
+            for i in range(len(toks) - k + 1)
+        ]
+
     @pandas_udf("array<struct<pos: int, g: long>>")
     def grams(text: pd.Series) -> pd.Series:
-        doc_memo: dict[str, list] = {}
-        win_memo: dict[str, int] = {}
-        out = []
-        for s in text:
-            if s is None:
-                # NULL text → no windows, matching the SQL spelling
-                # (posexplode of a NULL/empty gram array yields no
-                # rows) — and the kernel must not rely on the caller's
-                # join null-filter inference to keep None out.
-                out.append([])
-                continue
-            hit = doc_memo.get(s)
-            if hit is None:
-                toks = tokenize(s)
-                hit = []
-                if len(toks) >= k:
-                    join = " ".join
-                    md5 = hashlib.md5
-                    get = win_memo.get
-                    for i in range(len(toks) - k + 1):
-                        w = join(toks[i : i + k])
-                        g = get(w)
-                        if g is None:
-                            g = int(
-                                md5(w.encode()).hexdigest()[
-                                    :GRAM_HEX_DIGITS
-                                ],
-                                16,
-                            )
-                            win_memo[w] = g
-                        hit.append((i + 1, g))
-                doc_memo[s] = hit
-            out.append(hit)
-        return pd.Series(out)
+        return text.map(windows)
 
     return grams
 
@@ -432,12 +428,7 @@ def simhash_udf():
     ties vote 0).  The SQL
     expression makes SIMHASH_BITS interpreted passes over the per-token
     hash list; the kernel makes one and is pinned to the expression in
-    tests.
-
-    A per-task token→bit-row memo collapses repeated word types (the
-    same Zipf argument as the BPE kernels): the 100× spot-check showed
-    the per-occurrence md5 as this tier's per-byte floor, and most
-    occurrences in real text are repeats of a few thousand types."""
+    tests."""
     import hashlib
 
     from pyspark.sql.functions import pandas_udf
@@ -445,9 +436,20 @@ def simhash_udf():
     weights = (1 << np.arange(SIMHASH_BITS - 1, -1, -1)).astype(np.int64)
     shifts = np.array([3, 2, 1, 0], dtype=np.uint8)
 
+    def token_bits(t: str) -> np.ndarray:
+        digs = hashlib.md5(t.encode()).hexdigest()[:SIMHASH_HEX_DIGITS]
+        M = np.frombuffer(digs.encode(), dtype=np.uint8)
+        # hex char → value: '0'-'9' 48-57, 'a'-'f' 97-102
+        V = (M - 48 - (M >= 97) * 39).astype(np.uint8)
+        # (digits, 4) bit planes, MSB first → (48,)
+        return ((V[:, None] >> shifts[None, :]) & 1).reshape(SIMHASH_BITS)
+
     @pandas_udf("long")
     def sim(text: pd.Series) -> pd.Series:
-        memo: dict[str, np.ndarray] = {}
+        # per Arrow batch: each word type hashes once (Zipf: most
+        # occurrences repeat a few thousand types, and the per-occurrence
+        # md5 was this tier's per-byte floor)
+        bits = Memo(token_bits)
         out = np.zeros(len(text), dtype=np.int64)
         for ix, s in enumerate(text):
             if s is None:
@@ -461,23 +463,7 @@ def simhash_udf():
             toks = tokenize(s)
             if not toks:
                 continue  # no tokens → every vote fails → 0, like the SQL
-            rows = np.empty((len(toks), SIMHASH_BITS), dtype=np.uint8)
-            for j, t in enumerate(toks):
-                b = memo.get(t)
-                if b is None:
-                    digs = hashlib.md5(t.encode()).hexdigest()[
-                        :SIMHASH_HEX_DIGITS
-                    ]
-                    M = np.frombuffer(digs.encode(), dtype=np.uint8)
-                    # hex char → value: '0'-'9' 48-57, 'a'-'f' 97-102
-                    V = (M - 48 - (M >= 97) * 39).astype(np.uint8)
-                    # (digits, 4) bit planes, MSB first → (48,)
-                    b = ((V[:, None] >> shifts[None, :]) & 1).reshape(
-                        SIMHASH_BITS
-                    )
-                    memo[t] = b
-                rows[j] = b
-            votes = rows.sum(axis=0, dtype=np.int64)
+            votes = np.sum([bits[t] for t in toks], axis=0, dtype=np.int64)
             out[ix] = int(((2 * votes > len(toks)) * weights).sum())
         return pd.Series(out)
 

@@ -17,9 +17,7 @@ Subword Units"), split along the engine's standard scale seam:
   corpus-sized.  Merge selection is deterministic: max pair count,
   ties to the lexicographically smallest pair.
 * **Application** is one map-only Arrow pass: the merge ranks ride the
-  UDF closure (vocab-sized metadata), each batch segments its words
-  against a per-batch memo (Zipf makes word types collapse hard, so
-  the memo hit rate is the compression ratio of the batch).
+  UDF closure (vocab-sized metadata).
 
 Determinism end to end: training input is a totally-ordered top-K,
 the merge loop breaks ties lexicographically, and application is a
@@ -166,18 +164,11 @@ def bpe_count_udf(merges: Merges):
 
     @pandas_udf("long")
     def count(texts: pd.Series) -> pd.Series:
-        memo: dict[str, int] = {}
-
-        def one(text: str) -> int:
-            total = 0
-            for w in token_re(text or ""):
-                got = memo.get(w)
-                if got is None:
-                    got = memo[w] = len(segment_word(w, ranks))
-                total += got
-            return total
-
-        return texts.map(one)
+        # per Arrow batch: each word type segments once (Zipf)
+        counts = H.Memo(lambda w: len(segment_word(w, ranks)))
+        return texts.map(
+            lambda text: sum(map(counts.__getitem__, token_re(text or "")))
+        )
 
     return count
 
@@ -260,10 +251,7 @@ def chunk_documents_bpe(
 
     100 TB shape: ONE map-only Arrow pass (``mapInPandas``), zero
     shuffles/joins — same plan pin as the whitespace chunker.  The
-    merge ranks ride the closure (vocab-sized metadata) and a per-task
-    word→count memo collapses repeated word types (Zipf), so the
-    kernel does one ``segment_word`` per distinct word per task, not
-    per occurrence."""
+    merge ranks ride the closure (vocab-sized metadata)."""
     if overlap_tokens < 0 or chunk_tokens <= overlap_tokens:
         raise ValueError(
             f"need 0 <= overlap ({overlap_tokens}) < chunk "
@@ -277,7 +265,8 @@ def chunk_documents_bpe(
     )
 
     def gen(batches):
-        memo: dict[str, int] = {}
+        # per partition iterator: each word type segments once per task
+        counts_of = H.Memo(lambda w: len(segment_word(w, ranks)))
         for pdf in batches:
             ids: list[int] = []
             idxs: list[int] = []
@@ -285,14 +274,7 @@ def chunk_documents_bpe(
             ntoks: list[int] = []
             for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
                 words = token_re(text or "")
-                counts = []
-                for w in words:
-                    c = memo.get(w)
-                    if c is None:
-                        c = len(segment_word(w, ranks))
-                        if len(memo) < 1 << 20:
-                            memo[w] = c
-                    counts.append(c)
+                counts = [counts_of[w] for w in words]
                 # prefix sums: span token totals in O(1) each
                 pre = [0]
                 for c in counts:

@@ -24,6 +24,7 @@ band_id, which is already part of the join key.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -620,7 +621,7 @@ def simhash_signatures(
     The kernel runs over DISTINCT texts and joins back on md5(text)
     (round 6 — the same replica collapse as ``positional_ngrams``): a
     signature is a pure function of the text, and on replica-heavy
-    corpora the per-task token memo cannot fire across file-appended
+    corpora the per-batch token memo cannot fire across file-appended
     copies that never share an Arrow batch, so distinct-collapsing the
     kernel input divides its cost by the duplication factor (the 100×
     spot-check's simhash floor was exactly this kernel).
@@ -781,7 +782,7 @@ def contaminated_doc_ids(
     shuffles (broadcast semi-join), so a hashed spelling only adds an
     md5 per window — a round-6 A/B measured the 48-bit-hashed Arrow
     kernel SLOWER at both ×1 (0.98 → 1.49 s) and ×10 (3.9 → 4.9 s),
-    because the per-task memo can't fire when replicas live in
+    because the per-batch memo can't fire when replicas live in
     different tasks (key-shifted copies are file-appended, never
     batch-local).
 
@@ -1031,7 +1032,6 @@ def embedding_near_dup_pairs(
 
     def cell_pairs(pdf):
         import numpy as np
-        import pandas as pd
 
         X = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         ids = pdf["vec_id"].to_numpy()
@@ -1090,7 +1090,7 @@ def positional_ngrams(documents: DataFrame, k: int = DUP_SPAN_K) -> DataFrame:
     identical (pos, g) arrays by definition, so the tokenize→window→
     hash work — measured 40.7 s of the key's 73 s at the 100×
     replica spot-check, where replicas never share an Arrow batch and
-    the per-task memo cannot fire — is paid once per distinct content
+    the per-batch memo cannot fire — is paid once per distinct content
     and joined back to doc_ids on md5(text).  The join ships one
     un-exploded gram ARRAY per distinct text plus a skinny
     (doc_id, hash) corpus projection; the 600 M-row explode happens
@@ -1413,14 +1413,17 @@ def _strip_rebuild_arrow(k: int):
     interpreted HOF expressions (HOFs never enter codegen and
     re-evaluate shared subtrees).  Exact replica: same pinned
     tokenizer (``hashing.tokenize``), same 1-based inclusive slices,
-    same <k short-doc passthrough, same NULL propagation.  The tokenize
-    memo lives for ONE Arrow batch (it is built inside ``rebuild``),
-    so it pays only for replicas that land in the same batch."""
-    import pandas as pd
+    same <k short-doc passthrough, same NULL propagation."""
     from pyspark.sql.functions import pandas_udf
 
-    def rebuild(text, iv):
-        memo: dict[str, list] = {}
+    @pandas_udf(
+        "struct<stripped_text: string, n_tokens: bigint, "
+        "n_kept_tokens: bigint>"
+    )
+    def rebuild(text: pd.Series, iv: pd.Series) -> pd.DataFrame:
+        # per Arrow batch: a replica tokenizes once when it shares the
+        # batch with its original
+        tokens = H.Memo(H.tokenize)
         st, nt, nk = [], [], []
         for s, intervals in zip(text, iv):
             if s is None:
@@ -1431,11 +1434,7 @@ def _strip_rebuild_arrow(k: int):
                 nt.append(None)
                 nk.append(sum(int(v["e"]) - int(v["s"]) + 1 for v in intervals))
                 continue
-            toks = memo.get(s)
-            if toks is None:
-                toks = H.tokenize(s)
-                if len(memo) < (1 << 20):
-                    memo[s] = toks
+            toks = tokens[s]
             n = len(toks)
             nt.append(n)
             if n < k:
@@ -1454,16 +1453,7 @@ def _strip_rebuild_arrow(k: int):
             {"stripped_text": st, "n_tokens": nt, "n_kept_tokens": nk}
         )
 
-    # concrete annotation objects: future-annotations mode stringifies
-    # inline hints, which pyspark cannot resolve (the urls.py pattern)
-    rebuild.__annotations__ = {
-        "text": pd.Series, "iv": pd.Series, "return": pd.DataFrame
-    }
-    return pandas_udf(
-        rebuild,
-        "struct<stripped_text: string, n_tokens: bigint, "
-        "n_kept_tokens: bigint>",
-    )
+    return rebuild
 
 
 def strip_dup_spans(

@@ -46,6 +46,8 @@ import os
 import re
 from functools import lru_cache
 
+import pandas as pd
+
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
 
 PROFILE_N = 3  # char n-gram width
@@ -389,22 +391,15 @@ def lang_pred_arrow(text_col):
     under subexpression elimination — which is why
     ``pipelines.with_curation_features`` keeps the codegen
     expression."""
-    import pandas as pd
     from pyspark.sql import functions as F
     from pyspark.sql.functions import pandas_udf
 
-    memo: dict[str, str] = {}
+    # per UDF closure: a text classifies once per deserialized kernel,
+    # across all the batches that kernel sees
+    labels = H.Memo(python_pred)
 
-    def one(v):
-        hit = memo.get(v)
-        if hit is None:
-            hit = python_pred(v)
-            if len(memo) < 1 << 20:
-                memo[v] = hit
-        return hit
+    @pandas_udf("string")
+    def kernel(s: pd.Series) -> pd.Series:
+        return s.map(labels)
 
-    def kernel(s):
-        return s.apply(one)
-
-    kernel.__annotations__ = {"s": pd.Series, "return": pd.Series}
-    return pandas_udf(kernel, "string")(F.col(text_col) if isinstance(text_col, str) else text_col)
+    return kernel(F.col(text_col) if isinstance(text_col, str) else text_col)

@@ -11,6 +11,7 @@ DECIMAL or integers).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -254,15 +255,14 @@ _DOC_PROFILE_FIELDS = [f.split()[0] for f in _DOC_PROFILE_SCHEMA.split(", ")]
 def doc_profile_arrow(text) -> Column:
     """The whole doc_profile column family as ONE Arrow struct kernel
     (round 13; the url_family_arrow shape)."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    def kernel(s):
+    @pandas_udf(_DOC_PROFILE_SCHEMA)
+    def kernel(s: pd.Series) -> pd.DataFrame:
         rows = [_doc_profile_py(v) for v in s]
         return pd.DataFrame(rows, columns=_DOC_PROFILE_FIELDS)
 
-    kernel.__annotations__ = {"s": pd.Series, "return": pd.DataFrame}
-    return pandas_udf(kernel, _DOC_PROFILE_SCHEMA)(text)
+    return kernel(text)
 
 
 def doc_profile(documents: DataFrame) -> DataFrame:

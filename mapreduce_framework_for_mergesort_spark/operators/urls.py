@@ -52,6 +52,7 @@ part of the LLM-curation surface the brief layers on top.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -328,14 +329,17 @@ def url_family_arrow(url: Column, rfc_url: Column) -> Column:
     hard-gated at 0 mismatching rows.  The codegen operators
     (``normalize_url``, ``registrable_domain``, ``dedup_by_url``) are
     untouched — their zero-Python plan pins stand."""
-    import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     from .psl import load_psl_rules, registrable_domain_py
 
     rules = load_psl_rules()
 
-    def kernel(u, r):
+    @pandas_udf(
+        "url_norm string, url_host string, url_domain string, "
+        "url_rfc_norm string"
+    )
+    def kernel(u: pd.Series, r: pd.Series) -> pd.DataFrame:
         norms, hosts, doms, rfcs = [], [], [], []
         for a, b in zip(u, r):
             # NULL-safe to match the codegen expressions it replaces
@@ -361,14 +365,7 @@ def url_family_arrow(url: Column, rfc_url: Column) -> Column:
             }
         )
 
-    kernel.__annotations__ = {
-        "u": pd.Series, "r": pd.Series, "return": pd.DataFrame
-    }
-    schema = (
-        "url_norm string, url_host string, url_domain string, "
-        "url_rfc_norm string"
-    )
-    return pandas_udf(kernel, schema)(url, rfc_url)
+    return kernel(url, rfc_url)
 
 
 def normalized_query(url: Column) -> Column:

@@ -31,10 +31,9 @@ HASH_MAT_THRESHOLD_BYTES = 16 << 20
 #: docs) codegen 4.06 s vs arrow 4.55 s (the kernel contends for Python
 #: workers inside the two-chain overlap), x10 (5.8 MB) codegen 7.79 s
 #: vs arrow 7.38 s (isolated strip pass 1.78 -> 1.24 s: one Python
-#: crossing replaces three HOF expressions, and the tokenize memo skips
-#: replicas that share an Arrow batch).  4 MB sits between the measured
-#: loss and the measured win; at corpus scale the gate always takes the
-#: kernel.
+#: crossing replaces three HOF expressions).  4 MB sits between the
+#: measured loss and the measured win; at corpus scale the gate always
+#: takes the kernel.
 STRIP_ARROW_THRESHOLD_BYTES = 4 << 20
 
 #: Run ``text.bm25_topk``'s per-document battery once per distinct

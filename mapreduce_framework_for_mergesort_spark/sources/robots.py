@@ -28,9 +28,7 @@ longest-match):
 
 100 TB posture: robots files are per-HOST and tiny (the RFC caps
 parsing obligation at 500 KiB) — the audit joins the page table to a
-host-keyed robots table and evaluates rules in one Arrow pass, with a
-per-batch compiled-matcher memo so each distinct host parses once per
-task, not once per row.
+host-keyed robots table and evaluates rules in one Arrow pass.
 
 Reference parity note: the reference engine (``/root/reference``)
 has no crawl surface; this is part of the LLM-curation layer the
@@ -46,6 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mapreduce_framework_for_mergesort_spark.functions.hashing import Memo
 from mapreduce_framework_for_mergesort_spark.operators.urls import (
     url_host,
     url_path,
@@ -367,13 +366,11 @@ def audit_robots_compliance(
     """Retro-compliance audit: every page URL judged against its
     host's robots.txt for ``agent`` → ``(url, url_host, allowed,
     rule, crawl_delay, robots_found)``.  ``robots`` must carry ONE row
-    per host (the per-batch matcher memo is host-keyed; a duplicate
-    host would also fan the left join out).  A host with no robots row is
-    ``allowed = true, robots_found = false`` (the crawl convention: no
-    robots file means no restrictions).  The LEFT join keeps every
-    page; rule evaluation is one Arrow pass with a per-batch compiled
-    matcher memo (each distinct host's file parses once per task).
-    Feed ``where(NOT allowed)`` into the takedown path
+    per host (a duplicate host would fan the left join out).  A host
+    with no robots row is ``allowed = true, robots_found = false`` (the
+    crawl convention: no robots file means no restrictions).  The LEFT
+    join keeps every page; rule evaluation is one Arrow pass.  Feed
+    ``where(NOT allowed)`` into the takedown path
     (``streaming/ingest.retract_documents``) to close the governance
     loop."""
     u = F.col(url_col)
@@ -396,7 +393,9 @@ def audit_robots_compliance(
     )
 
     def judge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        memo: dict[str, RobotsMatcher] = {}
+        # per partition iterator: each host's robots file parses once
+        # per task; a miss parses the current row's ``txt``
+        matchers = Memo(lambda host: RobotsMatcher(parse_robots(str(txt)), agent))
         for pdf in batches:
             allowed, rule, delay, found = [], [], [], []
             for host, path, txt in zip(
@@ -408,11 +407,7 @@ def audit_robots_compliance(
                     delay.append(None)
                     found.append(False)
                     continue
-                m = memo.get(host)
-                if m is None:
-                    m = RobotsMatcher(parse_robots(str(txt)), agent)
-                    if len(memo) < 1 << 20:
-                        memo[host] = m
+                m = matchers[host]
                 ok, pat = m.decide(path or "/")
                 allowed.append(ok)
                 rule.append(pat)
