@@ -8,16 +8,18 @@ idiomatic Spark pipeline: read text → parse ints → global sort → write
 text.  ``chunk_size`` is the FileScan split size: the text source's
 records are space-delimited, so it splits the reference's one-line file
 into ``chunk_size`` byte ranges cut at spaces, as the reference's chunk
-planning does (SURVEY.md O1/O2).  ``merge_jobs``
-is accepted-and-ignored: Spark's shuffle merges sorted spills in a single
-pass, subsuming the reference's multi-round merge tree
-(``Server.java:290-405``; SURVEY.md O8).
+planning does (SURVEY.md O1/O2).  ``merge_jobs`` is accepted and ignored,
+for signature parity only: the reduce side merges its sorted spills in
+one pass of unbounded fan-in, where the reference's merge tree
+(``Server.java:290-405``; SURVEY.md O8) bounds each merge to
+``mergeJobs`` runs.  Bounding that fan-in is ROADMAP §1's open item.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
+from mapreduce_framework_for_mergesort_spark.io import scoped_session_confs
 from mapreduce_framework_for_mergesort_spark.metrics import (
     JobMetrics,
     run_with_metrics,
@@ -33,7 +35,7 @@ class MergeSortEngine:
         self,
         file_name: str,
         chunk_size: int | None = None,
-        merge_jobs: int | None = None,  # noqa: ARG002 — reference parity, subsumed by shuffle
+        merge_jobs: int | None = None,  # noqa: ARG002 — reference parity
         output_path: str | None = None,
     ) -> str:
         """Reference ``SNService.sortFile`` (``ServerHandler.java:23-80``).
@@ -42,57 +44,21 @@ class MergeSortEngine:
         merged filename (``ServerHandler.java:79``).
         """
         out = output_path or f"{file_name}_sorted"
-        if chunk_size:
-            # chunk_size maps to the scan split conf, which Spark
-            # consults at EXECUTION time — and the whole job executes
-            # inside this block (write_ints_text is the action), so
-            # the setting can be scoped and restored instead of
-            # leaking onto the shared session for every later read
-            # (round-4+ review; ``ingest`` alone cannot scope it
-            # because it returns a lazy DataFrame — its docstring
-            # carries the warning)
-            from mapreduce_framework_for_mergesort_spark.io import (
-                scoped_session_confs,
-            )
-
-            with scoped_session_confs(
-                self.spark,
-                (("spark.sql.files.maxPartitionBytes", str(chunk_size)),),
-            ):
-                df = self.sort_ints(self.ingest(file_name, chunk_size))
-                ingest.write_ints_text(df, out)
-            return out
-        df = self.sort_ints(self.ingest(file_name, chunk_size))
-        ingest.write_ints_text(df, out)
+        # chunkSize (bytes, README.md:57) is the scan split size, which
+        # Spark consults at execution time; write_ints_text is the
+        # action, so the whole job runs inside the scope and the conf is
+        # restored instead of leaking onto the shared session.
+        confs = (
+            (("spark.sql.files.maxPartitionBytes", str(chunk_size)),)
+            if chunk_size else ()
+        )
+        with scoped_session_confs(self.spark, confs):
+            ints = ingest.drop_invalid(ingest.read_ints_text(self.spark, file_name))
+            ingest.write_ints_text(sort.sort_global(ints, ["value"]), out)
         return out
 
-    def sort_file_with_stats(
-        self,
-        file_name: str,
-        chunk_size: int | None = None,
-        merge_jobs: int | None = None,
-        output_path: str | None = None,
-    ) -> tuple[str, JobMetrics]:
+    def sort_file_with_stats(self, file_name: str) -> tuple[str, JobMetrics]:
         """``sort_file`` plus the reference's post-job stats report
         (task counts / failures / elapsed — ``ServerHandler.java:64-75``
         prints the same after every job)."""
-        return run_with_metrics(
-            self.spark,
-            lambda: self.sort_file(file_name, chunk_size, merge_jobs, output_path),
-        )
-
-    def ingest(self, file_name: str, chunk_size: int | None = None) -> DataFrame:
-        """.. warning:: ``chunk_size`` sets
-        ``spark.sql.files.maxPartitionBytes`` GLOBALLY on the shared
-        session (same justification as ``io.load_table``'s documented
-        mutations: the conf is consulted when the returned LAZY
-        DataFrame executes, so this method cannot scope it).  Prefer
-        ``sort_file``, which executes its whole job inside a scoped
-        block and restores the conf."""
-        if chunk_size:
-            # Reference chunkSize (bytes, README.md:57) == input split size.
-            self.spark.conf.set("spark.sql.files.maxPartitionBytes", str(chunk_size))
-        return ingest.drop_invalid(ingest.read_ints_text(self.spark, file_name))
-
-    def sort_ints(self, df: DataFrame) -> DataFrame:
-        return sort.sort_global(df, ["value"])
+        return run_with_metrics(self.spark, lambda: self.sort_file(file_name))

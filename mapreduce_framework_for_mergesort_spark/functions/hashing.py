@@ -204,7 +204,8 @@ def spark_shingles(toks: str, n: int = SHINGLE_N) -> str:
     )
 
 
-def duckdb_shingles(toks: str, n: int = SHINGLE_N) -> str:
+def duckdb_shingles(toks: str) -> str:
+    n = SHINGLE_N
     parts = ", ".join(f"{toks}[i + {k}]" for k in range(n))
     return (
         f"CASE WHEN len({toks}) >= {n} THEN "
@@ -319,7 +320,7 @@ def gram_rows_udf(k: int):
     return grams
 
 
-def band_structs_udf(n: int = SHINGLE_N):
+def band_structs_udf():
     """Arrow-batched LSH index build: per document, ONE md5 per shingle
     (Python hashlib — hex-identical to JVM/DuckDB md5), then all
     ``NUM_MINHASHES`` affine signatures in a single NumPy
@@ -342,11 +343,12 @@ def band_structs_udf(n: int = SHINGLE_N):
             # None → no bands, like <n-token text (the SQL spelling's
             # NULL shingle array explodes to no rows either way)
             toks = tokenize(s) if s is not None else []
-            if len(toks) < n:
+            if len(toks) < SHINGLE_N:
                 out.append([])
                 continue
             # a set is fine: min() is invariant to duplicates/order
-            sh = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+            sh = {" ".join(toks[i : i + SHINGLE_N])
+                  for i in range(len(toks) - SHINGLE_N + 1)}
             hs = np.array(
                 [
                     int(hashlib.md5(g.encode()).hexdigest()[:8], 16)
@@ -494,7 +496,8 @@ def _fp_weight(j: int) -> int:
     return FP_BASE**j
 
 
-def duckdb_fingerprint(text_col: str = "text", k: int = FINGERPRINT_K) -> str:
+def duckdb_fingerprint(text_col: str = "text") -> str:
+    k = FINGERPRINT_K
     terms = " + ".join(
         f"(ord(substring({text_col}, i + {j}, 1)) % 256)"
         f" * CAST({_fp_weight(j)} AS BIGINT)"
@@ -515,7 +518,7 @@ def duckdb_fingerprint(text_col: str = "text", k: int = FINGERPRINT_K) -> str:
     )
 
 
-def fingerprint_udf(k: int = FINGERPRINT_K):
+def fingerprint_udf():
     """Arrow-batched rolling-hash fingerprint: per row, the window
     hashes are ONE exact-int64 ``np.correlate`` of the byte codes with
     the weight vector (sliding dot product — the vectorized form of the
@@ -523,6 +526,7 @@ def fingerprint_udf(k: int = FINGERPRINT_K):
     per-window Catalyst expression."""
     from pyspark.sql.functions import pandas_udf
 
+    k = FINGERPRINT_K
     W = np.array([_fp_weight(j) for j in range(k)], dtype=np.int64)
 
     @pandas_udf("long")

@@ -35,13 +35,6 @@ class JobMetrics:
     num_failed_tasks: int = 0  # reference "bad jobs" counter
     job_ids: list[int] = field(default_factory=list)
 
-    @property
-    def avg_task_latency_s(self) -> float:
-        """Reference running-average task latency (``Server.java:29-34``)
-        — approximated as wall / tasks (per-task metrics need the event
-        log; this matches the reference's own coarse averaging)."""
-        return self.elapsed_s / self.num_tasks if self.num_tasks else 0.0
-
 
 def run_with_metrics(spark: SparkSession, action):
     """Run ``action`` (a zero-arg callable triggering Spark actions) and
@@ -75,8 +68,7 @@ def run_with_metrics(spark: SparkSession, action):
                 # A stage shared between jobs (AQE reuses shuffle
                 # stages; later jobs list them as skipped) reports its
                 # ONE real execution's counts in every listing job —
-                # summing per job double-counted tasks and halved the
-                # derived avg latency.
+                # summing per job double-counted tasks.
                 continue
             seen_stages.add(sid)
             sinfo = tracker.getStageInfo(sid)

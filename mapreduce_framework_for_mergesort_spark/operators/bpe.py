@@ -39,13 +39,13 @@ DEFAULT_TOP_WORDS = 10_000
 Merges = list[tuple[str, str]]
 
 
-def word_counts(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(documents: DataFrame) -> DataFrame:
     """(word, n) corpus frequencies — the one distributed step of BPE
     training.  Uses the engine's canonical tokenizer so BPE words are
     exactly the tokens every other text operator sees."""
     return (
         documents.select(
-            F.explode(F.expr(H.spark_tokens(text_col))).alias("word")
+            F.explode(F.expr(H.spark_tokens("text"))).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -69,15 +69,13 @@ def train_bpe(
     documents: DataFrame,
     num_merges: int = DEFAULT_NUM_MERGES,
     top_words: int = DEFAULT_TOP_WORDS,
-    min_pair_count: int = 2,
-    text_col: str = "text",
 ) -> Merges:
     """Learn ``num_merges`` merge rules from the corpus → ordered merge
     list (the tokenizer model; persist it as you would any index
-    metadata).  Stops early when no symbol pair reaches
-    ``min_pair_count`` weighted occurrences."""
+    metadata).  Stops early when no symbol pair reaches two weighted
+    occurrences."""
     rows = (
-        word_counts(documents, text_col)
+        word_counts(documents)
         .orderBy(F.col("n").desc(), F.col("word").asc())
         .limit(top_words)
         .collect()
@@ -121,7 +119,7 @@ def train_bpe(
             break
         # deterministic: max count, ties to lexicographically smallest
         best = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        if best[1] < min_pair_count:
+        if best[1] < 2:
             break
         merges.append(best[0])
         for sym in list(where.get(best[0], ())):
@@ -150,27 +148,6 @@ def segment_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
         _, i = min(ranked)
         sym = sym[:i] + (sym[i] + sym[i + 1],) + sym[i + 2 :]
     return list(sym)
-
-
-def bpe_count_udf(merges: Merges):
-    """Arrow-batched text → BPE token COUNT.  A dedicated count kernel:
-    shipping the full subword array through Arrow just to ``size()``
-    it would move the corpus's text volume again for an 8-byte answer
-    per doc."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {p: i for i, p in enumerate(merges)}
-    token_re = H.tokenize  # script-aware shared tokenizer (round 12)
-
-    @pandas_udf("long")
-    def count(texts: pd.Series) -> pd.Series:
-        # per Arrow batch: each word type segments once (Zipf)
-        counts = H.Memo(lambda w: len(segment_word(w, ranks)))
-        return texts.map(
-            lambda text: sum(map(counts.__getitem__, token_re(text or "")))
-        )
-
-    return count
 
 
 def chunk_words_by_budget(
@@ -234,7 +211,6 @@ def chunk_documents_bpe(
     merges: Merges,
     chunk_tokens: int = 128,
     overlap_tokens: int = 32,
-    text_col: str = "text",
 ) -> DataFrame:
     """Tokenizer-TRUE sliding-window chunking: windows budgeted in
     trained-BPE tokens (``text.chunk_documents`` counts whitespace
@@ -272,7 +248,7 @@ def chunk_documents_bpe(
             idxs: list[int] = []
             texts: list[str] = []
             ntoks: list[int] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 words = token_re(text or "")
                 counts = [counts_of[w] for w in words]
                 # prefix sums: span token totals in O(1) each
@@ -297,4 +273,4 @@ def chunk_documents_bpe(
                 }
             )
 
-    return documents.select("doc_id", text_col).mapInPandas(gen, schema)
+    return documents.select("doc_id", "text").mapInPandas(gen, schema)

@@ -36,35 +36,33 @@ from mapreduce_framework_for_mergesort_spark.operators.materialize import (
 )
 
 
-def exact_dup_groups(documents: DataFrame, key: str = "text") -> DataFrame:
-    """Distinct-content summary: ONE row per distinct ``key`` —
+def exact_dup_groups(documents: DataFrame) -> DataFrame:
+    """Distinct-content summary: ONE row per distinct ``text`` —
     including contents that appear once — with the deterministic
     survivor (min doc_id) and ``dup_count`` = total copies (so 1 means
     *no* duplicates; filter ``dup_count > 1`` for groups that actually
     have them — not ``> 0``, which selects the whole corpus)."""
-    return documents.groupBy(key).agg(
+    return documents.groupBy("text").agg(
         F.min("doc_id").alias("keep_doc_id"),
         F.count(F.lit(1)).alias("dup_count"),
     )
 
 
-def content_hashes(documents: DataFrame, key: str = "doc_id") -> DataFrame:
-    """(key, __h = md5(text)) — the one corpus hashing pass the
+def content_hashes(documents: DataFrame) -> DataFrame:
+    """(doc_id, __h = md5(text)) — the one corpus hashing pass the
     exact-dup helpers share.  Materialize it when both
     ``exact_rep_ids`` and ``exact_dup_edges`` are needed (the
     registered minhash key does) so the corpus is hashed once."""
     return documents.select(
-        key, F.md5(F.col("text").cast("binary")).alias("__h")
+        "doc_id", F.md5(F.col("text").cast("binary")).alias("__h")
     )
 
 
 def exact_rep_ids(
-    documents: DataFrame,
-    key: str = "doc_id",
-    hashed: DataFrame | None = None,
+    documents: DataFrame, hashed: DataFrame | None = None
 ) -> DataFrame:
     """One representative id per distinct document content: the smallest
-    ``key`` among rows sharing ``md5(text)`` — the deterministic survivor
+    ``doc_id`` among rows sharing ``md5(text)`` — the deterministic survivor
     rule ``exact_dup_groups`` uses, reduced to just the id column.
 
     This is the exact-dup collapse the near-dup tiers band AFTER: on a
@@ -77,14 +75,14 @@ def exact_rep_ids(
     One hash aggregate on a 16-byte key; scale-safe.  ``hashed``
     injects a shared ``content_hashes`` pass."""
     if hashed is None:
-        hashed = content_hashes(documents, key)
-    return hashed.groupBy("__h").agg(F.min(key).alias(key)).select(key)
+        hashed = content_hashes(documents)
+    return hashed.groupBy("__h").agg(F.min("doc_id").alias("doc_id")).select(
+        "doc_id"
+    )
 
 
 def exact_dup_edges(
-    documents: DataFrame,
-    key: str = "doc_id",
-    hashed: DataFrame | None = None,
+    documents: DataFrame, hashed: DataFrame | None = None
 ) -> DataFrame:
     """(doc_a = representative, doc_b = replica) for every NON-
     representative row — the linear-in-corpus edge set that reconnects
@@ -97,13 +95,13 @@ def exact_dup_edges(
     star-graph cost instead of per-content cliques.  ``hashed``
     injects a shared ``content_hashes`` pass."""
     if hashed is None:
-        hashed = content_hashes(documents, key)
-    reps = hashed.groupBy("__h").agg(F.min(key).alias("__rep"))
+        hashed = content_hashes(documents)
+    reps = hashed.groupBy("__h").agg(F.min("doc_id").alias("__rep"))
     return (
         hashed.join(reps, "__h")
-        .where(F.col(key) > F.col("__rep"))
+        .where(F.col("doc_id") > F.col("__rep"))
         .select(
-            F.col("__rep").alias("doc_a"), F.col(key).alias("doc_b")
+            F.col("__rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
         )
     )
 
@@ -117,9 +115,7 @@ def _with_shingles(documents: DataFrame) -> DataFrame:
     )
 
 
-def minhash_bands(
-    documents: DataFrame, carry: tuple[str, ...] = ()
-) -> DataFrame:
+def minhash_bands(documents: DataFrame) -> DataFrame:
     """doc_id → (band_id, band_val) rows: the LSH index.
 
     Signature k = min over shingles of the Carter–Wegman affine hash
@@ -134,17 +130,12 @@ def minhash_bands(
     expression ``tests/references.spark_band_structs``).  Per-row,
     shuffle-free; the only shuffle in the dedup pipeline is the
     downstream band-value join.
-
-    ``carry`` columns ride each band row untouched (e.g. the event-time
-    column the streaming form watermarks on).
     """
     return documents.select(
         "doc_id",
-        *carry,
         F.explode(H.band_structs_udf()(F.col("text"))).alias("__band"),
     ).select(
         "doc_id",
-        *carry,
         F.col("__band.band_id").alias("band_id"),
         F.col("__band.band_val").alias("band_val"),
     )
@@ -201,14 +192,8 @@ HASH_MIN_ROUNDS = 8
 STAR_ROUNDS = 40
 
 
-def cluster_pairs(
-    pairs: DataFrame,
-    nodes: DataFrame | None = None,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    stats: dict | None = None,
-) -> DataFrame:
-    """Connected components over an undirected pair list → one row per
+def cluster_pairs(pairs: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
+    """Connected components over an undirected ``(doc_a, doc_b)`` pair list → one row per
     node with ``cluster`` = the smallest node id reachable from it (the
     component's canonical label).  This is the step every near-dedup
     pipeline needs after candidate/verified PAIRS: transitive closure
@@ -259,12 +244,10 @@ def cluster_pairs(
     100 TB — per-round state is sized by the CANDIDATE GRAPH, never the
     corpus; without it every round would checkpoint a corpus-sized
     label table.  Default ``nodes``: only nodes appearing in ``pairs``.
-
-    ``stats`` (optional dict): observability — gets ``algorithm`` (the
-    one that produced the answer) and ``rounds`` written into it.
     """
     e = pairs.select(
-        F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
+        F.col("doc_a").cast("long").alias("u"),
+        F.col("doc_b").cast("long").alias("v"),
     )
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     # Self-loops carry no connectivity: the algorithms run on the
@@ -281,25 +264,21 @@ def cluster_pairs(
     singletons = base.join(verts, "node", "left_anti").select(
         "node", F.col("node").alias("cluster")
     )
-    if stats is None:
-        stats = {}
     cap = sizing.DRIVER_UF_MAX_EDGES
     if edges.limit(cap + 1).count() <= cap:
-        labels = _driver_uf_labels(edges, stats)
+        labels = _driver_uf_labels(edges)
     else:
-        labels = _hashmin_labels(edges, HASH_MIN_ROUNDS, stats)
+        labels = _hashmin_labels(edges, HASH_MIN_ROUNDS)
         if labels is None:
-            labels = _star_labels(edges, STAR_ROUNDS, stats)
+            labels = _star_labels(edges, STAR_ROUNDS)
     return labels.unionByName(singletons)
 
 
-def _driver_uf_labels(edges: DataFrame, stats: dict) -> DataFrame:
+def _driver_uf_labels(edges: DataFrame) -> DataFrame:
     """Min-label connected components by driver-side union-find over a
     bounded symmetric edge list — identical fixpoint to the
     distributed algorithms (a component's label is its smallest node
     id), one collect + one createDataFrame instead of per-round jobs."""
-    stats["algorithm"] = "driver_uf"
-    stats["rounds"] = 1
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -326,13 +305,10 @@ def _driver_uf_labels(edges: DataFrame, stats: dict) -> DataFrame:
     )
 
 
-def _hashmin_labels(
-    edges: DataFrame, max_iters: int, stats: dict
-) -> DataFrame | None:
+def _hashmin_labels(edges: DataFrame, max_iters: int) -> DataFrame | None:
     """Hash-min propagation over a symmetric edge list → (node, cluster)
     at the fixpoint, or ``None`` when ``max_iters`` rounds weren't
     enough (the caller falls back to star contraction)."""
-    stats["algorithm"] = "hash_min"
     # Fused round 0: starting from identity labels, the first
     # propagation yields exactly min(node, min(neighbors)) — computable
     # straight from the edge list with one aggregation, no identity
@@ -345,7 +321,6 @@ def _hashmin_labels(
             F.least(F.col("u"), F.col("mv")).alias("cluster"),
         )
     )
-    stats["rounds"] = 1
     changed = 1
     for _ in range(max_iters):
         prop = edges.join(
@@ -364,7 +339,6 @@ def _hashmin_labels(
             .count()
         )
         labels = new
-        stats["rounds"] += 1
         if changed == 0:
             return labels
     return None
@@ -381,7 +355,7 @@ def _sym_edges(directed: DataFrame) -> DataFrame:
     )
 
 
-def _star_labels(edges: DataFrame, max_iters: int, stats: dict) -> DataFrame:
+def _star_labels(edges: DataFrame, max_iters: int) -> DataFrame:
     """Alternating large-star/small-star contraction (Kiveris et al.,
     'Connected Components in MapReduce and Beyond', SoCC '14) over a
     symmetric edge list → (node, cluster) labels.
@@ -410,8 +384,6 @@ def _star_labels(edges: DataFrame, max_iters: int, stats: dict) -> DataFrame:
     node id + the distincts that keep the edge set a set, all sized by
     the candidate graph; state materialized per round (lineage cut).
     """
-    stats["algorithm"] = "star"
-    stats["rounds"] = 0
     if edges.limit(1).count() == 0:
         return edges.select(
             F.col("u").alias("node"), F.col("v").alias("cluster")
@@ -445,7 +417,6 @@ def _star_labels(edges: DataFrame, max_iters: int, stats: dict) -> DataFrame:
             )
         )
         E2 = _materialize(_sym_edges(ss))
-        stats["rounds"] += 1
         changed = (
             E2.join(E, ["u", "v"], "left_anti").limit(1).count()
             + E.join(E2, ["u", "v"], "left_anti").limit(1).count()
@@ -472,7 +443,6 @@ def near_dup_pair_tiers(
     embeddings: DataFrame | None = None,
     embed_tau: float = DEFAULT_EMBED_TAU,
     num_centroids: int = 8,
-    key: str = "doc_id",
 ) -> DataFrame:
     """Union of candidate near-dup pairs from the selected tiers, as
     distinct (doc_a, doc_b) rows — the pluggable candidate-generation
@@ -485,7 +455,7 @@ def near_dup_pair_tiers(
                       (SEMANTIC near-dups: paraphrases MinHash's
                       shingle overlap can't see).  Requires
                       ``embeddings`` (vec_id, embedding) keyed by the
-                      same id space as ``documents.key``; vectors for
+                      same id space as ``documents.doc_id``; vectors for
                       documents not in ``documents`` are semi-joined
                       away FIRST, so a pair can never resurrect a
                       filtered-out document (or hand the cluster
@@ -498,32 +468,22 @@ def near_dup_pair_tiers(
     bad = set(tiers) - known
     if bad:
         raise ValueError(f"unknown dedup tiers {sorted(bad)}; known: {sorted(known)}")
-    # The lexical tiers emit ids from a 'doc_id' column; a custom ``key``
-    # is aliased onto that name FIRST (and any unrelated doc_id column
-    # dropped with it) so every tier's pairs live in ``key`` space —
-    # round-4 review: the silent alternative pairs in doc_id space while
-    # clustering and survivors run in key space.
-    lex_docs = (
-        documents
-        if key == "doc_id"
-        else documents.select(F.col(key).alias("doc_id"), "text")
-    )
     frames: list[DataFrame] = []
     if "minhash" in tiers:
         frames.append(
-            lsh_candidate_pairs(minhash_bands(lex_docs)).select(
+            lsh_candidate_pairs(minhash_bands(documents)).select(
                 "doc_a", "doc_b"
             )
         )
     if "simhash" in tiers:
         frames.append(
-            simhash_candidate_pairs(lex_docs).select("doc_a", "doc_b")
+            simhash_candidate_pairs(documents).select("doc_a", "doc_b")
         )
     if "embedding" in tiers:
         if embeddings is None:
             raise ValueError("the 'embedding' tier requires an embeddings table")
         emb = embeddings.join(
-            documents.select(F.col(key).alias("vec_id")), "vec_id", "semi"
+            documents.select(F.col("doc_id").alias("vec_id")), "vec_id", "semi"
         )
         frames.append(
             embedding_near_dup_pairs(emb, embed_tau, num_centroids).select(
@@ -541,15 +501,13 @@ def near_dup_pair_tiers(
 
 def near_dedup_documents(
     documents: DataFrame,
-    key: str = "doc_id",
     tiers: tuple[str, ...] = ("minhash",),
     embeddings: DataFrame | None = None,
     embed_tau: float = DEFAULT_EMBED_TAU,
     embed_cells: int = 8,
-    collapse_exact: bool | None = None,
 ) -> DataFrame:
     """End-to-end near-dedup: keep exactly ONE document per near-dup
-    cluster (the smallest ``key`` in the component) and every document
+    cluster (the smallest ``doc_id`` in the component) and every document
     with no near-dups.  Exact duplicates collapse too — identical text
     yields identical bands, so exact-dup pairs are always candidates.
 
@@ -558,42 +516,35 @@ def near_dedup_documents(
     clustering, so a doc lexically near A and semantically near B
     collapses all three into one survivor.
 
-    ``collapse_exact`` runs the EXACT tier first: documents collapse to
-    one representative per distinct md5(text) (min ``key``) and every
-    downstream tier sees only representatives — on a replica-heavy
-    corpus each tier's input shrinks by the duplication factor and its
-    pair set by its square (measured 15.5 s → 3.3 s on the 10×
-    replica corpus, identical kept set).  The kept set is IDENTICAL for
-    the lexical tiers: identical text yields identical bands AND an
-    identical simhash, so replicas always share a component with their
-    representative and a component's min ``key`` is always a
-    representative (pinned in tests).  Default (``None``) resolves to
-    True exactly when every tier is lexical; with the ``embedding``
-    tier it resolves to False, because a NON-representative replica's
-    VECTOR could introduce a semantic pair its representative's vector
-    misses — pass True explicitly if your embeddings are
-    content-deterministic.
+    When every tier is lexical, the EXACT tier runs first: documents
+    collapse to one representative per distinct md5(text) (min
+    ``doc_id``) and every downstream tier sees only representatives — on
+    a replica-heavy corpus each tier's input shrinks by the duplication
+    factor and its pair set by its square (measured 15.5 s → 3.3 s on
+    the 10× replica corpus, identical kept set).  The kept set is
+    IDENTICAL for the lexical tiers: identical text yields identical
+    bands AND an identical simhash, so replicas always share a component
+    with their representative and a component's min ``doc_id`` is always
+    a representative (pinned in tests).  With the ``embedding`` tier the
+    collapse is skipped, because a NON-representative replica's VECTOR
+    could introduce a semantic pair its representative's vector misses.
 
     Composition of the tiered pipeline in its scale shapes: blocked
     candidates (no all-pairs), connected components (candidate-graph-
     sized state), then a semi-join of the corpus against the survivor
     ids — the corpus itself is never shuffled by the clustering."""
-    if collapse_exact is None:
-        collapse_exact = "embedding" not in tiers
     pool = documents
-    if collapse_exact:
+    if "embedding" not in tiers:
         # no broadcast hint: the rep id set is distinct-content-sized
         # (corpus-scale in the worst case) — AQE picks broadcast when
         # it actually fits
-        pool = documents.join(exact_rep_ids(documents, key), key, "semi")
-    pairs = near_dup_pair_tiers(
-        pool, tiers, embeddings, embed_tau, embed_cells, key=key
-    )
-    clusters = cluster_pairs(pairs, nodes=pool.select(key))
+        pool = documents.join(exact_rep_ids(documents), "doc_id", "semi")
+    pairs = near_dup_pair_tiers(pool, tiers, embeddings, embed_tau, embed_cells)
+    clusters = cluster_pairs(pairs, nodes=pool.select("doc_id"))
     keep = cluster_survivors(clusters).select(
-        F.col("keep_doc_id").alias(key)
+        F.col("keep_doc_id").alias("doc_id")
     )
-    return documents.join(keep, key, "semi")
+    return documents.join(keep, "doc_id", "semi")
 
 
 def cluster_survivors(clusters: DataFrame) -> DataFrame:
@@ -695,16 +646,15 @@ def simhash_bands(signatures: DataFrame) -> DataFrame:
 
 
 def simhash_candidate_pairs(
-    documents: DataFrame,
-    r: int = SIMHASH_R,
-    signatures: DataFrame | None = None,
+    documents: DataFrame, signatures: DataFrame | None = None
 ) -> DataFrame:
-    """Hamming-near simhash pairs (doc_a < doc_b, hamming ≤ r) via the
-    banded join: docs sharing any 12-bit band are candidates; the exact
-    hamming distance (``bit_count(a XOR b)`` — one codegen instruction)
-    verifies.  For r ≤ 3 the result is EXACTLY the set of all pairs at
-    hamming ≤ r (banding completeness above), so no all-pairs comparison
-    is ever needed and the operator stays value-oracle-able.
+    """Hamming-near simhash pairs (doc_a < doc_b, hamming ≤
+    ``SIMHASH_R``) via the banded join: docs sharing any 12-bit band are
+    candidates; the exact hamming distance (``bit_count(a XOR b)`` — one
+    codegen instruction) verifies.  The result is EXACTLY the set of all
+    pairs at hamming ≤ ``SIMHASH_R`` (banding completeness above), so no
+    all-pairs comparison is ever needed and the operator stays
+    value-oracle-able.
 
     Scale shape mirrors ``lsh_candidate_pairs``: one explode (4 rows per
     doc) + one equi-join on (band_id, band_val); band_id rides the join
@@ -722,11 +672,6 @@ def simhash_candidate_pairs(
     running the signature kernel again — the band projection on top is
     pure shift/mask.
     """
-    if r > SIMHASH_R:
-        raise ValueError(
-            f"banded join is only complete for r <= {SIMHASH_R}"
-            f" with {SIMHASH_NUM_BANDS} bands; got r={r}"
-        )
     if signatures is None:
         signatures = simhash_signatures(documents)
     bands = _materialize(simhash_bands(signatures))
@@ -745,7 +690,7 @@ def simhash_candidate_pairs(
             .cast("long")
             .alias("hamming"),
         )
-        .where(F.col("hamming") <= r)
+        .where(F.col("hamming") <= SIMHASH_R)
         .distinct()
     )
 
@@ -761,8 +706,6 @@ def contaminated_doc_ids(
     documents: DataFrame,
     benchmark: DataFrame,
     n: int = DECONTAM_N,
-    key: str = "doc_id",
-    bench_text: str = "text",
     doc_grams: DataFrame | None = None,
 ) -> DataFrame:
     """Ids of documents sharing at least one word ``n``-gram with any
@@ -793,7 +736,7 @@ def contaminated_doc_ids(
 
     ``doc_grams`` (the exception, and the real shared-pass win):
     inject a precomputed ``positional_ngrams(documents, n)``-shaped
-    table (doc-id column named ``key``, 48-bit hash column ``g``) when
+    table (``doc_id``, 48-bit hash column ``g``) when
     the span tiers ALREADY built it — the whole tokenize→window→hash
     scan then costs nothing extra, and the benchmark side hashes its
     shingles with the matching ``spark_gram_hash``
@@ -806,7 +749,7 @@ def contaminated_doc_ids(
             benchmark.select(
                 F.explode(
                     F.expr(
-                        H.spark_shingles(H.spark_tokens(bench_text), n)
+                        H.spark_shingles(H.spark_tokens("text"), n)
                     )
                 ).alias("s")
             )
@@ -815,7 +758,7 @@ def contaminated_doc_ids(
         )
         return (
             doc_grams.join(F.broadcast(bench_g), "g", "semi")
-            .select(key)
+            .select("doc_id")
             .distinct()
         )
     # Contamination is a pure function of the text, so the shingle
@@ -826,7 +769,7 @@ def contaminated_doc_ids(
     # duplication factor; on an all-distinct one this adds one
     # distinct+join.
     hashed = documents.select(
-        key, F.md5(F.col("text").cast("binary")).alias("__th")
+        "doc_id", F.md5(F.col("text").cast("binary")).alias("__th")
     )
     reps = documents.select(
         F.md5(F.col("text").cast("binary")).alias("__th"), "text"
@@ -840,7 +783,7 @@ def contaminated_doc_ids(
     bench_sh = (
         benchmark.select(
             F.explode(
-                F.expr(H.spark_shingles(H.spark_tokens(bench_text), n))
+                F.expr(H.spark_shingles(H.spark_tokens("text"), n))
             ).alias("s")
         )
         .distinct()
@@ -850,20 +793,13 @@ def contaminated_doc_ids(
         .select("__th")
         .distinct()
     )
-    return hashed.join(bad, "__th", "semi").select(key).distinct()
+    return hashed.join(bad, "__th", "semi").select("doc_id").distinct()
 
 
-def contamination_report(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    n: int = DECONTAM_N,
-    key: str = "doc_id",
-    bench_key: str = "doc_id",
-    bench_text: str = "text",
-) -> DataFrame:
+def contamination_report(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Per-benchmark-item leakage accounting — the report an eval owner
     reads before trusting a score: for each benchmark row, how many
-    corpus documents share at least one word ``n``-gram with it
+    corpus documents share at least one word ``DECONTAM_N``-gram with it
     (``n_docs_hit``) and how many (doc, shingle-type) overlaps exist in
     total (``n_gram_hits``; a doc repeating a shared shingle counts
     once per distinct shingle).  Items with zero hits appear with
@@ -875,18 +811,11 @@ def contamination_report(
     is benchmark-item-sized."""
     # spark_shingles is already per-doc distinct, so the join emits one
     # row per (item, doc, shared shingle type)
-    doc_sh = documents.select(
-        F.col(key).alias("__doc"),
-        F.explode(
-            F.expr(H.spark_shingles(H.spark_tokens("text"), n))
-        ).alias("s"),
-    )
-    bench_sh = benchmark.select(
-        F.col(bench_key).alias("bench_id"),
-        F.explode(
-            F.expr(H.spark_shingles(H.spark_tokens(bench_text), n))
-        ).alias("s"),
-    )
+    shingles = F.explode(
+        F.expr(H.spark_shingles(H.spark_tokens("text"), DECONTAM_N))
+    ).alias("s")
+    doc_sh = documents.select(F.col("doc_id").alias("__doc"), shingles)
+    bench_sh = benchmark.select(F.col("doc_id").alias("bench_id"), shingles)
     hits = (
         doc_sh.join(F.broadcast(bench_sh), "s")
         .groupBy("bench_id")
@@ -895,9 +824,7 @@ def contamination_report(
             F.count(F.lit(1)).alias("n_gram_hits"),
         )
     )
-    all_items = benchmark.select(
-        F.col(bench_key).alias("bench_id")
-    ).distinct()
+    all_items = benchmark.select(F.col("doc_id").alias("bench_id")).distinct()
     return (
         all_items.join(hits, "bench_id", "left")
         .select(
@@ -914,8 +841,6 @@ def decontaminate(
     documents: DataFrame,
     benchmark: DataFrame,
     n: int = DECONTAM_N,
-    key: str = "doc_id",
-    bench_text: str = "text",
     doc_grams: DataFrame | None = None,
 ) -> DataFrame:
     """Drop every document sharing an ``n``-gram with the benchmark —
@@ -926,18 +851,13 @@ def decontaminate(
     so AQE decides; small sets still broadcast under the threshold,
     pathological ones degrade safely to a shuffle anti-join on the id.
     ``doc_grams`` as in ``contaminated_doc_ids`` (a shared gram pass)."""
-    bad = contaminated_doc_ids(
-        documents, benchmark, n, key, bench_text, doc_grams=doc_grams
-    )
-    return documents.join(bad, key, "anti")
+    bad = contaminated_doc_ids(documents, benchmark, n, doc_grams=doc_grams)
+    return documents.join(bad, "doc_id", "anti")
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame, tau: float, candidates: DataFrame | None = None
-) -> DataFrame:
-    """N-gram Jaccard similarity, **LSH-blocked by default**: exact
-    verification runs only over ``candidates`` (doc_a < doc_b pairs) —
-    when none are given, the MinHash/LSH candidate pairs.
+def ngram_jaccard_pairs(documents: DataFrame, tau: float) -> DataFrame:
+    """N-gram Jaccard similarity, **LSH-blocked**: exact verification
+    runs only over the MinHash/LSH candidate pairs (doc_a < doc_b).
 
     The unblocked form (join every pair sharing ≥1 shingle) looks linear
     at small SF but is quadratic in duplication: a shingle shared by k
@@ -958,11 +878,9 @@ def ngram_jaccard_pairs(
     value-identical, so the DuckDB oracle's multiset-product-count
     formulation still compares hash-for-hash.
     """
-    if candidates is None:
-        candidates = lsh_candidate_pairs(minhash_bands(documents))
     # consumed twice (id-prune + pair join) — cut the band self-join
     # lineage instead of re-running it
-    candidates = _materialize(candidates)
+    candidates = _materialize(lsh_candidate_pairs(minhash_bands(documents)))
     ids = (
         candidates.select(F.col("doc_a").alias("doc_id"))
         .unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
@@ -1243,13 +1161,12 @@ def positional_gram_flags(
 def dup_spans(
     documents: DataFrame,
     k: int = DUP_SPAN_K,
-    min_count: int = 2,
     grams: DataFrame | None = None,
     flags: DataFrame | None = None,
 ) -> DataFrame:
     """Merged duplicate-substring spans: (doc_id, span_start, span_end,
     n_dup_pos) token ranges (1-based, inclusive) covered by k-gram
-    windows that occur >= ``min_count`` times corpus-wide, with
+    windows that occur at least twice corpus-wide, with
     overlapping/adjacent windows fused (gaps-and-islands: a window
     starting inside-or-at the running max end of previous windows + 1
     extends the current span).
@@ -1266,7 +1183,7 @@ def dup_spans(
     """
     if flags is None:
         flags = positional_gram_flags(documents, k, grams=grams)
-    dup_pos = flags.where(F.col("__cnt") >= min_count).select(
+    dup_pos = flags.where(F.col("__cnt") >= 2).select(
         "doc_id", "pos"
     )
     return _merge_windows(dup_pos, k)
@@ -1307,10 +1224,7 @@ def _merge_windows(positions: DataFrame, k: int) -> DataFrame:
 
 
 def dup_span_profile(
-    documents: DataFrame,
-    k: int = DUP_SPAN_K,
-    min_count: int = 2,
-    grams: DataFrame | None = None,
+    documents: DataFrame, k: int = DUP_SPAN_K, grams: DataFrame | None = None
 ) -> DataFrame:
     """Per-doc duplicate-substring stats over ALL docs (zero-filled):
     (doc_id, n_tokens, dup_span_count, dup_token_cover,
@@ -1324,7 +1238,7 @@ def dup_span_profile(
         "doc_id",
         F.expr(f"size({toks})").cast("bigint").alias("n_tokens"),
     )
-    per_doc = dup_spans(documents, k, min_count, grams=grams).groupBy(
+    per_doc = dup_spans(documents, k, grams=grams).groupBy(
         "doc_id"
     ).agg(
         F.count(F.lit(1)).alias("dup_span_count"),
@@ -1378,19 +1292,18 @@ def _duckdb_islands(prefix: str, src_cte: str, out_cte: str, k: int) -> str:
     """
 
 
-def duckdb_dup_spans_cte(
-    k: int = DUP_SPAN_K, min_count: int = 2, table: str = "documents"
-) -> str:
+def duckdb_dup_spans_cte() -> str:
     """The oracle half of ``dup_spans``: DuckDB CTEs ending in
     ``spans(doc_id, span_start, span_end, n_dup_pos)`` — the identical
     positional-k-gram → count → gaps-and-islands chain (same 48-bit
     md5-prefix gram
     key, same merge condition), so span boundaries compare
     value-for-value across engines."""
+    k = DUP_SPAN_K
     toks = H.duckdb_tokens("text")
     parts = ", ".join(f"ts[i + {j}]" for j in range(k))
     return f"""
-    dsp_toks AS (SELECT doc_id, {toks} AS ts FROM {table}),
+    dsp_toks AS (SELECT doc_id, {toks} AS ts FROM documents),
     dsp_pos AS (
       SELECT doc_id, unnest(range(1, len(ts) - {k - 2})) AS i, ts
       FROM dsp_toks WHERE len(ts) >= {k}),
@@ -1399,7 +1312,7 @@ def duckdb_dup_spans_cte(
              {H.duckdb_gram_hash(f"concat_ws(' ', {parts})")} AS g
       FROM dsp_pos),
     dsp_dup AS (
-      SELECT g FROM dsp_grams GROUP BY g HAVING COUNT(*) >= {min_count}),
+      SELECT g FROM dsp_grams GROUP BY g HAVING COUNT(*) >= 2),
     dsp_dp AS (
       SELECT doc_id, pos FROM dsp_grams JOIN dsp_dup USING (g)),
     {_duckdb_islands("dsp", "dsp_dp", "spans", k)}
@@ -1457,11 +1370,7 @@ def _strip_rebuild_arrow(k: int):
 
 
 def strip_dup_spans(
-    documents: DataFrame,
-    k: int = DUP_SPAN_K,
-    min_count: int = 2,
-    grams: DataFrame | None = None,
-    flags: DataFrame | None = None,
+    documents: DataFrame, k: int = DUP_SPAN_K, flags: DataFrame | None = None
 ) -> DataFrame:
     """Span REMOVAL, first-occurrence-wins (the Lee et al. '21 step
     after detection): rewrite each document keeping only tokens covered
@@ -1486,8 +1395,7 @@ def strip_dup_spans(
     per-token ``exists`` scan was O(tokens × intervals)), and the kept
     count is the interval-length sum, not a re-tokenization of the
     rebuilt text (tokens contain no whitespace, so the two are
-    identical by construction).  ``flags`` / ``grams`` as in
-    ``dup_spans``.
+    identical by construction).  ``flags`` as in ``dup_spans``.
 
     Scale gate: when ``sizing.reaches(documents,
     sizing.STRIP_ARROW_THRESHOLD_BYTES)`` (the plan's scan-file bytes;
@@ -1496,9 +1404,9 @@ def strip_dup_spans(
     Both give identical rows; there is no override.
     """
     if flags is None:
-        flags = positional_gram_flags(documents, k, grams=grams)
+        flags = positional_gram_flags(documents, k)
     protecting = flags.where(
-        (F.col("__cnt") < min_count) | F.col("__is_first")
+        (F.col("__cnt") < 2) | F.col("__is_first")
     ).select("doc_id", "pos")
     iv = (
         _merge_windows(protecting, k)
@@ -1552,12 +1460,13 @@ def strip_dup_spans(
     )
 
 
-def duckdb_strip_cte(k: int = DUP_SPAN_K, min_count: int = 2) -> str:
+def duckdb_strip_cte() -> str:
     """The oracle half of ``strip_dup_spans``, continuing the CTE chain
     of ``duckdb_dup_spans_cte`` (reuses its ``dsp_toks``/``dsp_grams``):
     ends in ``stripped(doc_id, stripped_text, n_tokens,
     n_kept_tokens)``.  First-occurrence choice is expressed as
     row_number over (doc_id, pos) — identical to the struct-min."""
+    k = DUP_SPAN_K
     return f"""
     stp_flag AS (
       SELECT doc_id, pos,
@@ -1567,7 +1476,7 @@ def duckdb_strip_cte(k: int = DUP_SPAN_K, min_count: int = 2) -> str:
       FROM dsp_grams),
     stp_prot AS (
       SELECT doc_id, pos FROM stp_flag
-      WHERE cnt < {min_count} OR rn = 1),
+      WHERE cnt < 2 OR rn = 1),
     {_duckdb_islands("stp", "stp_prot", "stp_spans", k)},
     stp_iv AS (
       SELECT doc_id,

@@ -31,9 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def read_ints_text(
-    spark: SparkSession, path: str, value_col: str = "value"
-) -> DataFrame:
+def read_ints_text(spark: SparkSession, path: str) -> DataFrame:
     """Space-delimited text → one-int-per-row DataFrame (reference O1+O3).
 
     Keeps NULLs for unparseable tokens; callers choose the corrupt-record
@@ -56,22 +54,17 @@ def read_ints_text(
         ).alias("token")
     )
     return tokens.where(F.col("token") != "").select(
-        F.col("token").try_cast("int").alias(value_col)
+        F.col("token").try_cast("int").alias("value")
     )
 
 
-def drop_invalid(df: DataFrame, value_col: str = "value") -> DataFrame:
+def drop_invalid(df: DataFrame) -> DataFrame:
     """Reference O4: eliminate empty/invalid records
     (``NodeHandler.java:113-116``, ``Server.java:261-263``)."""
-    return df.where(F.col(value_col).isNotNull())
+    return df.where(F.col("value").isNotNull())
 
 
-def write_ints_text(
-    df: DataFrame,
-    path: str,
-    value_col: str = "value",
-    num_files: int | None = None,
-) -> None:
+def write_ints_text(df: DataFrame, path: str) -> None:
     """DataFrame → space-delimited text (reference O9 sink,
     ``NodeHandler.java:88-104``).
 
@@ -83,22 +76,11 @@ def write_ints_text(
     reference's sorted final file, in its idiomatic N-ordered-files
     form.
 
-    ``num_files`` is for tiny demo outputs ONLY, and be clear about what
-    it costs: ``coalesce(n)`` PROPAGATES upstream (it is a non-shuffle
-    repartition), so ``num_files=1`` over a fresh sort collapses the
-    sort's own reduce stage to one task — the whole dataset sorted by a
-    single task.  (``repartition`` would preserve upstream parallelism
-    but round-robins rows, destroying the sorted output this sink
-    exists to write.)  At scale leave it ``None``: one file per range
-    partition, globally ordered by filename, is the correct shape.
-
     NULL values are dropped (the reference's sink never sees them
     either — its parser discards invalid records upstream,
     ``NodeHandler.java:113-116``).
     """
-    out = df.where(F.col(value_col).isNotNull()).select(
-        F.col(value_col).cast("string").alias("value")
+    out = df.where(F.col("value").isNotNull()).select(
+        F.col("value").cast("string").alias("value")
     )
-    if num_files:
-        out = out.coalesce(num_files)
     out.write.mode("overwrite").option("lineSep", " ").text(path)

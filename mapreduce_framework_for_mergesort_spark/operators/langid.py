@@ -150,21 +150,16 @@ def _grams(text: str, n: int = PROFILE_N) -> list[str]:
     return [t[i : i + n] for i in range(len(t) - n + 1)]
 
 
-def train_lang_profiles(
-    seed: dict[str, str] | None = None,
-    k: int = PROFILE_K,
-    n: int = PROFILE_N,
-) -> dict[str, list[str]]:
+def train_lang_profiles() -> dict[str, list[str]]:
     """Cavnar–Trenkle-style profile learning: per language, the top-k
     char n-grams by ``freq / (1 + freq_in_others)`` (frequency then
     gram as deterministic tiebreaks).  Grams containing digits or SQL-
     breaking backslashes are excluded (quotes are fine — both engines
     escape them as ``''``)."""
-    seed = seed or SEED_TEXT
     counts: dict[str, dict[str, int]] = {}
-    for lang, text in seed.items():
+    for lang, text in SEED_TEXT.items():
         c: dict[str, int] = {}
-        for g in _grams(text, n):
+        for g in _grams(text, PROFILE_N):
             if "\\" in g or any(ch.isdigit() for ch in g):
                 continue
             c[g] = c.get(g, 0) + 1
@@ -178,7 +173,7 @@ def train_lang_profiles(
             )
             scored.append((-f / (1.0 + others), -f, g))
         scored.sort()
-        profiles[lang] = [g for _, _, g in scored[:k]]
+        profiles[lang] = [g for _, _, g in scored[:PROFILE_K]]
     return profiles
 
 
@@ -190,7 +185,7 @@ def load_lang_profiles() -> dict[str, list[str]]:
     return {lang: list(grams) for lang, grams in doc["langs"].items()}
 
 
-def write_profiles(path: str | None = None) -> None:
+def write_profiles() -> None:
     """(Re)generate the packaged profile table from the seed corpus —
     the build-time utility; tests pin that the shipped file equals
     what this writes."""
@@ -199,7 +194,7 @@ def write_profiles(path: str | None = None) -> None:
         "k": PROFILE_K,
         "langs": train_lang_profiles(),
     }
-    with open(path or _PROFILE_PATH, "w", encoding="utf-8") as f:
+    with open(_PROFILE_PATH, "w", encoding="utf-8") as f:
         json.dump(doc, f, ensure_ascii=False, indent=1, sort_keys=True)
         f.write("\n")
 
@@ -269,15 +264,13 @@ def decision_case_sql(
     return f"CASE {' '.join(branches)} ELSE 'und' END"
 
 
-def spark_pred_expr(
-    text_col: str = "text", profiles: dict[str, list[str]] | None = None
-) -> str:
+def spark_pred_expr(text_col: str = "text") -> str:
     """The whole classifier as ONE Spark SQL expression: nested lets
     bind ``lower(text)`` and the score array exactly once (HOF eval
     has no CSE — every other factoring re-lowercases the document per
     gram), script counts are referenced once each so they stay
     inline."""
-    profiles = profiles or load_lang_profiles()
+    profiles = load_lang_profiles()
     langs = list(profiles)
     scores = [
         score_sum_sql("lt", profiles[lang], "spark") for lang in langs
@@ -300,14 +293,13 @@ def duckdb_pred_query(
     table: str = "documents",
     text_col: str = "text",
     extra_cols: str = "",
-    profiles: dict[str, list[str]] | None = None,
 ) -> str:
     """Oracle spelling: a CTE computes lower(text), script counts and
     per-language scores as named columns (DuckDB projections evaluate
     once), then the SAME decision CASE picks the label.  Returns a
     complete ``SELECT {extra_cols} pred FROM (...)`` fragment body —
     callers wrap/alias as needed."""
-    profiles = profiles or load_lang_profiles()
+    profiles = load_lang_profiles()
     langs = list(profiles)
     score_items = ", ".join(
         f"{score_sum_sql('__lt', profiles[lang], 'duckdb')} AS __s_{lang}"

@@ -24,7 +24,7 @@ narrow.  Two standing layout problems:
 
 The Z-order key is EXACT integer arithmetic on both engines (the same
 cross-engine discipline as ``functions/hashing.py``): clamp each
-column into [0, 2^bits), then interleave bits round-robin.  DuckDB
+column into [0, 2^ZORDER_BITS), then interleave bits round-robin.  DuckDB
 replicates the expression verbatim, so layouts — not just query
 results — are oracle-checkable, and the pruning claim itself is
 verified in tests by reading parquet footer statistics (pyarrow) and
@@ -41,12 +41,12 @@ from pyspark.sql import functions as F
 ZORDER_BITS = 16  # per-column resolution: 65536 buckets
 
 
-def _interleave_terms(cols: list[str], bits: int, shl, shr) -> str:
+def _interleave_terms(cols: list[str], shl, shr) -> str:
     """Shared Morton-code generator: bit b of column j lands at output
     position ``b * n_cols + j`` (LSB-first round-robin), rendered with
     engine-specific shift syntax via ``shl(expr, k)`` / ``shr(expr, k)``."""
     n = len(cols)
-    mask = (1 << bits) - 1
+    mask = (1 << ZORDER_BITS) - 1
     terms = []
     for j, c in enumerate(cols):
         # The CAST TO BIGINT is load-bearing: on an IntegerType column
@@ -59,47 +59,45 @@ def _interleave_terms(cols: list[str], bits: int, shl, shr) -> str:
             f"CAST((CASE WHEN {c} < 0 THEN 0 WHEN {c} > {mask}"
             f" THEN {mask} ELSE {c} END) AS BIGINT)"
         )
-        for b in range(bits):
+        for b in range(ZORDER_BITS):
             terms.append(shl(f"({shr(clamped, b)} & 1)", b * n + j))
     return " + ".join(terms)
 
 
-def spark_zorder_key(cols: list[str], bits: int = ZORDER_BITS) -> str:
+def spark_zorder_key(cols: list[str]) -> str:
     """Spark SQL expression for the Morton key of integer columns
-    ``cols`` (clamped into [0, 2^bits)); fits int64 for
-    ``len(cols) * bits <= 63``."""
-    _check(cols, bits)
+    ``cols`` (clamped into [0, 2^ZORDER_BITS)); fits int64 for
+    ``len(cols) * ZORDER_BITS <= 63``."""
+    _check(cols)
     return "CAST({} AS BIGINT)".format(
         _interleave_terms(
             cols,
-            bits,
             lambda e, k: f"shiftleft({e}, {k})",
             lambda e, k: f"shiftright({e}, {k})",
         )
     )
 
 
-def duckdb_zorder_key(cols: list[str], bits: int = ZORDER_BITS) -> str:
+def duckdb_zorder_key(cols: list[str]) -> str:
     """The identical key in DuckDB SQL (same clamp, same interleave) —
     layouts verify cross-engine like every other operator here."""
-    _check(cols, bits)
+    _check(cols)
     return "CAST({} AS BIGINT)".format(
         _interleave_terms(
             cols,
-            bits,
             lambda e, k: f"({e} << {k})",
             lambda e, k: f"({e} >> {k})",
         )
     )
 
 
-def _check(cols: list[str], bits: int) -> None:
+def _check(cols: list[str]) -> None:
     if not cols:
         raise ValueError("zorder needs at least one column")
-    if len(cols) * bits > 63:
+    if len(cols) * ZORDER_BITS > 63:
         raise ValueError(
-            f"{len(cols)} cols x {bits} bits = {len(cols) * bits} key bits"
-            " exceeds int64; lower bits or drop columns"
+            f"{len(cols)} cols x {ZORDER_BITS} bits ="
+            f" {len(cols) * ZORDER_BITS} key bits exceeds int64; drop columns"
         )
 
 
@@ -107,7 +105,6 @@ def write_zordered(
     df: DataFrame,
     path: str,
     cols: list[str],
-    bits: int = ZORDER_BITS,
     num_files: int | None = None,
 ) -> None:
     """Write ``df`` as parquet clustered by the Z-order of ``cols``:
@@ -119,7 +116,7 @@ def write_zordered(
     multi-column pruning is free after that."""
     if num_files is not None and num_files <= 0:
         raise ValueError(f"num_files must be positive, got {num_files}")
-    zk = F.expr(spark_zorder_key(cols, bits))
+    zk = F.expr(spark_zorder_key(cols))
     ranged = df.withColumn("__zkey", zk)
     ranged = (
         ranged.repartitionByRange(num_files, "__zkey")
@@ -259,16 +256,13 @@ def predicted_fold_hi(spark: SparkSession, path: str) -> float | None:
 def compact_epochs(
     spark: SparkSession,
     path: str,
-    target_files: int = 1,
     partition_by: tuple[str, ...] = (),
-    up_to: int | None = None,
     transform=None,
 ) -> dict | None:
     """Fold every CLOSED ``epoch=N`` partition under ``path`` (ids
-    strictly below the latest persisted epoch, optionally also capped
-    at ``up_to``) into one consolidated ``epoch=hi`` partition of
-    ``target_files`` files (per value of ``partition_by``, for
-    sub-partitioned surfaces like the band index).  The latest epoch —
+    strictly below the latest persisted epoch) into one consolidated
+    ``epoch=hi`` partition of one file (per value of ``partition_by``,
+    for sub-partitioned surfaces like the band index).  The latest epoch —
     the only one the replay guard permits replaying — is never touched.
     Idempotent and crash-recoverable (protocol above); safe beside a
     live stream's WRITES, whose new epochs commit strictly above the
@@ -412,12 +406,9 @@ def compact_epochs(
     if not epochs:
         return None
     latest = epochs[-1]
-    # selection rule mirrored by predicted_fold_hi (post-recovery,
-    # no up_to) — change both together
-    closed = [
-        e for e in epochs
-        if e < latest and (up_to is None or e <= up_to)
-    ]
+    # selection rule mirrored by predicted_fold_hi (post-recovery)
+    # — change both together
+    closed = [e for e in epochs if e < latest]
     # The <2 guard is small-file ECONOMICS (folding one epoch onto
     # itself saves nothing); with a transform the rewrite IS the point
     # (retraction must become physical even when only one closed epoch
@@ -441,9 +432,7 @@ def compact_epochs(
     if transform is not None:
         df = transform(df)
     shaped = (
-        df.repartition(max(1, target_files), *partition_by)
-        if partition_by
-        else df.coalesce(max(1, target_files))
+        df.repartition(1, *partition_by) if partition_by else df.coalesce(1)
     )
     writer = shaped.write.mode("overwrite")
     if partition_by:

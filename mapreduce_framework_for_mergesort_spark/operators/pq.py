@@ -54,18 +54,13 @@ PQ_ITERS = 2  # Lloyd iterations per subspace (same role as KM_ITERS)
 Codebooks = list[S.Cents]  # [m] -> [(seed_id, subvector int64)] sorted
 
 
-def train_codebooks(
-    embeddings: DataFrame,
-    dim: int,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-) -> Codebooks:
+def train_codebooks(embeddings: DataFrame, dim: int) -> Codebooks:
     """Per-subspace integer k-means codebooks from the deterministic
-    prefix sample ``vec_id < k_codes * KM_SAMPLE_FACTOR`` (same sample
+    prefix sample ``vec_id < PQ_K * KM_SAMPLE_FACTOR`` (same sample
     rule as IVF training; the collect is bounded index metadata).  Each
     subspace trains independently on its slice with the exact trainer
     the IVF cells use — one sample, M small Lloyd runs."""
+    m, k_codes, iters = PQ_M, PQ_K, PQ_ITERS
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     sub = dim // m
@@ -155,9 +150,6 @@ def pq_adc_topk(
     query_vec_id: int,
     k: int,
     dim: int,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
     r_cand: int | None = None,
     books: Codebooks | None = None,
 ) -> DataFrame:
@@ -170,7 +162,7 @@ def pq_adc_topk(
     shared codebook build (train-once/probe-many)."""
     r_cand = r_cand if r_cand is not None else 4 * k
     if books is None:
-        books = train_codebooks(embeddings, dim, m, k_codes, iters)
+        books = train_codebooks(embeddings, dim)
     q = (
         embeddings.where(F.col("vec_id") == query_vec_id)
         .select("embedding")
@@ -204,10 +196,6 @@ def ivfadc_topk(
     dim: int,
     num_centroids: int = 8,
     nprobe: int = 2,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    r_cand: int | None = None,
     cents: S.Cents | None = None,
     cells: DataFrame | None = None,
     books: Codebooks | None = None,
@@ -215,32 +203,21 @@ def ivfadc_topk(
     """The full IVFADC composition (Jégou et al. '11): IVF prunes WHICH
     vectors the query touches (``nprobe`` nearest cells, deterministic
     centroid-distance order), PQ compresses WHAT is scored there (ADC
-    over the probed cells' codes only), then the ``r_cand`` best-ADC
+    over the probed cells' codes only), then the ``4·k·nprobe`` best-ADC
     candidates get the exact-cosine rerank.  Round 4 shipped the two
     halves separately — IVF reranked raw vectors, PQ scored every code;
     this is the tier a 100 TB deployment actually runs: the scan reads
     ~2% of the bytes of 1/C of the corpus.
 
-    Two recall knobs, with exactly the guarantees tests pin:
-
-    * ``r_cand`` at fixed ``nprobe``: candidate sets are NESTED (the
-      deterministic (adc, vec_id) cut of a fixed pool), so recall@k is
-      non-decreasing — guaranteed;
-    * ``nprobe`` with ``r_cand`` ≥ probed-pool size: the cut passes
-      everything, pools are nested in nprobe, so recall@k is
-      non-decreasing and exactly 1.0 at nprobe = C — guaranteed.
-      (At interior ``r_cand`` a bigger pool can displace a candidate
-      from the ADC cut, so strict nprobe-monotonicity is NOT a theorem
-      — same honest caveat as any IVFADC.)
-
-    The DEFAULT ``r_cand`` scales with the probe set — ``4·k·nprobe``
-    (round 9): a fixed default (previously ``4·k``) silently nullified
-    the nprobe knob — probing more cells grew the pool but the ADC cut
+    The recall knob is ``nprobe``: the candidate cut scales with the
+    probe set (round 9) — a fixed cut (previously ``4·k``) silently
+    nullified it: probing more cells grew the pool but the ADC cut
     stayed the same size, so recall@10 sat flat (~0.35 at ×10 in
-    ``ANN_r08.json``) while users followed "raise nprobe for recall".
-    With the scaled default each probed cell keeps contributing
-    candidates; strict monotonicity is still only guaranteed on the
-    two axes above, but the default no longer traps.
+    ``ANN_r08.json``).  When the cut passes the whole probed pool,
+    pools are nested in nprobe, so recall@k is non-decreasing and
+    exactly 1.0 at nprobe = C; at an interior cut a bigger pool can
+    displace a candidate, so strict nprobe-monotonicity is NOT a
+    theorem — same honest caveat as any IVFADC.
 
     ``cents``/``cells``/``books`` inject a shared index build
     (train-once/probe-many, like ``ivf_topk``); variant-encoding note:
@@ -248,11 +225,11 @@ def ivfadc_topk(
     coding buys accuracy at the cost of per-cell code spaces, and the
     exactness discipline here favors one oracle-replicable code space
     (the rerank is exact either way)."""
-    r_cand = r_cand if r_cand is not None else 4 * k * max(1, nprobe)
+    r_cand = 4 * k * max(1, nprobe)
     if cents is None:
         cents = S._trained_cents(embeddings, num_centroids)
     if books is None:
-        books = train_codebooks(embeddings, dim, m, k_codes, iters)
+        books = train_codebooks(embeddings, dim)
     q = (
         embeddings.where(F.col("vec_id") == query_vec_id)
         .select("embedding")
@@ -290,9 +267,6 @@ def write_ivfadc_index(
     path: str,
     dim: int,
     num_centroids: int = 8,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
 ) -> tuple[S.Cents, Codebooks]:
     """Persist the composed IVFADC index: ``<path>/codes`` holds
     (vec_id, code) PARTITIONED BY the IVF ``cell`` — so a probe prunes
@@ -321,7 +295,7 @@ def write_ivfadc_index(
     rebuilds write a fresh path and swap a pointer, which removes both
     races; re-running a crashed in-place rebuild converges."""
     cents = S._trained_cents(embeddings, num_centroids)
-    books = train_codebooks(embeddings, dim, m, k_codes, iters)
+    books = train_codebooks(embeddings, dim)
     coded = pq_encode(S.assign_cells(embeddings, cents), books)
     coded.select("vec_id", "code", "cell").write.mode(
         "overwrite"
@@ -419,7 +393,7 @@ def delete_from_ivfadc_index(
     ``<path>/tombstones/<batch_id>``; every probe anti-joins the union
     of published tombstone batches (a bounded broadcast — takedown
     lists are small relative to the corpus) BEFORE the candidate cut,
-    so deleted vectors neither surface nor eat ``r_cand`` slots.  The
+    so deleted vectors neither surface nor eat candidate slots.  The
     stored codes are untouched — deletion is metadata, exactly like
     the append side's frozen-codebook batches — and a periodic
     ``write_ivfadc_index`` rebuild over the retained corpus folds the
@@ -487,12 +461,11 @@ def probe_ivfadc_index(
     k: int,
     dim: int,
     nprobe: int = 2,
-    r_cand: int | None = None,
 ) -> DataFrame:
     """Top-k probe of a persisted IVFADC index for an arbitrary query:
     prune to the query's ``nprobe`` nearest cell partitions
     (``PartitionFilters`` — the scan never opens other directories),
-    ADC-score only those cells' codes, deterministic ``r_cand`` cut,
+    ADC-score only those cells' codes, deterministic ``4·k·nprobe`` cut,
     exact-cosine rerank against the raw ``embeddings`` by key.  The
     query round-trips through the corpus ``array<float>`` schema, so it
     is narrowed exactly as a stored vector was.  Reads the base
@@ -502,11 +475,9 @@ def probe_ivfadc_index(
     subdirs of each — MINUS every published
     ``delete_from_ivfadc_index`` tombstone (broadcast anti-join before
     the candidate cut, so deleted vectors neither surface nor eat
-    ``r_cand`` slots; zero cost when no takedown has ever run).
-    Default ``r_cand`` scales with nprobe (``4·k·nprobe``) — same
-    round-9 fix as ``ivfadc_topk``: a fixed default nullified the
-    nprobe knob."""
-    r_cand = r_cand if r_cand is not None else 4 * k * max(1, nprobe)
+    candidate slots; zero cost when no takedown has ever run).  The cut
+    scales with nprobe — same round-9 fix as ``ivfadc_topk``."""
+    r_cand = 4 * k * max(1, nprobe)
     books = read_codebooks(spark, path)
     cents = read_ivfadc_centroids(spark, path)
     qdf = spark.createDataFrame(
@@ -563,11 +534,6 @@ def duckdb_pq_cte(
     dim: int,
     query_vec: int,
     k: int,
-    m: int = PQ_M,
-    k_codes: int = PQ_K,
-    iters: int = PQ_ITERS,
-    r_cand: int | None = None,
-    table: str = "embeddings",
 ) -> str:
     """CTE chain replicating the WHOLE PQ pipeline — quantization,
     per-subspace prefix-sample Lloyd training, encoding, int64 ADC,
@@ -576,7 +542,7 @@ def duckdb_pq_cte(
     ``similarity.duckdb_kmeans_cte``; every intermediate is int64 or
     one correctly-rounded double division, so both engines pick
     identical candidates and the reranked top-k matches bit-for-bit."""
-    r_cand = r_cand if r_cand is not None else 4 * k
+    m, k_codes, iters, r_cand = PQ_M, PQ_K, PQ_ITERS, 4 * k
     sub = dim // m
     sample = k_codes * S.KM_SAMPLE_FACTOR
     nrm = f"sqrt({V.duckdb_dot('embedding', 'embedding', dim)})"
@@ -594,7 +560,7 @@ def duckdb_pq_cte(
       SELECT vec_id, embedding,
              CASE WHEN {nrm} = CAST(0 AS DOUBLE)
                   THEN CAST(1 AS DOUBLE) ELSE {nrm} END AS nrm
-      FROM {table}),
+      FROM embeddings),
     pxq AS (
       SELECT vec_id, embedding,
              list_transform(embedding, v ->
@@ -654,11 +620,11 @@ def duckdb_pq_cte(
     pcand AS (
       SELECT vec_id FROM padc ORDER BY adc, vec_id LIMIT {r_cand}),
     pqv AS (
-      SELECT embedding AS qe FROM {table} WHERE vec_id = {query_vec}),
+      SELECT embedding AS qe FROM embeddings WHERE vec_id = {query_vec}),
     pscored AS (
       SELECT e.vec_id,
              {V.duckdb_cosine('e.embedding', 'qe', dim)} AS score
-      FROM {table} e JOIN pcand USING (vec_id) CROSS JOIN pqv),
+      FROM embeddings e JOIN pcand USING (vec_id) CROSS JOIN pqv),
     ptop AS (
       SELECT CAST(row_number() OVER (ORDER BY score DESC, vec_id)
                   AS BIGINT) AS rank,

@@ -87,11 +87,11 @@ def parse_psl(text: str) -> PslRules:
     return PslRules(frozenset(exact), frozenset(wild), frozenset(exc))
 
 
-@lru_cache(maxsize=4)
-def load_psl_rules(path: str | None = None) -> PslRules:
-    """Parse the packaged snapshot (default) or any full-format PSL
-    file at ``path``.  Cached — callers build expressions repeatedly."""
-    with open(path or _SNAPSHOT_PATH, encoding="utf-8") as f:
+@lru_cache(maxsize=1)
+def load_psl_rules() -> PslRules:
+    """Parse the packaged snapshot.  Cached — callers build expressions
+    repeatedly."""
+    with open(_SNAPSHOT_PATH, encoding="utf-8") as f:
         return parse_psl(f.read())
 
 
@@ -151,13 +151,11 @@ def public_suffix_length(
     return labels, ps
 
 
-def registrable_domain_expr(
-    host: Column, rules: PslRules | None = None
-) -> Column:
-    """Registrable domain as one codegen expression (see module
-    docstring for when to prefer the join strategy)."""
-    if rules is None:
-        rules = load_psl_rules()
+def registrable_domain_expr(host: Column) -> Column:
+    """Registrable domain as one codegen expression under the packaged
+    snapshot (see module docstring for when to prefer the join
+    strategy)."""
+    rules = load_psl_rules()
     # publicsuffix.org algorithm step 1: the host is matched with the
     # root label removed — a trailing-dot FQDN (`example.com.`) must
     # resolve at the same grain as `example.com` (round 12; before

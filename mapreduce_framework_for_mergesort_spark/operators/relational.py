@@ -32,10 +32,10 @@ from pyspark.sql import functions as F
 MONEY = "decimal(18,2)"
 
 
-def dec_sum(col: str, scale: str = MONEY, alias: str | None = None):
+def dec_sum(col: str, alias: str | None = None):
     """Exact distributed sum: cast to decimal (exact for the data's
     2-decimal domain), sum (exact), surface as double."""
-    expr = F.sum(F.col(col).cast(scale)).cast("double")
+    expr = F.sum(F.col(col).cast(MONEY)).cast("double")
     return expr.alias(alias) if alias else expr
 
 
@@ -106,15 +106,15 @@ def hourly_event_agg(events: DataFrame) -> DataFrame:
 
 
 def top_n_per_group(
-    df: DataFrame, part_cols: list[str], order_cols, n: int, rank_alias: str = "rn"
+    df: DataFrame, part_cols: list[str], order_cols, n: int
 ) -> DataFrame:
     """Per-group top-n via ranked window; Spark pushes a group-local
     top-n (WindowGroupLimit) below the shuffle, so each partition only
     keeps n candidates per group."""
     w = Window.partitionBy(*part_cols).orderBy(*order_cols)
     return (
-        df.withColumn(rank_alias, F.row_number().over(w).cast("long"))
-        .where(F.col(rank_alias) <= n)
+        df.withColumn("rn", F.row_number().over(w).cast("long"))
+        .where(F.col("rn") <= n)
     )
 
 

@@ -79,7 +79,6 @@ def hash_split(
 def leakage_safe_split(
     documents: DataFrame,
     splits: Weights = DEFAULT_SPLITS,
-    key: str = "doc_id",
     clusters: DataFrame | None = None,
 ) -> DataFrame:
     """``hash_split`` with the leakage guarantee a train/eval split
@@ -110,15 +109,14 @@ def leakage_safe_split(
     from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 
     if clusters is None:
-        reps = D.exact_rep_ids(documents, key)
-        pool = documents.join(reps, key, "semi")
+        pool = documents.join(D.exact_rep_ids(documents), "doc_id", "semi")
         pairs = D.lsh_candidate_pairs(D.minhash_bands(pool)).unionByName(
-            D.exact_dup_edges(documents, key)
+            D.exact_dup_edges(documents)
         )
-        clusters = D.cluster_pairs(pairs, nodes=documents.select(key))
+        clusters = D.cluster_pairs(pairs, nodes=documents.select("doc_id"))
     hashed = documents.withColumn(
         "__h", F.md5(F.col("text").cast("binary"))
-    ).join(clusters, F.col(key) == F.col("node"))
+    ).join(clusters, F.col("doc_id") == F.col("node"))
     ckey = hashed.groupBy("cluster").agg(F.min("__h").alias("__ck"))
     return (
         hashed.join(ckey, "cluster")
@@ -131,7 +129,6 @@ def assign_splits_stable(
     documents: DataFrame,
     state_path: str,
     splits: Weights = DEFAULT_SPLITS,
-    key: str = "doc_id",
     clusters: DataFrame | None = None,
     epoch: int | None = None,
 ) -> DataFrame:
@@ -190,21 +187,20 @@ def assign_splits_stable(
                 "idempotent for the latest epoch"
             )
     if clusters is None:
-        reps = D.exact_rep_ids(documents, key)
-        pool = documents.join(reps, key, "semi")
+        pool = documents.join(D.exact_rep_ids(documents), "doc_id", "semi")
         pairs = D.lsh_candidate_pairs(D.minhash_bands(pool)).unionByName(
-            D.exact_dup_edges(documents, key)
+            D.exact_dup_edges(documents)
         )
-        clusters = D.cluster_pairs(pairs, nodes=documents.select(key))
+        clusters = D.cluster_pairs(pairs, nodes=documents.select("doc_id"))
     hashed = documents.withColumn(
         "__h", F.md5(F.col("text").cast("binary"))
-    ).join(clusters, F.col(key) == F.col("node"))
+    ).join(clusters, F.col("doc_id") == F.col("node"))
 
     prior = _exclude_epoch(_read_optional(spark, state_path), epoch)
     if prior is not None:
-        prior = prior.select(key, F.col("split").alias("__prior"))
+        prior = prior.select("doc_id", F.col("split").alias("__prior"))
         prior = _materialize(prior)
-        hashed = hashed.join(prior, key, "left")
+        hashed = hashed.join(prior, "doc_id", "left")
     else:
         hashed = hashed.withColumn("__prior", F.lit(None).cast("string"))
     hashed = _materialize(hashed)
@@ -231,7 +227,7 @@ def assign_splits_stable(
         )
     )
     new_rows = _materialize(
-        assigned.where(F.col("__prior").isNull()).select(key, "split")
+        assigned.where(F.col("__prior").isNull()).select("doc_id", "split")
     )
     if epoch is None:
         new_rows.write.mode("append").parquet(state_path)
@@ -243,11 +239,12 @@ def assign_splits_stable(
                          "node", "cluster")
 
 
-def duckdb_split_case(key_sql: str, splits: Weights = DEFAULT_SPLITS) -> str:
-    """The oracle-side CASE expression, from the same boundaries (NULL
-    guard included so both engines route null keys identically)."""
+def duckdb_split_case(key_sql: str) -> str:
+    """The oracle-side CASE expression, from the same boundaries as
+    ``DEFAULT_SPLITS`` (NULL guard included so both engines route null
+    keys identically)."""
     h = f"substring(md5(CAST({key_sql} AS VARCHAR)), 1, 2)"
-    bounds = split_boundaries(splits)
+    bounds = split_boundaries(DEFAULT_SPLITS)
     whens = " ".join(
         f"WHEN {h} < '{ub}' THEN '{name}'" for name, ub in bounds[:-1]
     )
@@ -258,12 +255,11 @@ def duckdb_split_case(key_sql: str, splits: Weights = DEFAULT_SPLITS) -> str:
 def pack_documents(
     documents: DataFrame,
     budget: int,
-    key: str = "doc_id",
     count_col: str | None = None,
 ) -> DataFrame:
     """Concat-then-chunk sequence packing: assign every document the
     (``pack_id``, ``pack_offset``) where its first token lands when the
-    corpus is concatenated in ``key`` order and cut into fixed
+    corpus is concatenated in ``doc_id`` order and cut into fixed
     ``budget``-token training sequences — the standard LM pre-training
     batch layout (documents straddle pack boundaries; nothing is padded
     or dropped).  Output adds ``n_tokens``, ``pack_id``, ``pack_offset``.
@@ -272,7 +268,7 @@ def pack_documents(
     the same 'never one task sees all rows' discipline as
     ``sort.with_global_rank``, extended from counting to summing:
 
-    1. range-partition + sort by ``key`` (globally ordered partitions,
+    1. range-partition + sort by ``doc_id`` (globally ordered partitions,
        sampled boundaries);
     2. per-partition token totals reduce map-side to ONE row per
        partition; a window over those #partitions rows (never data
@@ -292,7 +288,7 @@ def pack_documents(
     ``count_col``: use an existing per-doc length column instead of the
     canonical tokenizer (e.g. real tokenizer counts computed upstream).
 
-    ``key`` must be UNIQUE: it is the concatenation order, and duplicate
+    ``doc_id`` must be UNIQUE: it is the concatenation order, and duplicate
     keys leave tie order engine-/run-defined — the same total-order
     contract ``sort.with_global_rank`` documents for its rank column.
     """
@@ -329,8 +325,8 @@ def pack_documents(
     # registered query must stay lazy until the driver forces it); both
     # branches still read the same physical rows once it exists.
     ranged = _materialize(
-        sized.repartitionByRange(F.col(key))
-        .sortWithinPartitions(key)
+        sized.repartitionByRange(F.col("doc_id"))
+        .sortWithinPartitions("doc_id")
         .withColumn(mid, F.monotonically_increasing_id())
         .withColumn(pid, F.shiftrightunsigned(F.col(mid), 33).cast("int"))
         .drop(mid),
@@ -455,7 +451,6 @@ def balanced_sample(
     stratum_col: str,
     cap: int,
     key: str = "doc_id",
-    slack: int = BALANCE_SLACK,
     counts: DataFrame | None = None,
 ) -> DataFrame:
     """At most ``cap`` rows per stratum, chosen by salted-hash rank —
@@ -472,7 +467,8 @@ def balanced_sample(
     is two-phase instead: (1) per-stratum counts (one map-side-combined
     agg, ≤ #strata rows) joined back; (2) a map-only hash PREFILTER
     keeps each row iff ``h < SPACE·slack·cap // n`` (everything when
-    n ≤ slack·cap), so the rank window sees ~slack·cap rows per
+    n ≤ slack·cap, slack = ``BALANCE_SLACK``), so the rank window sees
+    ~slack·cap rows per
     stratum, not n.  The window then takes the cap smallest (h, key).
     Both phases are exact integer arithmetic the oracle replicates
     (``duckdb_balanced_cte``), so the output is still value-verifiable.
@@ -518,7 +514,7 @@ def balanced_sample(
     )
     t = F.expr(
         f"least(CAST({_BAL_SPACE} AS BIGINT), "
-        f"CAST({_BAL_SPACE} AS BIGINT) * {slack * cap} div __n)"
+        f"CAST({_BAL_SPACE} AS BIGINT) * {BALANCE_SLACK * cap} div __n)"
     )
     pre = (
         df.join(counts, stratum_col)
@@ -538,7 +534,6 @@ def duckdb_balanced_cte(
     stratum_sql: str,
     cap: int,
     key_sql: str = "doc_id",
-    slack: int = BALANCE_SLACK,
 ) -> str:
     """Oracle replica of ``balanced_sample`` exposing ``bal`` (the kept
     rows): same salted integer hash, same integer prefilter threshold,
@@ -552,7 +547,7 @@ def duckdb_balanced_cte(
             FROM {table} GROUP BY 1) c
         ON d.{stratum_sql} = c.__s
       WHERE {h} < least(CAST({_BAL_SPACE} AS BIGINT),
-                        CAST({_BAL_SPACE} AS BIGINT) * {slack * cap} // __n)),
+                        CAST({_BAL_SPACE} AS BIGINT) * {BALANCE_SLACK * cap} // __n)),
     bal AS (
       SELECT * FROM (
         SELECT *, row_number() OVER (
@@ -580,7 +575,6 @@ def mix_plan(
     avails: dict[str, int],
     weights: dict[str, int],
     max_epochs: int = 1,
-    total: int | None = None,
 ) -> dict[str, tuple[int, int]]:
     """Exact-integer mixing plan: per-stratum ``(full_epochs, frac)``
     where the sampling rate is ``full_epochs + frac/2^32`` epochs.
@@ -589,8 +583,7 @@ def mix_plan(
     ``avails`` the per-stratum available unit counts.  The plan scales
     the whole mixture to the largest total ``T`` such that no stratum
     needs more than ``max_epochs`` passes over its data —
-    ``T = min_s floor(avail_s · E · den / w_s)`` — optionally capped by
-    ``total``; each stratum then contributes ``w_s · T // den`` units.
+    ``T = min_s floor(avail_s · E · den / w_s)``; each stratum then contributes ``w_s · T // den`` units.
 
     Every step is floor division on non-negative integers (Python
     arbitrary-precision here, HUGEINT in the oracle mirror), so two
@@ -608,11 +601,6 @@ def mix_plan(
         raise ValueError("weights must be non-empty")
     if max_epochs < 1:
         raise ValueError(f"max_epochs must be >= 1, got {max_epochs}")
-    if total is not None and total < 0:
-        # a negative total would floor T negative -> negative full
-        # epochs -> Spark's sequence(0, -1) DESCENDS while the oracle's
-        # range(0, 0) is empty: silent garbage AND divergence
-        raise ValueError(f"total must be >= 0, got {total}")
     missing = [s for s in weights if avails.get(s, 0) <= 0]
     if missing:
         raise ValueError(
@@ -621,8 +609,6 @@ def mix_plan(
             "weights or fix the corpus"
         )
     t = min(avails[s] * max_epochs * den // w for s, w in weights.items())
-    if total is not None:
-        t = min(t, total)
     plan = {}
     for s, w in weights.items():
         n = (w * t // den) * _MIX_ONE // avails[s]
@@ -633,21 +619,14 @@ def mix_plan(
 def mix_sources(
     df: DataFrame,
     weights: dict[str, int],
-    stratum_col: str = "source",
-    key: str = "doc_id",
     max_epochs: int = 1,
-    total: int | None = None,
-    unit_col: str | None = None,
 ) -> DataFrame:
-    """Deterministic budget-driven mixing: sample/repeat each stratum so
+    """Deterministic budget-driven mixing: sample/repeat each ``source``
+    stratum so
     the output approaches the ``weights`` mixture (see ``mix_plan``),
     appending an ``epoch`` column (0-based; a doc kept twice appears as
     epoch 0 and 1).  Rows whose stratum has no weight are dropped.
-
-    ``unit_col`` switches the budget unit from documents to a per-row
-    integer column (e.g. a token count) — membership stays per-row, so
-    token-unit targets are met in expectation, exactly like any
-    Bernoulli sampler.
+    The budget unit is the document.
 
     Scale shape: ONE small aggregate (per-stratum counts — K rows of
     metadata to the driver, never data), then one map-only
@@ -656,31 +635,27 @@ def mix_sources(
     the stratum's 2^-32-unit threshold.  Membership is a pure function
     of (key, stratum, counts): rerun-, partitioning-, and engine-proof.
     """
-    unit = (
-        F.count(F.lit(1)) if unit_col is None else F.sum(unit_col)
-    ).alias("__avail")
+    unit = F.count(F.lit(1)).alias("__avail")
     avails = {
-        r[stratum_col]: int(r["__avail"])
-        for r in df.groupBy(stratum_col).agg(unit).collect()
+        r["source"]: int(r["__avail"])
+        for r in df.groupBy("source").agg(unit).collect()
     }
-    plan = mix_plan(
-        {s: avails.get(s, 0) for s in weights}, weights, max_epochs, total
-    )
+    plan = mix_plan({s: avails.get(s, 0) for s in weights}, weights, max_epochs)
     strata = sorted(plan)
     full_col = F.lit(None).cast("int")
     frac_col = F.lit(None).cast("string")
     for s in strata:
         efull, frac = plan[s]
-        full_col = F.when(F.col(stratum_col) == s, F.lit(efull)).otherwise(
+        full_col = F.when(F.col("source") == s, F.lit(efull)).otherwise(
             full_col
         )
         frac_col = F.when(
-            F.col(stratum_col) == s,
+            F.col("source") == s,
             F.lit(format(frac, f"0{SAMPLE_HEX}x")),
         ).otherwise(frac_col)
-    h = _sample_hash(key, salt=MIX_SALT)
+    h = _sample_hash("doc_id", salt=MIX_SALT)
     return (
-        df.where(F.col(stratum_col).isin(strata))
+        df.where(F.col("source").isin(strata))
         .withColumn("__efull", full_col)
         .withColumn("__frac", frac_col)
         .withColumn("epoch", F.explode(F.expr("sequence(0, __efull)")))
@@ -689,19 +664,13 @@ def mix_sources(
     )
 
 
-def duckdb_mix_cte(
-    weights: dict[str, int],
-    stratum_col: str = "source",
-    key_sql: str = "doc_id",
-    max_epochs: int = 1,
-    total: int | None = None,
-    table: str = "documents",
-) -> str:
+def duckdb_mix_cte(weights: dict[str, int], max_epochs: int = 1) -> str:
     """Oracle half of ``mix_sources`` (document-unit form): CTE chain
     ending in ``mix`` = the mixed rows (all columns + ``epoch``).  The
     plan arithmetic is the same floor-division chain in HUGEINT; the
     fractional-epoch predicate compares the hash prefix numerically
-    (hex-string < fixed-width literal ⟺ int < threshold)."""
+    (hex-string < fixed-width literal ⟺ int < threshold).  Mixes the
+    ``documents`` table by ``source``, keyed on ``doc_id``."""
     strata = sorted(weights)
     in_list = ", ".join(f"'{s}'" for s in strata)
     w_case = "CASE src " + " ".join(
@@ -709,12 +678,10 @@ def duckdb_mix_cte(
     ) + " END"
     den = sum(weights.values())
     t_expr = f"MIN(avail * {max_epochs} * {den} // w)"
-    if total is not None:
-        t_expr = f"LEAST({t_expr}, {total})"
     return f"""
     mx_avail AS (
-      SELECT {stratum_col} AS src, CAST(COUNT(*) AS HUGEINT) AS avail
-      FROM {table} WHERE {stratum_col} IN ({in_list})
+      SELECT source AS src, CAST(COUNT(*) AS HUGEINT) AS avail
+      FROM documents WHERE source IN ({in_list})
       GROUP BY 1),
     mx_w AS (SELECT src, avail, CAST({w_case} AS HUGEINT) AS w
              FROM mx_avail),
@@ -732,7 +699,7 @@ def duckdb_mix_cte(
       FROM mx_epochs),
     mix AS (
       SELECT d.*, e.epoch
-      FROM {table} d JOIN mx_epochrows e ON d.{stratum_col} = e.src
+      FROM documents d JOIN mx_epochrows e ON d.source = e.src
       WHERE e.epoch < e.efull
-         OR {_duckdb_hash_int(key_sql, MIX_SALT)} < e.frac)
+         OR {_duckdb_hash_int("doc_id", MIX_SALT)} < e.frac)
     """

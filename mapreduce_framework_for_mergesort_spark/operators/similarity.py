@@ -100,7 +100,7 @@ def lsh_bucket_udf(dim: int):
     return bucket
 
 
-def duckdb_bucket_cte(dim: int, table: str = "embeddings") -> str:
+def duckdb_bucket_cte(dim: int) -> str:
     """DuckDB CTE replicating the integer LSH bucketing exactly: the
     hyperplane matrix is embedded as a literal VALUES table (the same
     md5-derived constants the UDF uses), the quantized dot is an exact
@@ -118,7 +118,7 @@ def duckdb_bucket_cte(dim: int, table: str = "embeddings") -> str:
       SELECT e.vec_id, hp.p,
              SUM(CAST(round(CAST(e.embedding[hp.i] AS DOUBLE) * {QUANT})
                       AS BIGINT) * hp.h) AS dot
-      FROM {table} e, hp
+      FROM embeddings e, hp
       GROUP BY e.vec_id, hp.p),
     buckets AS (
       SELECT vec_id,
@@ -128,12 +128,7 @@ def duckdb_bucket_cte(dim: int, table: str = "embeddings") -> str:
     """
 
 
-def duckdb_kmeans_cte(
-    dim: int,
-    num_centroids: int,
-    iters: int = KM_ITERS,
-    table: str = "embeddings",
-) -> str:
+def duckdb_kmeans_cte(dim: int, num_centroids: int) -> str:
     """DuckDB CTE chain replicating ``ivf_cells`` step-for-step —
     quantization, prefix-sample selection (``ksmp``), integer-L2
     assignment, rounded-mean update, final full-corpus assignment —
@@ -152,7 +147,7 @@ def duckdb_kmeans_cte(
       SELECT vec_id, embedding,
              CASE WHEN {nrm} = CAST(0 AS DOUBLE)
                   THEN CAST(1 AS DOUBLE) ELSE {nrm} END AS nrm
-      FROM {table}),
+      FROM embeddings),
     kxq AS (
       SELECT vec_id, embedding,
              list_transform(embedding, v ->
@@ -166,7 +161,7 @@ def duckdb_kmeans_cte(
       ORDER BY vec_id LIMIT {num_centroids})"""
     ]
     prev = "kc0"
-    for t in range(1, iters + 1):
+    for t in range(1, KM_ITERS + 1):
         parts.append(
             f"""ka{t} AS (
       SELECT x.vec_id, c.cid,
@@ -337,12 +332,9 @@ def _kmeans_train_np(ids, Xq, num_centroids: int, iters: int) -> Cents:
     return cents
 
 
-def ivf_cells(
-    embeddings: DataFrame, num_centroids: int, iters: int = KM_ITERS
-) -> DataFrame:
+def ivf_cells(embeddings: DataFrame, num_centroids: int) -> DataFrame:
     """IVF index build: train integer k-means centroids
-    (``_trained_cents``; ``iters=0`` degenerates to the round-2
-    first-C-vectors stand-in) on the deterministic prefix sample
+    (``_trained_cents``) on the deterministic prefix sample
     ``vec_id < num_centroids * KM_SAMPLE_FACTOR``, then assign every
     vector to its nearest centroid → (vec_id, embedding, cell).
 
@@ -356,15 +348,12 @@ def ivf_cells(
     written partitioned by ``cell`` so a probe prunes to 1/C of storage
     (same pattern as ``sources.write_partitioned_parquet``).
     """
-    cents = _trained_cents(embeddings, num_centroids, iters)
-    return assign_cells(embeddings, cents)
+    return assign_cells(embeddings, _trained_cents(embeddings, num_centroids))
 
 
-def _trained_cents(
-    embeddings: DataFrame, num_centroids: int, iters: int = KM_ITERS
-) -> Cents:
-    """Collect the prefix training sample and run Lloyd iterations on
-    the driver → centroid list.
+def _trained_cents(embeddings: DataFrame, num_centroids: int) -> Cents:
+    """Collect the prefix training sample and run ``KM_ITERS`` Lloyd
+    iterations on the driver → centroid list.
 
     ONE Spark job total: the ``vec_id < sample`` filter and the 2-column
     projection push down to the parquet scan, and what comes back is
@@ -385,7 +374,7 @@ def _trained_cents(
         return []
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
     X = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    return _kmeans_train_np(ids, _quantize_np(X), num_centroids, iters)
+    return _kmeans_train_np(ids, _quantize_np(X), num_centroids, KM_ITERS)
 
 
 def nearest_cells(qe, cents: Cents, nprobe: int) -> list[int]:
@@ -517,15 +506,10 @@ def lsh_bucketed_topk(
 FH_SALT = "#fh"  # decorrelates bucket/sign bits from every other decision
 
 
-def feature_hash_embed(
-    df: DataFrame,
-    text_col: str = "text",
-    dim: int = 64,
-    out_col: str = "embedding",
-) -> DataFrame:
+def feature_hash_embed(df: DataFrame, dim: int = 64) -> DataFrame:
     """Signed feature hashing (Weinberger et al. '09, "Feature Hashing
     for Large Scale Multitask Learning"): embed the token multiset of
-    ``text_col`` into R^``dim`` — component i = Σ over tokens with
+    ``text`` into R^``dim`` as the ``embedding`` column — component i = Σ over tokens with
     bucket(token) = i of sign(token) — making the WHOLE similarity
     stack (brute-force cosine, LSH buckets, IVF cells, PQ codes,
     IVFADC, embedding near-dup) usable over raw text and chunks with
@@ -556,8 +540,8 @@ def feature_hash_embed(
         f"CAST(-1 AS BIGINT)), CAST(0 AS BIGINT))))"
     )
     expr = H.let(
-        H.spark_tokens(text_col),
+        H.spark_tokens("text"),
         "fts",
         f"transform({acc}, v -> CAST(v AS FLOAT))",
     )
-    return df.withColumn(out_col, F.expr(expr))
+    return df.withColumn("embedding", F.expr(expr))

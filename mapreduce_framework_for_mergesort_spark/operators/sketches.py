@@ -97,48 +97,33 @@ def duckdb_cms_hash(key_sql: str) -> str:
     return H.duckdb_base_hash(f"CAST({key_sql} AS VARCHAR) || '{CMS_SALT}'")
 
 
-def cms_bucket_expr(i: int, h_sql: str, w: int = CMS_W) -> str:
+def cms_bucket_expr(i: int, h_sql: str) -> str:
     """Row ``i``'s bucket for a precomputed base hash — one SQL string
     valid verbatim in both engines (all operands positive, so ``%`` is
     the same operation everywhere)."""
     a, b = CMS_AB[i]
-    return f"((({a} * {h_sql} + {b}) % {H.MINHASH_P}) % {w})"
+    return f"((({a} * {h_sql} + {b}) % {H.MINHASH_P}) % {CMS_W})"
 
 
-def _cms_cell_array(d: int, w: int):
+def _cms_cell_array():
     """The (i, bucket) cell-struct array over a precomputed ``__h``
     column — the ONE construction shared by sketch build and probe, so
     the two sides can never drift (a probe computing buckets in a
     different space than the sketch silently estimates 0 and breaks
-    est ≥ true).  Validates the (d, w) geometry: the affine family has
-    CMS_D rows, and sketch/probe must be called with the SAME pair —
-    the sketch rows carry no geometry, so a mismatch is undetectable
-    downstream."""
-    if not 1 <= d <= len(CMS_AB):
-        raise ValueError(
-            f"d must be in [1, {len(CMS_AB)}] (the seeded affine "
-            f"family size), got {d}"
-        )
-    if w < 1:
-        raise ValueError(f"w must be positive, got {w}")
+    est ≥ true).  The geometry is fixed: ``CMS_D`` rows of ``CMS_W``
+    buckets."""
     return F.array(
         *[
             F.struct(
                 F.lit(i).alias("i"),
-                F.expr(cms_bucket_expr(i, "__h", w)).cast("int").alias("bucket"),
+                F.expr(cms_bucket_expr(i, "__h")).cast("int").alias("bucket"),
             )
-            for i in range(d)
+            for i in range(CMS_D)
         ]
     )
 
 
-def cms_sketch(
-    df: DataFrame,
-    key: str,
-    d: int = CMS_D,
-    w: int = CMS_W,
-    weight_col: str | None = None,
-) -> DataFrame:
+def cms_sketch(df: DataFrame, key: str) -> DataFrame:
     """Count-Min sketch (Cormode & Muthukrishnan '05) of ``df[key]``'s
     frequency vector as plain DATA: rows ``(i, bucket, cnt)`` — the
     d×w counter matrix with zero cells absent.  ONE scan: each row
@@ -152,33 +137,15 @@ def cms_sketch(
     intermediate is integer data both engines can recompute
     bit-for-bit, and sketches MERGE by elementwise addition so
     shards/increments sketch locally and combine without touching raw
-    data again.
-
-    (d, w) is the sketch GEOMETRY: pass the same pair to every
-    ``cms_point_estimates`` over this sketch — the stored rows don't
-    carry it, so a mismatch would silently probe the wrong buckets
-    (validated as far as possible in ``_cms_cell_array``).
-
-    ``weight_col``: treat each row as ``weight_col`` occurrences of
-    ``key`` instead of one — ``cms_sketch(per_key_counts, 'k',
-    weight_col='c')`` equals ``cms_sketch(raw, key)`` cell-for-cell
-    (pinned in tests), which lets an existing distinct-key aggregate
-    pass serve the sketch without rescanning the corpus (the
-    ``q_profile_stats`` shared-scan consolidation)."""
-    cells = _cms_cell_array(d, w)
-    weighted = df.select(
-        F.expr(_spark_cms_hash(key)).alias("__h"),
-        (
-            F.col(weight_col)
-            if weight_col is not None
-            else F.lit(1).cast("long")
-        ).alias("__wt"),
-    )
+    data again.  ``q_profile_stats`` spells the same cells in SQL over
+    a per-key count aggregate (weighted by the count), which equals
+    this sketch of the raw rows cell-for-cell (pinned in tests)."""
     return (
-        weighted.where(F.col("__h").isNotNull())
-        .select(F.explode(cells).alias("c"), "__wt")
+        df.select(F.expr(_spark_cms_hash(key)).alias("__h"))
+        .where(F.col("__h").isNotNull())
+        .select(F.explode(_cms_cell_array()).alias("c"))
         .groupBy(F.col("c.i").alias("i"), F.col("c.bucket").alias("bucket"))
-        .agg(F.sum("__wt").alias("cnt"))
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
@@ -186,8 +153,6 @@ def cms_point_estimates(
     sketch: DataFrame,
     keys: DataFrame,
     key: str,
-    d: int = CMS_D,
-    w: int = CMS_W,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Frequency estimate per DISTINCT (``key``, ``carry``) combination
@@ -215,7 +180,7 @@ def cms_point_estimates(
         .select(
             "k",
             *carry,
-            F.explode(_cms_cell_array(d, w)).alias("__c"),
+            F.explode(_cms_cell_array()).alias("__c"),
         )
         .select(
             "k",
@@ -230,23 +195,21 @@ def cms_point_estimates(
     )
 
 
-def duckdb_cms_cte(
-    key_sql: str, table: str, d: int = CMS_D, w: int = CMS_W
-) -> str:
+def duckdb_cms_cte(key_sql: str, table: str) -> str:
     """Oracle CTE chain replicating sketch + estimates vs truth.
     Exposes ``cmsk(i, bucket, cnt)`` and ``cms_est(k, c, est)`` —
     same salted hash, same affine buckets (``cms_bucket_expr``
     verbatim), same left-join-coalesce min."""
     h = duckdb_cms_hash(key_sql)
     cell_branches = "\n      UNION ALL ".join(
-        f"SELECT {i} AS i, CAST({cms_bucket_expr(i, 'h', w)} AS INT) AS bucket"
+        f"SELECT {i} AS i, CAST({cms_bucket_expr(i, 'h')} AS INT) AS bucket"
         " FROM cms_h"
-        for i in range(d)
+        for i in range(CMS_D)
     )
     probe_branches = "\n      UNION ALL ".join(
-        f"SELECT k, c, {i} AS i, CAST({cms_bucket_expr(i, 'h', w)} AS INT)"
+        f"SELECT k, c, {i} AS i, CAST({cms_bucket_expr(i, 'h')} AS INT)"
         " AS bucket FROM cms_truth"
-        for i in range(d)
+        for i in range(CMS_D)
     )
     return f"""
     cms_h AS (
@@ -266,21 +229,21 @@ def duckdb_cms_cte(
     """
 
 
-def duckdb_kmv_cte(key_sql: str, table: str, k: int = KMV_K) -> str:
-    """Oracle CTE body of the KMV estimate — the ``k`` smallest distinct
+def duckdb_kmv_cte(key_sql: str, table: str) -> str:
+    """Oracle CTE body of the KMV estimate — the ``KMV_K`` smallest distinct
     key hashes (select from it as ``(kk, est_distinct)``) — same hash,
     same min-k, same integer estimator as ``q_profile_stats``, so the
     driver hash-checks the sketch value-for-value."""
     return f"""
       SELECT kk,
-             CASE WHEN kk < {k} THEN kk
+             CASE WHEN kk < {KMV_K} THEN kk
                   ELSE (kk - 1) * CAST({KMV_SPACE} AS BIGINT) // hk
              END AS est_distinct
       FROM (
         SELECT count(*) AS kk, max(h) AS hk FROM (
           SELECT DISTINCT {duckdb_kmv_hash(key_sql)} AS h
           FROM {table} WHERE {key_sql} IS NOT NULL
-          ORDER BY h LIMIT {k}))
+          ORDER BY h LIMIT {KMV_K}))
     """
 
 
@@ -325,7 +288,7 @@ def _check_levels(levels: int) -> None:
         raise ValueError(f"levels must be in [1, 31], got {levels}")
 
 
-def dyadic_bucket_expr(i: int, lvl: int, u_sql: str, w: int = CMS_W) -> str:
+def dyadic_bucket_expr(i: int, lvl: int, u_sql: str) -> str:
     """Row ``i``'s bucket for dyadic prefix ``u_sql`` at level ``lvl``
     — one SQL string valid verbatim in both engines (all operands
     positive int64)."""
@@ -336,7 +299,7 @@ def dyadic_bucket_expr(i: int, lvl: int, u_sql: str, w: int = CMS_W) -> str:
     return (
         f"((({a} * CAST({u_sql} AS BIGINT)"
         f" + {c} * CAST({lvl} AS BIGINT) + {b})"
-        f" % {H.MINHASH_P}) % {w})"
+        f" % {H.MINHASH_P}) % {CMS_W})"
     )
 
 
@@ -344,8 +307,6 @@ def dyadic_cms_sketch(
     df: DataFrame,
     key: str,
     levels: int = DYADIC_LEVELS,
-    d: int = CMS_D,
-    w: int = CMS_W,
 ) -> DataFrame:
     """Build the dyadic sketch: rows ``(lvl, i, bucket, cnt)``.  ONE
     scan; each row fans out to its (levels+1)·d cells via an array
@@ -357,8 +318,6 @@ def dyadic_cms_sketch(
     oracle) — callers scale/offset real columns into the domain
     (prices in cents, quantities as-is).  Merge = elementwise addition
     on (lvl, i, bucket), exactly like the Count-Min sketch."""
-    if not 1 <= d <= len(_DY_ABC):
-        raise ValueError(f"d must be in [1, {len(_DY_ABC)}], got {d}")
     # levels capped at 31: the affine bucket is a·prefix + c·lvl + b
     # with a, b, c < 2^31 and prefix < 2^levels, so the product stays
     # under 2^62 only for levels ≤ 31.  Beyond that Spark (non-ANSI)
@@ -372,13 +331,13 @@ def dyadic_cms_sketch(
                 F.lit(lvl).cast("int").alias("lvl"),
                 F.lit(i).cast("int").alias("i"),
                 F.expr(
-                    dyadic_bucket_expr(i, lvl, f"shiftright(__v, {lvl})", w)
+                    dyadic_bucket_expr(i, lvl, f"shiftright(__v, {lvl})")
                 )
                 .cast("int")
                 .alias("bucket"),
             )
             for lvl in range(levels + 1)
-            for i in range(d)
+            for i in range(CMS_D)
         ]
     )
     return (
@@ -419,7 +378,6 @@ def dyadic_quantiles(
     sketch_rows: list,
     qs: list[float],
     levels: int = DYADIC_LEVELS,
-    d: int = CMS_D,
 ) -> dict[float, int]:
     """Driver-side quantile answers from a COLLECTED sketch (bounded
     index metadata: ≤ (levels+1)·d·w rows — the same collect budget as
@@ -459,7 +417,7 @@ def dyadic_quantiles(
                     ),
                     0,
                 )
-                for i in range(d)
+                for i in range(CMS_D)
             )
         return total
 

@@ -9,7 +9,9 @@ Spark-first restatement: ``orderBy`` compiles to ``SortExec`` over
 ``RangePartitioning`` — sampled range boundaries (strictly better than the
 reference's fixed byte-chunk grid), per-partition Tungsten external sort
 (spill-safe, the reference's run files), and merge of sorted spills on the
-reduce side (the reference's merge tree, collapsed to one pass).  Nothing
+reduce side.  That merge is one pass of unbounded fan-in, where the
+reference's merge tree bounds each merge to ``mergeJobs`` runs; bounding
+it is ROADMAP §1's open item (a forced-spill 100 MB sort OOMs).  Nothing
 here re-implements sorting; the value added is (a) a *scalable* global
 rank so total order is checkable through an order-insensitive oracle hash
 and (b) explicit run/merge demonstrations for parity.
@@ -52,27 +54,19 @@ def _order_cols(cols, ascending):
     ]
 
 
-def sort_global(
-    df: DataFrame, cols: list[str], ascending: list[bool] | None = None
-) -> DataFrame:
+def sort_global(df: DataFrame, cols: list[str]) -> DataFrame:
     """Total-order sort (reference O6, ``ServerHandler.java:23-80``).
 
     Pure ``orderBy``: Catalyst plans sampling → RangePartitioning →
     per-partition sort; output partitions are globally ordered.
     """
-    return df.orderBy(*_order_cols(cols, ascending))
+    return df.orderBy(*_order_cols(cols, None))
 
 
-def with_global_rank(
-    df: DataFrame,
-    cols: list[str],
-    ascending: list[bool] | None = None,
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
-) -> DataFrame:
+def with_global_rank(df: DataFrame, cols: list[str]) -> DataFrame:
     """Attach a dense 1..N global rank without a single-partition window.
 
-    ``cols`` (with ``ascending`` flags) must form a total order (include a
+    ``cols`` (ascending) must form a total order (include a
     unique tiebreak key) for the rank to be deterministic.
 
     Two-stage scalable construction:
@@ -93,13 +87,10 @@ def with_global_rank(
     No stage moves all rows to one task, so this survives a 100× scale-up
     as well as ``orderBy`` itself does.
     """
-    order = _order_cols(cols, ascending)
-    if num_partitions:
-        ranged = df.repartitionByRange(num_partitions, *order)
-    else:
-        ranged = df.repartitionByRange(*order)
+    order = _order_cols(cols, None)
     ranked = (
-        ranged.sortWithinPartitions(*order)
+        df.repartitionByRange(*order)
+        .sortWithinPartitions(*order)
         .withColumn(_MID, F.monotonically_increasing_id())
         .withColumn(_PID, F.shiftrightunsigned(F.col(_MID), 33).cast("int"))
         .withColumn(
@@ -121,7 +112,7 @@ def with_global_rank(
 
     out = (
         ranked.join(F.broadcast(offsets), _PID)
-        .withColumn(rank_col, (F.col(_OFFSET) + F.col(_LOCAL_RANK)).cast("long"))
+        .withColumn("rank", (F.col(_OFFSET) + F.col(_LOCAL_RANK)).cast("long"))
         .drop(_PID, _LOCAL_RANK, _OFFSET)
     )
     return out

@@ -42,18 +42,18 @@ def _hits(toks: str, words: tuple[str, ...]) -> str:
     return f"size(filter({toks}, t -> t IN ({in_list})))"
 
 
-def text_feature_exprs(text_col: str = "text") -> dict[str, str]:
+def text_feature_exprs() -> dict[str, str]:
     """SINGLE source of the per-doc text-feature SQL sub-expressions
     (``toks``/``n_tokens``/``punct``/``stop_hits``/``quality``/
     ``dup_token_frac``) that ``pipelines.with_curation_features``
     projects — the round-1 punctuation
     inversion survived precisely because this formula was hand-copied
     at every site and had to be found everywhere at once."""
-    toks = H.spark_tokens(text_col)
+    toks = H.spark_tokens("text")
     n_tokens = f"size({toks})"
     punct = (
-        f"(char_length({text_col}) - "
-        f"char_length(regexp_replace({text_col}, '{PUNCT_CLASS}', '')))"
+        "(char_length(text) - "
+        f"char_length(regexp_replace(text, '{PUNCT_CLASS}', '')))"
     )
     stop_hits = _hits(toks, LANG_STOPWORDS["en"])
     # try_divide, not '/': under ANSI mode a zero-length or
@@ -67,7 +67,7 @@ def text_feature_exprs(text_col: str = "text") -> dict[str, str]:
     # curation, which is the wanted behavior.
     quality = (
         f"0.4 * least(CAST({n_tokens} AS DOUBLE) / 64.0, CAST(1 AS DOUBLE)) "
-        f"+ 0.3 * (CAST(1 AS DOUBLE) - try_divide(CAST({punct} AS DOUBLE), char_length({text_col}))) "
+        f"+ 0.3 * (CAST(1 AS DOUBLE) - try_divide(CAST({punct} AS DOUBLE), char_length(text))) "
         f"+ 0.3 * least(try_divide(4.0 * CAST({stop_hits} AS DOUBLE), {n_tokens}), CAST(1 AS DOUBLE))"
     )
     dup_token_frac = (
@@ -467,10 +467,10 @@ def bm25_score_expr(
     return f"({idf} * (CAST({tf} AS DOUBLE) * CAST(2.2 AS DOUBLE)) / {norm})"
 
 
-def bm25_avgdl_expr(sum_dl: str = "sum_dl", n_docs: str = "n_docs") -> str:
+def bm25_avgdl_expr() -> str:
     """Average document length as one double division (shared string,
     same reasoning as ``bm25_score_expr``)."""
-    return f"(CAST({sum_dl} AS DOUBLE) / CAST({n_docs} AS DOUBLE))"
+    return "(CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE))"
 
 
 def _check_bm25_terms(query_terms: tuple[str, ...]) -> None:
@@ -648,16 +648,12 @@ def bm25_topk(
     return top.withColumn("rank", F.row_number().over(w).cast("long"))
 
 
-def duckdb_bm25_cte(
-    query_terms: tuple[str, ...] = BM25_QUERY_TERMS,
-    top_k: int = BM25_TOP_K,
-    table: str = "documents",
-) -> str:
-    """DuckDB replica of ``bm25_topk`` (CTE chain ending in ``bmtop``):
-    same per-doc tf/dl projection, same one-row stats, same shared
-    score-expression STRING — the double math is literally identical
-    text on both engines."""
-    _check_bm25_terms(query_terms)
+def duckdb_bm25_cte() -> str:
+    """DuckDB replica of ``bm25_topk`` over ``BM25_QUERY_TERMS`` (CTE
+    chain ending in ``bmtop``): same per-doc tf/dl projection, same
+    one-row stats, same shared score-expression STRING — the double
+    math is literally identical text on both engines."""
+    query_terms = BM25_QUERY_TERMS
     idx = range(len(query_terms))
     tfs = ",\n             ".join(
         f"len(list_filter(toks, t -> t = '{q}')) AS tf_{i}"
@@ -676,7 +672,7 @@ def duckdb_bm25_cte(
     return f"""
     tokq AS (
       SELECT doc_id, {H.duckdb_tokens("coalesce(text, '')")} AS toks
-      FROM {table}),
+      FROM documents),
     perq AS (
       SELECT doc_id, len(toks) AS dl,
              {tfs}
@@ -689,7 +685,7 @@ def duckdb_bm25_cte(
       SELECT doc_id, dl, CAST({hits} AS BIGINT) AS hits, {score} AS bm25,
              row_number() OVER (ORDER BY {score} DESC, doc_id) AS rank
       FROM perq CROSS JOIN statq
-      QUALIFY rank <= {top_k})
+      QUALIFY rank <= {BM25_TOP_K})
     """
 
 
@@ -709,10 +705,8 @@ def duckdb_bm25_cte(
 # — valid and identical in Java regex and RE2.
 #
 # Residual coverage limits (deliberate): bare 10-digit runs are NOT
-# redacted by DEFAULT (indistinguishable from ids/order numbers — a
-# rule that eats every 10-digit integer destroys non-PII data; the
-# opt-in ``aggressive=True`` mode adds a [2-9]-leading 10-digit rule
-# for corpora where the recall is worth that cost); international
+# redacted (indistinguishable from ids/order numbers — a rule that
+# eats every 10-digit integer destroys non-PII data); international
 # formats beyond the +N-NNN-NNN(N)-NNNN shape and letters-for-digits
 # vanity numbers are out of scope.  Email keeps no digit guards: its
 # own char classes are its boundaries.
@@ -739,14 +733,6 @@ PII_PATTERNS: tuple[tuple[str, str], ...] = (
     (r"\([0-9]{3}\) [0-9]{3}-[0-9]{4}", "<PHONE>"),
 )
 
-# Opt-in shapes appended by ``aggressive=True``: the bare 10-digit US
-# phone (area codes start [2-9]), digit-guarded so ids of 11+ digits
-# stay whole.  Runs last: every separator-bearing form above is more
-# specific.
-PII_AGGRESSIVE_PATTERNS: tuple[tuple[str, str], ...] = (
-    (r"[2-9][0-9]{9}", "<PHONE>"),
-)
-
 _NO_GUARD = frozenset({"<EMAIL>"})
 # Guard character class per placeholder (default: digit boundaries).
 # IBAN bodies are alphanumeric, so their guards must exclude letters
@@ -766,10 +752,8 @@ def _guarded(pat: str, repl: str) -> tuple[str, str]:
     return rf"(^|[^{cls}])({pat})([^{cls}]|$)", rf"$1{repl}$3"
 
 
-def redact_pii(
-    documents: DataFrame, col: str = "text", aggressive: bool = False
-) -> DataFrame:
-    """Replace common PII shapes in ``col`` with typed placeholders —
+def redact_pii(documents: DataFrame) -> DataFrame:
+    """Replace common PII shapes in ``text`` with typed placeholders —
     the curation stage that must run before training text ships.  Pure
     chained ``regexp_replace`` (one codegen projection, zero Python,
     no shuffle); patterns are deterministic cross-engine so the
@@ -784,16 +768,12 @@ def redact_pii(
     the fixpoint for any such chain (alternating separators included);
     pinned by the idempotence test.
 
-    ``aggressive=True`` appends ``PII_AGGRESSIVE_PATTERNS`` (bare
-    10-digit phones) — opt-in because it also eats 10-digit ids; see
-    the pattern-table comment for the tradeoff."""
-    out = F.col(col)
-    pats = PII_PATTERNS + (
-        PII_AGGRESSIVE_PATTERNS if aggressive else ()
-    )
-    for pat, repl in pats:
+    A bare 10-digit run is left alone: it is as likely an id as a
+    phone."""
+    out = F.col("text")
+    for pat, repl in PII_PATTERNS:
         gpat, grepl = _guarded(pat, repl)
         passes = 1 if (gpat, grepl) == (pat, repl) else 2
         for _ in range(passes):
             out = F.regexp_replace(out, gpat, grepl)
-    return documents.withColumn(col, out)
+    return documents.withColumn("text", out)

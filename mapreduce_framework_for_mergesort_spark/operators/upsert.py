@@ -27,7 +27,6 @@ def apply_cdc(
     changes: DataFrame,
     keys: list[str],
     op_col: str = "op",
-    broadcast_touched: bool | None = None,
 ) -> DataFrame:
     """Apply a change set with an op column (I=insert, U=update/replace,
     D=delete) to ``base``.  Change rows carry the full payload for I/U.
@@ -36,17 +35,14 @@ def apply_cdc(
     (dedupe a multi-batch feed by sequence number first — see
     ``streaming/dedup.py`` for the streaming form).
 
-    ``broadcast_touched``: True forces a broadcast anti-join (small
-    change set), False forces shuffle.  The default (None) leaves the
-    choice to Catalyst/AQE — an unconditional broadcast hint would
-    driver-collect an arbitrarily large change set and OOM instead of
-    degrading to a shuffle (or co-located, if bucketed) anti-join.
+    The anti-join strategy is left to Catalyst/AQE — an unconditional
+    broadcast hint would driver-collect an arbitrarily large change set
+    and OOM instead of degrading to a shuffle (or co-located, if
+    bucketed) anti-join.
     """
     touched = (
         changes.where(F.col(op_col).isin("U", "D")).select(*keys).distinct()
     )
-    if broadcast_touched is True:
-        touched = F.broadcast(touched)
     survivors = base.join(touched, keys, "left_anti")
     upserts = changes.where(F.col(op_col).isin("I", "U")).drop(op_col)
     return survivors.unionByName(upserts)

@@ -411,16 +411,15 @@ def normalize_url(url: Column) -> Column:
     )
 
 
-def registrable_domain(host: Column, rules=None) -> Column:
+def registrable_domain(host: Column) -> Column:
     """Site-grain key: public suffix + one label under the packaged
-    PSL snapshot (or any ``psl.PslRules`` passed in, e.g. the full list
-    parsed by ``psl.load_psl_rules(path)``).  Hosts that ARE a public
+    PSL snapshot.  Hosts that ARE a public
     suffix, single labels (``localhost``), and IP literals pass through
     unchanged.  Pure codegen; see ``operators/psl.py`` for the
     algorithm."""
     from .psl import registrable_domain_expr
 
-    return registrable_domain_expr(host, rules)
+    return registrable_domain_expr(host)
 
 
 # ---------------------------------------------------------------------------
@@ -448,12 +447,12 @@ def dedup_by_url(
     )
 
 
-def per_domain_stats(df: DataFrame, url_col: str = "url") -> DataFrame:
+def per_domain_stats(df: DataFrame) -> DataFrame:
     """Site-grain audit: per registrable domain, page count, distinct
     canonical urls, host count — the table a per-domain cap or
     blocklist decision reads.  One shuffle (the groupBy); the distinct
     count is exact (crawl domain cardinality ≪ page cardinality)."""
-    u = F.col(url_col)
+    u = F.col("url")
     host = url_host(u)
     return (
         df.select(

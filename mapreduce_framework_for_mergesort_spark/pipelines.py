@@ -412,12 +412,6 @@ def prepare_training_shards(
     out_dir: str,
     budget: int = 2048,
     shards_per_split: int = 4,
-    splits: sampling.Weights = sampling.DEFAULT_SPLITS,
-    bpe_merges: list[tuple[str, str]] | None = None,
-    mix_weights: dict[str, int] | None = None,
-    mix_epochs: int = 1,
-    mix_stratum: str = "source",
-    mix_total: int | None = None,
     input_checks: list | None = None,
     quarantine_straddlers: bool = False,
     **curate_kwargs,
@@ -441,21 +435,8 @@ def prepare_training_shards(
       min/max — the same mechanism ``operators/layout.py`` measures);
     * the manifest carries per-split docs / tokens / packs / shards —
       all Spark-side aggregates (counts and int64 sums; nothing
-      data-sized ever reaches the driver);
-    * ``bpe_merges`` (a trained ``operators/bpe.py`` model) switches
-      every token budget — packing AND manifest — from whitespace
-      tokens to the trained subword vocabulary (``token_unit`` in the
-      manifest records which); the count is one extra Arrow column in
-      the curation pass, no join, no extra scan.
-    * ``mix_weights`` (integer mixture ratios over ``mix_stratum``, see
-      ``sampling.mix_sources``) applies the budget-driven source
-      mixture to the curated survivors before packing: small domains
-      repeat up to ``mix_epochs`` times (each replica is a distinct
-      packed row carrying its ``epoch``), and manifest docs/tokens
-      count replicas — the tokens a training run actually consumes.
-      Token counts (including BPE) are computed BEFORE the mix explode
-      so each unique document pays its tokenizer cost once; packing
-      orders by (doc_id, epoch) via a synthesized unique key.
+      data-sized ever reaches the driver); budgets count whitespace
+      tokens, per split of ``curate_documents``' ``splits``;
     * ``input_checks`` (a list of ``operators/quality.py`` check
       tuples) gates the RAW input before anything runs: one
       conditional-aggregate scan, and a failing check raises with
@@ -520,20 +501,10 @@ def prepare_training_shards(
     # branch consumes the SAME materialized survivors (lineage cut) —
     # without this the redact→features→dedup pipeline re-executes per
     # split, tripling the dominant cost at any scale.
-    curated = curate_documents(documents, splits=splits, **curate_kwargs)
-    count_col = None
-    if bpe_merges is not None:
-        # tokenizer-true budgets: count under the trained vocabulary
-        # (one extra column in the same pass — no join, no extra scan)
-        from mapreduce_framework_for_mergesort_spark.operators.bpe import (
-            bpe_count_udf,
-        )
-
-        curated = curated.withColumn(
-            "n_bpe_tokens", bpe_count_udf(bpe_merges)(F.col("text"))
-        )
-        count_col = "n_bpe_tokens"
-    curated = materialize(curated, eager=False)
+    curated = materialize(
+        curate_documents(documents, **curate_kwargs), eager=False
+    )
+    splits = curate_kwargs.get("splits", sampling.DEFAULT_SPLITS)
     quarantine_stats = None
     if quarantine_straddlers:  # mode validated at function entry
         # keep-side: the literal 'train' split when one exists, else
@@ -588,28 +559,9 @@ def prepare_training_shards(
         # name under another router must pass through untouched
         # (round-8 review).
         curated = curated.drop("split_cluster")
-    pack_key = "doc_id"
-    if mix_weights is not None:
-        # after the materialize: mix_sources collects per-stratum
-        # counts (one small agg), which becomes the action that fills
-        # the checkpoint — the curation pipeline still runs once
-        curated = sampling.mix_sources(
-            curated,
-            mix_weights,
-            stratum_col=mix_stratum,
-            max_epochs=mix_epochs,
-            total=mix_total,
-        )
-        # unique concatenation key across replicas: injective for
-        # epoch <= mix_epochs, ordered by (doc_id, epoch)
-        curated = curated.withColumn(
-            "__mix_key",
-            F.expr(f"doc_id * {mix_epochs + 1} + epoch"),
-        )
-        pack_key = "__mix_key"
     manifest: dict = {
         "budget": budget,
-        "token_unit": "bpe" if bpe_merges is not None else "whitespace",
+        "token_unit": "whitespace",
         "splits": {},
         **(
             {"quarantine": quarantine_stats}
@@ -624,14 +576,10 @@ def prepare_training_shards(
         # mapInPandas + offsets window + broadcast join) over the
         # split (round-4+ review)
         packed = materialize(
-            sampling.pack_documents(
-                sub, budget, key=pack_key, count_col=count_col
-            ),
-            eager=False,
+            sampling.pack_documents(sub, budget), eager=False
         )
         (
-            packed.drop("__mix_key")
-            .repartitionByRange(shards_per_split, "pack_id")
+            packed.repartitionByRange(shards_per_split, "pack_id")
             .sortWithinPartitions("pack_id", "pack_offset")
             .write.mode("overwrite")
             .parquet(f"{out_dir}/{split}")

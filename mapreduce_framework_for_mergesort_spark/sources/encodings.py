@@ -221,15 +221,15 @@ def decode_lzw(data: bytes, max_output: int = MAX_OUTPUT) -> bytes:
     return bytes(out)
 
 
-def encode_lzw(data: bytes, maxbits: int = 16) -> bytes:
+def encode_lzw(data: bytes) -> bytes:
     """Produce a ``compress(1)``-compatible ``.Z`` stream (block mode)
     — the fixture/test encoder for ``decode_lzw`` and the WET-chain
     transport variant.  Emits CLEAR when the code table fills so the
     reset path is exercised; cross-pinned against the system
     ``uncompress`` in tests, which is what validates the 8-code
-    unit-padding convention both directions."""
-    if not 9 <= maxbits <= 16:
-        raise ValueError(f"invalid LZW max code width {maxbits}")
+    unit-padding convention both directions.  Codes grow to 16 bits,
+    ``compress(1)``'s default."""
+    maxbits = 16
     CLEAR = 256
     first = 257
     cap = 1 << maxbits

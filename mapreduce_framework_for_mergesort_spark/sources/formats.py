@@ -33,21 +33,19 @@ def _with_corrupt(schema: StructType) -> StructType:
     return schema.add(CORRUPT_COL, "string", True)
 
 
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, header: bool = True
-) -> DataFrame:
+def read_csv(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     df = spark.read.csv(
         path,
         schema=_with_corrupt(schema),
-        header=header,
+        header=True,
         mode="PERMISSIVE",
         columnNameOfCorruptRecord=CORRUPT_COL,
     )
     return df.where(df[CORRUPT_COL].isNull()).drop(CORRUPT_COL)
 
 
-def write_csv(df: DataFrame, path: str, header: bool = True) -> None:
-    df.write.mode("overwrite").csv(path, header=header)
+def write_csv(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").csv(path, header=True)
 
 
 def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:

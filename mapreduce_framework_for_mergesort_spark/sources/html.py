@@ -265,14 +265,12 @@ def synthesize_http_response(
     content_type: str = "text/html",
     content_encoding: str | None = None,
     chunked: bool = False,
-    status: int = 200,
-    chunk_size: int = 100,
 ) -> bytes:
     """Deterministic ``application/http; msgtype=response`` payload:
     optional content-coding (stored deflate with closed-form sizes;
     br/zstd via the Arrow codecs — round 11 closed that seam), then
-    optional chunked transfer-coding — the RFC 9112 composition order
-    ``warc._decode_http_body`` must invert."""
+    optional chunked transfer-coding in 100-byte chunks — the RFC 9112
+    composition order ``warc._decode_http_body`` must invert."""
     if content_encoding in ("gzip", "x-gzip"):
         body = W._gzip_member_stored(body)
     elif content_encoding == "deflate":
@@ -296,14 +294,12 @@ def synthesize_http_response(
         # fixtures for the quarantine tests: emit the header, keep the
         # (undecodable) body bytes as-is
         pass
-    headers = [f"HTTP/1.1 {status} OK", f"Content-Type: {content_type}"]
+    headers = ["HTTP/1.1 200 OK", f"Content-Type: {content_type}"]
     if content_encoding and content_encoding != "identity":
         headers.append(f"Content-Encoding: {content_encoding}")
     if chunked:
         headers.append("Transfer-Encoding: chunked")
-        chunks = [
-            body[i : i + chunk_size] for i in range(0, len(body), chunk_size)
-        ]
+        chunks = [body[i : i + 100] for i in range(0, len(body), 100)]
         body = (
             b"".join(
                 b"%x\r\n" % len(c) + c + b"\r\n" for c in chunks

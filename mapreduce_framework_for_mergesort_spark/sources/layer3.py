@@ -298,21 +298,19 @@ def _imdct_matrices():
 
 def spectrum_to_subbands(
     granules: list[list[float]],
-    overlap: list[list[float]] | None = None,
 ) -> tuple[list[list[list[float]]], list[list[float]]]:
     """Requantized spectra → subband-domain samples: alias reduction,
-    windowed long-block IMDCT, overlap-add, frequency inversion.
-    Returns ``(per_granule[32][18], carry_overlap[32][18])`` — the
-    carry feeds the next frame's first granule.  This is everything
+    windowed long-block IMDCT, overlap-add (from silence before the
+    first granule), frequency inversion.  Returns
+    ``(per_granule[32][18], carry_overlap[32][18])`` — the carry a
+    next frame's first granule would see.  This is everything
     before the polyphase matrixing (the D-window data seam).
     Vectorized: alias butterflies and the 32 IMDCTs are numpy slice
     ops and ONE (36×18)@(18×32) matmul per granule."""
     import numpy as np
 
     cosm, cs, ca = _imdct_matrices()
-    ov = np.array(
-        overlap if overlap is not None else [[0.0] * 18] * 32
-    ).T  # (18, 32)
+    ov = np.zeros((18, 32))
     result = []
     for xr in granules:
         x = np.asarray(xr, dtype=float).copy()
@@ -345,7 +343,6 @@ def spectrum_to_subbands(
 
 def encode_tone_frame(
     bins: list[tuple[int, int]],
-    global_gain: int = 210,
     scalefac_compress: int = 0,
     scfsi: int = 0,
 ) -> bytes:
@@ -405,7 +402,7 @@ def encode_tone_frame(
     for gr in range(2):
         si.write(part2[gr] + granule_bits, 12)  # part2_3_length
         si.write(0, 9)   # big_values
-        si.write(global_gain, 8)
+        si.write(210, 8)  # global_gain: unit amplitude
         si.write(scalefac_compress, 4)
         si.write(0, 1)   # windows_switching_flag
         si.write(0, 15)  # table_select x3 (unused: big_values = 0)

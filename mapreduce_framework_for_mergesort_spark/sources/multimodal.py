@@ -346,63 +346,23 @@ def _png_chunk(typ: bytes, data: bytes) -> bytes:
     )
 
 
-def _encode_png(
-    px: list[int],
-    width: int,
-    h: int,
-    level: int = 0,
-    filter_type: int = 0,
-) -> bytes:
+def _encode_png(px: list[int], width: int, h: int) -> bytes:
     """The ONE PNG encoder (synthesis and band tiling share it):
     logical top-down grayscale pixels → 8-bit greyscale (color type 0)
-    PNG.  ``level=0`` (the pipeline default) emits stored
-    deflate blocks — size closed-form, oracle-pinnable; ``level>0``
-    really compresses via zlib (test path).  ``filter_type`` applies
-    one of the five PNG scanline filters on encode — the decode side
-    must invert all of them, and the round-trip test drives each."""
-    import zlib
-
-    if filter_type not in (0, 1, 2, 3, 4):
-        raise ValueError(f"unknown PNG filter type {filter_type}")
+    PNG, every scanline unfiltered (type 0), stored deflate blocks —
+    size closed-form, oracle-pinnable."""
     ihdr = (
         width.to_bytes(4, "big")
         + h.to_bytes(4, "big")
         + bytes([8, 0, 0, 0, 0])  # depth 8, grey, deflate, adaptive, no interlace
     )
-    raw = bytearray()
-    prev = bytes(width)
-    for y in range(h):
-        row = bytes(px[y * width : (y + 1) * width])
-        raw.append(filter_type)
-        if filter_type == 0:
-            raw += row
-        elif filter_type == 1:  # Sub
-            raw += bytes(
-                (row[x] - (row[x - 1] if x else 0)) & 0xFF
-                for x in range(width)
-            )
-        elif filter_type == 2:  # Up
-            raw += bytes((row[x] - prev[x]) & 0xFF for x in range(width))
-        elif filter_type == 3:  # Average
-            raw += bytes(
-                (row[x] - ((row[x - 1] if x else 0) + prev[x]) // 2) & 0xFF
-                for x in range(width)
-            )
-        else:  # Paeth
-            raw += bytes(
-                (row[x] - _paeth(row[x - 1] if x else 0, prev[x], prev[x - 1] if x else 0)) & 0xFF
-                for x in range(width)
-            )
-        prev = row
-    idat = (
-        _stored_zlib(bytes(raw))
-        if level == 0
-        else zlib.compress(bytes(raw), level)
+    raw = b"".join(
+        b"\x00" + bytes(px[y * width : (y + 1) * width]) for y in range(h)
     )
     return (
         PNG_SIG
         + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", idat)
+        + _png_chunk(b"IDAT", _stored_zlib(raw))
         + _png_chunk(b"IEND", b"")
     )
 
@@ -1915,7 +1875,7 @@ FRAME_SCHEMA = (
 IMG_BAND_ROWS = 4  # image "frames" = row bands of 4 (the patching op)
 
 
-def frame_stub(payload: bytes, modality: str, chunk: int = FRAME_BYTES) -> list[bytes]:
+def frame_stub(payload: bytes, modality: str) -> list[bytes]:
     """Frame-decode seam.  For the deterministic 'text' stand-in, frames
     are fixed-width byte windows (a proxy for GOP/keyframe decode — same
     1→N shape, same batch mechanics).  For 'image' the op is REAL:
@@ -1928,7 +1888,10 @@ def frame_stub(payload: bytes, modality: str, chunk: int = FRAME_BYTES) -> list[
     if modality == "text":
         if not payload:
             return []
-        return [payload[i : i + chunk] for i in range(0, len(payload), chunk)]
+        return [
+            payload[i : i + FRAME_BYTES]
+            for i in range(0, len(payload), FRAME_BYTES)
+        ]
     if modality == "image":
         w, h, px = _bmp_pixels(payload)
         return [

@@ -1100,7 +1100,8 @@ class PdfDocument:
         # raise, so the record routes to `corrupt`
         raise ValueError(f"object {want} not found in object stream {stm_num}")
 
-    def resolve(self, obj, depth: int = 0):
+    def resolve(self, obj):
+        depth = 0
         while isinstance(obj, Ref):
             if depth > 32:
                 raise ValueError("reference cycle")

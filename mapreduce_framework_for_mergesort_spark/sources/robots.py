@@ -234,9 +234,8 @@ def parse_sitemap(xml_text: str | bytes) -> dict:
 SITEMAP_SCHEMA = "sitemap_host string, loc string, lastmod string"
 
 
-def sitemap_urls(sitemaps: DataFrame, host_col: str = "host",
-                 xml_col: str = "sitemap_xml") -> DataFrame:
-    """Distributed sitemap fan-out: (host, xml) rows → one row per
+def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
+    """Distributed sitemap fan-out: (host, sitemap_xml) rows → one row per
     listed URL with its lastmod — malformed documents contribute zero
     rows instead of killing the pass (count them with a direct
     ``parse_sitemap`` audit when needed).  Nested ``sitemapindex``
@@ -249,7 +248,7 @@ def sitemap_urls(sitemaps: DataFrame, host_col: str = "host",
     def fan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             hosts, locs, mods = [], [], []
-            for host, xml in zip(pdf[host_col], pdf[xml_col]):
+            for host, xml in zip(pdf["host"], pdf["sitemap_xml"]):
                 try:
                     parsed = parse_sitemap(
                         bytes(xml)
@@ -272,7 +271,6 @@ def sitemap_urls(sitemaps: DataFrame, host_col: str = "host",
 def plan_recrawl(
     sitemap_entries: DataFrame,
     corpus: DataFrame,
-    url_col: str = "url",
     fetched_at_col: str | None = None,
 ) -> DataFrame:
     """Incremental recrawl plan: sitemap entries diffed against the
@@ -325,7 +323,7 @@ def plan_recrawl(
         lastmod_ts.alias("lastmod_ts"),
     )
     have = corpus.select(
-        normalize_url(F.col(url_col)).alias("url_norm"),
+        normalize_url(F.col("url")).alias("url_norm"),
         (
             F.col(fetched_at_col).cast("timestamp")
             if fetched_at_col
@@ -359,9 +357,6 @@ def audit_robots_compliance(
     pages: DataFrame,
     robots: DataFrame,
     agent: str,
-    url_col: str = "url",
-    robots_host_col: str = "host",
-    robots_text_col: str = "robots_txt",
 ) -> DataFrame:
     """Retro-compliance audit: every page URL judged against its
     host's robots.txt for ``agent`` → ``(url, url_host, allowed,
@@ -373,7 +368,7 @@ def audit_robots_compliance(
     ``where(NOT allowed)`` into the takedown path
     (``streaming/ingest.retract_documents``) to close the governance
     loop."""
-    u = F.col(url_col)
+    u = F.col("url")
     joined = pages.select(
         u.alias("url"),
         url_host(u).alias("url_host"),
@@ -385,8 +380,8 @@ def audit_robots_compliance(
         ).alias("__path"),
     ).join(
         robots.select(
-            F.lower(F.col(robots_host_col)).alias("url_host"),
-            F.col(robots_text_col).alias("__robots"),
+            F.lower(F.col("host")).alias("url_host"),
+            F.col("robots_txt").alias("__robots"),
         ),
         "url_host",
         "left",

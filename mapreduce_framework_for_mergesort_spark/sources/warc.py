@@ -72,8 +72,6 @@ def _record_bytes(
     rtype: str,
     uri: str | None,
     payload: bytes,
-    content_type: str = "text/plain",
-    date: str = WARC_FIXED_DATE,
 ) -> bytes:
     """One WARC/1.1 record.  The record id is a content-derived urn so
     synthesis is bit-deterministic (no uuid4/clock)."""
@@ -83,10 +81,10 @@ def _record_bytes(
     headers = ["WARC/1.1"]
     headers.append(f"WARC-Type: {rtype}")
     headers.append(f"WARC-Record-ID: <urn:sha256:{rid}>")
-    headers.append(f"WARC-Date: {date}")
+    headers.append(f"WARC-Date: {WARC_FIXED_DATE}")
     if uri is not None:
         headers.append(f"WARC-Target-URI: {uri}")
-    headers.append(f"Content-Type: {content_type}")
+    headers.append("Content-Type: text/plain")
     headers.append(f"Content-Length: {len(payload)}")
     head = _CRLF.join(h.encode("utf-8") for h in headers)
     return head + _CRLF + _CRLF + payload + _CRLF + _CRLF
@@ -101,18 +99,13 @@ def _gzip_member_stored(data: bytes) -> bytes:
     return co.compress(data) + co.flush()
 
 
-def synthesize_warc(
-    records: list[tuple[str, str | None, bytes]],
-    gzip_members: bool = True,
-) -> bytes:
+def synthesize_warc(records: list[tuple[str, str | None, bytes]]) -> bytes:
     """Deterministic WARC stream from ``(warc_type, target_uri,
-    payload)`` triples.  ``gzip_members=True`` emits the Common Crawl
-    layout — each record its own gzip member, concatenated —
-    exercising the member-walk read path; False emits plain WARC."""
-    blobs = [_record_bytes(t, u, p) for t, u, p in records]
-    if gzip_members:
-        return b"".join(_gzip_member_stored(b) for b in blobs)
-    return b"".join(blobs)
+    payload)`` triples in the Common Crawl layout — each record its own
+    gzip member, concatenated — exercising the member-walk read path."""
+    return b"".join(
+        _gzip_member_stored(_record_bytes(t, u, p)) for t, u, p in records
+    )
 
 
 def _parse_plain_records(data: bytes) -> list[dict]:
@@ -356,9 +349,7 @@ def read_warc(spark, path: str) -> DataFrame:
     return files.mapInPandas(fan_out, WARC_RECORD_SCHEMA)
 
 
-def warc_shard_bytes(
-    documents: DataFrame, n_shards: int = 8, gzip_members: bool = True
-) -> DataFrame:
+def warc_shard_bytes(documents: DataFrame, n_shards: int = 8) -> DataFrame:
     """Sink half: documents → ``n_shards`` WARC shard blobs,
     deterministic (shard = doc_id % n_shards; records ordered by
     doc_id inside a shard; content-derived record ids).  Emitted as a
@@ -392,15 +383,14 @@ def warc_shard_bytes(
     ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             members = [
-                _gzip_member_stored(rec) if gzip_members else rec
-                for rec in (
+                _gzip_member_stored(
                     _record_bytes(
                         "resource",
                         f"urn:doc:{int(doc_id)}",
                         (text or "").encode("utf-8"),
                     )
-                    for doc_id, text in zip(pdf["doc_id"], pdf["text"])
                 )
+                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
             ]
             yield pd.DataFrame(
                 {

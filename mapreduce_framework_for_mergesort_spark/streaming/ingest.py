@@ -491,32 +491,24 @@ def ingest_documents_stream(
     index_path: str,
     out_path: str,
     checkpoint: str,
-    trigger: dict | None = None,
 ):
-    """Start the ingestion query; returns the ``StreamingQuery``.
-
-    ``trigger``: keyword args for ``DataStreamWriter.trigger``.  The
-    default ``None`` means ``{"availableNow": True}`` — drain what's
-    there and stop (tests, scheduled catch-up runs).  For a live feed
-    pass e.g. ``{"processingTime": "30 seconds"}``, or ``{}`` for
-    default as-fast-as-possible microbatches."""
+    """Start the ingestion query; returns the ``StreamingQuery``.  The
+    trigger is ``availableNow``: drain what's there and stop (scheduled
+    catch-up runs)."""
 
     def step(batch: DataFrame, epoch: int) -> None:
         # epoch-keyed: the stream path is exactly-once under retries
         accept_batch(batch, index_path, out_path, epoch=epoch)
 
-    writer = docs_stream.writeStream.foreachBatch(step).option(
-        "checkpointLocation", checkpoint
+    return (
+        docs_stream.writeStream.foreachBatch(step)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    trig = {"availableNow": True} if trigger is None else trigger
-    if trig:
-        writer = writer.trigger(**trig)
-    return writer.start()
 
 
-def compact_ingest_state(
-    spark, index_path: str, out_path: str, target_files: int = 1
-) -> dict:
+def compact_ingest_state(spark, index_path: str, out_path: str) -> dict:
     """Fold each surface's CLOSED epochs (strictly below its latest —
     the only epoch the replay guard permits replaying) into one
     consolidated partition per surface: the maintenance step a
@@ -599,16 +591,11 @@ def compact_ingest_state(
             )
 
     stats = {
-        "corpus": compact_epochs(
-            spark, out_path, target_files, transform=tr
-        ),
-        "hashes": compact_epochs(
-            spark, f"{index_path}/hashes", target_files, transform=tr
-        ),
+        "corpus": compact_epochs(spark, out_path, transform=tr),
+        "hashes": compact_epochs(spark, f"{index_path}/hashes", transform=tr),
         "bands": compact_epochs(
             spark,
             f"{index_path}/bands",
-            target_files,
             partition_by=("band_id",),
             transform=tr,
         ),

@@ -157,7 +157,6 @@ def run_to_parquet(
     stream_df: DataFrame,
     path: str,
     checkpoint: str,
-    output_mode: str = "append",
 ) -> None:
     """Drain a stream into a parquet directory with exactly-once
     semantics: the checkpoint records source offsets + the file-sink
@@ -166,13 +165,14 @@ def run_to_parquet(
     re-drain over already-committed input is a no-op).  This is the
     durable counterpart of ``run_to_memory`` — the shape a production
     pipeline uses for stream → table materialization; readers see only
-    manifest-committed files, so a mid-write crash is invisible.
+    manifest-committed files, so a mid-write crash is invisible.  The
+    output mode is ``append``.
     """
     _drain(
         stream_df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode),
+        .outputMode("append"),
         stream_df.sparkSession,
         checkpoint,
     )

@@ -251,13 +251,12 @@ def _fold(
 def _sessionize(
     events: DataFrame,
     gap: str,
-    watermark: str,
     watermarked: bool,
     late_counter=None,
 ) -> DataFrame:
     """Plan ``_fold`` over user buckets for both streaming entry points:
-    by the user's own max time, or (``watermarked``) by the query
-    watermark with one event-time timeout per bucket."""
+    by the user's own max time, or (``watermarked``) by the query's
+    2-hour watermark with one event-time timeout per bucket."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     gap_us = _gap_to_us(gap)
@@ -298,7 +297,7 @@ def _sessionize(
         cols.append("ts")  # EventTimeTimeout needs the watermarked column
     bucket = F.pmod(F.xxhash64("user_id"), F.lit(buckets)).alias("bucket")
     return _to_output(
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .select(*cols, bucket)
         .groupBy("bucket")
         .applyInPandasWithState(
@@ -316,7 +315,6 @@ def _sessionize(
 def sessionize_stream(
     events: DataFrame,
     gap: str = DEFAULT_GAP,
-    watermark: str = "2 hours",
     late_counter=None,
 ) -> DataFrame:
     """Streaming gap sessionization via ``applyInPandasWithState``,
@@ -330,9 +328,7 @@ def sessionize_stream(
     counter means the source needs the watermarked contract
     (``sessionize_stream_watermarked``).
     """
-    return _sessionize(
-        events, gap, watermark, watermarked=False, late_counter=late_counter
-    )
+    return _sessionize(events, gap, watermarked=False, late_counter=late_counter)
 
 
 def _to_output(sessions: DataFrame) -> DataFrame:
@@ -350,9 +346,7 @@ def _to_output(sessions: DataFrame) -> DataFrame:
     )
 
 
-def sessionize_stream_watermarked(
-    events: DataFrame, gap: str = DEFAULT_GAP, watermark: str = "2 hours"
-) -> DataFrame:
+def sessionize_stream_watermarked(events: DataFrame) -> DataFrame:
     """Watermark-gated gap sessionization for out-of-order sources: the
     watermarked contract (only tests reach it); ``sessionize_stream``
     serves ``q_stream_sessionize``.
@@ -368,4 +362,4 @@ def sessionize_stream_watermarked(
     finite input, so the availableNow-drain hash check uses
     ``sessionize_stream`` instead.
     """
-    return _sessionize(events, gap, watermark, watermarked=True)
+    return _sessionize(events, DEFAULT_GAP, watermarked=True)

@@ -18,21 +18,18 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def windowed_event_aggregate(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling-window counts/sums per event_type.
+def windowed_event_aggregate(events: DataFrame) -> DataFrame:
+    """Tumbling one-hour-window counts/sums per event_type, under a
+    2-hour watermark.
 
     Columns are aliased to match the batch oracle shape
     (``q_events_sessionize``): window_start, event_type, n_events,
     total_value.
     """
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "2 hours")
         .groupBy(
-            F.window("ts", window_duration).alias("w"),
+            F.window("ts", "1 hour").alias("w"),
             "event_type",
         )
         .agg(

@@ -53,7 +53,6 @@ def sf_oracle() -> str:
 # summary reports how many tests the slow tier skipped, so a default
 # run is never mistaken for a full one.
 SLOW_TESTS = frozenset({
-    "tests/test_bpe.py::test_bpe_shards_tokenizer_true_budgets",
     "tests/test_bpe.py::test_train_bpe_textbook_merge_sequence",
     "tests/test_examples.py::test_example_runs[crawl_to_corpus]",
     "tests/test_examples.py::test_example_runs[curate_and_shard]",
@@ -75,7 +74,6 @@ SLOW_TESTS = frozenset({
     "tests/test_llm_ops.py::test_prepare_training_shards_end_to_end",
     "tests/test_llm_ops.py::test_prepare_training_shards_leakage_safe",
     "tests/test_llm_ops.py::test_prepare_training_shards_quarantines_straddlers",
-    "tests/test_llm_ops.py::test_prepare_training_shards_with_mixture",
     "tests/test_llm_ops.py::test_text_keys_null_bearing_corpus",
     "tests/test_pq.py::test_ivfadc_append_empty_batch_does_not_poison_the_index",
     "tests/test_pq.py::test_ivfadc_delete_lifecycle",

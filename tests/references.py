@@ -3,27 +3,34 @@
 Each one is the canonical or oracle-side spelling of something the
 engine computes another way: the Spark SQL expressions the Arrow
 kernels are pinned to row for row, DuckDB replicas of operators, the
-distributed k-means trainer the driver-side trainer must equal, and
-closed-form container sizes.  No production path calls them, so they
-live with the tests.
+distributed k-means trainer the driver-side trainer must equal,
+closed-form container sizes, and the encoder forms the package does
+not write (other PNG filters and zlib levels, narrower LZW codes,
+other Layer III gains, plain WARC) that the decoder tests feed in.  No
+production path calls them, so they live with the tests.
 """
 
 from __future__ import annotations
 
 import os
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from mapreduce_framework_for_mergesort_spark.functions import hashing as H
 from mapreduce_framework_for_mergesort_spark.functions import vector as V
+from mapreduce_framework_for_mergesort_spark.operators import bpe as B
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 from mapreduce_framework_for_mergesort_spark.operators import layout as L
 from mapreduce_framework_for_mergesort_spark.operators import similarity as S
 from mapreduce_framework_for_mergesort_spark.operators import sketches as K
 from mapreduce_framework_for_mergesort_spark.operators import text as T
 from mapreduce_framework_for_mergesort_spark.sources import containers as CT
+from mapreduce_framework_for_mergesort_spark.sources import encodings as E
+from mapreduce_framework_for_mergesort_spark.sources import layer3 as L3
 from mapreduce_framework_for_mergesort_spark.sources import multimodal as M
+from mapreduce_framework_for_mergesort_spark.sources import warc as W
 
 
 # --- Spark SQL spellings the Arrow kernels are pinned to -------------------
@@ -345,17 +352,14 @@ def duckdb_chunk_sql(
     """
 
 
-def duckdb_redact_sql(col: str = "text", aggressive: bool = False) -> str:
+def duckdb_redact_sql(col: str = "text") -> str:
     """The oracle half of ``redact_pii``: the identical chain of
     replaces as a DuckDB expression (RE2 runs the same guarded
     patterns; only the replacement backref syntax differs, ``$n`` →
     ``\\n``).  Pinned equal to the Spark operator row-for-row in
     tests, which is what makes the 'exactly oracle-able' claim real."""
     out = col
-    pats = T.PII_PATTERNS + (
-        T.PII_AGGRESSIVE_PATTERNS if aggressive else ()
-    )
-    for pat, repl in pats:
+    for pat, repl in T.PII_PATTERNS:
         gpat, grepl = T._guarded(pat, repl)
         passes = 1 if (gpat, grepl) == (pat, repl) else 2
         grepl = grepl.replace("$1", r"\1").replace("$3", r"\3")
@@ -420,3 +424,207 @@ def ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
     g = cl(y - M._JPEGC_G_CB * (cb - 128) - M._JPEGC_G_CR * (cr - 128))
     b = cl(y + M._JPEGC_B_CB * (cb - 128))
     return r, g, b
+
+
+# --- BPE token counts -------------------------------------------------------
+
+def bpe_count_udf(merges: B.Merges):
+    """Arrow-batched text → BPE token COUNT under ``merges``: the
+    per-document subword count the BPE tests pin apply, compression and
+    budgets against (``B.segment_word`` over the shared tokenizer)."""
+    from pyspark.sql.functions import pandas_udf
+
+    ranks = {p: i for i, p in enumerate(merges)}
+
+    @pandas_udf("long")
+    def count(texts: pd.Series) -> pd.Series:
+        counts = H.Memo(lambda w: len(B.segment_word(w, ranks)))
+        return texts.map(
+            lambda text: sum(map(counts.__getitem__, H.tokenize(text or "")))
+        )
+
+    return count
+
+
+# --- inputs for the decoders: forms the package encoders do not write -------
+
+def encode_lzw(data: bytes, maxbits: int) -> bytes:
+    """``E.encode_lzw`` at any max code width 9..16: the ``.Z`` streams
+    the ``decode_lzw`` tests read at every width (the package encoder
+    writes 16-bit streams only)."""
+    if not 9 <= maxbits <= 16:
+        raise ValueError(f"invalid LZW max code width {maxbits}")
+    CLEAR = 256
+    first = 257
+    cap = 1 << maxbits
+    head = bytes((E.LZW_MAGIC[0], E.LZW_MAGIC[1], 0x80 | maxbits))
+    if not data:
+        return head
+    body = bytearray()
+    nbits = 9
+    bitbuf = 0
+    bitcnt = 0
+    seg_bits = 0
+
+    def emit(code: int) -> None:
+        nonlocal bitbuf, bitcnt, seg_bits
+        bitbuf |= code << bitcnt
+        bitcnt += nbits
+        seg_bits += nbits
+        while bitcnt >= 8:
+            body.append(bitbuf & 0xFF)
+            bitbuf >>= 8
+            bitcnt -= 8
+
+    def pad_unit() -> None:
+        nonlocal bitcnt, seg_bits
+        rem = seg_bits % (nbits * 8)
+        if rem:
+            bitcnt += nbits * 8 - rem  # zero bits
+            while bitcnt >= 8:
+                body.append(bitbuf & 0xFF)  # low byte is already 0-padded
+                _drop()
+        seg_bits = 0
+
+    def _drop() -> None:
+        nonlocal bitbuf, bitcnt
+        bitbuf >>= 8
+        bitcnt -= 8
+
+    table: dict[bytes, int] = {bytes([i]): i for i in range(256)}
+    free = first
+    # same maxcode state machine as the decoder, including the
+    # maxbits==9 bug-compat fire past maxbits (see decode_lzw)
+    maxcode = (1 << nbits) - 1
+    w = b""
+    for byte in data:
+        c = bytes([byte])
+        wc = w + c
+        if wc in table:
+            w = wc
+            continue
+        emit(table[w])
+        # width check AFTER the write, with free still excluding this
+        # step's new entry — compress(1)'s output() order; the decoder
+        # checks before its NEXT read with the same free value, so
+        # both switch between the same two codes
+        if free > maxcode:
+            pad_unit()
+            nbits += 1
+            maxcode = (
+                (1 << maxbits) if nbits == maxbits else (1 << nbits) - 1
+            )
+        if free < cap:
+            table[wc] = free
+            free += 1
+        else:
+            # table full: CLEAR and start over (real compress gates
+            # this on the ratio; any policy decodes identically)
+            emit(CLEAR)
+            pad_unit()
+            nbits = 9
+            maxcode = (1 << nbits) - 1
+            table = {bytes([i]): i for i in range(256)}
+            free = first
+        w = c
+    emit(table[w])
+    if bitcnt:
+        body.append(bitbuf & 0xFF)
+    return head + bytes(body)
+
+
+def encode_tone_frame(bins: list[tuple[int, int]], global_gain: int) -> bytes:
+    """``L3.encode_tone_frame`` with ``global_gain`` rewritten in both
+    granules' side info (the package encoder writes 210, unit
+    amplitude).  The 8-bit field sits after the 4-byte header, the
+    18-bit frame prelude, and each granule's part2_3_length (12) and
+    big_values (9); a granule's side info is 59 bits."""
+    frame = bytearray(L3.encode_tone_frame(bins))
+    for start in (32 + 18 + 21, 32 + 18 + 59 + 21):
+        for k in range(8):
+            byte, shift = divmod(start + k, 8)
+            mask = 0x80 >> shift
+            if (global_gain >> (7 - k)) & 1:
+                frame[byte] |= mask
+            else:
+                frame[byte] &= ~mask
+    return bytes(frame)
+
+
+def encode_png(
+    px: list[int], width: int, h: int, level: int, filter_type: int
+) -> bytes:
+    """``M._encode_png`` with any of the five PNG scanline filters and
+    any zlib level (0 = the package's stored blocks): the inputs the
+    PNG decoder must invert, which the package encoder never writes."""
+    import zlib
+
+    if filter_type not in (0, 1, 2, 3, 4):
+        raise ValueError(f"unknown PNG filter type {filter_type}")
+    ihdr = (
+        width.to_bytes(4, "big")
+        + h.to_bytes(4, "big")
+        + bytes([8, 0, 0, 0, 0])  # depth 8, grey, deflate, adaptive, no interlace
+    )
+    raw = bytearray()
+    prev = bytes(width)
+    for y in range(h):
+        row = bytes(px[y * width : (y + 1) * width])
+        raw.append(filter_type)
+        if filter_type == 0:
+            raw += row
+        elif filter_type == 1:  # Sub
+            raw += bytes(
+                (row[x] - (row[x - 1] if x else 0)) & 0xFF
+                for x in range(width)
+            )
+        elif filter_type == 2:  # Up
+            raw += bytes((row[x] - prev[x]) & 0xFF for x in range(width))
+        elif filter_type == 3:  # Average
+            raw += bytes(
+                (row[x] - ((row[x - 1] if x else 0) + prev[x]) // 2) & 0xFF
+                for x in range(width)
+            )
+        else:  # Paeth
+            raw += bytes(
+                (row[x] - M._paeth(row[x - 1] if x else 0, prev[x], prev[x - 1] if x else 0)) & 0xFF
+                for x in range(width)
+            )
+        prev = row
+    idat = (
+        M._stored_zlib(bytes(raw))
+        if level == 0
+        else zlib.compress(bytes(raw), level)
+    )
+    return (
+        M.PNG_SIG
+        + M._png_chunk(b"IHDR", ihdr)
+        + M._png_chunk(b"IDAT", idat)
+        + M._png_chunk(b"IEND", b"")
+    )
+
+
+def synthesize_warc(
+    records: list[tuple[str, str | None, bytes]], gzip_members: bool
+) -> bytes:
+    """``W.synthesize_warc`` (gzip member per record), or with
+    ``gzip_members=False`` the same records as one plain WARC stream —
+    the uncompressed layout the reader also accepts."""
+    if gzip_members:
+        return W.synthesize_warc(records)
+    return b"".join(W._record_bytes(t, u, p) for t, u, p in records)
+
+
+# --- DuckDB word n-grams at any width ---------------------------------------
+
+def duckdb_shingles(toks: str, n: int) -> str:
+    """``H.duckdb_shingles`` at window width ``n`` (the package spells
+    ``SHINGLE_N`` only): the oracle for the ``DECONTAM_N``-gram
+    contamination operators."""
+    parts = ", ".join(f"{toks}[i + {k}]" for k in range(n))
+    return (
+        f"CASE WHEN len({toks}) >= {n} THEN "
+        f"list_distinct(list_transform(range(1, len({toks}) - {n - 2}), "
+        f"i -> concat_ws(' ', {parts}))) "
+        f"ELSE [] END"
+    )

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_for_mergesort_spark.io import load_table
 from mapreduce_framework_for_mergesort_spark.operators import bpe as B
+from tests import references as R
 
 
 def _toy_corpus(spark):
@@ -51,7 +52,7 @@ def test_bpe_distributed_apply_matches_reference(spark):
     got = {
         r["doc_id"]: r["n"]
         for r in docs.select(
-            "doc_id", B.bpe_count_udf(merges)(F.col("text")).alias("n")
+            "doc_id", R.bpe_count_udf(merges)(F.col("text")).alias("n")
         ).collect()
     }
     from mapreduce_framework_for_mergesort_spark.functions.hashing import (
@@ -77,7 +78,7 @@ def test_bpe_train_deterministic_and_counts_compress(spark, sf_oracle):
     joined = (
         docs.select(
             "doc_id",
-            B.bpe_count_udf(m1)(F.col("text")).alias("n_bpe_tokens"),
+            R.bpe_count_udf(m1)(F.col("text")).alias("n_bpe_tokens"),
         )
         .join(
             docs.select(
@@ -129,26 +130,6 @@ def test_incremental_trainer_equals_naive_recompute(spark, sf_oracle):
     assert got == want
 
 
-def test_bpe_shards_tokenizer_true_budgets(spark, sf_oracle, tmp_path):
-    """prepare_training_shards(bpe_merges=...) packs and accounts in
-    trained-subword tokens: the manifest token totals equal the BPE
-    counts of the surviving docs, not the whitespace counts."""
-    from mapreduce_framework_for_mergesort_spark import pipelines
-
-    docs = load_table(spark, sf_oracle, "documents").orderBy("doc_id").limit(120)
-    merges = B.train_bpe(docs, num_merges=20, top_words=1000)
-    man = pipelines.prepare_training_shards(
-        docs, str(tmp_path / "sh"), budget=256, shards_per_split=2,
-        min_quality=0.3, bpe_merges=merges,
-    )
-    assert man["token_unit"] == "bpe"
-    for split, info in man["splits"].items():
-        back = spark.read.parquet(info["path"])
-        rows = back.select("n_tokens", "n_bpe_tokens").collect()
-        assert all(r["n_tokens"] == r["n_bpe_tokens"] for r in rows)
-        assert info["tokens"] == sum(r["n_bpe_tokens"] for r in rows)
-
-
 def test_bpe_counts_feed_sequence_packing(spark):
     """BPE counts compose with pack_documents(count_col=...) —
     tokenizer-true packing, token-conserving."""
@@ -157,7 +138,7 @@ def test_bpe_counts_feed_sequence_packing(spark):
     docs = _toy_corpus(spark)
     merges = B.train_bpe(docs, num_merges=4)
     counted = docs.withColumn(
-        "n_bpe_tokens", B.bpe_count_udf(merges)(F.col("text"))
+        "n_bpe_tokens", R.bpe_count_udf(merges)(F.col("text"))
     )
     packed = sampling.pack_documents(
         counted, budget=4, count_col="n_bpe_tokens"

@@ -14,6 +14,7 @@ from hypothesis import strategies as st
 
 from mapreduce_framework_for_mergesort_spark.sources import html as H
 from mapreduce_framework_for_mergesort_spark.sources import warc as W
+from tests import references as R
 
 # ---------------------------------------------------------------------------
 # charset detection
@@ -122,9 +123,10 @@ def test_property_escape_extract_inverse(text):
 # ---------------------------------------------------------------------------
 
 
-def _resp(doc_id=1, text="hello crawl", **kw):
+def _resp(doc_id=1, text="hello crawl", status=200, **kw):
     page = H.synthesize_html(doc_id, text, "utf-8", True)
-    return H.synthesize_http_response(page, **kw)
+    resp = H.synthesize_http_response(page, **kw)
+    return resp.replace(b"HTTP/1.1 200", b"HTTP/1.1 %d" % status, 1)
 
 
 def test_classify_ok_all_transports():
@@ -333,7 +335,7 @@ def test_read_warc_member_idx_is_the_seek_contract(spark, tmp_path):
         (i, i) for i in range(5)
     ]
     # one member holding all records
-    one = W._gzip_member_stored(W.synthesize_warc(recs, gzip_members=False))
+    one = W._gzip_member_stored(R.synthesize_warc(recs, False))
     (tmp_path / "b.warc.gz").write_bytes(one)
     rows = W.read_warc(spark, str(tmp_path / "b.warc.gz")).collect()
     assert sorted((r["record_idx"], r["member_idx"]) for r in rows) == [
@@ -341,7 +343,7 @@ def test_read_warc_member_idx_is_the_seek_contract(spark, tmp_path):
     ]
     # plain (non-seekable) WARC: member_idx is NULL
     (tmp_path / "c.warc").write_bytes(
-        W.synthesize_warc(recs, gzip_members=False))
+        R.synthesize_warc(recs, False))
     rows = W.read_warc(spark, str(tmp_path / "c.warc")).collect()
     assert all(r["member_idx"] is None for r in rows) and len(rows) == 5
 

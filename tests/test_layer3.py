@@ -18,6 +18,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from mapreduce_framework_for_mergesort_spark.sources import layer3 as L
+from tests import references as R
 
 
 def test_profile_frame_shape_and_side_info():
@@ -46,7 +47,7 @@ def test_profile_frame_shape_and_side_info():
 )
 @settings(max_examples=60, deadline=None)
 def test_encode_decode_inversion(bins, gg):
-    frame = L.encode_tone_frame(bins, global_gain=gg)
+    frame = R.encode_tone_frame(bins, gg)
     g0, g1 = L.decode_frame_spectrum(frame)
     assert g0 == g1
     amp = 2.0 ** ((gg - 210) / 4.0)
@@ -114,8 +115,8 @@ def test_subband_locality_property():
 
 
 def test_requantize_gain_scaling():
-    f_hi = L.encode_tone_frame([(27, 1)], global_gain=214)
-    f_lo = L.encode_tone_frame([(27, 1)], global_gain=210)
+    f_hi = R.encode_tone_frame([(27, 1)], 214)
+    f_lo = L.encode_tone_frame([(27, 1)])
     hi = L.decode_frame_spectrum(f_hi)[0][27]
     lo = L.decode_frame_spectrum(f_lo)[0][27]
     assert hi == pytest.approx(2.0 * lo)  # +4 gain steps = one octave
@@ -170,13 +171,12 @@ def test_overlap_carries_between_granules():
     from a previous granule changes the first 18 samples only."""
     frame = L.encode_tone_frame([(27, 1)])
     granules = L.decode_frame_spectrum(frame)
-    out1, carry = L.spectrum_to_subbands([granules[0]])
-    out2, _ = L.spectrum_to_subbands([granules[1]], overlap=carry)
+    both, _ = L.spectrum_to_subbands(granules)
+    alone, _ = L.spectrum_to_subbands([granules[1]])
     # same spectrum, but granule 2 sees granule 1's tail
-    assert out2[0][1] != out1[0][1]
-    zeros = [[0.0] * 18 for _ in range(32)]
-    out3, _ = L.spectrum_to_subbands([granules[1]], overlap=zeros)
-    assert out3[0][1] == out1[0][1]
+    assert both[1][1] != alone[0][1]
+    # from silence, granule 1 decodes like granule 2 alone
+    assert both[0][1] == alone[0][1]
 
 
 def test_math_constants_match_spec_arithmetic():

@@ -57,7 +57,7 @@ def test_zorder_key_validation():
     with pytest.raises(ValueError):
         L.spark_zorder_key([])
     with pytest.raises(ValueError):
-        L.spark_zorder_key(["a", "b", "c", "d"], bits=16)  # 64 bits
+        L.spark_zorder_key(["a", "b", "c", "d"])  # 4 x 16 = 64 bits
 
 
 def test_zorder_key_correct_on_int32_columns(spark):

@@ -860,7 +860,7 @@ def test_hash_split_edge_cases(spark):
     """Review findings pinned: (a) a tiny trailing weight must not
     overflow the hex boundary to the 3-char '100' and swallow the
     corpus; (b) NULL keys route to the FIRST split, explicitly, in both
-    engines; (c) a single-split config yields valid SQL."""
+    engines; (c) a single-split config routes every row to it."""
     import duckdb
 
     from mapreduce_framework_for_mergesort_spark.operators import sampling
@@ -877,12 +877,9 @@ def test_hash_split_edge_cases(spark):
     assert duckdb.execute(
         "SELECT " + sampling.duckdb_split_case("NULL")
     ).fetchone()[0] == "train"
-    # (c) single split: valid on both engines
+    # (c) single split
     one = sampling.hash_split(nd, "k", [("all", 1.0)])
     assert {r["split"] for r in one.collect()} == {"all"}
-    assert duckdb.execute(
-        "SELECT " + sampling.duckdb_split_case("42", [("all", 1.0)])
-    ).fetchone()[0] == "all"
 
 
 def test_simhash_close_for_near_dups(corpus_with_dups):
@@ -921,8 +918,11 @@ def test_simhash_banded_pairs_complete_vs_brute_force(spark, sf_oracle):
 
 
 def test_simhash_candidate_pairs_rejects_incomplete_r():
-    with pytest.raises(ValueError):
-        D.simhash_candidate_pairs(None, r=D.SIMHASH_R + 1)
+    """The one hamming radius the operator verifies is the largest its
+    banding is complete for: two signatures within ``NUM_BANDS - 1``
+    bits of each other agree on at least one whole band (pigeonhole),
+    so they always meet in the band join."""
+    assert D.SIMHASH_R == D.SIMHASH_NUM_BANDS - 1
 
 
 def test_ann_lsh_recall_vs_brute_force(spark, sf_oracle):
@@ -1001,9 +1001,15 @@ def test_kmeans_training_reduces_objective(spark, sf_oracle):
         d = ((X[:, None, :] - M_[None, :, :]) ** 2).sum(axis=2)
         return int(d.min(axis=1).sum())
 
-    s0 = sse(S._trained_cents(emb, 8, iters=0))
-    s1 = sse(S._trained_cents(emb, 8, iters=1))
-    s2 = sse(S._trained_cents(emb, 8, iters=2))
+    smp = xqv.where(f"vec_id < {8 * S.KM_SAMPLE_FACTOR}").collect()
+    ids = np.array([r.vec_id for r in smp], dtype=np.int64)
+    Xs = np.array([r.xq for r in smp], dtype=np.int64)
+
+    def trained(iters):
+        return S._kmeans_train_np(ids, Xs, 8, iters)
+
+    s0, s1, s2 = sse(trained(0)), sse(trained(1)), sse(trained(2))
+    assert trained(S.KM_ITERS) == S._trained_cents(emb, 8)
     assert s1 < s0 * 0.75, (s0, s1)  # measured: 42% drop at sf0.01
     assert s2 <= s1, (s1, s2)
 
@@ -1024,7 +1030,7 @@ def test_kmeans_np_trainer_matches_distributed(spark, sf_oracle):
         .localCheckpoint()
     )
     dist = R._kmeans_train(smp, 8, S.KM_ITERS)
-    via_np = S._trained_cents(emb, 8, S.KM_ITERS)
+    via_np = S._trained_cents(emb, 8)
     assert via_np == dist
 
 
@@ -1250,11 +1256,14 @@ def test_png_container_roundtrip_and_real_compression():
     # really-compressed + really-filtered streams all decode back
     px = [data[i] if i < len(data) else 0 for i in range(M.IMG_WIDTH * h)]
     for level, ft in itertools.product([1, 9], [0, 1, 2, 3, 4]):
-        p = M._encode_png(px, M.IMG_WIDTH, h, level=level, filter_type=ft)
+        p = R.encode_png(px, M.IMG_WIDTH, h, level, ft)
         assert M._png_pixels(p) == (M.IMG_WIDTH, h, px), (level, ft)
         # a dynamic-huffman IDAT, not the stored-block framing
         # (deflate block type bits differ from the stored encoder's)
         assert p != png or (level, ft) == (0, 0)
+    assert R.encode_png(px, M.IMG_WIDTH, h, 0, 0) == M._encode_png(
+        px, M.IMG_WIDTH, h
+    )
 
     # band tiling is pixel-exact and every band decodes standalone
     tot = []
@@ -1860,17 +1869,11 @@ def test_bm25_ranking_matches_reference_formula(spark):
     assert score(1) > score(0) and score(1) > score(2)
 
     # terms that would corrupt the SQL literal (quotes) or could never
-    # match a whitespace token (spaces) are rejected loudly on BOTH
-    # engines, not silently mis-scored
-    from mapreduce_framework_for_mergesort_spark.operators.text import (
-        duckdb_bm25_cte,
-    )
-
+    # match a whitespace token (spaces) are rejected loudly, not
+    # silently mis-scored
     for bad in (("don't",), ("two words",), ("",), ()):
         with pytest.raises(ValueError):
             bm25_topk(docs, bad)
-        with pytest.raises(ValueError):
-            duckdb_bm25_cte(bad)
 
 
 def test_bm25_plan_shape(spark, sf_smoke):
@@ -2176,39 +2179,32 @@ def test_balanced_sample_caps_and_is_partition_proof(spark):
 
 
 def test_near_dedup_collapse_exact_identical_kept_set(spark, sf_oracle):
-    """Exact-first collapse must keep the IDENTICAL doc set as the
-    uncollapsed pipeline on a replica-heavy corpus, for minhash and for
-    minhash+simhash tiers; with the embedding tier the default resolves
-    to uncollapsed."""
+    """The lexical tiers' exact-first collapse must keep the IDENTICAL
+    doc set as the uncollapsed pipeline (every document's pairs, one
+    clustering, min-id survivors — built here from the public pieces)
+    on a replica-heavy corpus, for minhash and for minhash+simhash."""
     docs = load_table(spark, sf_oracle, "documents").limit(100)
     extra = docs.selectExpr("doc_id + 100000 AS doc_id", "text")
     corpus = docs.select("doc_id", "text").unionByName(extra)
 
-    plain = {
-        r["doc_id"]
-        for r in D.near_dedup_documents(
-            corpus, collapse_exact=False
-        ).collect()
-    }
+    def uncollapsed(tiers):
+        pairs = D.near_dup_pair_tiers(corpus, tiers)
+        clusters = D.cluster_pairs(pairs, nodes=corpus.select("doc_id"))
+        return {
+            r["keep_doc_id"]
+            for r in D.cluster_survivors(clusters).collect()
+        }
+
+    plain = uncollapsed(("minhash",))
     auto = {r["doc_id"] for r in D.near_dedup_documents(corpus).collect()}
-    assert auto == plain  # lexical-only default resolves to collapsed
+    assert auto == plain
     both_tiers = {
         r["doc_id"]
         for r in D.near_dedup_documents(
-            corpus,
-            tiers=("minhash", "simhash"),
-            collapse_exact=True,
+            corpus, tiers=("minhash", "simhash")
         ).collect()
     }
-    want_both = {
-        r["doc_id"]
-        for r in D.near_dedup_documents(
-            corpus,
-            tiers=("minhash", "simhash"),
-            collapse_exact=False,
-        ).collect()
-    }
-    assert both_tiers == want_both
+    assert both_tiers == uncollapsed(("minhash", "simhash"))
     # replicas never survive alongside their original
     assert not (plain & {d + 100000 for d in plain})
 
@@ -2506,47 +2502,6 @@ def test_prepare_training_shards_quality_gate(spark, tmp_path):
     assert sum(s["docs"] for s in manifest["splits"].values()) == 2
 
 
-def test_prepare_training_shards_with_mixture(spark, sf_oracle, tmp_path):
-    """Shard pipeline with mix_weights: replicas appear as distinct
-    packed rows carrying their epoch, manifest tokens count replicas,
-    and a weighted-out source never ships."""
-    from mapreduce_framework_for_mergesort_spark import pipelines
-
-    docs = load_table(spark, sf_oracle, "documents")
-    W = {"src0": 3, "src1": 1}
-    man = pipelines.prepare_training_shards(
-        docs,
-        str(tmp_path / "mixed"),
-        budget=512,
-        shards_per_split=2,
-        min_quality=0.0,
-        langs=("en", "und"),
-        mix_weights=W,
-        mix_epochs=2,
-    )
-    total_epochs = set()
-    for split, info in man["splits"].items():
-        back = spark.read.parquet(info["path"])
-        rows = back.select(
-            "doc_id", "source", "epoch", "n_tokens", "pack_id"
-        ).collect()
-        assert len(rows) == info["docs"]
-        assert sum(r["n_tokens"] for r in rows) == info["tokens"]
-        assert {r["source"] for r in rows} <= set(W)
-        assert "__mix_key" not in back.columns
-        total_epochs |= {r["epoch"] for r in rows}
-        # a replica pair is the same doc at two epochs with equal
-        # token counts
-        by_doc = {}
-        for r in rows:
-            by_doc.setdefault(r["doc_id"], []).append(r)
-        for d, rs in by_doc.items():
-            assert len({r["epoch"] for r in rs}) == len(rs)
-            assert len({r["n_tokens"] for r in rs}) == 1
-    # the 3:1 mixture at E=2 must actually use a second epoch for src0
-    assert 1 in total_epochs
-
-
 @pytest.mark.parametrize(
     "strip_threshold", [0, 1 << 62], ids=["kernel", "codegen"]
 )
@@ -2603,9 +2558,8 @@ def test_redact_pii_iban_and_aggressive_shapes(spark):
     """Round-5 shape breadth: IBAN-ish (contiguous + spaced groups,
     alnum-guarded so longer alphanumeric runs stay whole, and running
     BEFORE the card rule so a spaced IBAN's 4-digit interior isn't
-    half-eaten), and the opt-in aggressive bare-10-digit phone
-    (digit-guarded; default mode leaves bare runs alone).  DuckDB
-    parity pinned for both modes."""
+    half-eaten); bare 10- and 11-digit runs are left alone (ids as
+    likely as phones).  DuckDB parity pinned."""
     import duckdb
     import pandas as pd
 
@@ -2629,37 +2583,22 @@ def test_redact_pii_iban_and_aggressive_shapes(spark):
     assert got[3] == "not XDE44500105175407324931 an iban"
     assert got[4] == "chain <IBAN>,<IBAN>"
     assert got[5] == "ALL CAPS PROSE WITH FOUR CHAR WORD RUNS"
-    assert got[6] == "call 5551234567 maybe"  # default: bare run kept
+    assert got[6] == "call 5551234567 maybe"  # bare run kept
+    assert got[7] == "order 15551234567 is an id"
     assert got[8] == "card <CARD> stays a card"
 
-    agg = {
-        r["doc_id"]: r["text"]
-        for r in T.redact_pii(docs, aggressive=True).collect()
-    }
-    assert agg[6] == "call <PHONE> maybe"
-    assert agg[7] == "order 15551234567 is an id"
-    assert agg[8] == "card <CARD> stays a card"
-
-    # idempotence holds in both modes
-    for mode in (False, True):
-        once = T.redact_pii(docs, aggressive=mode)
-        twice = T.redact_pii(once, aggressive=mode)
-        assert {r["doc_id"]: r["text"] for r in once.collect()} == {
-            r["doc_id"]: r["text"] for r in twice.collect()
-        }
+    twice = T.redact_pii(T.redact_pii(docs))
+    assert {r["doc_id"]: r["text"] for r in twice.collect()} == got
 
     pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
     con = duckdb.connect()
     con.register("docs", pdf)
-    for mode, want in ((False, got), (True, agg)):
-        oracle = dict(
-            con.execute(
-                f"SELECT doc_id,"
-                f" {R.duckdb_redact_sql('text', aggressive=mode)}"
-                f" FROM docs"
-            ).fetchall()
-        )
-        assert oracle == want, mode
+    oracle = dict(
+        con.execute(
+            f"SELECT doc_id, {R.duckdb_redact_sql('text')} FROM docs"
+        ).fetchall()
+    )
+    assert oracle == got
 
 
 def test_leakage_safe_split_clusters_never_straddle(spark):
@@ -2748,7 +2687,7 @@ def test_contamination_report_parity_and_consistency(spark, sf_oracle):
     assert any(nd >= 1 for _, nd, _ in got)
 
     n = D.DECONTAM_N
-    sh = H.duckdb_shingles(H.duckdb_tokens("text"), n)
+    sh = R.duckdb_shingles(H.duckdb_tokens("text"), n)
     con = duckdb.connect()
     con.execute(
         f"CREATE VIEW documents AS SELECT * FROM"

@@ -17,7 +17,6 @@ def test_metrics_capture_jobs_and_tasks(spark, sf_smoke):
     assert stats.num_tasks >= 2
     assert stats.num_failed_tasks == 0
     assert stats.elapsed_s > 0
-    assert stats.avg_task_latency_s > 0
 
 
 def test_metrics_isolated_per_run(spark, sf_smoke):

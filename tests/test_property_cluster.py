@@ -4,9 +4,9 @@ graphs.
 The operator routes small candidate graphs to a driver union-find and
 larger ones to hash-min label propagation, falling back to star
 contraction; the reference is a 20-line driver-side disjoint-set
-union.  Tests force the distributed routes by lowering
-``sizing.DRIVER_UF_MAX_EDGES`` (and, for star, ``dedup.HASH_MIN_ROUNDS``)
-to 0.  Any divergence (missed transitive closure, premature
+union.  Tests pin a route with ``_route``: the routes before it are
+skipped and the routes that must not produce the answer raise.  Any
+divergence (missed transitive closure, premature
 convergence, singleton handling) shows up as a label mismatch on some
 random graph.
 """
@@ -21,12 +21,25 @@ from mapreduce_framework_for_mergesort_spark import sizing
 from mapreduce_framework_for_mergesort_spark.operators import dedup as D
 
 
-def _force_distributed(mp, star: bool = False) -> None:
-    """Route ``cluster_pairs`` past the driver union-find, and past
-    hash-min too when ``star``."""
+def _refuse(*_args):
+    raise AssertionError("cluster_pairs took a route it must not take")
+
+
+def _route(mp, route: str) -> None:
+    """Pin ``cluster_pairs`` to ``route``: the driver ceiling drops to
+    0 past ``driver_uf`` and hash-min reports its budget exhausted for
+    ``star``; every route that must not answer raises.  A graph with no
+    loop-free edge fits any ceiling, so it always takes ``driver_uf``."""
+    if route == "driver_uf":
+        mp.setattr(D, "_hashmin_labels", _refuse)
+        mp.setattr(D, "_star_labels", _refuse)
+        return
     mp.setattr(sizing, "DRIVER_UF_MAX_EDGES", 0)
-    if star:
-        mp.setattr(D, "HASH_MIN_ROUNDS", 0)
+    mp.setattr(D, "_driver_uf_labels", _refuse)
+    if route == "hash_min":
+        mp.setattr(D, "_star_labels", _refuse)
+    else:
+        mp.setattr(D, "_hashmin_labels", lambda edges, max_iters: None)
 
 
 def _union_find(n_nodes: int, edges: list[tuple[int, int]]) -> dict[int, int]:
@@ -104,19 +117,14 @@ def test_star_contraction_matches_union_find(spark, n_nodes, edges):
         pairs = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     else:
         pairs = spark.createDataFrame([], "doc_a: long, doc_b: long")
-    stats: dict = {}
+    has_edges = any(u != v for u, v in edges)
     with pytest.MonkeyPatch.context() as mp:
-        _force_distributed(mp, star=True)
+        _route(mp, "star" if has_edges else "driver_uf")
         got = {
             r["node"]: r["cluster"]
-            for r in D.cluster_pairs(
-                pairs, nodes=nodes, stats=stats
-            ).collect()
+            for r in D.cluster_pairs(pairs, nodes=nodes).collect()
         }
     assert got == _union_find(n_nodes, edges)
-    # a graph of self-loops alone has no edges, which fit any ceiling
-    has_edges = any(u != v for u, v in edges)
-    assert stats["algorithm"] == ("star" if has_edges else "driver_uf")
 
 
 def _path_pairs(spark, n: int, shuffled_ids: list[int]):
@@ -125,24 +133,21 @@ def _path_pairs(spark, n: int, shuffled_ids: list[int]):
     return spark.createDataFrame(rows, ["doc_a", "doc_b"])
 
 
-def test_star_contraction_logarithmic_on_long_path(spark, monkeypatch):
+def test_star_contraction_logarithmic_on_long_path(spark):
     """The round-3 failure mode: a diameter-400 path exhausts hash-min's
     budget (it needs ~400 rounds) but star contraction must converge in
     O(log d) — the VERDICT acceptance bound is ≤ ~7 rounds for
     diameter ≥ 100; we pin ≤ 10 for diameter 400 with adversarial
-    (reversed) id order, where the min label sits at the far end."""
+    (reversed) id order, where the min label sits at the far end.
+    ``_star_labels`` raises ``RuntimeError`` past its round budget."""
     n = 401
     ids = list(range(n))[::-1]  # node 0 at the END of the path
-    pairs = _path_pairs(spark, n, ids)
-    _force_distributed(monkeypatch, star=True)
-    stats: dict = {}
+    e = _path_pairs(spark, n, ids).selectExpr("doc_a AS u", "doc_b AS v")
+    edges = e.union(e.selectExpr("v AS u", "u AS v"))
     labels = {
-        r["node"]: r["cluster"]
-        for r in D.cluster_pairs(pairs, stats=stats).collect()
+        r["node"]: r["cluster"] for r in D._star_labels(edges, 10).collect()
     }
     assert labels == {i: 0 for i in range(n)}
-    assert stats["algorithm"] == "star"
-    assert stats["rounds"] <= 10, stats
 
 
 def test_long_path_falls_back_from_hash_min_to_star(spark, monkeypatch):
@@ -151,24 +156,32 @@ def test_long_path_falls_back_from_hash_min_to_star(spark, monkeypatch):
     never a non-fixpoint (which would silently under-dedup)."""
     n = 101
     pairs = _path_pairs(spark, n, list(range(n))[::-1])
-    stats: dict = {}
-    labels = {
-        r["node"]: r["cluster"]
-        for r in D.cluster_pairs(pairs, stats=stats).collect()
-    }
-    assert labels == {i: 0 for i in range(n)}
     # round 13: a graph this small takes the driver union-find fast path
-    assert stats["algorithm"] == "driver_uf"
+    with pytest.MonkeyPatch.context() as mp:
+        _route(mp, "driver_uf")
+        labels = {
+            r["node"]: r["cluster"]
+            for r in D.cluster_pairs(pairs).collect()
+        }
+    assert labels == {i: 0 for i in range(n)}
     # the distributed star fallback must still engage when the graph
-    # exceeds the driver ceiling — force the routing past the fast path
-    _force_distributed(monkeypatch)
-    stats2: dict = {}
+    # exceeds the driver ceiling — real hash-min runs out of rounds,
+    # and star produces the answer
+    monkeypatch.setattr(sizing, "DRIVER_UF_MAX_EDGES", 0)
+    monkeypatch.setattr(D, "_driver_uf_labels", _refuse)
+    star_calls = []
+    star = D._star_labels
+    monkeypatch.setattr(
+        D, "_star_labels",
+        lambda edges, max_iters: star_calls.append(max_iters)
+        or star(edges, max_iters),
+    )
     labels2 = {
         r["node"]: r["cluster"]
-        for r in D.cluster_pairs(pairs, stats=stats2).collect()
+        for r in D.cluster_pairs(pairs).collect()
     }
     assert labels2 == labels
-    assert stats2["algorithm"] == "star"  # the fallback produced the answer
+    assert star_calls == [D.STAR_ROUNDS]
 
 
 def test_driver_uf_matches_distributed_on_mixed_graph(spark):
@@ -184,12 +197,9 @@ def test_driver_uf_matches_distributed_on_mixed_graph(spark):
     nodes = spark.range(0, 60).withColumnRenamed("id", "doc_id")
     outs = {}
     for route in ("driver_uf", "hash_min", "star"):
-        st: dict = {}
         with pytest.MonkeyPatch.context() as mp:
-            if route != "driver_uf":
-                _force_distributed(mp, star=route == "star")
-            rows = D.cluster_pairs(pairs, nodes=nodes, stats=st).collect()
-        assert st["algorithm"] == route
+            _route(mp, route)
+            rows = D.cluster_pairs(pairs, nodes=nodes).collect()
         outs[route] = sorted(map(tuple, rows))
     assert outs["driver_uf"] == outs["hash_min"] == outs["star"]
     assert len(outs["driver_uf"]) == 60  # every node labeled, singletons too

@@ -30,15 +30,14 @@ from tests import references as R
         min_size=1,
         max_size=3,
     ),
-    st.sampled_from([4, 8, 16]),
 )
-def test_zorder_duckdb_matches_python_reference(vals, bits):
+def test_zorder_duckdb_matches_python_reference(vals):
     cols = [f"c{i}" for i in range(len(vals))]
     sel = ", ".join(f"{v} AS {c}" for v, c in zip(vals, cols))
     got = duckdb.sql(
-        f"SELECT {L.duckdb_zorder_key(cols, bits)} AS z FROM (SELECT {sel})"
+        f"SELECT {L.duckdb_zorder_key(cols)} AS z FROM (SELECT {sel})"
     ).fetchone()[0]
-    assert got == R.python_zorder_key(vals, bits)
+    assert got == R.python_zorder_key(vals)
 
 
 @settings(max_examples=200, deadline=None)

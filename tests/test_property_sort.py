@@ -54,9 +54,7 @@ def test_sort_global_matches_sorted(spark, vals):
 @PROP
 @given(vals=int_lists)
 def test_rank_is_dense_and_multiset_preserved(spark, vals):
-    ranked = sort.with_global_rank(
-        _df(spark, vals), ["value"], num_partitions=4, rank_col="rank"
-    ).collect()
+    ranked = sort.with_global_rank(_df(spark, vals), ["value"]).collect()
     assert sorted(r["rank"] for r in ranked) == list(range(1, len(vals) + 1))
     by_rank = [r["value"] for r in sorted(ranked, key=lambda r: r["rank"])]
     assert by_rank == sorted(vals)
@@ -102,7 +100,7 @@ def test_topk_equals_head_of_sorted(spark):
 def test_empty_input(spark):
     empty = _df(spark, [])
     assert sort.sort_global(empty, ["value"]).count() == 0
-    assert sort.with_global_rank(empty, ["value"], num_partitions=2).count() == 0
+    assert sort.with_global_rank(empty, ["value"]).count() == 0
 
 
 @settings(max_examples=10, deadline=None,

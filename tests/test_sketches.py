@@ -136,28 +136,32 @@ def test_cms_sketch_is_bounded_and_broadcast(spark):
 
 
 def test_cms_geometry_validation(spark):
-    """d beyond the seeded affine family (or a degenerate w) fails
-    loudly at construction — sketch rows carry no geometry, so a
-    silent mismatch would probe the wrong buckets."""
+    """Sketch rows carry no geometry, so build and probe share one: every
+    non-NULL key lands in exactly one bucket of each of the ``CMS_D``
+    rows, each bucket below ``CMS_W``, and the seeded affine family
+    covers every row."""
     df = spark.range(10).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError, match="affine"):
-        K.cms_sketch(df, "k", d=9)
-    with pytest.raises(ValueError, match="w must be positive"):
-        K.cms_sketch(df, "k", w=0)
-    with pytest.raises(ValueError, match="affine"):
-        K.cms_point_estimates(K.cms_sketch(df, "k"), df, "k", d=0)
+    rows = K.cms_sketch(df, "k").collect()
+    assert len(K.CMS_AB) == K.CMS_D
+    assert {r["i"] for r in rows} == set(range(K.CMS_D))
+    assert all(0 <= r["bucket"] < K.CMS_W for r in rows)
+    for i in range(K.CMS_D):
+        assert sum(r["cnt"] for r in rows if r["i"] == i) == 10
 
 
 def test_cms_weighted_from_counts_equals_raw(spark, sf_oracle):
-    """cms_sketch(per_key_counts, weight_col='c') == cms_sketch(raw) —
-    the identity that lets an existing distinct-key aggregate serve
-    the sketch without rescanning the corpus (q_profile_stats round-5
-    consolidation)."""
+    """q_profile_stats' SQL sketch over per-key counts (each key's cells
+    weighted by its count) == cms_sketch(raw) — the identity that lets
+    an existing distinct-key aggregate serve the sketch without
+    rescanning the corpus (q_profile_stats round-5 consolidation)."""
     from pyspark.sql import functions as F
 
     from mapreduce_framework_for_mergesort_spark.io import load_table
     from mapreduce_framework_for_mergesort_spark.operators import (
         sketches as SK,
+    )
+    from mapreduce_framework_for_mergesort_spark.queries import (
+        profile_family as PF,
     )
 
     orders = load_table(spark, sf_oracle, "orders")
@@ -167,7 +171,13 @@ def test_cms_weighted_from_counts_equals_raw(spark, sf_oracle):
         .groupBy(F.col("o_custkey").alias("k"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    weighted = SK.cms_sketch(counts, "k", weight_col="c")
+    weighted = (
+        counts.selectExpr(f"{PF._CMS_H} AS __h", "c AS __wt")
+        .where("__h IS NOT NULL")
+        .selectExpr(f"explode(array({PF._CMS_CELLS})) AS cell", "__wt")
+        .groupBy(F.col("cell.i").alias("i"), F.col("cell.bucket").alias("bucket"))
+        .agg(F.sum("__wt").alias("cnt"))
+    )
 
     def cells(df):
         return {(r["i"], r["bucket"]): r["cnt"] for r in df.collect()}

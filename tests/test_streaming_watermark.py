@@ -69,9 +69,7 @@ def test_watermarked_sessionize_merges_admissible_late_event(
     spark, late_events_dir
 ):
     got = run_to_memory(
-        sessionize_stream_watermarked(
-            _read_stream(spark, late_events_dir), gap="30 minutes"
-        ),
+        sessionize_stream_watermarked(_read_stream(spark, late_events_dir)),
         "t_sess_wm_late",
     )
     rows = sorted(
@@ -135,9 +133,7 @@ def test_watermarked_drain_equals_batch_algebra_below_watermark(
         os.utime(p, (1_700_000_000 + i * 100, 1_700_000_000 + i * 100))
 
     got = run_to_memory(
-        sessionize_stream_watermarked(
-            _read_stream(spark, str(tmp_path)), gap="30 minutes"
-        ),
+        sessionize_stream_watermarked(_read_stream(spark, str(tmp_path))),
         "t_sess_wm_bulk",
     )
     stream_rows = sorted(

@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mapreduce_framework_for_mergesort_spark.sources import warc as W
+from tests import references as R
 
 RECS = [
     ("warcinfo", None, b"software: msfs-engine\r\n"),
@@ -26,7 +27,7 @@ RECS = [
 
 @pytest.mark.parametrize("gz", [False, True])
 def test_round_trip(gz):
-    blob = W.synthesize_warc(RECS, gzip_members=gz)
+    blob = R.synthesize_warc(RECS, gz)
     recs = W.parse_warc(blob)
     assert len(recs) == len(RECS)
     for (t, u, p), r in zip(RECS, recs):
@@ -46,7 +47,7 @@ def test_gzip_members_are_individually_framed():
     """The Common Crawl layout: one record per gzip member, each
     member independently decompressible (what makes records seekable
     by byte offset at crawl scale)."""
-    blob = W.synthesize_warc(RECS, gzip_members=True)
+    blob = W.synthesize_warc(RECS)
     members = W.split_gzip_members(blob)
     assert len(members) == len(RECS)
     for m in members:
@@ -77,7 +78,7 @@ def test_handmade_warc_plain_bytes():
 def test_multi_record_member_parses():
     # a single gzip member MAY carry several records — the parser
     # must not assume one-record-per-member
-    plain = W.synthesize_warc(RECS, gzip_members=False)
+    plain = R.synthesize_warc(RECS, False)
     member = W._gzip_member_stored(plain)
     assert len(W.parse_warc(member)) == len(RECS)
 
@@ -109,7 +110,7 @@ def test_folded_header_continuation_lines():
 
 
 def test_corruption_is_loud():
-    blob = W.synthesize_warc(RECS, gzip_members=False)
+    blob = R.synthesize_warc(RECS, False)
     with pytest.raises(ValueError, match="version line"):
         W.parse_warc(b"HTTP/1.1 200 OK\r\n\r\n\r\n\r\n")
     with pytest.raises(ValueError, match="no Content-Length"):
@@ -126,7 +127,7 @@ def test_corruption_is_loud():
         W.parse_warc(b"WARC/1.1\r\nContent-Length: 2")
     with pytest.raises(ValueError, match="malformed WARC header"):
         W.parse_warc(b"WARC/1.1\r\nNoColonHere\r\n\r\n\r\n\r\n")
-    gz = W.synthesize_warc(RECS, gzip_members=True)
+    gz = W.synthesize_warc(RECS)
     with pytest.raises(ValueError, match="truncated gzip member"):
         W.parse_warc(gz[:-4])
     bad = bytearray(gz)
@@ -142,7 +143,7 @@ def test_corruption_is_loud():
 )
 def test_property_round_trip(payloads, gz):
     recs = [("resource", f"urn:p:{i}", p) for i, p in enumerate(payloads)]
-    parsed = W.parse_warc(W.synthesize_warc(recs, gzip_members=gz))
+    parsed = W.parse_warc(R.synthesize_warc(recs, gz))
     assert [r["payload"] for r in parsed] == payloads
 
 
@@ -281,7 +282,7 @@ def test_http_records_round_trip_through_warc():
             b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n" + text
         )
         recs.append(("response", uri, http))
-    blob = W.synthesize_warc(recs, gzip_members=True)
+    blob = W.synthesize_warc(recs)
     got = {}
     for r in W.parse_warc(blob):
         _s, _h, body = _http_extract(r["payload"])
@@ -378,7 +379,6 @@ def test_two_phase_shard_build_is_byte_identical(spark, sf_smoke):
                 for d, t in src
                 if d % 3 == shard
             ],
-            gzip_members=True,
         )
         assert got[shard] == expected
 
